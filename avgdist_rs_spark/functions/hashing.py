@@ -27,12 +27,6 @@ def portable_hash64(col: Column | str, salt: str = "") -> Column:
     return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long")
 
 
-def portable_hash64_sql(expr: str, salt: str = "") -> str:
-    """The DuckDB-side rendering of :func:`portable_hash64` (same bits)."""
-    inner = f"'{salt}' || {expr}" if salt else expr
-    return f"(('0x' || substr(md5({inner}), 1, 15))::BIGINT)"
-
-
 def md5_key(col: Column | str) -> Column:
     """Full 128-bit content key as hex text (exact-dedup grouping key)."""
     c = F.col(col) if isinstance(col, str) else col

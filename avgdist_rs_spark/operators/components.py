@@ -17,9 +17,6 @@ one shuffle (label exchange) + one aggregate per superstep.
 
 from __future__ import annotations
 
-import time
-from contextlib import nullcontext
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
@@ -28,9 +25,8 @@ from ..plans.graph import GraphFrame
 from ..streaming.superstep import (
     Checkpointer,
     SuperstepMetrics,
-    aqe_disabled,
-    broadcast_joins_disabled,
-    fixpoint_shuffle_partitions,
+    converge,
+    fixpoint_scope,
 )
 
 
@@ -65,135 +61,102 @@ def connected_components(
     pays the extra join. ``True``/``False`` force either mode; all three
     converge to the identical exact labeling (tested).
 
-    Change detection rides the label update itself: the old component is
-    carried through the superstep and a single aggregate over the (already
-    checkpointed) result counts changes — no extra labels⋈labels join.
+    Raises ``RuntimeError`` when ``max_supersteps`` runs out: a truncated
+    labeling splits components.
     """
-    spark = graph.spark
+    return min_label_components(
+        graph.vertices(),
+        graph.symmetric_edges(),
+        max(graph.num_nodes, graph.num_edges),
+        max_supersteps,
+        checkpointer,
+        metrics,
+        shortcut,
+    )
+
+
+def min_label_components(
+    vertices: DataFrame,
+    sym_edges: DataFrame,
+    rows: int,
+    max_supersteps: int = 200,
+    checkpointer: Checkpointer | None = None,
+    metrics: SuperstepMetrics | None = None,
+    shortcut: bool | str = "auto",
+) -> DataFrame:
+    """The hash-min kernel: (v, component) over ``vertices`` (v) and the
+    undirected edge table ``sym_edges`` (src, dst; both directions present).
+    Vertex ids need not be dense. ``rows`` sizes the fixpoint scope.
+
+    Change detection rides the label update itself: the old component is
+    carried through the superstep and converge's single aggregate over the
+    (already checkpointed) result counts changes — no extra labels⋈labels
+    join.
+    """
+    spark = vertices.sparkSession
     met = metrics if metrics is not None else SuperstepMetrics(name="cc")
     ckpt = checkpointer or Checkpointer(spark, name="cc", every=4)
 
-    # NOTE: at session shuffle width this loop KEEPS AQE enabled — the
-    # pointer-jump self-join (labels ⋈ labels on the label key) measurably
-    # benefits from adaptive broadcast/coalesce decisions (10k-chain at
-    # width 32: ~6 s with AQE vs ~15 s without), unlike the pure
-    # fused-aggregate loops (pagerank/lp/kcore/scc). The shuffle width
-    # itself is scoped to the exchange volume (never above the session
-    # value); once the scoped width is narrow (≤8) AQE flips to a net cost —
-    # nothing left to coalesce, still per-superstep re-planning (measured at
-    # width 4: ~3.4 s without vs ~3.8 s with) — so narrow loops disable it.
-    # per_partition stays at 250k here (not the 64k the fused-aggregate
-    # loops use): the pointer-jump SELF-JOIN runs several stages per
-    # superstep, so scheduling — not row throughput — dominates and fewer,
-    # larger partitions win. Measured on the 10×-replica (1.05 M edges,
-    # local[32], warm): width 4 ≈ 9.3–10.6 s vs width 17 ≈ 13.1–13.3 s vs
-    # the session's 32 ≈ 11.8–12.3 s — the OPPOSITE ordering of pagerank's
-    # single-aggregate superstep (see fixpoint_shuffle_partitions).
-    with fixpoint_shuffle_partitions(
-        spark, max(graph.num_nodes, graph.num_edges), per_partition=250_000
-    ):
-        # the symmetric edge table is built INSIDE the width scope so its
-        # repartition lands hash(src) at the LOOP width: the per-superstep
-        # labels ⋈ sym join then matches partitioning on both sides and the
-        # edge table never re-exchanges inside the loop (guide §2.4)
+    # 250k rows/partition: the pointer-jump self-joins make this a
+    # scheduling-bound loop (see fixpoint_scope)
+    with fixpoint_scope(spark, rows, per_partition=250_000) as width:
         sym = (
-            graph.symmetric_edges()
+            sym_edges.repartition(width, "src")
             .select(F.col("src").alias("_esrc"), F.col("dst").alias("_edst"))
             .persist(StorageLevel.MEMORY_AND_DISK)
         )
         sym.count()
-
-        labels = graph.vertices().select(
+        labels = vertices.select(
             "v", F.col("v").alias("component")
         ).localCheckpoint(eager=True)
 
-        narrow = int(spark.conf.get("spark.sql.shuffle.partitions")) <= 8
-        aqe_ctx = aqe_disabled(spark) if narrow else nullcontext()
-        # SMALL-state loops (10k-chain showcases, pair graphs) also run
-        # without auto-broadcast: the state tables are co-partitioned, so SMJ
-        # is exchange-free and the per-superstep broadcast job disappears
-        # (see broadcast_joins_disabled). Gated on the state rows, not just
-        # the width: at sf0.1's 100k-row state the broadcast join measures
-        # ~3% faster warm (4.97/5.12 vs 5.13/5.26 s interleaved), so only
-        # genuinely tiny states take the job saving.
-        small = max(graph.num_nodes, graph.num_edges) <= 32_000
-        bj_ctx = broadcast_joins_disabled(spark) if narrow and small else nullcontext()
-        with aqe_ctx, bj_ctx:
-            for it in range(1, max_supersteps + 1):
-                t0 = time.monotonic()
-                # one fused exchange per superstep: the state row (carrying the old
-                # label for change detection) rides the SAME union as the neighbor
-                # contributions into a single groupBy — min(cand) over {own label} ∪
-                # {neighbor labels} IS least(own, neighbor-min), and max(_old) picks
-                # the state row's old label (contributions carry NULL). Replaces the
-                # former nbr_min groupBy + labels left-join (two stages) with one.
-                contrib = labels.join(sym, labels.v == F.col("_esrc")).select(
-                    F.col("_edst").alias("v"),
-                    F.col("component").alias("cand"),
-                    F.lit(None).cast("long").alias("_prev"),
-                )
-                state = labels.select(
-                    "v", F.col("component").alias("cand"), F.col("component").alias("_prev")
-                )
-                stepped = (
-                    contrib.unionAll(state)
-                    .groupBy("v")
-                    .agg(F.min("cand").alias("component"), F.max("_prev").alias("_old"))
-                    .select("v", "_old", "component")
-                )
-                jump = shortcut is True or (shortcut == "auto" and it > AUTO_SHORTCUT_AFTER)
-                if jump:
-                    # pointer jump by SQUARING: the first dereference builds
-                    # once = M∘M (labels through the post-hop map M), the
-                    # second dereferences once through ITSELF — M⁴ per
-                    # superstep for the same two self-joins (the former
-                    # second-deref through M only reached M³). A 10^4-chain
-                    # drops another superstep or two at zero extra stage cost;
-                    # per-superstep fixed cost dominates at narrow width.
-                    # INNER joins: every component value is the min of some
-                    # vertex-id set, hence itself a key in `stepped`/`once`.
+        def superstep(labels: DataFrame, it: int) -> DataFrame:
+            # one fused exchange per superstep: the state row (carrying the old
+            # label for change detection) rides the SAME union as the neighbor
+            # contributions into a single groupBy — min(cand) over {own label} ∪
+            # {neighbor labels} IS least(own, neighbor-min), and max(_prev) picks
+            # the state row's old label (contributions carry NULL).
+            contrib = labels.join(sym, labels.v == F.col("_esrc")).select(
+                F.col("_edst").alias("v"),
+                F.col("component").alias("cand"),
+                F.lit(None).cast("long").alias("_prev"),
+            )
+            state = labels.select(
+                "v", F.col("component").alias("cand"), F.col("component").alias("_prev")
+            )
+            stepped = (
+                contrib.unionAll(state)
+                .groupBy("v")
+                .agg(F.min("cand").alias("component"), F.max("_prev").alias("_old"))
+                .select("v", "_old", "component")
+            )
+            if shortcut is True or (shortcut == "auto" and it > AUTO_SHORTCUT_AFTER):
+                # pointer jump by SQUARING: the first dereference builds
+                # M∘M (labels through the post-hop map M), the second
+                # dereferences through ITSELF — M⁴ per superstep for two
+                # self-joins. INNER joins: every component value is the min
+                # of some vertex-id set, hence itself a key in `stepped`.
+                for _sq in range(2):
                     parent = stepped.select(
                         F.col("v").alias("_pv"), F.col("component").alias("_pc")
                     )
-                    once = (
-                        stepped.join(parent, stepped.component == F.col("_pv"))
-                        .select(
-                            "v",
-                            "_old",
-                            F.least(
-                                F.col("component"), F.col("_pc")
-                            ).alias("component"),
-                        )
+                    stepped = stepped.join(
+                        parent, stepped.component == F.col("_pv")
+                    ).select(
+                        "v",
+                        "_old",
+                        F.least(F.col("component"), F.col("_pc")).alias("component"),
                     )
-                    parent2 = once.select(
-                        F.col("v").alias("_qv"), F.col("component").alias("_qc")
-                    )
-                    stepped = (
-                        once.join(parent2, once.component == F.col("_qv"))
-                        .select(
-                            "v",
-                            "_old",
-                            F.least(
-                                F.col("component"), F.col("_qc")
-                            ).alias("component"),
-                        )
-                    )
-                # lazy checkpoint: the convergence aggregate below is the
-                # materializing action — one Spark job per superstep instead of two
-                stepped = ckpt.step(stepped, it, wall_s=time.monotonic() - t0, lazy=True)
-                changed = int(
-                    stepped.agg(
-                        F.sum((F.col("component") != F.col("_old")).cast("long")).alias("n")
-                    ).collect()[0]["n"]
-                    or 0
-                )
-                met.record(it, changed, time.monotonic() - t0)
-                labels = stepped.drop("_old")
-                if changed == 0:
-                    break
+            return stepped
+
+        labels = converge(
+            "connected_components",
+            labels,
+            superstep,
+            F.col("component") != F.col("_old"),
+            ckpt,
+            met,
+            max_supersteps,
+        )
     sym.unpersist()
     return labels
-
-
-def num_components(graph: GraphFrame) -> int:
-    return connected_components(graph).select("component").distinct().count()

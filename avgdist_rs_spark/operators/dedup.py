@@ -413,59 +413,22 @@ def dedup_groups(
     handful of supersteps; a convergence guard raises rather than returning
     a half-collapsed labeling.
     """
-    from ..streaming.superstep import aqe_disabled, fixpoint_shuffle_partitions
+    from .components import min_label_components
 
     pairs = minhash_lsh_pairs(
         docs, num_hashes, bands, k, threshold, id_col, text_col
     ).persist()
     n_pairs = pairs.count()
-    sym = (
-        pairs.select(F.col("a").alias("_s"), F.col("b").alias("_d"))
-        .unionAll(pairs.select(F.col("b").alias("_s"), F.col("a").alias("_d")))
-        .persist()
+    sym = pairs.select(F.col("a").alias("src"), F.col("b").alias("dst")).unionAll(
+        pairs.select(F.col("b").alias("src"), F.col("a").alias("dst"))
     )
-    lab = (
-        sym.select(F.col("_s").alias("v"))
-        .distinct()
-        .select("v", F.col("v").alias("comp"))
-        .localCheckpoint(eager=True)
+    lab = min_label_components(
+        sym.select(F.col("src").alias("v")).distinct(), sym, 2 * n_pairs,
+        max_supersteps=64,
     )
-    # the pair graph is tiny relative to the corpus (only verified collisions
-    # appear), so the fixpoint exchanges a handful of rows — scope the shuffle
-    # width to that volume instead of paying session-width task scheduling per
-    # superstep, and let the convergence aggregate materialize the (lazy)
-    # checkpoint: one Spark job per superstep (the fixpoint-fusion discipline
-    # of components/scc)
-    with fixpoint_shuffle_partitions(spark := docs.sparkSession, max(2 * n_pairs, 1)), \
-            aqe_disabled(spark):
-        for _ in range(64):
-            contrib = lab.join(sym, lab.v == F.col("_s")).select(
-                F.col("_d").alias("v"),
-                F.col("comp").alias("cand"),
-                F.lit(None).cast("long").alias("_prev"),
-            )
-            state = lab.select("v", F.col("comp").alias("cand"), F.col("comp").alias("_prev"))
-            stepped = (
-                contrib.unionAll(state)
-                .groupBy("v")
-                .agg(F.min("cand").alias("comp"), F.max("_prev").alias("_old"))
-                .localCheckpoint(eager=False)
-            )
-            changed = int(
-                stepped.agg(F.sum((F.col("comp") != F.col("_old")).cast("long"))).collect()[
-                    0
-                ][0]
-                or 0
-            )
-            lab = stepped.drop("_old")
-            if changed == 0:
-                break
-        else:
-            raise RuntimeError("dedup_groups: pair-graph min-label fixpoint not converged")
-    sym.unpersist()
     pairs.unpersist()
     return (
         docs.select(F.col(id_col))
-        .join(lab.select(F.col("v").alias(id_col), "comp"), id_col, "left")
-        .select(id_col, F.coalesce(F.col("comp"), F.col(id_col)).alias("keep_id"))
+        .join(lab.select(F.col("v").alias(id_col), "component"), id_col, "left")
+        .select(id_col, F.coalesce(F.col("component"), F.col(id_col)).alias("keep_id"))
     )

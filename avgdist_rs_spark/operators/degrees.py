@@ -24,13 +24,6 @@ def sink_count(graph: GraphFrame) -> int:
     return graph.num_nodes - with_out
 
 
-def sink_vertices(graph: GraphFrame) -> DataFrame:
-    """(v) vertices with no outgoing edge — left-anti join formulation."""
-    return graph.vertices().join(
-        graph.edges.select(F.col("src").alias("v")).distinct(), "v", "left_anti"
-    )
-
-
 def degree_histogram(graph: GraphFrame, direction: str = "out") -> DataFrame:
     """(degree, cnt): distribution of out/in degrees (isolated vertices → degree 0)."""
     key = "src" if direction == "out" else "dst"

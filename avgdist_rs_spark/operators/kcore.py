@@ -36,12 +36,7 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from ..plans.graph import GraphFrame
-from ..streaming.superstep import (
-    Checkpointer,
-    SuperstepMetrics,
-    aqe_disabled,
-    fixpoint_shuffle_partitions,
-)
+from ..streaming.superstep import Checkpointer, SuperstepMetrics, fixpoint_scope
 
 
 def k_core(
@@ -57,14 +52,11 @@ def k_core(
     met = metrics if metrics is not None else SuperstepMetrics(name="kcore")
     ckpt = checkpointer or Checkpointer(spark, name="kcore", every=4)
 
-    # shuffle width scoped to the peel's exchange volume: each superstep
-    # aggregates the alive-filtered symmetric edge stream (≤ 2m rows) into
-    # an ≤ n-row degree table (see fixpoint_shuffle_partitions). sym is built
-    # inside the scope so the per-superstep semi-joins match its partitioning
-    # (guide §2.4 — no edge re-exchange per superstep).
-    with fixpoint_shuffle_partitions(
-        spark, max(graph.num_nodes, 2 * graph.num_edges)
-    ), aqe_disabled(spark):
+    # scoped to the peel's exchange volume: each superstep aggregates the
+    # alive-filtered symmetric edge stream (≤ 2m rows) into an ≤ n-row
+    # degree table. sym is built inside the scope so the per-superstep
+    # semi-joins match its partitioning.
+    with fixpoint_scope(spark, max(graph.num_nodes, 2 * graph.num_edges)):
         sym = (
             graph.symmetric_edges()
             .select(F.col("src").alias("_esrc"), F.col("dst").alias("_edst"))

@@ -22,14 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from ..plans.graph import GraphFrame
-from ..streaming.superstep import (
-    Checkpointer,
-    SuperstepMetrics,
-    aqe_disabled,
-    broadcast_joins_disabled,
-    fixpoint_shuffle_partitions,
-    fixpoint_width,
-)
+from ..streaming.superstep import Checkpointer, SuperstepMetrics, fixpoint_scope
 
 
 def label_propagation(
@@ -43,22 +36,11 @@ def label_propagation(
     met = metrics if metrics is not None else SuperstepMetrics(name="lpa")
     ckpt = checkpointer or Checkpointer(spark, name="lpa", every=4)
 
-    # shuffle width scoped to the vote stream (2m rows of (v, label) votes +
-    # n state rows per superstep) — measured 4.6 s → 1.8–2.4 s for 4
-    # supersteps at sf0.1 (see fixpoint_shuffle_partitions). The symmetric
-    # edge table is built inside the scope so the per-superstep labels ⋈ sym
-    # join matches partitioning on the edge side (guide §2.4 — no edge
-    # re-exchange per superstep).
-    from contextlib import nullcontext
-
-    loop_w = fixpoint_width(spark, max(graph.num_nodes, 2 * graph.num_edges))
-    # rows gate rationale: components.py — only genuinely small states trade
-    # the broadcast join for the co-partitioned SMJ
-    small = max(graph.num_nodes, 2 * graph.num_edges) <= 32_000
-    bj_ctx = broadcast_joins_disabled(spark) if loop_w <= 8 and small else nullcontext()
-    with fixpoint_shuffle_partitions(
-        spark, max(graph.num_nodes, 2 * graph.num_edges)
-    ), aqe_disabled(spark), bj_ctx:
+    # scoped to the vote stream (2m rows of (v, label) votes + n state rows
+    # per superstep) — measured 4.6 s → 1.8–2.4 s for 4 supersteps at sf0.1.
+    # The symmetric edge table is built inside the scope so the
+    # per-superstep labels ⋈ sym join matches partitioning on the edge side.
+    with fixpoint_scope(spark, max(graph.num_nodes, 2 * graph.num_edges)):
         sym = (
             graph.symmetric_edges()
             .select(F.col("src").alias("_esrc"), F.col("dst").alias("_edst"))

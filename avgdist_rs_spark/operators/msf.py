@@ -44,12 +44,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.hashing import portable_hash64
-from ..streaming.superstep import (
-    Checkpointer,
-    SuperstepMetrics,
-    aqe_disabled,
-    fixpoint_shuffle_partitions,
-)
+from ..streaming.superstep import Checkpointer, SuperstepMetrics, fixpoint_scope
 
 
 def _canonical_weighted(edges: DataFrame, weight_col: str | None) -> DataFrame:
@@ -115,99 +110,98 @@ def minimum_spanning_forest(
     n_forest_unions = 0
     step = 0
 
-    with fixpoint_shuffle_partitions(spark, max(n_edges, 1), per_partition=250_000):
-        with aqe_disabled(spark):
-            for _round in range(1, max_rounds + 1):
-                t0 = time.monotonic()
-                # 1. relabel endpoints; drop intra-component edges for good
-                el = (
-                    ew.select("u", "v", "w")
-                    .join(labels.select(F.col("x").alias("u"), F.col("lbl").alias("_lu")), "u")
-                    .join(labels.select(F.col("x").alias("v"), F.col("lbl").alias("_lv")), "v")
+    with fixpoint_scope(spark, max(n_edges, 1), per_partition=250_000):
+        for _round in range(1, max_rounds + 1):
+            t0 = time.monotonic()
+            # 1. relabel endpoints; drop intra-component edges for good
+            el = (
+                ew.select("u", "v", "w")
+                .join(labels.select(F.col("x").alias("u"), F.col("lbl").alias("_lu")), "u")
+                .join(labels.select(F.col("x").alias("v"), F.col("lbl").alias("_lv")), "v")
+            )
+            ew = cut(
+                el.where(F.col("_lu") != F.col("_lv")).select(
+                    "u", "v", "w", "_lu", "_lv"
                 )
-                ew = cut(
-                    el.where(F.col("_lu") != F.col("_lv")).select(
-                        "u", "v", "w", "_lu", "_lv"
-                    )
+            )
+            n_cross = ew.count()
+            if n_cross == 0:
+                break
+            # 2. per-component minimum crossing edge (total order w,u,v).
+            # pick is consumed twice (forest edges + parent pointers), so
+            # it is the round's ONE eager cut — sel/par derive from the
+            # cached rows instead of re-running the groupBy
+            cand = ew.select(
+                F.col("_lu").alias("c"),
+                F.struct("w", "u", "v", F.col("_lv").alias("o")).alias("m"),
+            ).unionAll(
+                ew.select(
+                    F.col("_lv").alias("c"),
+                    F.struct("w", "u", "v", F.col("_lu").alias("o")).alias("m"),
                 )
-                n_cross = ew.count()
-                if n_cross == 0:
-                    break
-                # 2. per-component minimum crossing edge (total order w,u,v).
-                # pick is consumed twice (forest edges + parent pointers), so
-                # it is the round's ONE eager cut — sel/par derive from the
-                # cached rows instead of re-running the groupBy
-                cand = ew.select(
-                    F.col("_lu").alias("c"),
-                    F.struct("w", "u", "v", F.col("_lv").alias("o")).alias("m"),
-                ).unionAll(
-                    ew.select(
-                        F.col("_lv").alias("c"),
-                        F.struct("w", "u", "v", F.col("_lu").alias("o")).alias("m"),
-                    )
+            )
+            pick = cut(cand.groupBy("c").agg(F.min("m").alias("m")), lazy=False)
+            sel = pick.select(
+                F.col("m.u").alias("u"), F.col("m.v").alias("v"), F.col("m.w").alias("w")
+            ).distinct()
+            # forest accumulates lazily; fold every 4 rounds bounds the
+            # Union depth without rewriting the whole forest each round
+            forest = sel if forest is None else forest.unionAll(sel)
+            n_forest_unions += 1
+            if n_forest_unions % 4 == 0:
+                forest = cut(forest, lazy=False)
+            # 3. contraction: parent pointers, 2-cycle break toward the
+            # smaller id, pointer-jump to the root
+            par = pick.select("c", F.col("m.o").alias("p"))
+            g = par.select(F.col("c").alias("_pc"), F.col("p").alias("_pp"))
+            par = par.join(g, par.p == F.col("_pc"), "left").select(
+                "c",
+                F.when(
+                    (F.col("_pp") == F.col("c")) & (F.col("c") < F.col("p")),
+                    F.col("c"),
                 )
-                pick = cut(cand.groupBy("c").agg(F.min("m").alias("m")), lazy=False)
-                sel = pick.select(
-                    F.col("m.u").alias("u"), F.col("m.v").alias("v"), F.col("m.w").alias("w")
-                ).distinct()
-                # forest accumulates lazily; fold every 4 rounds bounds the
-                # Union depth without rewriting the whole forest each round
-                forest = sel if forest is None else forest.unionAll(sel)
-                n_forest_unions += 1
-                if n_forest_unions % 4 == 0:
-                    forest = cut(forest, lazy=False)
-                # 3. contraction: parent pointers, 2-cycle break toward the
-                # smaller id, pointer-jump to the root
-                par = pick.select("c", F.col("m.o").alias("p"))
+                .otherwise(F.col("p"))
+                .alias("p"),
+            )
+            while True:
+                step += 1
+                # two chained dereferences per action, the second through
+                # the ALREADY-JUMPED map — depth ~4x per jump job (the
+                # components.py squaring trick, VERDICT r5 next-#7) and the
+                # moved-count rides the SAME job as the jump materialization
                 g = par.select(F.col("c").alias("_pc"), F.col("p").alias("_pp"))
-                par = par.join(g, par.p == F.col("_pc"), "left").select(
-                    "c",
-                    F.when(
-                        (F.col("_pp") == F.col("c")) & (F.col("c") < F.col("p")),
-                        F.col("c"),
-                    )
-                    .otherwise(F.col("p"))
-                    .alias("p"),
+                once = par.join(g, par.p == F.col("_pc"), "left").select(
+                    "c", F.coalesce("_pp", "p").alias("p"), par.p.alias("_old")
                 )
-                while True:
-                    step += 1
-                    # two chained dereferences per action, the second through
-                    # the ALREADY-JUMPED map — depth ~4x per jump job (the
-                    # components.py squaring trick, VERDICT r5 next-#7) and the
-                    # moved-count rides the SAME job as the jump materialization
-                    g = par.select(F.col("c").alias("_pc"), F.col("p").alias("_pp"))
-                    once = par.join(g, par.p == F.col("_pc"), "left").select(
-                        "c", F.coalesce("_pp", "p").alias("p"), par.p.alias("_old")
-                    )
-                    g2 = once.select(F.col("c").alias("_qc"), F.col("p").alias("_qp"))
-                    jumped = once.join(g2, once.p == F.col("_qc"), "left").select(
-                        "c", F.coalesce("_qp", "p").alias("p"), "_old"
-                    )
-                    jumped = cut(jumped)
-                    moved = int(
-                        jumped.agg(
-                            F.sum((F.col("p") != F.col("_old")).cast("long"))
-                        ).collect()[0][0]
-                        or 0
-                    )
-                    par = jumped.drop("_old")
-                    if moved == 0:
-                        break
-                # 4. fold the round's root map into the vertex labels — lazy:
-                # the next round's n_cross count (or nothing, on the final
-                # round) materializes it
-                labels = cut(
-                    labels.join(
-                        par.select(F.col("c").alias("lbl"), F.col("p").alias("_r")),
-                        "lbl",
-                        "left",
-                    ).select("x", F.coalesce("_r", "lbl").alias("lbl"))
+                g2 = once.select(F.col("c").alias("_qc"), F.col("p").alias("_qp"))
+                jumped = once.join(g2, once.p == F.col("_qc"), "left").select(
+                    "c", F.coalesce("_qp", "p").alias("p"), "_old"
                 )
-                met.record(step, n_cross, time.monotonic() - t0)
-            else:
-                raise RuntimeError(
-                    f"msf: not converged within max_rounds={max_rounds}"
+                jumped = cut(jumped)
+                moved = int(
+                    jumped.agg(
+                        F.sum((F.col("p") != F.col("_old")).cast("long"))
+                    ).collect()[0][0]
+                    or 0
                 )
+                par = jumped.drop("_old")
+                if moved == 0:
+                    break
+            # 4. fold the round's root map into the vertex labels — lazy:
+            # the next round's n_cross count (or nothing, on the final
+            # round) materializes it
+            labels = cut(
+                labels.join(
+                    par.select(F.col("c").alias("lbl"), F.col("p").alias("_r")),
+                    "lbl",
+                    "left",
+                ).select("x", F.coalesce("_r", "lbl").alias("lbl"))
+            )
+            met.record(step, n_cross, time.monotonic() - t0)
+        else:
+            raise RuntimeError(
+                f"msf: not converged within max_rounds={max_rounds}"
+            )
     if forest is None:
         return ew.select("u", "v", "w").limit(0)
     return forest

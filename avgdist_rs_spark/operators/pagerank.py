@@ -24,12 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..plans.graph import GraphFrame
-from ..streaming.superstep import (
-    Checkpointer,
-    SuperstepMetrics,
-    aqe_disabled,
-    fixpoint_shuffle_partitions,
-)
+from ..streaming.superstep import Checkpointer, SuperstepMetrics, fixpoint_scope
 
 
 def pagerank(
@@ -60,20 +55,12 @@ def pagerank(
     met = metrics if metrics is not None else SuperstepMetrics(name="pagerank")
     ckpt = checkpointer or Checkpointer(spark, name="pagerank", every=1)
 
-    # fixed-shape fixpoint: run without AQE (see aqe_disabled), shuffle width
-    # scoped to the per-superstep exchange volume — the rank vector (n rows)
-    # and the contribution stream (m rows) are all that moves each iteration
-    # (measured on this loop: 14–15.4 s → 6.2–7.7 s for 10 iterations at
-    # sf0.1, see fixpoint_shuffle_partitions). The scope opens BEFORE the
-    # normalized edge table is built so the deg join lands it hash-partitioned
-    # on src AT THE LOOP WIDTH: the per-iteration ranks ⋈ edges join then
-    # matches on both sides and the edge table is never re-exchanged inside
-    # the loop (guide §2.4 — two operations keyed the same way share one
-    # exchange; previously each superstep re-hashed the persisted 32-wide
-    # edge cache down to the loop width)
-    with fixpoint_shuffle_partitions(
-        spark, max(n, graph.num_edges)
-    ), aqe_disabled(spark):
+    # the rank vector (n rows) and the contribution stream (m rows) are all
+    # that moves each iteration. The scope opens BEFORE the normalized edge
+    # table is built so the deg join lands it hash-partitioned on src AT THE
+    # LOOP WIDTH: the per-iteration ranks ⋈ edges join then matches on both
+    # sides (see fixpoint_scope)
+    with fixpoint_scope(spark, max(n, graph.num_edges)):
         # out-degree-normalized edge weights, computed once and persisted at
         # the loop's exchange width
         deg = graph.edges.groupBy("src").agg(F.count("*").alias("outdeg"))

@@ -47,12 +47,11 @@ Physical shape per superstep: the same fused union-aggregate discipline as
 exchange). The alive-edge table is LOOP-CARRIED: seeded once from the full
 edge set and shrunk by (broadcast) anti-joins as vertices are assigned —
 every superstep scans the current m_t, never the original m₀, and phase 2
-reuses the table without a rebuild. Jump supersteps run with AQE
-enabled (the label self-join measurably wants adaptive broadcast — see
-``components.connected_components``), plain ones with AQE disabled. The
-``assigned`` accumulator is folded through ``localCheckpoint`` every
-``ASSIGNED_FOLD_EVERY`` unions so deep-trim DAGs cannot stack thousands of
-Union children into the final plan (round-3 advice).
+reuses the table without a rebuild. The whole operator runs in one
+``fixpoint_scope``. The ``assigned`` accumulator is folded through
+``localCheckpoint`` every ``ASSIGNED_FOLD_EVERY`` unions so deep-trim DAGs
+cannot stack thousands of Union children into the final plan (round-3
+advice).
 """
 
 from __future__ import annotations
@@ -67,11 +66,8 @@ from ..plans.graph import GraphFrame
 from ..streaming.superstep import (
     Checkpointer,
     SuperstepMetrics,
-    aqe_disabled,
-    aqe_enabled,
-    broadcast_joins_disabled,
-    fixpoint_shuffle_partitions,
-    fixpoint_width,
+    converge,
+    fixpoint_scope,
 )
 
 #: color supersteps per round before "auto" enables pointer jumping (mirrors
@@ -94,7 +90,6 @@ ASSIGNED_FOLD_EVERY = 8
 JUMP_SQUARINGS = 2
 
 
-
 def strongly_connected_components(
     graph: GraphFrame,
     max_rounds: int = 64,
@@ -113,30 +108,6 @@ def strongly_connected_components(
     assigned: DataFrame | None = None
     n_acc = 0
     step = 0
-
-    # the width scope opens before the alive-edge table is seeded so ea can be
-    # hash-partitioned on _s AT THE LOOP WIDTH once: the color-pass join
-    # (state.v == _s) then matches partitioning on the edge side every
-    # superstep instead of re-exchanging the table per superstep (guide §2.4);
-    # the broadcast anti-join shrinks and localCheckpoints preserve it.
-    # loop-carried alive-edge table: seeded with the full edge set, SHRUNK by
-    # anti-joining out vertices as they leave `alive` (dead singletons each
-    # trim superstep, found SCCs each round) — every superstep scans the
-    # current m_t instead of rebuilding alive⋈edges⋈alive from the original
-    # m₀, and phase 2 reuses the table as-is. Each shrink folds the lineage
-    # immediately: deferring folds makes every downstream action re-execute
-    # the stacked anti-joins AND recompute their lazy inputs (measured:
-    # cadence-8 cost ~0.5 s/superstep in rebuilt broadcasts on a 240-chain),
-    # while the materialization is bounded by the m_t scan the superstep does
-    # anyway.
-    loop_w = fixpoint_width(
-        spark, max(graph.num_nodes, graph.num_edges), per_partition=250_000
-    )
-    ea = (
-        graph.edges.select(F.col("src").alias("_s"), F.col("dst").alias("_d"))
-        .repartition(loop_w, "_s")
-        .localCheckpoint(eager=True)
-    )
 
     def _shrink_ea(gone: DataFrame, gone_count: int) -> None:
         nonlocal ea
@@ -182,129 +153,122 @@ def strongly_connected_components(
         rcolor pass, which only runs once the coloring has already proven
         the diameter large."""
         nonlocal step
-        state = state0
-        it = 0
-        while True:
-            it += 1
-            t0 = time.monotonic()
+        first = step + 1
+
+        def superstep(state: DataFrame, it: int) -> DataFrame:
             jump = (
                 force_jump
                 or shortcut is True
-                or (shortcut == "auto" and it > AUTO_SHORTCUT_AFTER)
+                or (shortcut == "auto" and it - first >= AUTO_SHORTCUT_AFTER)
             )
-            # jump supersteps want AQE only at session shuffle width; once
-            # the loop-scoped width is narrow (≤8) AQE is pure re-planning
-            # cost (see components.connected_components)
-            wide = int(spark.conf.get("spark.sql.shuffle.partitions")) > 8
-            with (aqe_enabled if (jump and wide) else aqe_disabled)(spark):
-                contrib = state.join(
-                    edge_tbl, state.v == F.col(src_col)
-                ).select(
-                    F.col(dst_col).alias("v"),
-                    _pri(F.col(label)).alias("cand"),
-                    F.lit(None).cast("long").alias("_prev"),
-                )
-                own = state.select(
-                    "v", _pri(F.col(label)).alias("cand"), F.col(label).alias("_prev")
-                )
-                stepped = (
-                    contrib.unionAll(own)
-                    .groupBy("v")
-                    .agg(F.max("cand").alias("m"), F.max("_prev").alias("_old"))
-                    .select("v", F.col("m.w").alias(label), "_old")
-                )
-                if jump:
-                    # monotone shortcut: adopt your label's own label — sound
-                    # because reachability composes (same recipe as
-                    # components.py), applied by ITERATED SQUARING: each
-                    # dereference goes through the ALREADY-JUMPED map, so k
-                    # self-joins grow pointer depth ~2^k per superstep (the
-                    # former fixed two-deref through the pre-step map only
-                    # reached ~3x). The joins are cheap label-table self-joins
-                    # at the narrow loop width; whole supersteps of fixed cost
-                    # (job scheduling + plan analysis) are what they save —
-                    # 10k directed cycle measured 42 supersteps at depth 3x.
-                    for _sq in range(JUMP_SQUARINGS):
-                        pmap = stepped.select(
-                            F.col("v").alias("_pv"), F.col(label).alias("_pc")
+            contrib = state.join(
+                edge_tbl, state.v == F.col(src_col)
+            ).select(
+                F.col(dst_col).alias("v"),
+                _pri(F.col(label)).alias("cand"),
+                F.lit(None).cast("long").alias("_prev"),
+            )
+            own = state.select(
+                "v", _pri(F.col(label)).alias("cand"), F.col(label).alias("_prev")
+            )
+            stepped = (
+                contrib.unionAll(own)
+                .groupBy("v")
+                .agg(F.max("cand").alias("m"), F.max("_prev").alias("_old"))
+                .select("v", F.col("m.w").alias(label), "_old")
+            )
+            if jump:
+                # monotone shortcut: adopt your label's own label — sound
+                # because reachability composes (same recipe as
+                # components.py), applied by ITERATED SQUARING: each
+                # dereference goes through the ALREADY-JUMPED map, so k
+                # self-joins grow pointer depth ~2^k per superstep (the
+                # former fixed two-deref through the pre-step map only
+                # reached ~3x). The joins are cheap label-table self-joins
+                # at the narrow loop width; whole supersteps of fixed cost
+                # (job scheduling + plan analysis) are what they save —
+                # 10k directed cycle measured 42 supersteps at depth 3x.
+                for _sq in range(JUMP_SQUARINGS):
+                    pmap = stepped.select(
+                        F.col("v").alias("_pv"), F.col(label).alias("_pc")
+                    )
+                    stepped = stepped.join(
+                        pmap, stepped[label] == F.col("_pv"), "left"
+                    ).select(
+                        "v",
+                        "_old",
+                        # NULL check, not coalesce-of-struct: xxhash64(NULL)
+                        # is the seed, so _pri(NULL) is a NON-null struct
+                        F.when(F.col("_pc").isNull(), F.col(label))
+                        .otherwise(
+                            F.greatest(
+                                _pri(F.col(label)), _pri(F.col("_pc"))
+                            ).getField("w")
                         )
-                        stepped = stepped.join(
-                            pmap, stepped[label] == F.col("_pv"), "left"
-                        ).select(
-                            "v",
-                            "_old",
-                            # NULL check, not coalesce-of-struct: xxhash64(NULL)
-                            # is the seed, so _pri(NULL) is a NON-null struct
-                            F.when(F.col("_pc").isNull(), F.col(label))
-                            .otherwise(
-                                F.greatest(
-                                    _pri(F.col(label)), _pri(F.col("_pc"))
-                                ).getField("w")
-                            )
-                            .alias(label),
-                        )
-                # lazy: the convergence aggregate is the materializing action
-                stepped = ckpt.step(stepped, step + 1, lazy=True)
-                changed = int(
-                    stepped.agg(
-                        F.sum((F.col(label) != F.col("_old")).cast("long"))
-                    ).collect()[0][0]
-                    or 0
-                )
-            state = stepped.drop("_old")
-            _record(changed, t0)
-            if changed == 0:
-                return state
-            if step >= max_supersteps:
-                # a truncated fixpoint would silently split SCCs — fail loudly
-                raise RuntimeError(
-                    f"scc: {label} propagation not converged within "
-                    f"max_supersteps={max_supersteps}; raise the budget"
-                )
+                        .alias(label),
+                    )
+            return stepped
 
-    # shuffle width scoped to the exchange volume (≤ the session value):
-    # phase-1 trims and phase-2 fixpoints exchange at most m_t ≤ m rows.
-    # per_partition 250k as in components.py: the coloring/membership
-    # fixpoints pointer-jump through self-joins (multiple stages per
-    # superstep), the regime where fewer, larger partitions measured faster
-    # SMALL-state loops also run without auto-broadcast (1 job/superstep
-    # instead of 2 — see broadcast_joins_disabled and the rows gate rationale
-    # in components.py); the explicit F.broadcast hints in _shrink_ea are
-    # unaffected
-    from contextlib import nullcontext
+        # a truncated fixpoint would silently split SCCs: converge raises
+        state = converge(
+            "scc", state0, superstep, F.col(label) != F.col("_old"),
+            ckpt, met, max_supersteps, first=first,
+        )
+        step = met.records[-1]["superstep"]
+        return state
 
-    small = max(graph.num_nodes, graph.num_edges) <= 32_000
-    bj_ctx = broadcast_joins_disabled(spark) if loop_w <= 8 and small else nullcontext()
-    with fixpoint_shuffle_partitions(
+    # one scope for the whole operator: phase-1 trims and phase-2 fixpoints
+    # exchange at most m_t ≤ m rows; 250k rows/partition because the
+    # coloring/membership fixpoints pointer-jump through self-joins (see
+    # fixpoint_scope). The explicit F.broadcast hints in _shrink_ea are
+    # unaffected by its broadcast rule.
+    with fixpoint_scope(
         spark, max(graph.num_nodes, graph.num_edges), per_partition=250_000
-    ), bj_ctx:
+    ) as loop_w:
+        # loop-carried alive-edge table, hash-partitioned on _s AT THE LOOP
+        # WIDTH once: the color-pass join (state.v == _s) then co-partitions
+        # every superstep (guide §2.4); the broadcast anti-join shrinks and
+        # localCheckpoints preserve it. Seeded with the full edge set, SHRUNK
+        # by anti-joining out vertices as they leave `alive` (dead singletons
+        # each trim superstep, found SCCs each round) — every superstep scans
+        # the current m_t instead of rebuilding alive⋈edges⋈alive from the
+        # original m₀, and phase 2 reuses the table as-is. Each shrink folds
+        # the lineage immediately: deferring folds makes every downstream
+        # action re-execute the stacked anti-joins AND recompute their lazy
+        # inputs (measured: cadence-8 cost ~0.5 s/superstep in rebuilt
+        # broadcasts on a 240-chain), while the materialization is bounded by
+        # the m_t scan the superstep does anyway.
+        ea = (
+            graph.edges.select(F.col("src").alias("_s"), F.col("dst").alias("_d"))
+            .repartition(loop_w, "_s")
+            .localCheckpoint(eager=True)
+        )
         for _round in range(1, max_rounds + 1):
             if n_alive == 0:
                 break
             # ---- phase 1: trim fixpoint (singleton SCCs) -----------------------
-            with aqe_disabled(spark):
-                while n_alive > 0:
-                    t0 = time.monotonic()
-                    # a vertex survives iff it has ≥1 out-edge AND ≥1 in-edge in
-                    # the alive-edge table (ea endpoints are alive by invariant)
-                    keep = (
-                        alive.join(ea.select(F.col("_s").alias("v")).distinct(), "v", "semi")
-                        .join(ea.select(F.col("_d").alias("v")).distinct(), "v", "semi")
-                    )
-                    keep = keep.localCheckpoint(eager=False)  # count() materializes
-                    n_keep = keep.count()
-                    if n_keep == n_alive:
-                        _record(0, t0)
-                        break
-                    # materialize once — both the accumulator union and the ea
-                    # shrink consume it
-                    dead = alive.join(keep, "v", "anti").select(
-                        "v", F.col("v").alias("component")
-                    ).localCheckpoint(eager=True)
-                    _accumulate(dead)
-                    _shrink_ea(dead.select("v"), n_alive - n_keep)
-                    alive, n_alive = keep, n_keep
-                    _record(n_alive, t0)
+            while n_alive > 0:
+                t0 = time.monotonic()
+                # a vertex survives iff it has ≥1 out-edge AND ≥1 in-edge in
+                # the alive-edge table (ea endpoints are alive by invariant)
+                keep = (
+                    alive.join(ea.select(F.col("_s").alias("v")).distinct(), "v", "semi")
+                    .join(ea.select(F.col("_d").alias("v")).distinct(), "v", "semi")
+                )
+                keep = keep.localCheckpoint(eager=False)  # count() materializes
+                n_keep = keep.count()
+                if n_keep == n_alive:
+                    _record(0, t0)
+                    break
+                # materialize once — both the accumulator union and the ea
+                # shrink consume it
+                dead = alive.join(keep, "v", "anti").select(
+                    "v", F.col("v").alias("component")
+                ).localCheckpoint(eager=True)
+                _accumulate(dead)
+                _shrink_ea(dead.select("v"), n_alive - n_keep)
+                alive, n_alive = keep, n_keep
+                _record(n_alive, t0)
             if n_alive == 0:
                 break
             # ---- phase 2: one coloring round on the cyclic remainder -----------
@@ -319,7 +283,11 @@ def strongly_connected_components(
             )
             if large_diameter:
                 # ---- backward membership as a second max-propagation ----------
-                # class-restricted edges (SCC paths never leave the color class)
+                # class-restricted edges (SCC paths never leave the color
+                # class). localCheckpoint, not persist: the jump's self-join
+                # re-plans eac under fresh attribute ids, and with AQE off
+                # that copy missed the cache and recomputed both joins every
+                # superstep (10k cycle on local[4]: 24 s → 48 s)
                 eac = (
                     ea.join(
                         color.select(F.col("v").alias("_s"), F.col("color").alias("_sc")),
@@ -331,9 +299,8 @@ def strongly_connected_components(
                     )
                     .where(F.col("_sc") == F.col("_dc"))
                     .select("_s", "_d")
-                    .persist(StorageLevel.MEMORY_AND_DISK)
+                    .localCheckpoint(eager=True)
                 )
-                eac.count()
                 r0 = color.select("v", F.col("v").alias("rcolor")).localCheckpoint(
                     eager=True
                 )
@@ -348,44 +315,42 @@ def strongly_connected_components(
                     .select("v", "color")
                     .localCheckpoint(eager=True)
                 )
-                eac.unpersist()
             else:
                 # ---- backward frontier from each pivot within its class -------
                 # work proportional to the found SCCs, right for small diameters
                 mem = color.where(F.col("v") == F.col("color")).select("v", "color")
                 mem = mem.localCheckpoint(eager=True)
                 frontier = mem
-                with aqe_disabled(spark):
-                    while True:
-                        t0 = time.monotonic()
-                        preds = (
-                            frontier.join(ea, frontier.v == F.col("_d"))
-                            .select(F.col("_s").alias("v"), "color")
-                            .distinct()
-                            .join(
-                                color.select(
-                                    F.col("v").alias("v"), F.col("color").alias("_vc")
-                                ),
-                                "v",
-                            )
-                            .where(F.col("color") == F.col("_vc"))
-                            .select("v", "color")
+                while True:
+                    t0 = time.monotonic()
+                    preds = (
+                        frontier.join(ea, frontier.v == F.col("_d"))
+                        .select(F.col("_s").alias("v"), "color")
+                        .distinct()
+                        .join(
+                            color.select(
+                                F.col("v").alias("v"), F.col("color").alias("_vc")
+                            ),
+                            "v",
                         )
-                        new = preds.join(mem, ["v", "color"], "anti").localCheckpoint(
-                            eager=True
+                        .where(F.col("color") == F.col("_vc"))
+                        .select("v", "color")
+                    )
+                    new = preds.join(mem, ["v", "color"], "anti").localCheckpoint(
+                        eager=True
+                    )
+                    n_new = new.count()
+                    _record(n_new, t0)
+                    if n_new == 0:
+                        break
+                    if step >= max_supersteps:
+                        raise RuntimeError(
+                            f"scc: backward sweep not converged within "
+                            f"max_supersteps={max_supersteps}; raise the budget"
                         )
-                        n_new = new.count()
-                        _record(n_new, t0)
-                        if n_new == 0:
-                            break
-                        if step >= max_supersteps:
-                            raise RuntimeError(
-                                f"scc: backward sweep not converged within "
-                                f"max_supersteps={max_supersteps}; raise the budget"
-                            )
-                        mem = mem.unionAll(new)
-                        mem = ckpt.step(mem, step)
-                        frontier = new
+                    mem = mem.unionAll(new)
+                    mem = ckpt.step(mem, step)
+                    frontier = new
             # label each found SCC with its min member; remove from alive
             labels = mem.groupBy("color").agg(F.min("v").alias("component"))
             found = (

@@ -147,19 +147,6 @@ def _bucketed(
     )
 
 
-def lsh_signature(vec_col, planes: np.ndarray) -> F.Column:
-    """Single-vector bucket key from an in-plan plane set — kept for tests and
-    tiny plane counts; the operators use :func:`_bucketed` (broadcast planes)."""
-    vec = F.col(vec_col) if isinstance(vec_col, str) else vec_col
-    bits = [
-        F.when(
-            _dot(vec, F.array(*[F.lit(float(x)) for x in p])) >= 0, F.lit("1")
-        ).otherwise(F.lit("0"))
-        for p in planes
-    ]
-    return F.concat(*bits)
-
-
 def embedding_near_dup_pairs(
     emb: DataFrame,
     threshold: float = 0.4,

@@ -30,16 +30,14 @@ guard errors the oracle loudly rather than under-iterating silently).
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..streaming.superstep import (
     Checkpointer,
     SuperstepMetrics,
-    aqe_disabled,
-    fixpoint_shuffle_partitions,
+    converge,
+    fixpoint_scope,
 )
 
 
@@ -70,65 +68,41 @@ def sssp(
     if int(probe["neg"] or 0):
         raise ValueError("sssp requires non-negative edge weights")
     n_edges = int(probe["m"])
-    # hash-partition the edge table on src at the LOOP width once: the
-    # per-superstep frontier ⋈ ew join then co-partitions and the edge table
-    # never re-exchanges inside the loop (guide §2.4)
-    from ..streaming.superstep import fixpoint_width
+    # a vertex "changed" when it is new or its distance improved; the next
+    # superstep relaxes only from those (the frontier), read off the
+    # checkpointed state by the same predicate
+    improved = F.col("_old").isNull() | (F.col("dist") < F.col("_old"))
 
-    loop_w = fixpoint_width(spark, max(n_edges, 1), per_partition=250_000)
-    ew = ew.repartition(loop_w, "src").persist()
-    ew.count()
+    with fixpoint_scope(spark, max(n_edges, 1), per_partition=250_000) as width:
+        # hash-partition the edge table on src at the LOOP width once: the
+        # per-superstep frontier ⋈ ew join then co-partitions and the edge
+        # table never re-exchanges inside the loop (guide §2.4)
+        ew = ew.repartition(width, "src").persist()
+        ew.count()
+        # every source starts improved (_old NULL)
+        dist0 = sources.select(
+            F.col("v"), F.lit(0.0).alias("dist"), F.lit(None).cast("double").alias("_old")
+        ).distinct().localCheckpoint(eager=True)
 
-    dist = sources.select(
-        F.col("v"), F.lit(0.0).alias("dist")
-    ).distinct().localCheckpoint(eager=True)
-    frontier = dist  # vertices improved last superstep
-    it = 0
-    from contextlib import nullcontext
+        def superstep(dist: DataFrame, it: int) -> DataFrame:
+            frontier = dist.where(improved)
+            # relax only from the improved set; state rides the union so
+            # the min IS the new distance table (one exchange)
+            contrib = frontier.join(ew, frontier.v == ew.src).select(
+                F.col("dst").alias("v"),
+                (F.col("dist") + F.col("w")).alias("d"),
+                F.lit(None).cast("double").alias("_prev"),
+            )
+            state = dist.select(
+                "v", F.col("dist").alias("d"), F.col("dist").alias("_prev")
+            )
+            return (
+                contrib.unionAll(state)
+                .groupBy("v")
+                .agg(F.min("d").alias("dist"), F.max("_prev").alias("_old"))
+            )
 
-    from ..streaming.superstep import broadcast_joins_disabled
-
-    # rows gate rationale: components.py — small-state loops only
-    bj_ctx = (
-        broadcast_joins_disabled(spark)
-        if loop_w <= 8 and n_edges <= 32_000
-        else nullcontext()
-    )
-    with fixpoint_shuffle_partitions(spark, max(n_edges, 1), per_partition=250_000), bj_ctx:
-        with aqe_disabled(spark):
-            while True:
-                it += 1
-                t0 = time.monotonic()
-                # relax only from the improved set; state rides the union so
-                # the min IS the new distance table (one exchange)
-                contrib = frontier.join(ew, frontier.v == ew.src).select(
-                    F.col("dst").alias("v"),
-                    (F.col("dist") + F.col("w")).alias("d"),
-                    F.lit(None).cast("double").alias("_prev"),
-                )
-                state = dist.select(
-                    "v", F.col("dist").alias("d"), F.col("dist").alias("_prev")
-                )
-                stepped = (
-                    contrib.unionAll(state)
-                    .groupBy("v")
-                    .agg(F.min("d").alias("dist"), F.max("_prev").alias("_old"))
-                )
-                stepped = ckpt.step(stepped, it, lazy=True)
-                improved = stepped.where(
-                    F.col("_old").isNull() | (F.col("dist") < F.col("_old"))
-                )
-                n_improved = improved.count()
-                met.record(it, n_improved, time.monotonic() - t0)
-                frontier = improved.select("v", "dist")
-                dist = stepped.select("v", "dist")
-                if n_improved == 0:
-                    break
-                if it >= max_supersteps:
-                    raise RuntimeError(
-                        f"sssp: not converged within max_supersteps="
-                        f"{max_supersteps} (negative cycle or budget too low)"
-                    )
+        dist = converge("sssp", dist0, superstep, improved, ckpt, met, max_supersteps)
     ew.unpersist()
     return dist
 

@@ -200,13 +200,3 @@ def transcript_graph(transcripts: DataFrame, tool_responses: bool = False) -> Gr
     # transcript_edges emits distinct pairs by construction (lead is unique per
     # (conv_id, turn_idx); tool edges unique per turn) -> skip the dedup shuffle
     return GraphFrame.from_any_edges(transcript_edges(transcripts, tool_responses), dedup=False)
-
-
-def write_transcripts(transcripts: DataFrame, path: str) -> None:
-    """Persist as Parquet partitioned the way a 10^12-turn Iceberg table would be
-    bucketed: by conv_id hash — keeps the reply-edge window shuffle-free."""
-    transcripts.write.mode("overwrite").parquet(path)
-
-
-def read_transcripts(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)

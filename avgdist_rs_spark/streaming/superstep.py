@@ -15,6 +15,21 @@ handled explicitly (SURVEY.md §4):
 
 `SuperstepMetrics` records per-superstep wall time and frontier size and exposes
 `supersteps_per_min` — the benchmark unit in BASELINE.json.
+
+Every fixpoint loop (CC, SCC, k-core, SSSP, MSF, PageRank, label
+propagation) runs inside one `fixpoint_scope(spark, rows, per_partition)`.
+Its policy, for ``rows`` ≈ the loop's per-superstep exchange volume:
+
+- ``spark.sql.shuffle.partitions`` = the loop width, ceil(rows /
+  per_partition), at least 2 and never above the session value;
+- AQE off;
+- auto-broadcast off iff width ≤ 8 and rows ≤ ``SMALL_STATE_ROWS``.
+
+All three are restored LIFO on exit, exceptions included. Loops whose
+superstep is "recompute the state, stop when no row changed" hand the loop
+itself to `converge`: lazy checkpoint, one materializing ``sum(changed)``
+aggregate (one Spark job per superstep), metrics, and a hard error when the
+superstep budget runs out.
 """
 
 from __future__ import annotations
@@ -22,10 +37,12 @@ from __future__ import annotations
 import json
 import os
 import time
-from contextlib import contextmanager
+from contextlib import ExitStack, contextmanager
 from dataclasses import dataclass, field
+from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 
 @dataclass
@@ -201,52 +218,9 @@ class Checkpointer:
         return self.spark.read.parquet(last["path"]), int(last["superstep"])
 
 
-#: per-session stack of saved AQE values — makes nested scopes restore in LIFO
-#: order (an inner aqe_enabled inside an outer aqe_disabled puts the outer
-#: "false" back on exit, and the outer scope then restores the session value).
-#: Concurrent loops on ONE session remain session-global — documented limit.
-_AQE_STACK: dict[int, list[str]] = {}
-
-
-@contextmanager
-def _aqe_scope(spark: SparkSession, value: str):
-    key = "spark.sql.adaptive.enabled"
-    stack = _AQE_STACK.setdefault(id(spark), [])
-    try:
-        old = spark.conf.get(key)
-    except Exception:
-        old = "true"
-    stack.append(old)
-    spark.conf.set(key, value)
-    try:
-        yield
-    finally:
-        spark.conf.set(key, stack.pop())
-
-
-def aqe_disabled(spark: SparkSession):
-    """Disable adaptive query execution for a superstep loop, restoring the
-    entry setting on exit (re-entrant: nested scopes restore LIFO).
-
-    Iterative fixpoints here are fixed-shape plans over small keyed state —
-    AQE has nothing to re-plan but still pays per-superstep query-stage
-    scheduling and re-optimization (measured: PageRank 10 iterations at sf0.1
-    ≈ 17 s first run with AQE vs ≈ 12 s without). Standard guidance for
-    Pregel-style loops. NOTE: session-global while held — queries launched
-    concurrently on the same session during the loop also run without AQE.
-    """
-    return _aqe_scope(spark, "false")
-
-
-def aqe_enabled(spark: SparkSession):
-    """Force-enable AQE for a scope (re-entrant, LIFO restore) — used by
-    pointer-jump supersteps whose label self-join measurably benefits from
-    adaptive broadcast/coalesce (see ``components.connected_components``:
-    10k-chain ≈ 6 s with AQE vs ≈ 15 s without)."""
-    return _aqe_scope(spark, "true")
-
-
-#: same LIFO-stack discipline as _AQE_STACK, keyed by (session, conf key)
+#: per-(session, conf key) stack of saved values: nested scopes restore in
+#: LIFO order. Concurrent loops on ONE session remain session-global —
+#: documented limit.
 _CONF_STACKS: dict[tuple[int, str], list[str | None]] = {}
 
 
@@ -269,77 +243,106 @@ def _conf_scope(spark: SparkSession, key: str, value: str):
             spark.conf.set(key, prev)
 
 
-def broadcast_joins_disabled(spark: SparkSession):
-    """Scope ``spark.sql.autoBroadcastJoinThreshold`` to -1 (LIFO restore).
+def aqe_disabled(spark: SparkSession):
+    """Scope ``spark.sql.adaptive.enabled`` to false (LIFO restore)."""
+    return _conf_scope(spark, "spark.sql.adaptive.enabled", "false")
 
-    For NARROW fixpoint loops (scoped shuffle width ≤ 8) the per-superstep
-    join sides are small co-partitioned state tables: a broadcast hash join
-    re-ships the label table every superstep AND submits one extra Spark job
-    per superstep for the broadcast exchange (measured: cc 10k-chain drops
-    from 2 jobs/superstep to 1 with broadcasts off, equal-or-better wall),
-    while the sort-merge join over the already co-partitioned sides is
-    exchange-free. Explicit ``F.broadcast()`` hints are unaffected.
+
+#: state rows up to which a narrow fixpoint runs without auto-broadcast
+SMALL_STATE_ROWS = 32_000
+#: narrowest loop width a scope picks
+_WIDTH_FLOOR = 2
+
+
+def _width(session_width: int, rows: int, per_partition: int = 64_000) -> int:
+    return min(session_width, max(_WIDTH_FLOOR, -(-int(rows) // per_partition)))
+
+
+@contextmanager
+def fixpoint_scope(spark: SparkSession, rows: int, per_partition: int = 64_000):
+    """Session settings for a superstep loop (the policy in the module
+    docstring); yields the loop width. Build loop-carried edge tables inside
+    the scope: they then hash-partition at the loop width, the per-superstep
+    joins co-partition and the edge table never re-exchanges (guide §2.4).
+
+    Measured rationale:
+
+    - Width. A superstep over 10k-row state at the session's 32 partitions
+      pays 32-task scheduling per exchange for ~300-row partitions: the
+      10k-chain CC went 5.1 s → 3.7 s from sizing alone. The default 64k
+      rows/partition lands on both optima of a two-scale pagerank sweep
+      (local[32]: sf0.1 ≈ 105k edges → width 2, 6.2–7.7 s vs 14–15.4 s at
+      32; a 10× replica → width 17, ≈10.1 s vs ≈16.5 s at 32). Loops whose
+      supersteps run pointer-jump self-joins (several stages each) pass
+      250k: scheduling, not row throughput, dominates them (10× replica
+      CC: width 4 ≈ 9.3–10.6 s, width 17 ≈ 13.1–13.3 s, 32 ≈ 11.8–12.3 s).
+      The floor of 2 (was 4): 10k-cycle SCC 32.3 → 24.2 s, 10k-chain CC
+      5.9 → 5.1 s; the sf0.1 kernels are flat across floors 1/2/4.
+    - AQE. The loops are fixed-shape plans over small keyed state: AQE has
+      nothing to re-plan but pays per-superstep stage scheduling and
+      re-optimization (pagerank 10 iterations at sf0.1: ≈17 s with AQE vs
+      ≈12 s without; narrow CC at width 4: 3.8 vs 3.4 s). Only a pointer-
+      jump loop at width > 8 measured a gain from AQE (10k-chain at width
+      32: ≈6 s vs ≈15 s), which needs > 2M state rows at 250k per
+      partition; no workload reaches it, so AQE is always off here.
+    - Broadcast. With small co-partitioned state a broadcast hash join
+      re-ships the label table every superstep AND submits one extra Spark
+      job for the broadcast exchange (10k-chain CC: 2 jobs/superstep → 1),
+      while the sort-merge join is exchange-free. At sf0.1's 100k-row state
+      the broadcast join measures ~3% faster warm, hence the rows gate.
     """
-    return _conf_scope(spark, "spark.sql.autoBroadcastJoinThreshold", "-1")
+    width = _width(int(spark.conf.get("spark.sql.shuffle.partitions", "200")),
+                   rows, per_partition)
+    with ExitStack() as scopes:
+        scopes.enter_context(
+            _conf_scope(spark, "spark.sql.shuffle.partitions", str(width))
+        )
+        scopes.enter_context(aqe_disabled(spark))
+        if width <= 8 and rows <= SMALL_STATE_ROWS:
+            scopes.enter_context(
+                _conf_scope(spark, "spark.sql.autoBroadcastJoinThreshold", "-1")
+            )
+        yield width
 
 
-def fixpoint_width(
-    spark: SparkSession, rows: int, per_partition: int = 64_000, floor: int = 2
-) -> int:
-    """The loop shuffle width :func:`fixpoint_shuffle_partitions` would scope
-    to — exposed so loops can hash-partition their loop-carried edge tables to
-    the SAME width up front (join sides then co-partition and the edge table
-    never re-exchanges per superstep, guide §2.4).
+def converge(
+    name: str,
+    state: DataFrame,
+    step: Callable[[DataFrame, int], DataFrame],
+    changed: Column,
+    ckpt: Checkpointer,
+    metrics: SuperstepMetrics,
+    max_supersteps: int,
+    first: int = 1,
+) -> DataFrame:
+    """Run supersteps ``first..max_supersteps`` until none changes a row.
 
-    ``floor=2`` (was 4): for 10k-row showcase states the narrower exchanges
-    measurably win (10k-cycle SCC 32.3 s → 24.2 s at floor 2, 21.8 at 1;
-    10k-chain CC 5.9 → 5.1) while the sf0.1 graph kernels are flat within
-    noise across floors 1/2/4 (cc 5.3–5.5, pagerank 5.8–6.3 warm) — the
-    floor only binds when ceil(rows/per_partition) is tiny, i.e. when the
-    state genuinely fits a couple of partitions; real widths still derive
-    from the data volume, so cluster-scale runs are untouched."""
-    cur = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    target = max(floor, -(-int(rows) // per_partition))
-    return min(cur, target)
-
-
-def fixpoint_shuffle_partitions(
-    spark: SparkSession, rows: int, per_partition: int = 64_000, floor: int = 2
-):
-    """Scope ``spark.sql.shuffle.partitions`` to the fixpoint's per-superstep
-    exchange volume (``rows`` ≈ max(|V|, |E|) of the loop's state and
-    contribution streams), restoring the session value on exit.
-
-    A superstep over 10k-row state with the session's 32 shuffle partitions
-    pays 32-task scheduling per exchange for partitions holding ~300 rows
-    each — measured 5.1 s → 3.7 s on the 10k-chain CC showcase just from
-    sizing this down. The count never EXCEEDS the session setting, so large
-    graphs (where the session default reflects cluster capacity) are
-    untouched — this is the small-state tail of the standard "size your
-    shuffle to your data" rule, the regime AQE coalescing only partially
-    recovers (AQE still schedules its initial map tasks at the session
-    width).
-
-    ``per_partition`` is tuned from a two-scale pagerank sweep (local[32],
-    sf0.1 eg graph ≈ 105k edges and a 10×-replicated copy ≈ 1.05 M edges):
-    1× optimum is width 4–8 (6.2–7.7 s vs 14–15.4 s at the session's 32),
-    10× optimum is width 16 (≈10.1 s vs ≈12.1 s at width 5 and ≈16.5 s at
-    32). 64k rows/partition lands on both optima — ceil(105k/64k)→2,
-    ceil(1.05M/64k)=17 — where the previous 250k sizing under-widthed the
-    10× case by ~20%.
+    ``step(state, it)`` returns the next state carrying ``_old`` (the
+    previous value of whatever ``changed`` compares); the state it receives
+    is the previous superstep's checkpointed frame, ``_old`` included (or
+    ``state`` itself for the first superstep). Each superstep is a lazy
+    checkpoint materialized by ONE aggregate, ``sum(changed)`` — one Spark
+    job per superstep. Returns the converged state without ``_old``; raises
+    once the budget is spent, since a truncated fixpoint is a wrong answer.
+    Call it inside a :func:`fixpoint_scope`.
     """
-    return _conf_scope(
-        spark,
-        "spark.sql.shuffle.partitions",
-        str(fixpoint_width(spark, rows, per_partition, floor)),
+    for it in range(first, max_supersteps + 1):
+        t0 = time.monotonic()
+        state = ckpt.step(
+            step(state, it), it, wall_s=time.monotonic() - t0, lazy=True
+        )
+        n = int(state.agg(F.sum(changed.cast("long"))).collect()[0][0] or 0)
+        metrics.record(it, n, time.monotonic() - t0)
+        if n == 0:
+            return state.drop("_old")
+    raise RuntimeError(
+        f"{name}: not converged within max_supersteps={max_supersteps}"
     )
 
 
 @contextmanager
-def adaptive_shuffle_width(
-    spark: SparkSession, per_partition: int = 64_000, floor: int = 2
-):
-    """Frontier-driven variant of :func:`fixpoint_shuffle_partitions` for
+def adaptive_shuffle_width(spark: SparkSession):
+    """Frontier-driven variant of :func:`fixpoint_scope`'s width for
     loops whose exchange volume VARIES superstep to superstep (BFS frontiers,
     Brandes lockstep sweeps): yields an ``update(rows)`` callable the loop
     invokes with its estimate of the NEXT superstep's exchange rows (typically
@@ -357,8 +360,7 @@ def adaptive_shuffle_width(
     cur = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
 
     def update(rows: int) -> None:
-        target = max(floor, -(-int(rows) // per_partition))
-        spark.conf.set("spark.sql.shuffle.partitions", str(min(cur, target)))
+        spark.conf.set("spark.sql.shuffle.partitions", str(_width(cur, rows)))
 
     with _conf_scope(spark, "spark.sql.shuffle.partitions", str(cur)):
         yield update

@@ -82,6 +82,24 @@ def test_exact_frontier_small(spark):
     g.unpersist()
 
 
+def test_unipairs_modes_match_their_kernels(spark):
+    """The ``unipairs`` binary: exact mode is ``exact_avgdist``; sampled mode
+    is the mean of dist_sum/reached over the same-seed pair-rejection draw."""
+    g = FX.path_graph(spark, n=8)
+    exact = A.avgdist_unipairs(g, exact=True, impl="csr")
+    ref = A.exact_avgdist(g, impl="csr")
+    assert exact["avg_distance"] == ref["avg_distance"]
+    assert exact["diameter"] == ref["diameter"]
+    got = A.avgdist_unipairs(g, eps=0.5, seed=3, impl="csr")
+    k = A.k_formula(8, 0.5)
+    acc = A.sample_pair_rejection(g, k, np.random.default_rng(3), impl="csr")
+    assert got["sample_size"] == k == len(acc)
+    assert got["avg_distance"] == pytest.approx(
+        float((acc["dist_sum"] / acc["reached"]).mean()), rel=1e-12
+    )
+    g.unpersist()
+
+
 def test_unipairs_sampled_matches_oracle(spark):
     """Seeded pair-rejection estimator == local-Python oracle at equal samples."""
     g = FX.er1k_graph(spark)
