@@ -62,7 +62,8 @@ def _seed_stats(graph: GraphFrame, seeds: np.ndarray | DataFrame, impl: str,
     hubs), and the reference runs one BFS per draw, counting multiplicity.
     BFS is deterministic per seed, so: run each distinct seed once, then
     expand back to occurrences with a join — identical rows for duplicates,
-    identical semantics across the CSR and frontier strategies.
+    identical semantics across the CSR and frontier strategies. Already
+    distinct seeds skip that join: the BFS rows are the occurrence rows.
 
     ``seeds`` may also be a DataFrame with a DISTINCT ``seed`` column (the
     all-vertices exact mode passes ``graph.vertices()``): that form never
@@ -85,6 +86,8 @@ def _seed_stats(graph: GraphFrame, seeds: np.ndarray | DataFrame, impl: str,
         stats = per_seed_stats(
             bfs_frontier(graph, seeds_df, transposed=transposed, shards=impl == "shards")
         )
+    if uniq.size == seeds.size:
+        return stats
     occ = graph.spark.createDataFrame(
         pd.DataFrame({"seed": seeds}), schema="seed long"
     )
@@ -132,13 +135,28 @@ def sample_coverage_weighted(
     probes: np.ndarray | None = None,
     draws_fn=None,
 ) -> np.ndarray:
-    """K4 "cross" sampler (``src/main.rs:56-111``), distributed CDF inversion.
+    """K4 "cross" sampler (``src/main.rs:56-111``), exact CDF inversion.
 
     k uniform probes → backward BFS (transposed graph) → coverage counts
-    (probe seed included) → global prefix sum → k inclusive draws resolved by
-    lower bound. The prefix sum is computed scalably: range-partition counts by
-    vertex id, per-partition partial sums to the driver (P values), broadcast
-    offsets, per-partition ``searchsorted`` — no driver-side n-length array.
+    (probe seed included) → prefix sum → k inclusive draws ``c ∈ [0, maxc]``
+    resolved by lower bound (a draw of 0 maps to vertex 0). Each distinct
+    probe's BFS runs once and counts with the probe's multiplicity (the
+    reference runs one BFS per draw; BFS is deterministic, so weighting is
+    exactly equivalent).
+
+    Where the prefix sum lives follows the BFS strategy, so both paths draw
+    the same seeds:
+
+    - CSR (``_use_csr``): ``bfs_csr``'s coverage output sends sparse per-task
+      ``(v, c)`` partials to the driver, which sums them into a dense n-length
+      counter, takes its ``cumsum`` and resolves every draw with one
+      ``searchsorted`` — the reference's own lower bound. The driver already
+      holds the CSR's n+1 offsets to build the broadcast, so the counter is
+      the same order of memory, and no ``(probe, v)`` pair is materialized.
+    - frontier (graphs past ``DEFAULT_CSR_MAX_EDGES``): nothing n-length
+      touches the driver. Counts are range-partitioned by vertex id, the
+      per-partition sums (P values) come back as offsets, and each partition
+      resolves the draws that land in its range with a local ``searchsorted``.
 
     ``probes`` / ``draws_fn(maxc)`` override the RNG (the portable hash-stream
     sampler plugs in here so the DuckDB oracle can replay the draw sequence).
@@ -146,26 +164,31 @@ def sample_coverage_weighted(
     n = graph.num_nodes
     if probes is None:
         probes = sample_uniform(n, k, rng)
-    # run each DISTINCT probe's backward BFS once, weight coverage by probe
-    # multiplicity (the reference runs one BFS per draw — duplicates count
-    # twice; BFS is deterministic so weighting is exactly equivalent)
     uniq, mult = np.unique(probes, return_counts=True)
+
+    def draw(maxc: int) -> np.ndarray:
+        if draws_fn is not None:
+            return np.asarray(draws_fn(maxc), dtype=np.int64)
+        return rng.integers(0, maxc + 1, size=k, dtype=np.int64)  # inclusive upper bound
+
+    if _use_csr(graph, impl):
+        part = bfs_csr(graph, uniq, transposed=True, coverage=mult).toArrow()
+        cov = np.zeros(n, dtype=np.int64)
+        np.add.at(
+            cov,
+            part.column("v").to_numpy(zero_copy_only=False).astype(np.int64, copy=False),
+            part.column("c").to_numpy(zero_copy_only=False).astype(np.int64, copy=False),
+        )
+        cum = np.cumsum(cov)
+        return np.searchsorted(cum, draw(int(cum[-1])), side="left").astype(np.int64)
+
     wdf = graph.spark.createDataFrame(
         pd.DataFrame({"seed": uniq, "w": mult.astype(np.int64)}), schema="seed long, w long"
     )
-    if _use_csr(graph, impl):
-        cap = bfs_csr(graph, uniq, transposed=True, capture=True).select("seed", "v")
-    else:
-        seeds_df = graph.spark.createDataFrame(
-            pd.DataFrame({"seed": uniq}), schema="seed long"
-        )
-        cap = bfs_frontier(graph, seeds_df, transposed=True).filter("dist > 0").select("seed", "v")
-    # the probe seed itself is covered too (seen includes start,
-    # src/main.rs:25,82) — and each vertex counts ONCE per probe (the
-    # reference's seen BitVec): dedupe (seed, v) before weighting, else a
-    # probe on a cycle (strictly reachable from itself) would count double
-    cov_pairs = cap.union(wdf.select("seed", F.col("seed").alias("v"))).distinct()
-    counts = cov_pairs.join(wdf, "seed").groupBy("v").agg(F.sum("w").alias("c"))
+    # visited holds (seed, seed, 0) and is distinct per (seed, v) (its
+    # left-anti join), so each vertex counts once per probe, the probe included
+    visited = bfs_frontier(graph, wdf.select("seed"), transposed=True)
+    counts = visited.select("seed", "v").join(wdf, "seed").groupBy("v").agg(F.sum("w").alias("c"))
 
     p = int(graph.spark.conf.get("spark.sql.shuffle.partitions", "32"))
     parted = (
@@ -183,11 +206,7 @@ def sample_coverage_weighted(
     for r in psums:
         offsets[int(r["pid"])] = running
         running += int(r["s"])
-    maxc = running
-    if draws_fn is not None:
-        draws = np.asarray(draws_fn(maxc), dtype=np.int64)
-    else:
-        draws = rng.integers(0, maxc + 1, size=k, dtype=np.int64)  # inclusive upper bound
+    draws = draw(running)
 
     bc = graph.spark.sparkContext.broadcast({"offsets": offsets, "draws": draws})
 
@@ -221,7 +240,7 @@ def sample_coverage_weighted(
     picked = parted.mapInPandas(pick, schema="draw_idx long, seed long").collect()
     parted.unpersist()
     bc.unpersist()
-    out = np.zeros(k, dtype=np.int64)  # draw c==0 → lower bound is vertex 0
+    out = np.zeros(draws.size, dtype=np.int64)  # draw c==0 → lower bound is vertex 0
     for r in picked:
         out[int(r["draw_idx"])] = int(r["seed"])
     return out
@@ -648,7 +667,7 @@ def avgdist_main(
     # numbers to the per-batch loop (BFS is deterministic per seed); the
     # reference's batch loop is a *reporting* cadence, not a data dependency
     # (``src/main.rs:151-244``).
-    stats_by_seed: dict[int, tuple[int, int, int]] | None = None
+    stats_by_seed: dict[int, tuple[int, int, int]] = {}
     presampled: list[np.ndarray] = []
     fetched_upto = 0
     if dummy:
@@ -661,7 +680,12 @@ def avgdist_main(
             nbp += 1
             if max_batches is not None and nbp >= max_batches:
                 break
-        stats_by_seed = {}
+
+    def bfs_into(table: dict[int, tuple[int, int, int]], seeds: np.ndarray) -> None:
+        """One BFS job over DISTINCT ``seeds``; (dia, dist_sum, reached) per seed."""
+        run.seeds_bfsed += int(seeds.size)
+        for r in _seed_stats(graph, seeds, impl).toPandas().itertuples():
+            table[int(r.seed)] = (int(r.dia), int(r.dist_sum), int(r.reached))
 
     def ensure_stats(upto: int) -> None:
         """BFS the not-yet-fetched seeds of presampled batches [0, upto)."""
@@ -671,39 +695,28 @@ def avgdist_main(
         seeds = np.concatenate(presampled[fetched_upto:upto])
         fetched_upto = upto
         fresh = np.setdiff1d(np.unique(seeds), np.fromiter(stats_by_seed, np.int64))
-        if fresh.size == 0:
-            return
-        run.seeds_bfsed += int(fresh.size)
-        pdf = _seed_stats(graph, fresh, impl).toPandas()
-        for r in pdf.itertuples():
-            stats_by_seed[int(r.seed)] = (int(r.dia), int(r.dist_sum), int(r.reached))
+        if fresh.size:
+            bfs_into(stats_by_seed, fresh)
 
     remaining = k
     iteration = 1
     while remaining > 0:
+        cur = min(slot, remaining)
         if dummy:
-            cur = min(slot, remaining)
             sampled = presampled[iteration - 1]
-        else:
-            cur = min(slot, remaining)
-            sampled = sample_coverage_weighted(graph, cur, rng, impl=impl)
-        if stats_by_seed is not None:
             chunk = len(presampled) if stop_eps is None else min(
                 len(presampled), iteration - 1 + fuse_batches
             )
             ensure_stats(chunk)
-            dia = max((stats_by_seed[int(x)][0] for x in sampled), default=0)
-            s = sum(stats_by_seed[int(x)][1] for x in sampled)
-            c = sum(stats_by_seed[int(x)][2] for x in sampled)
+            batch_stats = stats_by_seed
         else:
-            stats = _seed_stats(graph, sampled, impl)
-            row = stats.agg(
-                F.max("dia").alias("dia"),
-                F.sum("dist_sum").alias("s"),
-                F.sum("reached").alias("c"),
-            ).collect()[0]
-            dia, s, c = int(row["dia"] or 0), int(row["s"] or 0), int(row["c"] or 0)
-            run.seeds_bfsed += int(np.unique(np.asarray(sampled)).size)
+            # duplicates count with multiplicity in the pooling below
+            sampled = sample_coverage_weighted(graph, cur, rng, impl=impl)
+            batch_stats = {}
+            bfs_into(batch_stats, np.unique(sampled))
+        dia = max((batch_stats[int(x)][0] for x in sampled), default=0)
+        s = sum(batch_stats[int(x)][1] for x in sampled)
+        c = sum(batch_stats[int(x)][2] for x in sampled)
         if c > 0:
             averages_dist.append(s / (c * (n - 1)))
             averages_dia.append(float(dia))

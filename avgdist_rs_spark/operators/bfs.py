@@ -5,6 +5,8 @@ with a visited bitset; per seed accumulate ``diameter = max level``,
 ``dist_sum = Σ level``, ``reached = count of newly reached vertices`` — the seed
 itself (level 0) is NOT counted; unreachable vertices are excluded, not ∞.
 K2 (``src/lib.rs:126-163``) additionally captures every ``(vertex, dist)`` pair.
+K4's sampler (``src/main.rs:56-111``) needs only per-vertex coverage: how many
+probes reach ``v``, the probe itself included.
 
 Two Spark physical strategies, chosen by graph size:
 
@@ -14,6 +16,9 @@ Two Spark physical strategies, chosen by graph size:
    (no per-row Python: the inner loop is gather/mask/unique over whole frontiers).
    This mirrors the reference's task-per-seed rayon model and is the fast path up
    to ~2^31 edges per executor (the reference's 2.16e9-edge payment graph fits).
+   Its coverage output serves K4 without emitting any ``(seed, v)`` pair: each
+   task sums its probes' multiplicity-weighted hits in one dense n-length
+   counter and emits only the nonzero ``(v, c)`` entries.
 
 2. ``bfs_frontier`` — **distributed-frontier superstep loop**. State
    ``visited(seed, v, dist)`` and ``frontier(seed, v)`` are DataFrames; one
@@ -60,6 +65,13 @@ CAPTURE_SCHEMA = StructType(
         StructField("seed", LongType()),
         StructField("v", LongType()),
         StructField("dist", LongType()),
+    ]
+)
+
+COVERAGE_SCHEMA = StructType(
+    [
+        StructField("v", LongType()),
+        StructField("c", LongType()),
     ]
 )
 
@@ -224,8 +236,11 @@ def _bfs_levels_dirop(
         frontier = fresh
 
 
-def _seed_batches(graph: GraphFrame, seeds: np.ndarray | DataFrame) -> DataFrame:
-    """Distribute seeds across the cluster, one row per seed.
+def _seed_batches(
+    graph: GraphFrame, seeds: np.ndarray | DataFrame, weights: np.ndarray | None = None
+) -> DataFrame:
+    """Distribute seeds across the cluster, one row per seed; ``weights``
+    (aligned with an array of seeds) rides along as a ``w`` column.
 
     ``seeds`` may be a driver-side array (k-sized sampler draws) or an
     already-distributed DataFrame with a ``seed`` column (all-vertices scans,
@@ -243,7 +258,11 @@ def _seed_batches(graph: GraphFrame, seeds: np.ndarray | DataFrame) -> DataFrame
         return seeds.select(F.col("seed").cast("long").alias("seed")).repartition(p)
     p = min(len(seeds), p)
     pdf = pd.DataFrame({"seed": np.asarray(seeds, dtype=np.int64)})
-    return spark.createDataFrame(pdf, schema="seed long").repartition(max(p, 1))
+    schema = "seed long"
+    if weights is not None:
+        pdf["w"] = np.asarray(weights, dtype=np.int64)
+        schema += ", w long"
+    return spark.createDataFrame(pdf, schema=schema).repartition(max(p, 1))
 
 
 def bfs_csr(
@@ -253,6 +272,7 @@ def bfs_csr(
     capture: bool = False,
     ms: bool | None = None,
     dirop: bool | None = None,
+    coverage: np.ndarray | None = None,
 ) -> DataFrame:
     """Seed-parallel BFS over broadcast CSR adjacency.
 
@@ -263,6 +283,16 @@ def bfs_csr(
     Returns per-seed aggregates ``(seed, dia, dist_sum, reached)`` or, with
     ``capture=True`` (reference K2), all ``(seed, v, dist)`` pairs with dist ≥ 1.
 
+    ``coverage`` (the multiplicities of a DISTINCT seed array, aligned with
+    it) selects the K4 coverage output instead: each task keeps one dense
+    int64[n] counter, adds a seed's multiplicity to the seed itself and to
+    every vertex of every level it reaches, and emits the nonzero entries as
+    partial ``(v, c)`` rows — several tasks may emit the same ``v``, so the
+    caller sums per ``v``. A vertex counts once per seed by construction (the
+    level generators' visited set holds the seed from the start, so cycles
+    and self-loops cannot re-count it). Nothing per ``(seed, v)`` pair leaves
+    the task: output is ≤ tasks·n rows however far the seeds reach.
+
     ``ms`` opts into the bit-parallel multi-source kernel (64 seeds per pass,
     see ``_msbfs_batch`` for why it is NOT the default here).
 
@@ -272,7 +302,10 @@ def bfs_csr(
     small-world graph stop re-touching every edge. One-shot few-seed calls
     keep the single-orientation kernel (the second CSR build would dominate).
     """
-    use_ms = bool(ms) and not capture
+    do_capture, do_cover = capture, coverage is not None
+    if do_cover and (capture or isinstance(seeds, DataFrame)):
+        raise ValueError("coverage needs a seed array and excludes capture")
+    use_ms = bool(ms) and not capture and not do_cover
     if graph.num_edges > DEFAULT_CSR_MAX_EDGES:
         raise ValueError(
             f"graph has {graph.num_edges} edges > CSR fast-path cap "
@@ -283,7 +316,6 @@ def bfs_csr(
     bc = graph.csr_broadcast(transposed=transposed)
     bc_b = graph.csr_broadcast(transposed=not transposed) if use_dirop else None
     switch_edges = max(1, graph.num_edges // 4)
-    do_capture = capture
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         adj = bc.value
@@ -331,6 +363,18 @@ def bfs_csr(
                 visited[:] = 0
                 stamp = 1
             return stamp
+        if do_cover:
+            cov = np.zeros(n, dtype=np.int64)
+            for pdf in batches:
+                for s, w in zip(pdf["seed"].to_numpy(dtype=np.int64),
+                                pdf["w"].to_numpy(dtype=np.int64)):
+                    cov[s] += w
+                    for _, fresh in levels(visited, next_stamp(), int(s)):
+                        cov[fresh] += w  # fresh is duplicate-free
+            hit = np.flatnonzero(cov)
+            if hit.size:
+                yield pd.DataFrame({"v": hit.astype(np.int64), "c": cov[hit]})
+            return
         for pdf in batches:
             seeds_arr = pdf["seed"].to_numpy(dtype=np.int64)
             if do_capture:
@@ -391,8 +435,8 @@ def bfs_csr(
                     {"seed": seeds_arr, "dia": dias, "dist_sum": sums, "reached": cnts}
                 )
 
-    schema = CAPTURE_SCHEMA if capture else AGG_SCHEMA
-    return _seed_batches(graph, seeds).mapInPandas(run, schema=schema)
+    schema = COVERAGE_SCHEMA if do_cover else CAPTURE_SCHEMA if capture else AGG_SCHEMA
+    return _seed_batches(graph, seeds, coverage).mapInPandas(run, schema=schema)
 
 
 # --------------------------------------------------------------------------- DF superstep loop

@@ -10,6 +10,7 @@ from avgdist_rs_spark.operators.bfs import bfs_csr, bfs_frontier, per_seed_stats
 from avgdist_rs_spark.sources import fixtures as FX
 
 from . import oracle
+from .test_fixpoint import _jobs
 
 
 def test_star_exact_golden(spark):
@@ -140,6 +141,61 @@ def test_coverage_weighted_sampler_matches_oracle(spark):
     got = A.sample_coverage_weighted(g, k, np.random.default_rng(3), impl="csr")
     _, _, want = oracle.coverage_weighted_sample(pairs_t, 1000, k, np.random.default_rng(3))
     assert got.tolist() == want.tolist()
+    g.unpersist()
+
+
+#: 0→1 into the directed cycle 1→2→3→1; self-loop on 4, which feeds 5;
+#: chain 6→7→8; 9 isolated
+K4_TINY = np.array([[0, 1], [1, 2], [2, 3], [3, 1], [4, 4], [4, 5], [6, 7], [7, 8]])
+
+
+def test_coverage_weighted_sampler_edge_cases(spark):
+    """K4 on a cycle, a self-loop, an isolated vertex and repeated probes
+    (k > n): the CSR path equals the oracle, the frontier path equals the CSR
+    path, and forced draws hit the CDF's ends and the self-loop's boundary."""
+    g = FX._from_pairs(spark, K4_TINY, num_nodes=10)
+    for s in (0, 1):
+        got = A.sample_coverage_weighted(g, 25, np.random.default_rng(s), impl="csr")
+        _, _, want = oracle.coverage_weighted_sample(
+            K4_TINY[:, ::-1], 10, 25, np.random.default_rng(s)
+        )
+        assert got.tolist() == want.tolist()
+    frontier = A.sample_coverage_weighted(g, 25, np.random.default_rng(1), impl="frontier")
+    assert frontier.tolist() == got.tolist()
+
+    # backward reach: 5 → {5, 4} twice, 8 → {8, 7, 6}, 9 → {9}, 4 → {4} once
+    # despite its self-loop; cum over 0..9 = 0 0 0 0 3 5 6 7 8 9, maxc = 9
+    probes = np.array([5, 5, 8, 9, 4], dtype=np.int64)
+    seen = []
+
+    def forced(maxc):
+        seen.append(maxc)
+        return np.array([0, 1, 3, 4, maxc], dtype=np.int64)
+
+    for impl in ("csr", "frontier"):
+        got = A.sample_coverage_weighted(
+            g, 5, None, impl=impl, probes=probes, draws_fn=forced
+        )
+        # 0 → vertex 0 (uncovered), 1 → first covered, maxc → last covered
+        assert got.tolist() == [0, 4, 4, 5, 9]
+    assert seen == [9, 9]
+    g.unpersist()
+
+
+def test_weighted_estimator_spark_job_counts(spark):
+    """K4 on the CSR path is one coverage BFS collected over Arrow (the
+    capture-pair plan took 10 jobs); a weighted batch adds one forward BFS
+    over its distinct seeds (no occurrence join, no Spark-side aggregate)."""
+    g = FX.er1k_graph(spark)
+    g.csr_broadcast(transposed=False)
+    g.csr_broadcast(transposed=True)
+    j0 = _jobs(spark)
+    A.sample_coverage_weighted(g, 12, np.random.default_rng(3), impl="csr")
+    assert _jobs(spark) - j0 <= 2
+    j0 = _jobs(spark)
+    run = A.avgdist_main(g, slot=12, eps=0.1, seed=3, impl="csr", max_batches=1)
+    assert _jobs(spark) - j0 <= 4
+    assert len(run.iterations) == 1 and run.final["norm"] > 0
     g.unpersist()
 
 
