@@ -38,60 +38,12 @@ from pyspark.sql import functions as F
 from ..functions.hashing import hash_stream
 from ..plans.graph import GraphFrame
 from ..streaming.superstep import SuperstepMetrics
-from .bfs import DEFAULT_CSR_MAX_EDGES, bfs_csr, bfs_frontier, per_seed_stats
+from .bfs import _use_csr, bfs, capture_stats
 
 
 def k_formula(n: int, eps: float) -> int:
     """Hoeffding-style sample size, reference ``src/main.rs:130``."""
     return math.ceil(math.log2(n) / (2.0 * eps * eps))
-
-
-def _use_csr(graph: GraphFrame, impl: str) -> bool:
-    if impl == "csr":
-        return True
-    if impl in ("frontier", "shards"):
-        return False
-    return graph.num_edges <= DEFAULT_CSR_MAX_EDGES
-
-
-def _seed_stats(graph: GraphFrame, seeds: np.ndarray | DataFrame, impl: str,
-                transposed: bool = False) -> DataFrame:
-    """(seed, dia, dist_sum, reached) — ONE ROW PER SEED OCCURRENCE.
-
-    Samplers draw with replacement (coverage weighting deliberately repeats
-    hubs), and the reference runs one BFS per draw, counting multiplicity.
-    BFS is deterministic per seed, so: run each distinct seed once, then
-    expand back to occurrences with a join — identical rows for duplicates,
-    identical semantics across the CSR and frontier strategies. Already
-    distinct seeds skip that join: the BFS rows are the occurrence rows.
-
-    ``seeds`` may also be a DataFrame with a DISTINCT ``seed`` column (the
-    all-vertices exact mode passes ``graph.vertices()``): that form never
-    ships the seed set through the driver — required at 10^8-vertex scale.
-    """
-    if isinstance(seeds, DataFrame):
-        if _use_csr(graph, impl):
-            return bfs_csr(graph, seeds, transposed=transposed, capture=False)
-        return per_seed_stats(
-            bfs_frontier(graph, seeds, transposed=transposed, shards=impl == "shards")
-        )
-    seeds = np.asarray(seeds, dtype=np.int64)
-    uniq = np.unique(seeds)
-    if _use_csr(graph, impl):
-        stats = bfs_csr(graph, uniq, transposed=transposed, capture=False)
-    else:
-        seeds_df = graph.spark.createDataFrame(
-            pd.DataFrame({"seed": uniq}), schema="seed long"
-        )
-        stats = per_seed_stats(
-            bfs_frontier(graph, seeds_df, transposed=transposed, shards=impl == "shards")
-        )
-    if uniq.size == seeds.size:
-        return stats
-    occ = graph.spark.createDataFrame(
-        pd.DataFrame({"seed": seeds}), schema="seed long"
-    )
-    return occ.join(stats, "seed")
 
 
 # --------------------------------------------------------------------------- exact mode
@@ -106,8 +58,7 @@ def exact_avgdist(graph: GraphFrame, impl: str = "auto") -> dict:
     driver array would be multi-GB at the reference's 668M-vertex scale.
     """
     seeds = graph.vertices().select(F.col("v").alias("seed"))
-    stats = _seed_stats(graph, seeds, impl)
-    row = stats.agg(
+    row = bfs(graph, seeds, impl=impl).agg(
         F.max("dia").alias("dia"),
         F.sum("dist_sum").alias("s"),
         F.sum("reached").alias("c"),
@@ -147,7 +98,7 @@ def sample_coverage_weighted(
     Where the prefix sum lives follows the BFS strategy, so both paths draw
     the same seeds:
 
-    - CSR (``_use_csr``): ``bfs_csr``'s coverage output sends sparse per-task
+    - CSR (``_use_csr``): the kernel's coverage output sends sparse per-task
       ``(v, c)`` partials to the driver, which sums them into a dense n-length
       counter, takes its ``cumsum`` and resolves every draw with one
       ``searchsorted`` — the reference's own lower bound. The driver already
@@ -164,15 +115,15 @@ def sample_coverage_weighted(
     n = graph.num_nodes
     if probes is None:
         probes = sample_uniform(n, k, rng)
-    uniq, mult = np.unique(probes, return_counts=True)
 
     def draw(maxc: int) -> np.ndarray:
         if draws_fn is not None:
             return np.asarray(draws_fn(maxc), dtype=np.int64)
         return rng.integers(0, maxc + 1, size=k, dtype=np.int64)  # inclusive upper bound
 
+    counts = bfs(graph, probes, transposed=True, coverage=True, impl=impl)
     if _use_csr(graph, impl):
-        part = bfs_csr(graph, uniq, transposed=True, coverage=mult).toArrow()
+        part = counts.toArrow()
         cov = np.zeros(n, dtype=np.int64)
         np.add.at(
             cov,
@@ -181,14 +132,6 @@ def sample_coverage_weighted(
         )
         cum = np.cumsum(cov)
         return np.searchsorted(cum, draw(int(cum[-1])), side="left").astype(np.int64)
-
-    wdf = graph.spark.createDataFrame(
-        pd.DataFrame({"seed": uniq, "w": mult.astype(np.int64)}), schema="seed long, w long"
-    )
-    # visited holds (seed, seed, 0) and is distinct per (seed, v) (its
-    # left-anti join), so each vertex counts once per probe, the probe included
-    visited = bfs_frontier(graph, wdf.select("seed"), transposed=True)
-    counts = visited.select("seed", "v").join(wdf, "seed").groupBy("v").agg(F.sum("w").alias("c"))
 
     p = int(graph.spark.conf.get("spark.sql.shuffle.partitions", "32"))
     parted = (
@@ -246,6 +189,23 @@ def sample_coverage_weighted(
     return out
 
 
+def _accept(
+    graph: GraphFrame, pairs: DataFrame, sources: np.ndarray | DataFrame, impl: str
+) -> DataFrame:
+    """K3's accept step, shared by both pair-rejection samplers: ONE BFS job
+    from the drawn ``sources`` captures their reach, a pair ``(seed, w)`` is
+    accepted iff ``w`` is in it (the probe ⋈ reach join), and each accepted
+    pair carries its seed's stats, aggregated from the same capture — a seed
+    that reaches nothing can never be accepted."""
+    cap = bfs(graph, sources, capture=True, impl=impl)
+    if _use_csr(graph, impl):
+        # the capture feeds two joins: run the kernel once
+        cap = cap.localCheckpoint(eager=True)
+    return pairs.join(cap.select("seed", F.col("v").alias("w")), ["seed", "w"]).join(
+        capture_stats(cap), "seed"
+    )
+
+
 def sample_pair_rejection(
     graph: GraphFrame,
     k: int,
@@ -282,28 +242,12 @@ def sample_pair_rejection(
         v, w = v[ok], w[ok]
         if v.size == 0:
             continue
-        uniq = np.unique(v)
-        # ONE BFS job per round: the capture holds everything — per-seed stats
-        # are an aggregate over it, and zero-reach seeds can never be accepted
-        if _use_csr(graph, impl):
-            cap = bfs_csr(graph, uniq, capture=True).localCheckpoint(eager=True)
-        else:
-            seeds_df = graph.spark.createDataFrame(
-                pd.DataFrame({"seed": uniq}), schema="seed long"
-            )
-            cap = bfs_frontier(graph, seeds_df).filter("dist > 0")
-        stats = cap.groupBy("seed").agg(
-            F.max("dist").alias("dia"),
-            F.sum("dist").alias("dist_sum"),
-            F.count("*").alias("reached"),
-        )
         pairs = graph.spark.createDataFrame(
             pd.DataFrame({"seed": v, "w": w, "ord": np.arange(v.size, dtype=np.int64)}),
             schema="seed long, w long, ord long",
         )
         hit = (
-            pairs.join(cap.select("seed", F.col("v").alias("w")).dropDuplicates(), ["seed", "w"])
-            .join(stats, "seed")
+            _accept(graph, pairs, np.unique(v), impl)
             .select("ord", F.col("seed").alias("v"), "dia", "dist_sum", "reached")
             .toPandas()
             .sort_values("ord")
@@ -441,21 +385,8 @@ def sample_pair_rejection_hash(
 
     def slice_hits(lo: int, hi: int) -> DataFrame:
         pairs = window(lo, hi)
-        srcs = pairs.select("seed").distinct()
-        if _use_csr(graph, impl):
-            cap = bfs_csr(graph, srcs, capture=True).localCheckpoint(eager=True)
-        else:
-            cap = bfs_frontier(graph, srcs, shards=impl == "shards").filter("dist > 0")
-        stats = cap.groupBy("seed").agg(
-            F.max("dist").alias("dia"),
-            F.sum("dist").alias("dist_sum"),
-            F.count("*").alias("reached"),
-        )
         return (
-            pairs.join(
-                cap.select("seed", F.col("v").alias("w")).dropDuplicates(), ["seed", "w"]
-            )
-            .join(stats, "seed")
+            _accept(graph, pairs, pairs.select("seed").distinct(), impl)
             .select("j", "seed", "dia", "dist_sum", "reached")
             .localCheckpoint(eager=True)
         )
@@ -517,7 +448,7 @@ def avgdist_batches(
     from pyspark.sql.window import Window
 
     seeds = np.asarray(seeds, dtype=np.int64)
-    stats = _seed_stats(graph, np.unique(seeds), impl)  # one row per distinct seed
+    stats = bfs(graph, seeds, impl=impl)  # one row per distinct seed
     occ = graph.spark.createDataFrame(
         pd.DataFrame({"j": np.arange(seeds.size, dtype=np.int64), "seed": seeds}),
         schema="j long, seed long",
@@ -633,16 +564,9 @@ def avgdist_main(
     averages_dia: list[float] = []
 
     if truth:
-        # exact mode is ONE batch of every vertex: aggregate it in Spark
-        # (an n-length driver seed array / stats dict would be multi-GB at
-        # the reference's 668M-vertex scale)
-        seeds_df = graph.vertices().select(F.col("v").alias("seed"))
-        row = _seed_stats(graph, seeds_df, impl).agg(
-            F.max("dia").alias("dia"),
-            F.sum("dist_sum").alias("s"),
-            F.sum("reached").alias("c"),
-        ).collect()[0]
-        dia, s, c = int(row["dia"] or 0), int(row["s"] or 0), int(row["c"] or 0)
+        # exact mode is ONE batch of every vertex: exact_avgdist's pooled sums
+        r = exact_avgdist(graph, impl=impl)
+        dia, s, c = r["diameter"], r["dist_sum"], r["reached_pairs"]
         run.seeds_bfsed = n
         adist = s / (c * (n - 1)) if c else None
         run.iterations.append(
@@ -684,7 +608,7 @@ def avgdist_main(
     def bfs_into(table: dict[int, tuple[int, int, int]], seeds: np.ndarray) -> None:
         """One BFS job over DISTINCT ``seeds``; (dia, dist_sum, reached) per seed."""
         run.seeds_bfsed += int(seeds.size)
-        for r in _seed_stats(graph, seeds, impl).toPandas().itertuples():
+        for r in bfs(graph, seeds, impl=impl).toPandas().itertuples():
             table[int(r.seed)] = (int(r.dia), int(r.dist_sum), int(r.reached))
 
     def ensure_stats(upto: int) -> None:

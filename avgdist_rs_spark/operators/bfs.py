@@ -8,7 +8,19 @@ K2 (``src/lib.rs:126-163``) additionally captures every ``(vertex, dist)`` pair.
 K4's sampler (``src/main.rs:56-111``) needs only per-vertex coverage: how many
 probes reach ``v``, the probe itself included.
 
-Two Spark physical strategies, chosen by graph size:
+:func:`bfs` is the one entry point every estimator calls (exact, K3, K4, the
+main batch loop, harmonic, closeness). It is the only place that reads the
+``impl`` string, deduplicates seeds into multiplicities and shapes the output,
+so every caller gets the same three relations on every strategy:
+
+- per-seed stats ``(seed, dia, dist_sum, reached)``, one row per distinct
+  seed, ``(s, 0, 0, 0)`` for a seed that reaches nothing;
+- ``capture=True``: ``(seed, v, dist ≥ 1, w)``, ``w`` the seed's multiplicity;
+- ``coverage=True``: partial ``(v, c)`` rows, ``c = Σ w`` over the seeds that
+  reach ``v``, the seed itself included; the caller sums them per ``v``.
+
+Underneath it sit two Spark physical strategies, chosen by graph size
+(``impl="auto"``) or forced (``"csr"``, ``"frontier"``, ``"shards"``):
 
 1. ``bfs_csr`` — **seed-parallel broadcast-CSR kernel**. The adjacency (CSR numpy
    arrays, ~12 bytes/edge) is broadcast once; seeds are distributed as a DataFrame
@@ -25,9 +37,11 @@ Two Spark physical strategies, chosen by graph size:
    superstep = frontier ⋈ edges (shuffle hash join on the pre-partitioned edge
    side) → dropDuplicates → left-anti join vs visited → union. Scales to graphs
    far beyond single-executor memory (the 10^12-turn regime); lineage is cut by a
-   ``Checkpointer`` and each superstep is resumable.
+   ``Checkpointer`` and each superstep is resumable. ``impl="shards"`` swaps
+   its edge join for per-bucket numpy gathers over a distributed CSR.
 
-Both return identical results (tests assert it).
+``bfs_csr`` and ``bfs_frontier`` stay public for benchmarks and callers that
+need their extra knobs (``dirop``, checkpointing, salting, resume).
 """
 
 from __future__ import annotations
@@ -87,11 +101,12 @@ def _msbfs_batch(
     gather. Per-destination OR-aggregation is sort + bitwise_or.reduceat
     (vectorized), per-level per-seed stats come from np.unpackbits column sums.
 
-    Measured trade (kept opt-in, default OFF): MS-BFS only amortizes gathers
-    when seeds' frontiers overlap at the SAME level. On hub-centric transcript
-    graphs seeds reach the same dense core at *staggered phases* (distance to
-    the first hub varies), so core vertices reactivate with new bits for many
-    consecutive levels and total edge-gather volume ends up equal to the
+    Measured trade (why ``bfs_csr`` probes it per task instead of always
+    using it): MS-BFS only amortizes gathers when seeds' frontiers overlap at
+    the SAME level. On hub-centric transcript graphs seeds reach the same
+    dense core at *staggered phases* (distance to the first hub varies), so
+    core vertices reactivate with new bits for many consecutive levels and
+    total edge-gather volume ends up equal to the
     per-seed kernel's (measured 0.6–0.7× — slower, from the sort overhead).
     Wins on level-aligned workloads (e.g. all seeds in one tight community).
 
@@ -270,7 +285,6 @@ def bfs_csr(
     seeds: np.ndarray | DataFrame,
     transposed: bool = False,
     capture: bool = False,
-    ms: bool | None = None,
     dirop: bool | None = None,
     coverage: np.ndarray | None = None,
 ) -> DataFrame:
@@ -293,8 +307,9 @@ def bfs_csr(
     and self-loops cannot re-count it). Nothing per ``(seed, v)`` pair leaves
     the task: output is ≤ tasks·n rows however far the seeds reach.
 
-    ``ms`` opts into the bit-parallel multi-source kernel (64 seeds per pass,
-    see ``_msbfs_batch`` for why it is NOT the default here).
+    Per-seed aggregates pick their kernel per task: a task with ≥ 256 seeds
+    times the bit-parallel multi-source kernel (``_msbfs_batch``) against the
+    per-seed one on its first 2×64 seeds and runs the rest on the winner.
 
     ``dirop`` opts into direction-optimizing BFS (auto-on for ≥ 64 seeds):
     both orientations' CSRs are broadcast, and each BFS flips to bottom-up
@@ -305,14 +320,13 @@ def bfs_csr(
     do_capture, do_cover = capture, coverage is not None
     if do_cover and (capture or isinstance(seeds, DataFrame)):
         raise ValueError("coverage needs a seed array and excludes capture")
-    use_ms = bool(ms) and not capture and not do_cover
     if graph.num_edges > DEFAULT_CSR_MAX_EDGES:
         raise ValueError(
             f"graph has {graph.num_edges} edges > CSR fast-path cap "
             f"{DEFAULT_CSR_MAX_EDGES}; use bfs_frontier"
         )
     many_seeds = True if isinstance(seeds, DataFrame) else len(seeds) >= 64
-    use_dirop = (many_seeds if dirop is None else bool(dirop)) and not use_ms
+    use_dirop = many_seeds if dirop is None else bool(dirop)
     bc = graph.csr_broadcast(transposed=transposed)
     bc_b = graph.csr_broadcast(transposed=not transposed) if use_dirop else None
     switch_edges = max(1, graph.num_edges // 4)
@@ -334,19 +348,6 @@ def bfs_csr(
 
             def levels(vis, stamp, s):
                 return _bfs_levels(offsets, targets, vis, stamp, s)
-        if use_ms:
-            for pdf in batches:
-                seeds_arr = pdf["seed"].to_numpy(dtype=np.int64)
-                outs = []
-                for lo in range(0, seeds_arr.size, 64):
-                    chunk = seeds_arr[lo : lo + 64]
-                    dias, sums, cnts = _msbfs_batch(offsets, targets, chunk)
-                    outs.append(pd.DataFrame(
-                        {"seed": chunk, "dia": dias, "dist_sum": sums, "reached": cnts}
-                    ))
-                if outs:
-                    yield pd.concat(outs, ignore_index=True)
-            return
         # uint8 stamp array reused across every seed this worker processes:
         # visited[v] == stamp ⇔ v reached in the current BFS. The kernel is
         # memory-bandwidth-bound (random gathers), so 1 byte per vertex beats
@@ -412,14 +413,14 @@ def bfs_csr(
                         sums[c0 : c0 + chunk.size] = s2
                         cnts[c0 : c0 + chunk.size] = c2
 
-                # Adaptive kernel pick (ms=None): MS-BFS amortizes gathers only
+                # Adaptive kernel pick: MS-BFS amortizes gathers only
                 # when seeds share frontier levels — ~2.4× faster on social
                 # graphs (enron), 0.6–0.7× on staggered-phase hub graphs
                 # (measured both ways). The structure isn't knowable upfront,
                 # so each task probes both kernels on its first 2×64 seeds
                 # (real work, nothing wasted) and runs the rest on the winner.
                 pos = 0
-                if ms is None and seeds_arr.size >= 256:
+                if seeds_arr.size >= 256:
                     t0 = time.monotonic()
                     ms_chunks(0, 64)
                     t_ms = time.monotonic() - t0
@@ -651,22 +652,97 @@ def bfs_frontier(
     return visited
 
 
-def per_seed_stats(visited: DataFrame) -> DataFrame:
-    """Reference per-seed accumulators (A1): (seed, dia, dist_sum, reached) —
-    level-0 self rows excluded, matching ``src/lib.rs:34-39``.
-
-    Seeds that reach nothing still emit a (seed, 0, 0, 0) row (the reference
-    returns zeroed accumulators for them; bfs_csr does the same)."""
-    agg = (
-        visited.filter(F.col("dist") > 0)
-        .groupBy("seed")
-        .agg(
-            F.max("dist").alias("dia"),
-            F.sum("dist").alias("dist_sum"),
-            F.count("*").alias("reached"),
-        )
+def capture_stats(capture: DataFrame) -> DataFrame:
+    """Reference per-seed accumulators (A1) over ``(seed, v, dist ≥ 1)`` rows:
+    ``(seed, dia, dist_sum, reached)``, matching ``src/lib.rs:34-39``. A seed
+    without rows (it reaches nothing) has no output row."""
+    return capture.groupBy("seed").agg(
+        F.max("dist").alias("dia"),
+        F.sum("dist").alias("dist_sum"),
+        F.count("*").alias("reached"),
     )
+
+
+def per_seed_stats(visited: DataFrame) -> DataFrame:
+    """:func:`capture_stats` of a ``bfs_frontier`` visited set — level-0 self
+    rows excluded — plus a (seed, 0, 0, 0) row for every seed that reaches
+    nothing (the reference returns zeroed accumulators for them; bfs_csr does
+    the same)."""
+    agg = capture_stats(visited.filter(F.col("dist") > 0))
     all_seeds = visited.filter(F.col("dist") == 0).select("seed").distinct()
     return all_seeds.join(agg, "seed", "left").fillna(
         0, subset=["dia", "dist_sum", "reached"]
     )
+
+
+# --------------------------------------------------------------------------- entry point
+def _use_csr(graph: GraphFrame, impl: str) -> bool:
+    """``"csr"`` forces the broadcast kernel, ``"frontier"``/``"shards"`` the
+    superstep loop; ``"auto"`` takes the kernel up to ``DEFAULT_CSR_MAX_EDGES``."""
+    if impl == "csr":
+        return True
+    if impl in ("frontier", "shards"):
+        return False
+    return graph.num_edges <= DEFAULT_CSR_MAX_EDGES
+
+
+def bfs(
+    graph: GraphFrame,
+    seeds: np.ndarray | DataFrame,
+    transposed: bool = False,
+    capture: bool = False,
+    coverage: bool = False,
+    impl: str = "auto",
+) -> DataFrame:
+    """Multi-source BFS from ``seeds``, on the strategy ``impl`` names.
+
+    A driver array may repeat seeds (samplers draw with replacement, and the
+    reference runs one BFS per draw): each distinct seed is BFS'd once and its
+    count becomes its weight ``w`` — BFS is deterministic, so weighting is
+    exactly equivalent. A DataFrame ``seed`` column must be distinct; its rows
+    get ``w = 1`` and never transit the driver (O(n) all-vertex scans).
+
+    Returns, identically on every strategy:
+
+    - default: ``(seed, dia, dist_sum, reached)``, one row per distinct seed,
+      ``(s, 0, 0, 0)`` for a seed that reaches nothing (weights are the
+      caller's: it knows which draws it pools);
+    - ``capture=True`` (reference K2): ``(seed, v, dist, w)``, one row per
+      vertex a seed reaches at ``dist ≥ 1`` (distinct per ``(seed, v)``);
+    - ``coverage=True`` (K4, array seeds only): partial ``(v, c)`` rows with
+      ``c = Σ w`` over the seeds that reach ``v``, the seed itself included;
+      a ``v`` may repeat, so the caller sums per ``v``.
+    """
+    if capture and coverage:
+        raise ValueError("capture and coverage are alternative outputs")
+    if isinstance(seeds, DataFrame):
+        if coverage:
+            raise ValueError("coverage needs a driver seed array")
+        uniq, mult = seeds, None
+    else:
+        uniq, mult = np.unique(np.asarray(seeds, dtype=np.int64), return_counts=True)
+    if _use_csr(graph, impl):
+        if coverage:
+            return bfs_csr(graph, uniq, transposed=transposed, coverage=mult)
+        pairs = bfs_csr(graph, uniq, transposed=transposed, capture=capture)
+        if not capture:
+            return pairs
+    else:
+        seeds_df = uniq if mult is None else graph.spark.createDataFrame(
+            pd.DataFrame({"seed": uniq}), schema="seed long"
+        )
+        visited = bfs_frontier(graph, seeds_df, transposed=transposed, shards=impl == "shards")
+        if not (capture or coverage):
+            return per_seed_stats(visited)
+        # visited holds (seed, seed, 0) and is distinct per (seed, v) (its
+        # left-anti join), so coverage counts each vertex once per seed, the
+        # seed included
+        pairs = visited.filter(F.col("dist") > 0) if capture else visited.select("seed", "v")
+    if mult is None or (mult == 1).all():
+        pairs = pairs.withColumn("w", F.lit(1).cast("long"))
+    else:
+        wdf = graph.spark.createDataFrame(
+            pd.DataFrame({"seed": uniq, "w": mult.astype(np.int64)}), schema="seed long, w long"
+        )
+        pairs = pairs.join(F.broadcast(wdf), "seed")
+    return pairs.groupBy("v").agg(F.sum("w").alias("c")) if coverage else pairs

@@ -22,8 +22,9 @@ Semantics (studied from the reference, behavior only):
   (``src/bin/harmonic.rs:169-184``).
 
 All per-vertex accumulation is a single shuffle: ``groupBy('v').agg(...)`` over
-the captured (seed, v, dist) relation — the reference's mpsc-channel fan-in is
-exactly Spark's partial+final hash aggregate.
+the captured (seed, v, dist, w) relation of :func:`operators.bfs.bfs` (``w`` is
+a sampled seed's multiplicity: the reference runs one BFS per draw) — the
+reference's mpsc-channel fan-in is exactly Spark's partial+final hash aggregate.
 """
 
 from __future__ import annotations
@@ -36,44 +37,7 @@ from pyspark.sql import functions as F
 
 from ..plans.graph import GraphFrame
 from .avgdist import k_formula, sample_pair_rejection, sample_uniform
-from .bfs import DEFAULT_CSR_MAX_EDGES, bfs_csr, bfs_frontier
-
-
-def _capture(
-    graph: GraphFrame, seeds: np.ndarray | DataFrame, transposed: bool, impl: str
-) -> DataFrame:
-    """(seed, v, dist≥1, w) reachability capture; ``w`` = seed multiplicity.
-
-    The reference runs one BFS per draw, so a seed sampled twice contributes
-    twice to every per-vertex accumulator. BFS is deterministic — run each
-    distinct seed once and carry the multiplicity as a weight column
-    (identical semantics on both BFS strategies).
-    """
-    import pandas as pd
-
-    from .avgdist import _use_csr
-
-    if isinstance(seeds, DataFrame):
-        # distributed seed set (exact mode's all-vertices scan): assumed
-        # distinct, multiplicity 1 — never ships through the driver
-        if _use_csr(graph, impl):
-            cap = bfs_csr(graph, seeds, transposed=transposed, capture=True)
-        else:
-            cap = bfs_frontier(graph, seeds, transposed=transposed).filter("dist > 0")
-        return cap.withColumn("w", F.lit(1).cast("long"))
-    seeds = np.asarray(seeds, dtype=np.int64)
-    uniq, mult = np.unique(seeds, return_counts=True)
-    if _use_csr(graph, impl):
-        cap = bfs_csr(graph, uniq, transposed=transposed, capture=True)
-    else:
-        seeds_df = graph.spark.createDataFrame(
-            pd.DataFrame({"seed": uniq}), schema="seed long"
-        )
-        cap = bfs_frontier(graph, seeds_df, transposed=transposed).filter("dist > 0")
-    wdf = graph.spark.createDataFrame(
-        pd.DataFrame({"seed": uniq, "w": mult.astype(np.int64)}), schema="seed long, w long"
-    )
-    return cap.join(F.broadcast(wdf), "seed")
+from .bfs import bfs
 
 
 def harmonic_centrality(
@@ -92,7 +56,7 @@ def harmonic_centrality(
     else:
         sample_size = k_formula(n, eps)
         seeds = sample_uniform(n, sample_size, np.random.default_rng(seed))
-    cap = _capture(graph, seeds, transposed, impl)
+    cap = bfs(graph, seeds, transposed=transposed, capture=True, impl=impl)
     return cap.groupBy("v").agg(
         (F.sum(F.col("w") / (1.0 + F.col("dist"))) / F.lit(float(sample_size))).alias(
             "harmonic"
@@ -128,7 +92,7 @@ def closeness_centrality(
             parts.append(acc["v"].to_numpy(dtype=np.int64))
             remaining -= cur
         seeds = np.concatenate(parts)
-    cap = _capture(graph, seeds, transposed, impl)
+    cap = bfs(graph, seeds, transposed=transposed, capture=True, impl=impl)
     agg = cap.groupBy("v").agg(
         F.sum(F.col("dist") * F.col("w")).alias("dist_sum"), F.sum("w").alias("reach")
     )

@@ -3,10 +3,12 @@
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
 import pytest
 
 from avgdist_rs_spark.operators import avgdist as A
-from avgdist_rs_spark.operators.bfs import bfs_csr, bfs_frontier, per_seed_stats
+from avgdist_rs_spark.operators import bfs as B
+from avgdist_rs_spark.operators.bfs import bfs, bfs_csr, bfs_frontier, per_seed_stats
 from avgdist_rs_spark.sources import fixtures as FX
 
 from . import oracle
@@ -62,8 +64,6 @@ def test_frontier_vs_csr_parity(spark):
         r["seed"]: (r["dia"], r["dist_sum"], r["reached"])
         for r in bfs_csr(g, seeds).collect()
     }
-    import pandas as pd
-
     seeds_df = spark.createDataFrame(pd.DataFrame({"seed": seeds}), "seed long")
     vis = bfs_frontier(g, seeds_df)
     b = {
@@ -234,23 +234,45 @@ def test_main_estimator_dummy_sampled(spark):
     g.unpersist()
 
 
+def _per_seed_kernel(offsets, targets, seeds):
+    """(dia, dist_sum, reached) per seed from the level generator, in numpy."""
+    visited = np.zeros(len(offsets) - 1, dtype=np.int32)
+    out = []
+    for stamp, s in enumerate(seeds, start=1):
+        levels = [(lv, fresh.size) for lv, fresh in B._bfs_levels(
+            offsets, targets, visited, stamp, int(s))]
+        out.append((max((lv for lv, _ in levels), default=0),
+                    sum(lv * c for lv, c in levels), sum(c for _, c in levels)))
+    return np.array(out, dtype=np.int64).reshape(-1, 3)
+
+
 def test_msbfs_equals_per_seed_kernel(spark):
-    """Bit-parallel MS-BFS must agree exactly with the per-seed kernel."""
-    import numpy as np
+    """Bit-parallel MS-BFS must agree exactly with the per-seed kernel, also
+    on duplicate seeds inside one 64-seed chunk; and a single task with ≥ 256
+    seeds (where bfs_csr probes both kernels) must too."""
+    g = FX.barabasi_graph(spark, n=300, m=3, seed=11)
+    adj = g.csr_broadcast().value
+    offsets, targets = adj["offsets"], adj["targets"]
+    seeds = np.random.default_rng(5).integers(0, g.num_nodes, size=150)
+    assert np.unique(seeds[:64]).size < 64  # duplicates inside the first chunk
+    want = _per_seed_kernel(offsets, targets, seeds)
+    for lo in range(0, seeds.size, 64):
+        chunk = seeds[lo : lo + 64]
+        got = np.column_stack(B._msbfs_batch(offsets, targets, chunk))
+        np.testing.assert_array_equal(got, want[lo : lo + chunk.size])
 
-    from avgdist_rs_spark.operators import bfs as B
-    from avgdist_rs_spark.sources.fixtures import barabasi_graph
-
-    g = barabasi_graph(spark, n=300, m=3, seed=11)
-    rng = np.random.default_rng(5)
-    seeds = rng.integers(0, g.num_nodes, size=150)  # includes duplicates
-    a = B.bfs_csr(g, seeds, ms=False).toPandas().sort_values("seed").reset_index(drop=True)
-    b = B.bfs_csr(g, seeds, ms=True).toPandas().sort_values("seed").reset_index(drop=True)
-    import pandas as pd
-
-    pd.testing.assert_frame_equal(
-        a.groupby("seed").sum().sort_index(), b.groupby("seed").sum().sort_index()
+    every = np.arange(g.num_nodes, dtype=np.int64)
+    width = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "1")  # one task, 300 seeds
+    try:
+        pdf = B.bfs_csr(g, every).toPandas().sort_values("seed")
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", width)
+    np.testing.assert_array_equal(pdf["seed"].to_numpy(), every)
+    np.testing.assert_array_equal(
+        pdf[["dia", "dist_sum", "reached"]].to_numpy(), _per_seed_kernel(offsets, targets, every)
     )
+    g.unpersist()
 
 
 def test_duplicate_seeds_count_with_multiplicity_on_both_impls(spark):
@@ -258,27 +280,65 @@ def test_duplicate_seeds_count_with_multiplicity_on_both_impls(spark):
     and the CSR and frontier strategies must agree on it."""
     g = FX.barabasi_graph(spark, n=120, m=2, seed=3)
     dup = np.array([5, 5, 9, 5, 9, 40], dtype=np.int64)
-    a = A._seed_stats(g, dup, impl="csr").toPandas()
-    b = A._seed_stats(g, dup, impl="frontier").toPandas()
-    assert len(a) == len(dup) and len(b) == len(dup)
-    key = ["seed", "dia", "dist_sum", "reached"]
-    pd_a = a[key].sort_values(key).reset_index(drop=True)
-    pd_b = b[key].sort_values(key).reset_index(drop=True)
-    assert pd_a.equals(pd_b)
-    assert (pd_a["seed"] == 5).sum() == 3 and (pd_a["seed"] == 9).sum() == 2
+    stats, batches = {}, {}
+    for impl in ("csr", "frontier"):
+        stats[impl] = bfs(g, dup, impl=impl).toPandas().sort_values("seed").reset_index(drop=True)
+        batches[impl] = A.avgdist_batches(g, dup, slot=4, impl=impl).orderBy("batch").toPandas()
+    assert stats["csr"]["seed"].tolist() == [5, 9, 40]  # one BFS per distinct seed
+    pd.testing.assert_frame_equal(stats["csr"], stats["frontier"])
+    pd.testing.assert_frame_equal(batches["csr"], batches["frontier"])
+    per = {int(r.seed): (int(r.dist_sum), int(r.reached)) for r in stats["csr"].itertuples()}
+    got = batches["csr"]
+    for b, draws in enumerate((dup[:4], dup[4:])):  # [5, 5, 9, 5], [9, 40]
+        assert got["size"][b] == len(draws)
+        assert got["dist_sum"][b] == sum(per[int(s)][0] for s in draws)
+        assert got["reached"][b] == sum(per[int(s)][1] for s in draws)
     g.unpersist()
 
 
 def test_harmonic_weighted_duplicates(spark):
-    """harmonic with a duplicated seed == accumulating that seed's BFS twice."""
-    from avgdist_rs_spark.operators.centrality import _capture
-
+    """harmonic with a duplicated seed == accumulating that seed's BFS twice:
+    the capture carries the multiplicity as ``w`` on both strategies."""
     g = FX.cycle3_graph(spark)
-    cap = _capture(g, np.array([0, 0, 1], dtype=np.int64), transposed=False, impl="csr")
-    rows = cap.toPandas()
-    # seed 0 appears once per reached vertex with w=2; seed 1 with w=1
-    assert set(rows[rows.seed == 0]["w"]) == {2}
-    assert set(rows[rows.seed == 1]["w"]) == {1}
+    for impl in ("csr", "frontier"):
+        rows = bfs(g, np.array([0, 0, 1], dtype=np.int64), capture=True, impl=impl).toPandas()
+        # seed 0 appears once per reached vertex with w=2; seed 1 with w=1
+        assert len(rows) == 4 and (rows["dist"] >= 1).all()
+        assert set(rows[rows.seed == 0]["w"]) == {2}
+        assert set(rows[rows.seed == 1]["w"]) == {1}
+    g.unpersist()
+
+
+def test_shards_impl_reaches_every_estimator(spark, monkeypatch):
+    """impl="shards" runs the distributed-CSR gather in K3, K4 and sampled
+    harmonic (not the edge-join loop), with the same output as impl="csr"."""
+    from avgdist_rs_spark.operators.centrality import harmonic_centrality
+
+    calls = []
+    real = B._shard_gather
+
+    def spy(*args, **kwargs):
+        calls.append(args[1:])
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(B, "_shard_gather", spy)
+    g = FX.cycle3_graph(spark)
+    runs = {
+        "k3": lambda impl: A.sample_pair_rejection(
+            g, 4, np.random.default_rng(1), impl=impl).values.tolist(),
+        "k4": lambda impl: A.sample_coverage_weighted(
+            g, 5, np.random.default_rng(2), impl=impl).tolist(),
+        # ≤ 2 terms per vertex on a 3-cycle: float sums are order-free
+        "harmonic": lambda impl: sorted(map(tuple, harmonic_centrality(
+            g, exact=False, eps=0.5, seed=3, impl=impl).toPandas().values.tolist())),
+    }
+    for name, run in runs.items():
+        calls.clear()
+        want = run("csr")
+        assert not calls
+        got = run("shards")
+        assert calls, f"{name}: impl='shards' never ran the shard gather"
+        assert got == want, name
     g.unpersist()
 
 
