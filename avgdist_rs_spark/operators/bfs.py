@@ -262,11 +262,19 @@ def _seed_batches(
     window-drawn sources) — the DataFrame form never materializes the seed
     set on the driver, which matters when the seed set is O(n).
 
-    One task per core: mapInPandas has ~17 ms *serialized* per-task overhead
-    (python-worker handshake), so extra waves of fine tasks cost more than the
-    skew they smooth — per-seed cost variance already averages out inside a
-    task's seed batch (measured: 128-task no-op = 2.2 s vs 32-task = 0.7 s at
-    local[32])."""
+    One task per core (``min(k, shuffle partitions)`` tasks): per-seed cost
+    variance already averages out inside a task's seed batch, so finer tasks
+    buy nothing and each one pays a fixed Python-worker cost. With stock
+    PySpark workers that cost was 0.27 CPU-s per task on a 4-core host, spent
+    in ``worker_util.setup_spark_files`` → ``importlib.invalidate_caches()``
+    re-reading the directories of ``pyspark.zip`` and the Spark core jar; the
+    engine's worker daemon (:mod:`avgdist_rs_spark.worker_daemon`) takes it
+    to ~0.
+
+    An array's local table scan is already sliced into ``min(k,
+    spark.default.parallelism)`` partitions (``get_spark`` sets that equal to
+    the shuffle partitions), so ``coalesce`` reaches the task count without
+    the round-robin exchange (and its extra job) a ``repartition`` costs."""
     spark = graph.spark
     p = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     if isinstance(seeds, DataFrame):
@@ -277,7 +285,7 @@ def _seed_batches(
     if weights is not None:
         pdf["w"] = np.asarray(weights, dtype=np.int64)
         schema += ", w long"
-    return spark.createDataFrame(pdf, schema=schema).repartition(max(p, 1))
+    return spark.createDataFrame(pdf, schema=schema).coalesce(max(p, 1))
 
 
 def bfs_csr(

@@ -25,6 +25,7 @@ import decimal
 
 import numpy as np
 import pandas as pd
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -242,16 +243,25 @@ def kmeans_lloyd(
     # iteration for near-empty batches — size to ~500 vectors/partition,
     # capped at the session width so big corpora keep full parallelism
     # (measured at sf0.1's 2000 vectors: ivf_ann 3.7 s → 3.1 s warm).
-    n_vec = emb.count()
-    w = min(
-        int(spark.conf.get("spark.sql.shuffle.partitions", "32")),
-        max(2, -(-int(n_vec) // 500)),
-    )
-    e = (
-        emb.repartition(w, F.col(id_col))
-        .select(F.col(id_col).alias("nid"), F.col(vec_col).alias("nv"))
-        .localCheckpoint(eager=True)
-    )
+    # The count and the checkpoint read one cached copy of ``emb``, so its
+    # upstream plan runs once (a caller's own cache is left alone).
+    owned = emb.storageLevel == StorageLevel.NONE
+    if owned:
+        emb.persist()
+    try:
+        n_vec = emb.count()
+        w = min(
+            int(spark.conf.get("spark.sql.shuffle.partitions", "32")),
+            max(2, -(-int(n_vec) // 500)),
+        )
+        e = (
+            emb.repartition(w, F.col(id_col))
+            .select(F.col(id_col).alias("nid"), F.col(vec_col).alias("nv"))
+            .localCheckpoint(eager=True)
+        )
+    finally:
+        if owned:
+            emb.unpersist()
     h = portable_hash64(F.concat(F.lit("km:"), F.col("nid").cast("string")))
     init = e.withColumn("_h", h).orderBy("_h", "nid").limit(num_centroids).collect()
     cents = [[float(x) for x in r["nv"]] for r in init]

@@ -5,6 +5,16 @@ The settings mirror what we would pass to ``spark-submit`` on a real cluster
 iterative superstep loops pin their own shuffle partitioning (see
 ``plans.graph.GraphFrame``) because AQE partition coalescing would break the
 stable co-partitioning that keeps per-superstep joins shuffle-free.
+
+Python workers fork from the engine's own daemon
+(:mod:`avgdist_rs_spark.worker_daemon`, set as ``spark.python.daemon.module``).
+Stock PySpark workers re-read the directory of every zip archive on their
+import path at the start of each task (``pyspark.zip``, the Spark core jar,
+py4j): 0.27 CPU-s per task on a 4-core host, more than the numpy BFS kernel
+of a small graph. The engine daemon re-reads an archive only when it
+changed, which takes that cost to ~0. The daemon and every engine UDF need
+this package on the workers' import path, so the session puts the package
+root there (``spark.executorEnv.PYTHONPATH``).
 """
 
 from __future__ import annotations
@@ -14,6 +24,8 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
+#: the directory holding this package; Spark adds it to the Python workers' path
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -45,6 +57,8 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.python.daemon.module", "avgdist_rs_spark.worker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)

@@ -185,17 +185,33 @@ def test_coverage_weighted_sampler_edge_cases(spark):
 def test_weighted_estimator_spark_job_counts(spark):
     """K4 on the CSR path is one coverage BFS collected over Arrow (the
     capture-pair plan took 10 jobs); a weighted batch adds one forward BFS
-    over its distinct seeds (no occurrence join, no Spark-side aggregate)."""
+    over its distinct seeds (no occurrence join, no Spark-side aggregate).
+    Array seeds reach the kernel without an exchange, so each BFS is 1 job."""
     g = FX.er1k_graph(spark)
     g.csr_broadcast(transposed=False)
     g.csr_broadcast(transposed=True)
     j0 = _jobs(spark)
     A.sample_coverage_weighted(g, 12, np.random.default_rng(3), impl="csr")
-    assert _jobs(spark) - j0 <= 2
+    assert _jobs(spark) - j0 <= 1
     j0 = _jobs(spark)
     run = A.avgdist_main(g, slot=12, eps=0.1, seed=3, impl="csr", max_batches=1)
-    assert _jobs(spark) - j0 <= 4
+    assert _jobs(spark) - j0 <= 2
     assert len(run.iterations) == 1 and run.final["norm"] > 0
+    g.unpersist()
+
+
+def test_array_seed_bfs_csr_is_one_job(spark):
+    """Driver-array seeds are coalesced, not round-robin repartitioned: one
+    ``bfs_csr`` call is the kernel's stage alone, one task per core."""
+    g = FX.er1k_graph(spark)
+    g.csr_broadcast(transposed=False)
+    seeds = np.arange(0, 1000, 37, dtype=np.int64)
+    j0 = _jobs(spark)
+    out = bfs_csr(g, seeds).toPandas()
+    assert _jobs(spark) - j0 == 1
+    assert sorted(out["seed"]) == seeds.tolist()
+    df = B._seed_batches(g, seeds)
+    assert df.rdd.getNumPartitions() == int(spark.conf.get("spark.sql.shuffle.partitions"))
     g.unpersist()
 
 

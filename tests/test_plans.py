@@ -144,6 +144,32 @@ def test_lloyd_assignment_zero_shuffle(emb):
         assert int(r["cluster"]) == int(np.argmin(d2))
 
 
+def test_lloyd_computes_its_input_once(spark, emb):
+    """kmeans_lloyd's count and its checkpoint read one cached copy of the
+    input, so a row-counting UDF upstream runs once per row; the cache is
+    released after, and a caller's own cache is left in place."""
+    from pyspark import StorageLevel
+
+    from avgdist_rs_spark.operators.similarity import kmeans_lloyd
+
+    acc = spark.sparkContext.accumulator(0)
+
+    def tally(batches):
+        for pdf in batches:
+            acc.add(len(pdf))
+            yield pdf
+
+    counted = emb.mapInPandas(tally, schema=emb.schema)
+    n = emb.count()
+    kmeans_lloyd(counted, num_centroids=4, iterations=1)
+    assert acc.value == n
+    assert counted.storageLevel == StorageLevel.NONE
+    kept = emb.persist()
+    kmeans_lloyd(kept, num_centroids=4, iterations=1)
+    assert kept.storageLevel != StorageLevel.NONE
+    kept.unpersist()
+
+
 def test_asof_join_single_key_exchange(spark):
     """The as-of join's whole point is ONE shuffle on the key: the plan must
     contain exactly one Exchange hashpartitioning on user_id (the window),
