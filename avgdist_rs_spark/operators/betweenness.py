@@ -76,9 +76,7 @@ def _brandes_seed(
     levels: list[tuple[np.ndarray, np.ndarray]] = []  # tree edges per depth
     d = 0
     while frontier.size:
-        starts = offsets[frontier]
-        counts = offsets[frontier + 1] - starts
-        ws = _gather(offsets, targets, frontier)
+        ws, counts = _gather(offsets, targets, frontier)
         if ws.size == 0:
             break
         us = np.repeat(frontier, counts)

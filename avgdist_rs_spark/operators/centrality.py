@@ -57,11 +57,17 @@ def harmonic_centrality(
         sample_size = k_formula(n, eps)
         seeds = sample_uniform(n, sample_size, np.random.default_rng(seed))
     cap = bfs(graph, seeds, transposed=transposed, capture=True, impl=impl)
-    return cap.groupBy("v").agg(
-        (F.sum(F.col("w") / (1.0 + F.col("dist"))) / F.lit(float(sample_size))).alias(
-            "harmonic"
-        ),
-        F.sum("w").alias("coverage"),
+    # exact integer counts per (v, dist) first, then one float fold per v in
+    # ascending dist: the sum no longer depends on which task a row took
+    per_dist = cap.groupBy("v", "dist").agg(F.sum("w").alias("c"))
+    folded = F.aggregate(
+        F.array_sort(F.collect_list(F.struct("dist", "c"))),
+        F.lit(0.0),
+        lambda acc, x: acc + x["c"] / (1.0 + x["dist"]),
+    )
+    return per_dist.groupBy("v").agg(
+        (folded / F.lit(float(sample_size))).alias("harmonic"),
+        F.sum("c").alias("coverage"),
     )
 
 

@@ -13,15 +13,32 @@ Spark starts it as ``python -m avgdist_rs_spark.worker_daemon`` because
 ``(st_mtime_ns, st_size, st_ino)`` changed since that importer last read it,
 so py-files added or rewritten between tasks are still picked up.
 
+The daemon's forked worker also runs ``gc.collect()`` after every task.
+With numpy, pandas and pyarrow loaded that full collection scans ~73,000
+objects, 42-49 ms of CPU, more than the 15-20 ms a 64-seed BFS task works.
+:func:`collect_then_freeze` ends each task with ``gc.collect()`` and then
+``gc.freeze()``: the task's own cyclic garbage is still collected, and what
+survives it moves to the permanent generation, which no later collection
+scans. The trade: an object frozen after one task that joins an unreachable
+cycle in a later task is never freed — a frozen cycle is reclaimed only
+when the worker exits. The objects a task creates and drops stay
+collectable, and acyclic garbage is freed by reference counting either way.
+Measured on a trivial 2-task ``mapInPandas`` job (``local[2]``, 4-core
+shared host, median of 10): 0.10 → 0.01 worker CPU-s per job; a collection
+after a task then scans ~100 objects in ~0.1 ms.
+
 Importing this module changes nothing; only running it as ``__main__``
-installs the guard and then hands over to ``pyspark.daemon.manager()``.
-Workers are forked from the daemon and inherit the guard.
+installs the guard, wraps ``pyspark.daemon.worker_main`` and then hands over
+to ``pyspark.daemon.manager()``. Workers are forked from the daemon and
+inherit both.
 """
 
 from __future__ import annotations
 
+import gc
 import os
 import zipimport
+from collections.abc import Callable
 
 #: CPython's own method, kept for the re-reads the guard lets through
 _reread_directory = getattr(zipimport.zipimporter, "invalidate_caches", None)
@@ -50,11 +67,28 @@ def install() -> None:
         zipimport.zipimporter.invalidate_caches = stat_guarded_invalidate_caches
 
 
+def collect_then_freeze(worker_main: Callable) -> Callable:
+    """``worker_main`` that ends every task with ``gc.collect()`` and then
+    ``gc.freeze()``, so the daemon's own per-task collection scans only the
+    objects created since."""
+
+    def run_task(infile, outfile):
+        try:
+            return worker_main(infile, outfile)
+        finally:
+            gc.collect()
+            gc.freeze()
+
+    return run_task
+
+
 if __name__ == "__main__":
     # run as a script this file is ``__main__``; install from the package
-    # module so the patched method names its real module
+    # module so the patched functions name their real module
+    import pyspark.daemon as daemon
+    from avgdist_rs_spark.worker_daemon import collect_then_freeze as _freezing
     from avgdist_rs_spark.worker_daemon import install as _install
-    from pyspark.daemon import manager
 
     _install()
-    manager()
+    daemon.worker_main = _freezing(daemon.worker_main)
+    daemon.manager()

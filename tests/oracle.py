@@ -37,6 +37,21 @@ def bfs(adj, n, start):
     return dia, dist_sum, count, seen
 
 
+def distances(adj, start):
+    """{v: dist} for every vertex ``start`` reaches at dist ≥ 1 — the rows
+    of the reference's K2 capture (src/lib.rs:126-163)."""
+    dist = {start: 0}
+    frontier = deque([start])
+    while frontier:
+        v = frontier.popleft()
+        for s in adj.get(v, ()):
+            if s not in dist:
+                dist[s] = dist[v] + 1
+                frontier.append(s)
+    del dist[start]
+    return dist
+
+
 def exact_avgdist(pairs, n):
     S = C = D = 0
     adj, _ = adjacency(pairs, n)

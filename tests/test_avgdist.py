@@ -250,44 +250,59 @@ def test_main_estimator_dummy_sampled(spark):
     g.unpersist()
 
 
-def _per_seed_kernel(offsets, targets, seeds):
-    """(dia, dist_sum, reached) per seed from the level generator, in numpy."""
-    visited = np.zeros(len(offsets) - 1, dtype=np.int32)
-    out = []
-    for stamp, s in enumerate(seeds, start=1):
-        levels = [(lv, fresh.size) for lv, fresh in B._bfs_levels(
-            offsets, targets, visited, stamp, int(s))]
-        out.append((max((lv for lv, _ in levels), default=0),
-                    sum(lv * c for lv, c in levels), sum(c for _, c in levels)))
-    return np.array(out, dtype=np.int64).reshape(-1, 3)
-
-
 def test_msbfs_equals_per_seed_kernel(spark):
-    """Bit-parallel MS-BFS must agree exactly with the per-seed kernel, also
-    on duplicate seeds inside one 64-seed chunk; and a single task with ≥ 256
-    seeds (where bfs_csr probes both kernels) must too."""
-    g = FX.barabasi_graph(spark, n=300, m=3, seed=11)
-    adj = g.csr_broadcast().value
-    offsets, targets = adj["offsets"], adj["targets"]
-    seeds = np.random.default_rng(5).integers(0, g.num_nodes, size=150)
-    assert np.unique(seeds[:64]).size < 64  # duplicates inside the first chunk
-    want = _per_seed_kernel(offsets, targets, seeds)
-    for lo in range(0, seeds.size, 64):
-        chunk = seeds[lo : lo + 64]
-        got = np.column_stack(B._msbfs_batch(offsets, targets, chunk))
-        np.testing.assert_array_equal(got, want[lo : lo + chunk.size])
+    """bfs_csr's bit-parallel kernel and its direction-optimizing per-seed
+    kernel (dirop=True) both give the pure-Python oracle's stats, capture
+    and coverage, in one task of 455 seeds: every vertex of a graph with a
+    cycle, self-loops and an isolated vertex, plus repeated seeds inside one
+    64-seed chunk and across a chunk boundary."""
+    n = 305
+    pairs = np.concatenate([
+        FX.barabasi_pairs(n=300, m=3, seed=11),
+        [(300, 301), (301, 302), (302, 300), (302, 7), (303, 303), (7, 7)],
+    ])  # 304 has no edge
+    g = FX._from_pairs(spark, pairs, num_nodes=n)
+    drawn = np.random.default_rng(5).integers(0, n, size=150)
+    drawn[[5, 9]] = 300  # repeated inside the first chunk
+    drawn[[63, 64]] = 303  # repeated across the first chunk boundary
+    drawn[10] = 304
+    seeds = np.concatenate([drawn, np.arange(n)])
+    assert np.unique(seeds[:64]).size < 64
 
-    every = np.arange(g.num_nodes, dtype=np.int64)
+    adj, _ = oracle.adjacency(pairs.tolist(), n)
+    dists = {int(s): oracle.distances(adj, int(s)) for s in np.unique(seeds)}
+    want_stats = sorted(
+        (int(s), max(d.values(), default=0), sum(d.values()), len(d))
+        for s in seeds for d in [dists[int(s)]]
+    )
+    want_capture = sorted((int(s), v, dv) for s in seeds for v, dv in dists[int(s)].items())
+    want_cov = np.bincount(
+        np.concatenate([[int(s), *dists[int(s)]] for s in seeds]), minlength=n
+    )
+    uniq, mult = np.unique(seeds, return_counts=True)
+
+    def coverage(df):
+        pdf = df.toPandas()
+        return np.bincount(pdf["v"], weights=pdf["c"], minlength=n).astype(np.int64)
+
     width = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "1")  # one task, 300 seeds
+    spark.conf.set("spark.sql.shuffle.partitions", "1")  # one task sees every seed
     try:
-        pdf = B.bfs_csr(g, every).toPandas().sort_values("seed")
+        for dirop in (False, True):
+            stats = bfs_csr(g, seeds, dirop=dirop).toPandas()
+            cols = ["seed", "dia", "dist_sum", "reached"]
+            assert sorted(map(tuple, stats[cols].values.tolist())) == want_stats
+            cap = bfs_csr(g, seeds, capture=True, dirop=dirop).toPandas()
+            assert sorted(map(tuple, cap[["seed", "v", "dist"]].values.tolist())) == want_capture
+            np.testing.assert_array_equal(
+                coverage(bfs_csr(g, uniq, coverage=mult, dirop=dirop)), want_cov
+            )
+            np.testing.assert_array_equal(
+                coverage(bfs_csr(g, seeds, coverage=np.ones(seeds.size, np.int64), dirop=dirop)),
+                want_cov,
+            )
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", width)
-    np.testing.assert_array_equal(pdf["seed"].to_numpy(), every)
-    np.testing.assert_array_equal(
-        pdf[["dia", "dist_sum", "reached"]].to_numpy(), _per_seed_kernel(offsets, targets, every)
-    )
     g.unpersist()
 
 

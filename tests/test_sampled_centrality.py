@@ -31,23 +31,31 @@ def test_sampled_harmonic_matches_python_oracle(spark):
     cov = collections.defaultdict(int)
     for s in seeds:
         # forward BFS from the seed; accumulate per reached vertex
-        dia, ds, c, seen = oracle.bfs(adj, 1000, int(s))
-        from collections import deque
-
-        dist = {int(s): 0}
-        q = deque([int(s)])
-        while q:
-            v = q.popleft()
-            for w in adj.get(v, ()):
-                if w not in dist:
-                    dist[w] = dist[v] + 1
-                    q.append(w)
-        for v, d in dist.items():
-            if d > 0:
-                h[v] += 1.0 / (1.0 + d)
-                cov[v] += 1
+        for v, d in oracle.distances(adj, int(s)).items():
+            h[v] += 1.0 / (1.0 + d)
+            cov[v] += 1
     assert set(got) == set(h)
     for v in h:
         assert got[v][0] == pytest.approx(h[v] / k, abs=1e-12)
         assert got[v][1] == cov[v]
+    g.unpersist()
+
+
+def test_sampled_harmonic_is_layout_independent(spark):
+    """Sampled harmonic is bit-identical at 2 and at 8 shuffle partitions:
+    the seeds land in different tasks, the float fold does not move."""
+    g = FX.er1k_graph(spark)
+    width = spark.conf.get("spark.sql.shuffle.partitions")
+    runs = []
+    try:
+        for p in ("2", "8"):
+            spark.conf.set("spark.sql.shuffle.partitions", p)
+            runs.append(sorted(
+                (r["v"], r["harmonic"].hex(), r["coverage"])
+                for r in harmonic_centrality(g, exact=False, eps=0.1, seed=42, impl="csr").collect()
+            ))
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", width)
+    assert len(runs[0]) > 100
+    assert runs[0] == runs[1]
     g.unpersist()

@@ -73,3 +73,46 @@ def test_session_workers_skip_unchanged_archives(spark):
     assert (out["zips"] > 0).all()  # pyspark.zip and py4j are on every worker's path
     assert (out["reread"] == 0).all()
     assert (out["module"] == worker_daemon.__name__).all()
+
+
+def test_session_workers_freeze_their_heap_after_each_task(spark):
+    """A reused worker ends every task with ``gc.collect()`` then
+    ``gc.freeze()``: the next task starts with few collectable objects, and
+    a reference cycle the previous task dropped is already dead."""
+
+    def probe(batches):
+        import gc
+        import sys
+        import types
+        import weakref
+
+        for _ in batches:
+            pass
+        mod = sys.modules.get("_gc_freeze_probe")
+        if mod is None:  # first task on this worker: drop a cycle, keep a weakref
+            mod = sys.modules["_gc_freeze_probe"] = types.ModuleType("_gc_freeze_probe")
+            class Node:
+                pass
+
+            cycle = Node()
+            cycle.self = cycle
+            mod.ref = weakref.ref(cycle)
+            del cycle
+            yield pd.DataFrame({"second": [False], "frozen": [0], "tracked": [0], "dead": [False]})
+            return
+        yield pd.DataFrame({
+            "second": [True],
+            "frozen": [gc.get_freeze_count()],
+            "tracked": [len(gc.get_objects())],
+            "dead": [mod.ref() is None],
+        })
+
+    schema = "second boolean, frozen long, tracked long, dead boolean"
+    for _ in range(64):  # one-task jobs until one lands on a worker that ran the probe
+        row = spark.range(1).mapInPandas(probe, schema).toPandas().iloc[0]
+        if row["second"]:
+            break
+    assert row["second"]
+    assert row["frozen"] > 0
+    assert row["tracked"] < 5000
+    assert row["dead"]
