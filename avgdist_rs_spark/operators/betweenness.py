@@ -37,7 +37,6 @@ and vs each other, including duplicated seed arrays).
 
 from __future__ import annotations
 
-import time
 from collections.abc import Iterator
 
 import numpy as np
@@ -51,6 +50,7 @@ from ..streaming.superstep import (
     SuperstepMetrics,
     adaptive_shuffle_width,
     aqe_disabled,
+    superstep,
 )
 from .bfs import DEFAULT_CSR_MAX_EDGES, _gather
 
@@ -176,34 +176,33 @@ def _betweenness_shards(
         upd(max(visited_rows, n_seeds * avg_deg))
         # ---- forward: σ accumulates level by level ------------------------
         while True:
-            t0 = time.monotonic()
-            edges = expand(frontier)
-            newf = (
-                edges.join(
-                    visited.select("seed", F.col("v").alias("w")), ["seed", "w"], "anti"
+            with superstep(met, depth + 1, phase="fwd") as rec:
+                edges = expand(frontier)
+                newf = (
+                    edges.join(
+                        visited.select("seed", F.col("v").alias("w")), ["seed", "w"], "anti"
+                    )
+                    .groupBy("seed", "w")
+                    .agg(F.sum("sigma_u").alias("sigma"))
+                    .select(
+                        "seed",
+                        F.col("w").alias("v"),
+                        "sigma",
+                        F.lit(depth + 1).cast("int").alias("dist"),
+                    )
+                    # non-eager: the count() is the materializing action — one
+                    # Spark job per forward superstep instead of two
+                    .localCheckpoint(eager=False)
                 )
-                .groupBy("seed", "w")
-                .agg(F.sum("sigma_u").alias("sigma"))
-                .select(
-                    "seed",
-                    F.col("w").alias("v"),
-                    "sigma",
-                    F.lit(depth + 1).cast("int").alias("dist"),
-                )
-                # non-eager: the count() is the materializing action — one
-                # Spark job per forward superstep instead of two
-                .localCheckpoint(eager=False)
-            )
-            n_new = newf.count()
-            met.record(depth + 1, n_new, time.monotonic() - t0, phase="fwd")
-            if n_new == 0:
-                break
-            depth += 1
-            if depth > max_supersteps:
-                raise RuntimeError(
-                    f"betweenness: forward BFS past max_supersteps={max_supersteps}"
-                )
-            visited = ckpt.step(visited.unionAll(newf), depth)
+                rec["rows"] = n_new = newf.count()
+                if n_new == 0:
+                    break
+                depth += 1
+                if depth > max_supersteps:
+                    raise RuntimeError(
+                        f"betweenness: forward BFS past max_supersteps={max_supersteps}"
+                    )
+                visited = ckpt.step(visited.unionAll(newf), depth)
             frontier = newf.select("seed", "v", "sigma")
             lvl_rows.append(n_new)
             visited_rows += n_new
@@ -212,47 +211,46 @@ def _betweenness_shards(
         acc: DataFrame | None = None  # folded union of per-level δ tables
         delta_above: DataFrame | None = None  # (seed, v, delta) at level d+1
         for lvl in range(depth - 1, -1, -1):
-            t0 = time.monotonic()
-            upd(lvl_rows[lvl] * avg_deg + lvl_rows[lvl + 1])
-            lev = visited.where(F.col("dist") == lvl).select("seed", "v", "sigma")
-            edges = expand(lev)  # (seed, u, sigma_u, w)
-            nxt = visited.where(F.col("dist") == lvl + 1).select(
-                "seed", F.col("v").alias("w"), F.col("sigma").alias("sigma_w")
-            )
-            tree = edges.join(nxt, ["seed", "w"])  # shortest-path tree edges only
-            if delta_above is not None:
-                tree = tree.join(
-                    delta_above.select(
-                        "seed", F.col("v").alias("w"), F.col("delta").alias("delta_w")
-                    ),
-                    ["seed", "w"],
-                    "left",
+            with superstep(met, 2 * depth - lvl, phase="rev") as rec:
+                upd(lvl_rows[lvl] * avg_deg + lvl_rows[lvl + 1])
+                lev = visited.where(F.col("dist") == lvl).select("seed", "v", "sigma")
+                edges = expand(lev)  # (seed, u, sigma_u, w)
+                nxt = visited.where(F.col("dist") == lvl + 1).select(
+                    "seed", F.col("v").alias("w"), F.col("sigma").alias("sigma_w")
                 )
-            else:
-                tree = tree.withColumn("delta_w", F.lit(None).cast("double"))
-            dcur = (
-                tree.groupBy("seed", "u")
-                .agg(
-                    F.sum(
-                        F.col("sigma_u")
-                        / F.col("sigma_w")
-                        * (F.lit(1.0) + F.coalesce(F.col("delta_w"), F.lit(0.0)))
-                    ).alias("delta")
+                tree = edges.join(nxt, ["seed", "w"])  # shortest-path tree edges only
+                if delta_above is not None:
+                    tree = tree.join(
+                        delta_above.select(
+                            "seed", F.col("v").alias("w"), F.col("delta").alias("delta_w")
+                        ),
+                        ["seed", "w"],
+                        "left",
+                    )
+                else:
+                    tree = tree.withColumn("delta_w", F.lit(None).cast("double"))
+                dcur = (
+                    tree.groupBy("seed", "u")
+                    .agg(
+                        F.sum(
+                            F.col("sigma_u")
+                            / F.col("sigma_w")
+                            * (F.lit(1.0) + F.coalesce(F.col("delta_w"), F.lit(0.0)))
+                        ).alias("delta")
+                    )
+                    .select("seed", F.col("u").alias("v"), "delta")
+                    # non-eager: the count() below materializes — one job/superstep
+                    .localCheckpoint(eager=False)
                 )
-                .select("seed", F.col("u").alias("v"), "delta")
-                # non-eager: the count() below materializes — one job/superstep
-                .localCheckpoint(eager=False)
-            )
-            met.record(2 * depth - lvl, dcur.count(), time.monotonic() - t0,
-                       phase="rev")
-            # accumulate with lineage folding — a 10⁴-level reverse sweep must
-            # not stack 10⁴ Union children into one plan (same discipline as
-            # scc's assigned accumulator)
-            part = dcur.where(F.col("v") != F.col("seed"))
-            acc = part if acc is None else acc.unionAll(part)
-            if (depth - lvl) % 16 == 0:
-                acc = acc.localCheckpoint(eager=True)
-            delta_above = dcur
+                rec["rows"] = dcur.count()
+                # accumulate with lineage folding — a 10⁴-level reverse sweep must
+                # not stack 10⁴ Union children into one plan (same discipline as
+                # scc's assigned accumulator)
+                part = dcur.where(F.col("v") != F.col("seed"))
+                acc = part if acc is None else acc.unionAll(part)
+                if (depth - lvl) % 16 == 0:
+                    acc = acc.localCheckpoint(eager=True)
+                delta_above = dcur
     if acc is None:
         partials = spark.createDataFrame([], "v long, part double")
     else:

@@ -49,7 +49,6 @@ need their extra knobs (``dirop``, checkpointing, salting, resume).
 
 from __future__ import annotations
 
-import time
 from collections.abc import Iterator
 
 import numpy as np
@@ -63,6 +62,7 @@ from ..streaming.superstep import (
     Checkpointer,
     SuperstepMetrics,
     adaptive_shuffle_width,
+    superstep,
 )
 
 #: Above this edge count the broadcast CSR is not attempted (driver/executor memory).
@@ -566,32 +566,33 @@ def bfs_frontier(
     with adaptive_shuffle_width(spark) as upd:
         upd(max(visited_rows, visited_rows * avg_deg))
         while True:
-            t0 = time.monotonic()
             dist += 1
-            if salted is not None:
-                from ..functions.salting import salted_expand
+            with superstep(met, dist) as rec:
+                if salted is not None:
+                    from ..functions.salting import salted_expand
 
-                expanded = salted_expand(frontier, salted, hdf, num_salts)
-            elif shard_expand is not None:
-                expanded = shard_expand(frontier)
-            else:
-                expanded = frontier.join(edges, F.col("v") == F.col("_esrc")).select(
-                    F.col("seed"), F.col("_edst").alias("v")
+                    expanded = salted_expand(frontier, salted, hdf, num_salts)
+                elif shard_expand is not None:
+                    expanded = shard_expand(frontier)
+                else:
+                    expanded = frontier.join(edges, F.col("v") == F.col("_esrc")).select(
+                        F.col("seed"), F.col("_edst").alias("v")
+                    )
+                # non-eager checkpoint: the count() below is the materializing
+                # action — one Spark job per superstep instead of two
+                nxt = (
+                    expanded.dropDuplicates(["seed", "v"])
+                    .join(visited.select("seed", "v"), ["seed", "v"], "left_anti")
+                    .localCheckpoint(eager=False)
                 )
-            # non-eager checkpoint: the count() below is the materializing
-            # action — one Spark job per superstep instead of two
-            nxt = (
-                expanded.dropDuplicates(["seed", "v"])
-                .join(visited.select("seed", "v"), ["seed", "v"], "left_anti")
-                .localCheckpoint(eager=False)
-            )
-            cnt = nxt.count()
-            wall = time.monotonic() - t0
-            met.record(dist, cnt, wall)
+                rec["rows"] = cnt = nxt.count()
+                if cnt:
+                    visited = ckpt.cut(
+                        visited.union(nxt.withColumn("dist", F.lit(dist).cast("long"))),
+                        dist,
+                    )
             if cnt == 0:
                 break
-            visited = visited.union(nxt.withColumn("dist", F.lit(dist).cast("long")))
-            visited = ckpt.cut(visited, dist, rows=cnt, wall_s=wall)
             frontier = nxt
             visited_rows += cnt
             upd(max(visited_rows, cnt * avg_deg))

@@ -46,7 +46,6 @@ golden comparisons (``bfs_csr(transposed=True, capture=True).groupBy('v')``)
 from __future__ import annotations
 
 import math
-import time
 from collections.abc import Iterator
 
 import numpy as np
@@ -55,7 +54,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..plans.graph import GraphFrame, _num_partitions_for
-from ..streaming.superstep import Checkpointer, SuperstepMetrics
+from ..streaming.superstep import Checkpointer, SuperstepMetrics, superstep
 
 
 def _alpha(m: int) -> float:
@@ -172,7 +171,6 @@ def hyperball(
     metrics: SuperstepMetrics | None = None,
     resume: bool = False,
     combine: bool | str = "auto",
-    measure_volume: bool = False,
 ) -> DataFrame:
     """(v, reach_est, harmonic_est, dist_sum_est) for EVERY vertex at once.
 
@@ -195,9 +193,8 @@ def hyperball(
       graphs it is a full extra Arrow pass that merges nothing. The default
       ``combine="auto"`` decides from stats already in hand — pre-merge iff
       ``num_edges/num_nodes ≥ 4`` — with no extra job and (since the merge is
-      bit-identical) no effect on results. ``measure_volume=True`` records raw
-      vs pre-merged contribution rows per superstep in the metrics (two extra
-      count jobs — diagnostics only).
+      bit-identical) no effect on results. Each superstep record's
+      ``shuffle_write_records`` shows the rows the pre-merge saves.
     """
     spark = graph.spark
     m = 1 << p
@@ -343,58 +340,47 @@ def hyperball(
             yield reduce_block(v, mat, flag, nf, h, ds, ec, np.array([0]))
 
     for t in range(start_t + 1, max_supersteps + 1):
-        t0 = time.monotonic()
-        contrib = state.join(edges, state.v == F.col("_eu")).select(
-            F.col("_ev").alias("v"), "regs"
-        )
-        extra_metrics: dict = {}
-        if combine:
-            # map-side register combine: partial max per (partition, v) with
-            # the same kernel, BEFORE the exchange — cuts shuffled blob rows
-            # from one-per-edge to one-per-touched-vertex-per-partition
-            pre = contrib.sortWithinPartitions("v").mapInPandas(
-                _merge_sorted(nparts, m), schema="v long, regs binary"
+        with superstep(met, t) as rec:
+            contrib = state.join(edges, state.v == F.col("_eu")).select(
+                F.col("_ev").alias("v"), "regs"
             )
-            if measure_volume:
-                extra_metrics["contrib_rows"] = contrib.count()
-                pre = pre.localCheckpoint(eager=True)
-                extra_metrics["shuffled_rows"] = pre.count()
-            contrib = pre
-        elif measure_volume:
-            extra_metrics["contrib_rows"] = extra_metrics["shuffled_rows"] = (
-                contrib.count()
+            if combine:
+                # map-side register combine: partial max per (partition, v) with
+                # the same kernel, BEFORE the exchange — cuts shuffled blob rows
+                # from one-per-edge to one-per-touched-vertex-per-partition
+                contrib = contrib.sortWithinPartitions("v").mapInPandas(
+                    _merge_sorted(nparts, m), schema="v long, regs binary"
+                )
+            allr = state.select(
+                "v", "regs", "nf", "harmonic", "dist_sum", "ecc",
+                F.lit(1).alias("is_state"),
+            ).unionAll(
+                contrib.select(
+                    "v",
+                    "regs",
+                    F.lit(0.0).alias("nf"),
+                    F.lit(0.0).alias("harmonic"),
+                    F.lit(0.0).alias("dist_sum"),
+                    F.lit(0).cast("long").alias("ecc"),
+                    F.lit(0).alias("is_state"),
+                )
             )
-        allr = state.select(
-            "v", "regs", "nf", "harmonic", "dist_sum", "ecc",
-            F.lit(1).alias("is_state"),
-        ).unionAll(
-            contrib.select(
-                "v",
-                "regs",
-                F.lit(0.0).alias("nf"),
-                F.lit(0.0).alias("harmonic"),
-                F.lit(0.0).alias("dist_sum"),
-                F.lit(0).cast("long").alias("ecc"),
-                F.lit(0).alias("is_state"),
+            step_t = t
+            new_state = (
+                allr.repartition(nparts, "v")
+                .sortWithinPartitions("v")
+                .mapInPandas(
+                    lambda it, _t=step_t: merge_update(it, _t),
+                    schema=state_schema + ", changed long",
+                )
             )
-        )
-        step_t = t
-        new_state = (
-            allr.repartition(nparts, "v")
-            .sortWithinPartitions("v")
-            .mapInPandas(
-                lambda it, _t=step_t: merge_update(it, _t),
-                schema=state_schema + ", changed long",
+            # lazy: the convergence aggregate below is the materializing action —
+            # one Spark job per superstep instead of two (durable cuts on the
+            # every=4 cadence stay eager Parquet writes)
+            new_state = ckpt.step(new_state, t, lazy=True)
+            rec["rows"] = n_changed = int(
+                new_state.agg(F.sum("changed").alias("c")).collect()[0]["c"] or 0
             )
-        )
-        # lazy: the convergence aggregate below is the materializing action —
-        # one Spark job per superstep instead of two (durable cuts on the
-        # every=4 cadence stay eager Parquet writes)
-        new_state = ckpt.step(new_state, t, wall_s=time.monotonic() - t0, lazy=True)
-        n_changed = int(
-            new_state.agg(F.sum("changed").alias("c")).collect()[0]["c"] or 0
-        )
-        met.record(t, n_changed, time.monotonic() - t0, **extra_metrics)
         state = new_state.drop("changed")
         if n_changed == 0:
             break

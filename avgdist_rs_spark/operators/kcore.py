@@ -29,14 +29,17 @@ table is the better trade.
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from ..plans.graph import GraphFrame
-from ..streaming.superstep import Checkpointer, SuperstepMetrics, fixpoint_scope
+from ..streaming.superstep import (
+    Checkpointer,
+    SuperstepMetrics,
+    fixpoint_scope,
+    superstep,
+)
 
 
 def k_core(
@@ -77,19 +80,18 @@ def k_core(
         for it in range(1, max_supersteps + 1):
             if converged:
                 break
-            t0 = time.monotonic()
-            ev = sym.join(alive.select(F.col("v").alias("_esrc")), "_esrc").join(
-                alive.select(F.col("v").alias("_edst")), "_edst"
-            )
-            nxt = (
-                ev.groupBy(F.col("_esrc").alias("v"))
-                .agg(F.count("*").alias("deg"))
-                .where(F.col("deg") >= k)
-            )
-            # non-eager: the count() below materializes — one job/superstep
-            nxt = ckpt.step(nxt, it, wall_s=time.monotonic() - t0, lazy=True)
-            n_next = nxt.count()
-            met.record(it, n_next, time.monotonic() - t0)
+            with superstep(met, it) as rec:
+                ev = sym.join(alive.select(F.col("v").alias("_esrc")), "_esrc").join(
+                    alive.select(F.col("v").alias("_edst")), "_edst"
+                )
+                nxt = (
+                    ev.groupBy(F.col("_esrc").alias("v"))
+                    .agg(F.count("*").alias("deg"))
+                    .where(F.col("deg") >= k)
+                )
+                # non-eager: the count() below materializes — one job/superstep
+                nxt = ckpt.step(nxt, it, lazy=True)
+                rec["rows"] = n_next = nxt.count()
             converged = n_next == n_alive or n_next == 0
             alive, n_alive = nxt, n_next
     sym.unpersist()

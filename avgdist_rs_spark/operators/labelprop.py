@@ -15,14 +15,17 @@ Physical plan per superstep: labels ⋈ symmetric edges (one shuffle) →
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from ..plans.graph import GraphFrame
-from ..streaming.superstep import Checkpointer, SuperstepMetrics, fixpoint_scope
+from ..streaming.superstep import (
+    Checkpointer,
+    SuperstepMetrics,
+    fixpoint_scope,
+    superstep,
+)
 
 
 def label_propagation(
@@ -53,29 +56,27 @@ def label_propagation(
         ).localCheckpoint(eager=True)
 
         for it in range(1, iterations + 1):
-            t0 = time.monotonic()
-            votes = (
-                labels.join(sym, labels.v == F.col("_esrc"))
-                .select(F.col("_edst").alias("v"), F.col("label"))
-                .groupBy("v", "label")
-                .agg(F.count("*").alias("cnt"))
-            )
-            # argmax by (cnt desc, label asc): max_by with a sortable struct —
-            # deterministic, single aggregate, no window. The keep-own-label
-            # fallback is fused in as a cnt=0 state row per vertex riding the
-            # same union: it loses to every real vote (cnt ≥ 1) and wins exactly
-            # when the vertex has no neighbors — no labels ⋈ winner join stage.
-            new_labels = (
-                votes.unionAll(labels.select("v", "label", F.lit(0).cast("long").alias("cnt")))
-                .groupBy("v")
-                .agg(
-                    F.max_by(
-                        "label", F.struct(F.col("cnt"), (-F.col("label")).alias("nl"))
-                    ).alias("label")
+            with superstep(met, it, rows=graph.num_nodes):
+                votes = (
+                    labels.join(sym, labels.v == F.col("_esrc"))
+                    .select(F.col("_edst").alias("v"), F.col("label"))
+                    .groupBy("v", "label")
+                    .agg(F.count("*").alias("cnt"))
                 )
-            )
-            new_labels = ckpt.step(new_labels, it, wall_s=time.monotonic() - t0)
-            met.record(it, graph.num_nodes, time.monotonic() - t0)
-            labels = new_labels
+                # argmax by (cnt desc, label asc): max_by with a sortable struct —
+                # deterministic, single aggregate, no window. The keep-own-label
+                # fallback is fused in as a cnt=0 state row per vertex riding the
+                # same union: it loses to every real vote (cnt ≥ 1) and wins exactly
+                # when the vertex has no neighbors — no labels ⋈ winner join stage.
+                new_labels = (
+                    votes.unionAll(labels.select("v", "label", F.lit(0).cast("long").alias("cnt")))
+                    .groupBy("v")
+                    .agg(
+                        F.max_by(
+                            "label", F.struct(F.col("cnt"), (-F.col("label")).alias("nl"))
+                        ).alias("label")
+                    )
+                )
+                labels = ckpt.step(new_labels, it)
     sym.unpersist()
     return labels

@@ -38,13 +38,16 @@ parity (unique-MSF networkx replay + parallelism invariance).
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.hashing import portable_hash64
-from ..streaming.superstep import Checkpointer, SuperstepMetrics, fixpoint_scope
+from ..streaming.superstep import (
+    Checkpointer,
+    SuperstepMetrics,
+    fixpoint_scope,
+    superstep,
+)
 
 
 def _canonical_weighted(edges: DataFrame, weight_col: str | None) -> DataFrame:
@@ -108,96 +111,93 @@ def minimum_spanning_forest(
     labels = cut(verts.select(F.col("x"), F.col("x").alias("lbl")))
     forest: DataFrame | None = None
     n_forest_unions = 0
-    step = 0
 
     with fixpoint_scope(spark, max(n_edges, 1), per_partition=250_000):
-        for _round in range(1, max_rounds + 1):
-            t0 = time.monotonic()
-            # 1. relabel endpoints; drop intra-component edges for good
-            el = (
-                ew.select("u", "v", "w")
-                .join(labels.select(F.col("x").alias("u"), F.col("lbl").alias("_lu")), "u")
-                .join(labels.select(F.col("x").alias("v"), F.col("lbl").alias("_lv")), "v")
-            )
-            ew = cut(
-                el.where(F.col("_lu") != F.col("_lv")).select(
-                    "u", "v", "w", "_lu", "_lv"
+        for rnd in range(1, max_rounds + 1):
+            with superstep(met, rnd) as rec:
+                # 1. relabel endpoints; drop intra-component edges for good
+                el = (
+                    ew.select("u", "v", "w")
+                    .join(labels.select(F.col("x").alias("u"), F.col("lbl").alias("_lu")), "u")
+                    .join(labels.select(F.col("x").alias("v"), F.col("lbl").alias("_lv")), "v")
                 )
-            )
-            n_cross = ew.count()
-            if n_cross == 0:
-                break
-            # 2. per-component minimum crossing edge (total order w,u,v).
-            # pick is consumed twice (forest edges + parent pointers), so
-            # it is the round's ONE eager cut — sel/par derive from the
-            # cached rows instead of re-running the groupBy
-            cand = ew.select(
-                F.col("_lu").alias("c"),
-                F.struct("w", "u", "v", F.col("_lv").alias("o")).alias("m"),
-            ).unionAll(
-                ew.select(
-                    F.col("_lv").alias("c"),
-                    F.struct("w", "u", "v", F.col("_lu").alias("o")).alias("m"),
+                ew = cut(
+                    el.where(F.col("_lu") != F.col("_lv")).select(
+                        "u", "v", "w", "_lu", "_lv"
+                    )
                 )
-            )
-            pick = cut(cand.groupBy("c").agg(F.min("m").alias("m")), lazy=False)
-            sel = pick.select(
-                F.col("m.u").alias("u"), F.col("m.v").alias("v"), F.col("m.w").alias("w")
-            ).distinct()
-            # forest accumulates lazily; fold every 4 rounds bounds the
-            # Union depth without rewriting the whole forest each round
-            forest = sel if forest is None else forest.unionAll(sel)
-            n_forest_unions += 1
-            if n_forest_unions % 4 == 0:
-                forest = cut(forest, lazy=False)
-            # 3. contraction: parent pointers, 2-cycle break toward the
-            # smaller id, pointer-jump to the root
-            par = pick.select("c", F.col("m.o").alias("p"))
-            g = par.select(F.col("c").alias("_pc"), F.col("p").alias("_pp"))
-            par = par.join(g, par.p == F.col("_pc"), "left").select(
-                "c",
-                F.when(
-                    (F.col("_pp") == F.col("c")) & (F.col("c") < F.col("p")),
-                    F.col("c"),
-                )
-                .otherwise(F.col("p"))
-                .alias("p"),
-            )
-            while True:
-                step += 1
-                # two chained dereferences per action, the second through
-                # the ALREADY-JUMPED map — depth ~4x per jump job (the
-                # components.py squaring trick, VERDICT r5 next-#7) and the
-                # moved-count rides the SAME job as the jump materialization
-                g = par.select(F.col("c").alias("_pc"), F.col("p").alias("_pp"))
-                once = par.join(g, par.p == F.col("_pc"), "left").select(
-                    "c", F.coalesce("_pp", "p").alias("p"), par.p.alias("_old")
-                )
-                g2 = once.select(F.col("c").alias("_qc"), F.col("p").alias("_qp"))
-                jumped = once.join(g2, once.p == F.col("_qc"), "left").select(
-                    "c", F.coalesce("_qp", "p").alias("p"), "_old"
-                )
-                jumped = cut(jumped)
-                moved = int(
-                    jumped.agg(
-                        F.sum((F.col("p") != F.col("_old")).cast("long"))
-                    ).collect()[0][0]
-                    or 0
-                )
-                par = jumped.drop("_old")
-                if moved == 0:
+                rec["rows"] = n_cross = ew.count()
+                if n_cross == 0:
                     break
-            # 4. fold the round's root map into the vertex labels — lazy:
-            # the next round's n_cross count (or nothing, on the final
-            # round) materializes it
-            labels = cut(
-                labels.join(
-                    par.select(F.col("c").alias("lbl"), F.col("p").alias("_r")),
-                    "lbl",
-                    "left",
-                ).select("x", F.coalesce("_r", "lbl").alias("lbl"))
-            )
-            met.record(step, n_cross, time.monotonic() - t0)
+                # 2. per-component minimum crossing edge (total order w,u,v).
+                # pick is consumed twice (forest edges + parent pointers), so
+                # it is the round's ONE eager cut — sel/par derive from the
+                # cached rows instead of re-running the groupBy
+                cand = ew.select(
+                    F.col("_lu").alias("c"),
+                    F.struct("w", "u", "v", F.col("_lv").alias("o")).alias("m"),
+                ).unionAll(
+                    ew.select(
+                        F.col("_lv").alias("c"),
+                        F.struct("w", "u", "v", F.col("_lu").alias("o")).alias("m"),
+                    )
+                )
+                pick = cut(cand.groupBy("c").agg(F.min("m").alias("m")), lazy=False)
+                sel = pick.select(
+                    F.col("m.u").alias("u"), F.col("m.v").alias("v"), F.col("m.w").alias("w")
+                ).distinct()
+                # forest accumulates lazily; fold every 4 rounds bounds the
+                # Union depth without rewriting the whole forest each round
+                forest = sel if forest is None else forest.unionAll(sel)
+                n_forest_unions += 1
+                if n_forest_unions % 4 == 0:
+                    forest = cut(forest, lazy=False)
+                # 3. contraction: parent pointers, 2-cycle break toward the
+                # smaller id, pointer-jump to the root
+                par = pick.select("c", F.col("m.o").alias("p"))
+                g = par.select(F.col("c").alias("_pc"), F.col("p").alias("_pp"))
+                par = par.join(g, par.p == F.col("_pc"), "left").select(
+                    "c",
+                    F.when(
+                        (F.col("_pp") == F.col("c")) & (F.col("c") < F.col("p")),
+                        F.col("c"),
+                    )
+                    .otherwise(F.col("p"))
+                    .alias("p"),
+                )
+                while True:
+                    # two chained dereferences per action, the second through
+                    # the ALREADY-JUMPED map — depth ~4x per jump job (the
+                    # components.py squaring trick, VERDICT r5 next-#7) and the
+                    # moved-count rides the SAME job as the jump materialization
+                    g = par.select(F.col("c").alias("_pc"), F.col("p").alias("_pp"))
+                    once = par.join(g, par.p == F.col("_pc"), "left").select(
+                        "c", F.coalesce("_pp", "p").alias("p"), par.p.alias("_old")
+                    )
+                    g2 = once.select(F.col("c").alias("_qc"), F.col("p").alias("_qp"))
+                    jumped = once.join(g2, once.p == F.col("_qc"), "left").select(
+                        "c", F.coalesce("_qp", "p").alias("p"), "_old"
+                    )
+                    jumped = cut(jumped)
+                    moved = int(
+                        jumped.agg(
+                            F.sum((F.col("p") != F.col("_old")).cast("long"))
+                        ).collect()[0][0]
+                        or 0
+                    )
+                    par = jumped.drop("_old")
+                    if moved == 0:
+                        break
+                # 4. fold the round's root map into the vertex labels — lazy:
+                # the next round's n_cross count (or nothing, on the final
+                # round) materializes it
+                labels = cut(
+                    labels.join(
+                        par.select(F.col("c").alias("lbl"), F.col("p").alias("_r")),
+                        "lbl",
+                        "left",
+                    ).select("x", F.coalesce("_r", "lbl").alias("lbl"))
+                )
         else:
             raise RuntimeError(
                 f"msf: not converged within max_rounds={max_rounds}"

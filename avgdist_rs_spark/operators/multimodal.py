@@ -2,11 +2,10 @@
 
 Images/audio/video ride through the engine as ``binary`` columns with a typed
 metadata struct. The Spark-side plumbing here is real and tested — schema,
-Arrow batching, ``mapInPandas`` signatures, partition sizing — while the actual
-codec step is stubbed (no image/audio libraries in this container): decode
-raises ``NotImplementedError`` unless the optional dependency imports, and a
-deterministic fake decoder exercises the identical batch path so the pipeline
-shape is verified end to end.
+Arrow batching, ``mapInPandas`` signatures, partition sizing. No codec ships:
+feature extraction runs a deterministic stand-in embedding
+(``_fake_feature_vec``) over the identical batch path, so a real decoder and
+model would replace that one function.
 
 Scale design: payloads never pass through Python row-at-a-time — ``mapInPandas``
 moves whole Arrow record batches; feature extraction is vectorized over the
@@ -76,20 +75,6 @@ def attach_binary(
     )
 
 
-def decode_image(payload: bytes):
-    """Real codec hook — stubbed: no imaging library ships in this container."""
-    try:
-        from PIL import Image  # noqa: F401  (optional dependency, absent here)
-        import io
-
-        return Image.open(io.BytesIO(payload))
-    except ImportError as exc:  # pragma: no cover - exercised only without PIL
-        raise NotImplementedError(
-            "image decode requires an imaging library not present in this "
-            "environment; use fake_features for pipeline testing"
-        ) from exc
-
-
 def _fake_feature_vec(payload: bytes, dim: int) -> np.ndarray:
     """Deterministic stand-in for a codec+model embedding: sha256-seeded."""
     seed = int.from_bytes(hashlib.sha256(payload).digest()[:8], "big")
@@ -128,63 +113,3 @@ def media_metadata(media: DataFrame) -> DataFrame:
         F.min("n_bytes").alias("min_bytes"),
         F.max("n_bytes").alias("max_bytes"),
     )
-
-
-def resize_image(media: DataFrame, width: int = 64, height: int = 64) -> DataFrame:
-    """Image resize over binary payloads (Arrow-batched). The codec is stubbed
-    (no imaging library in this container): payloads pass through a
-    deterministic fake that emits a (width·height·3)-byte pseudo-bitmap seeded
-    by the payload digest — the batch path, schema, and partition shape are
-    the production plumbing; only the decode/resample call would be swapped."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        nbytes = width * height * 3
-        for pdf in batches:
-            out = []
-            for b in pdf["payload"]:
-                seed = int.from_bytes(hashlib.sha256(bytes(b)).digest()[:8], "big")
-                rng = np.random.default_rng(seed)
-                out.append(rng.integers(0, 256, nbytes, dtype=np.uint8).tobytes())
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "kind": pdf["kind"],
-                    "payload": out,
-                    "width": np.int32(width),
-                    "height": np.int32(height),
-                    "n_bytes": np.int64(nbytes),
-                }
-            )
-
-    return media.mapInPandas(run, schema=MEDIA_SCHEMA)
-
-
-def sample_frames(media: DataFrame, every_n_bytes: int = 64, max_frames: int = 8) -> DataFrame:
-    """Frame sampling for video-like payloads: emit up to ``max_frames`` evenly
-    spaced byte windows per payload (one output row per frame — the fan-out
-    shape of real frame extraction; decode itself is the stubbed step)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, kinds, frames, idxs = [], [], [], []
-            for mid, kind, b in zip(pdf["media_id"], pdf["kind"], pdf["payload"]):
-                raw = bytes(b)
-                n = max(1, min(max_frames, len(raw) // every_n_bytes))
-                for i in range(n):
-                    off = i * len(raw) // n
-                    ids.append(mid)
-                    kinds.append(kind)
-                    frames.append(raw[off : off + every_n_bytes])
-                    idxs.append(i)
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "kind": kinds,
-                    "payload": frames,
-                    "width": pd.array([None] * len(ids), dtype="Int32"),
-                    "height": pd.array([None] * len(ids), dtype="Int32"),
-                    "n_bytes": np.array([len(f) for f in frames], dtype=np.int64),
-                }
-            )
-
-    return media.mapInPandas(run, schema=MEDIA_SCHEMA)

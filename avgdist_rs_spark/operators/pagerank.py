@@ -18,13 +18,16 @@ resume of any superstep (north rule).
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..plans.graph import GraphFrame
-from ..streaming.superstep import Checkpointer, SuperstepMetrics, fixpoint_scope
+from ..streaming.superstep import (
+    Checkpointer,
+    SuperstepMetrics,
+    fixpoint_scope,
+    superstep,
+)
 
 
 def pagerank(
@@ -155,46 +158,44 @@ def pagerank(
             .persist()
         )
         for it in range(start_iter + 1, iterations + 1):
-            t0 = time.monotonic()
-            prev_state, prev_dm, prev_first = state, dm, first
-            # every-vertex presence WITHOUT a second join: zero-contribution base
-            # rows ride the SAME union into the single groupBy exchange, so each
-            # superstep is exactly one shuffle of the n-row rank vector (by src)
-            # plus one aggregation shuffle (by dst) — no vertices ⋈ contrib stage
-            new_state = (
-                state.join(norm_edges.hint("merge"), state.v == F.col("_esrc"))
-                .select(
-                    F.col("_edst").alias("v"),
-                    (rank_expr(dm, first) * F.col("_w")).alias("c"),
-                    F.lit(0.0).alias("_tele"),
-                )
-                .unionAll(base_rows)
-                .groupBy("v")
-                .agg(F.sum("c").alias("c"), F.max("_tele").alias("_t"))
-            )
-            new_state = ckpt.step(
-                new_state, it, rows=n, wall_s=time.monotonic() - t0, lazy=True
-            )
-            if has_dangling:
-                dm = collect_dm(new_state)  # materializes the lazy checkpoint
-            else:
-                new_state.count()  # the materializing action
-            state, first = new_state, False
-            if tol is not None:
-                delta = (
-                    state.select("v", rank_expr(dm, False).alias("rank")).alias("a")
-                    .join(
-                        prev_state.select(
-                            "v", rank_expr(prev_dm, prev_first).alias("rank")
-                        ).alias("b"),
-                        "v",
+            with superstep(met, it, rows=n) as rec:
+                prev_state, prev_dm, prev_first = state, dm, first
+                # every-vertex presence WITHOUT a second join: zero-contribution base
+                # rows ride the SAME union into the single groupBy exchange, so each
+                # superstep is exactly one shuffle of the n-row rank vector (by src)
+                # plus one aggregation shuffle (by dst) — no vertices ⋈ contrib stage
+                new_state = (
+                    state.join(norm_edges.hint("merge"), state.v == F.col("_esrc"))
+                    .select(
+                        F.col("_edst").alias("v"),
+                        (rank_expr(dm, first) * F.col("_w")).alias("c"),
+                        F.lit(0.0).alias("_tele"),
                     )
-                    .agg(F.sum(F.abs(F.col("a.rank") - F.col("b.rank"))))
-                    .collect()[0][0]
+                    .unionAll(base_rows)
+                    .groupBy("v")
+                    .agg(F.sum("c").alias("c"), F.max("_tele").alias("_t"))
                 )
-            else:
-                delta = None
-            met.record(it, n, time.monotonic() - t0, l1_delta=delta)
+                new_state = ckpt.step(new_state, it, lazy=True)
+                if has_dangling:
+                    dm = collect_dm(new_state)  # materializes the lazy checkpoint
+                else:
+                    new_state.count()  # the materializing action
+                state, first = new_state, False
+                if tol is not None:
+                    delta = (
+                        state.select("v", rank_expr(dm, False).alias("rank")).alias("a")
+                        .join(
+                            prev_state.select(
+                                "v", rank_expr(prev_dm, prev_first).alias("rank")
+                            ).alias("b"),
+                            "v",
+                        )
+                        .agg(F.sum(F.abs(F.col("a.rank") - F.col("b.rank"))))
+                        .collect()[0][0]
+                    )
+                else:
+                    delta = None
+                rec["l1_delta"] = delta
             if tol is not None and delta is not None and delta < tol:
                 break
         ranks = state.select("v", rank_expr(dm, first).alias("rank"))

@@ -56,8 +56,6 @@ advice).
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
@@ -68,6 +66,7 @@ from ..streaming.superstep import (
     SuperstepMetrics,
     converge,
     fixpoint_scope,
+    superstep,
 )
 
 #: color supersteps per round before "auto" enables pointer jumping (mirrors
@@ -107,7 +106,12 @@ def strongly_connected_components(
     n_alive = alive.count()
     assigned: DataFrame | None = None
     n_acc = 0
-    step = 0
+    # supersteps this call has run: trim, coloring and backward sweeps all
+    # record into ``met``, so its records are the one superstep counter
+    base = met.total_supersteps
+
+    def steps() -> int:
+        return met.total_supersteps - base
 
     def _shrink_ea(gone: DataFrame, gone_count: int) -> None:
         nonlocal ea
@@ -115,12 +119,6 @@ def strongly_connected_components(
         ea = ea.join(g.select(F.col("v").alias("_s")), "_s", "anti").join(
             g.select(F.col("v").alias("_d")), "_d", "anti"
         ).localCheckpoint(eager=True)
-
-    def _record(rows: int, t0: float) -> int:
-        nonlocal step
-        step += 1
-        met.record(step, rows, time.monotonic() - t0)
-        return step
 
     def _accumulate(found: DataFrame) -> None:
         nonlocal assigned, n_acc
@@ -152,10 +150,9 @@ def strongly_connected_components(
         ``force_jump`` skips the plain warm-up supersteps — used by the
         rcolor pass, which only runs once the coloring has already proven
         the diameter large."""
-        nonlocal step
-        first = step + 1
+        first = steps() + 1
 
-        def superstep(state: DataFrame, it: int) -> DataFrame:
+        def color_step(state: DataFrame, it: int) -> DataFrame:
             jump = (
                 force_jump
                 or shortcut is True
@@ -210,12 +207,10 @@ def strongly_connected_components(
             return stepped
 
         # a truncated fixpoint would silently split SCCs: converge raises
-        state = converge(
-            "scc", state0, superstep, F.col(label) != F.col("_old"),
+        return converge(
+            "scc", state0, color_step, F.col(label) != F.col("_old"),
             ckpt, met, max_supersteps, first=first,
         )
-        step = met.records[-1]["superstep"]
-        return state
 
     # one scope for the whole operator: phase-1 trims and phase-2 fixpoints
     # exchange at most m_t ≤ m rows; 250k rows/partition because the
@@ -248,36 +243,36 @@ def strongly_connected_components(
                 break
             # ---- phase 1: trim fixpoint (singleton SCCs) -----------------------
             while n_alive > 0:
-                t0 = time.monotonic()
-                # a vertex survives iff it has ≥1 out-edge AND ≥1 in-edge in
-                # the alive-edge table (ea endpoints are alive by invariant)
-                keep = (
-                    alive.join(ea.select(F.col("_s").alias("v")).distinct(), "v", "semi")
-                    .join(ea.select(F.col("_d").alias("v")).distinct(), "v", "semi")
-                )
-                keep = keep.localCheckpoint(eager=False)  # count() materializes
-                n_keep = keep.count()
-                if n_keep == n_alive:
-                    _record(0, t0)
-                    break
-                # materialize once — both the accumulator union and the ea
-                # shrink consume it
-                dead = alive.join(keep, "v", "anti").select(
-                    "v", F.col("v").alias("component")
-                ).localCheckpoint(eager=True)
-                _accumulate(dead)
-                _shrink_ea(dead.select("v"), n_alive - n_keep)
-                alive, n_alive = keep, n_keep
-                _record(n_alive, t0)
+                with superstep(met, steps() + 1, phase="trim") as rec:
+                    # a vertex survives iff it has ≥1 out-edge AND ≥1 in-edge
+                    # in the alive-edge table (ea endpoints are alive by
+                    # invariant)
+                    keep = (
+                        alive.join(ea.select(F.col("_s").alias("v")).distinct(), "v", "semi")
+                        .join(ea.select(F.col("_d").alias("v")).distinct(), "v", "semi")
+                    )
+                    keep = keep.localCheckpoint(eager=False)  # count() materializes
+                    n_keep = keep.count()
+                    if n_keep == n_alive:
+                        break
+                    # materialize once — both the accumulator union and the ea
+                    # shrink consume it
+                    dead = alive.join(keep, "v", "anti").select(
+                        "v", F.col("v").alias("component")
+                    ).localCheckpoint(eager=True)
+                    _accumulate(dead)
+                    _shrink_ea(dead.select("v"), n_alive - n_keep)
+                    alive, n_alive = keep, n_keep
+                    rec["rows"] = n_alive
             if n_alive == 0:
                 break
             # ---- phase 2: one coloring round on the cyclic remainder -----------
             color0 = alive.select("v", F.col("v").alias("color")).localCheckpoint(eager=True)
-            steps_before = step
+            steps_before = steps()
             color = _max_prop_fixpoint(color0, ea, "_s", "_d", "color")
             color = color.persist(StorageLevel.MEMORY_AND_DISK)
             color.count()
-            color_steps = step - steps_before
+            color_steps = steps() - steps_before
             large_diameter = shortcut is True or (
                 shortcut == "auto" and color_steps > AUTO_SHORTCUT_AFTER
             )
@@ -322,34 +317,34 @@ def strongly_connected_components(
                 mem = mem.localCheckpoint(eager=True)
                 frontier = mem
                 while True:
-                    t0 = time.monotonic()
-                    preds = (
-                        frontier.join(ea, frontier.v == F.col("_d"))
-                        .select(F.col("_s").alias("v"), "color")
-                        .distinct()
-                        .join(
-                            color.select(
-                                F.col("v").alias("v"), F.col("color").alias("_vc")
-                            ),
-                            "v",
+                    it = steps() + 1
+                    with superstep(met, it, phase="bwd") as rec:
+                        preds = (
+                            frontier.join(ea, frontier.v == F.col("_d"))
+                            .select(F.col("_s").alias("v"), "color")
+                            .distinct()
+                            .join(
+                                color.select(
+                                    F.col("v").alias("v"), F.col("color").alias("_vc")
+                                ),
+                                "v",
+                            )
+                            .where(F.col("color") == F.col("_vc"))
+                            .select("v", "color")
                         )
-                        .where(F.col("color") == F.col("_vc"))
-                        .select("v", "color")
-                    )
-                    new = preds.join(mem, ["v", "color"], "anti").localCheckpoint(
-                        eager=True
-                    )
-                    n_new = new.count()
-                    _record(n_new, t0)
-                    if n_new == 0:
-                        break
-                    if step >= max_supersteps:
-                        raise RuntimeError(
-                            f"scc: backward sweep not converged within "
-                            f"max_supersteps={max_supersteps}; raise the budget"
+                        # non-eager: the count() materializes — one job fewer
+                        new = preds.join(mem, ["v", "color"], "anti").localCheckpoint(
+                            eager=False
                         )
-                    mem = mem.unionAll(new)
-                    mem = ckpt.step(mem, step)
+                        rec["rows"] = n_new = new.count()
+                        if n_new == 0:
+                            break
+                        if it >= max_supersteps:
+                            raise RuntimeError(
+                                f"scc: backward sweep not converged within "
+                                f"max_supersteps={max_supersteps}; raise the budget"
+                            )
+                        mem = ckpt.step(mem.unionAll(new), it)
                     frontier = new
             # label each found SCC with its min member; remove from alive
             labels = mem.groupBy("color").agg(F.min("v").alias("component"))

@@ -10,11 +10,26 @@ handled explicitly (SURVEY.md §4):
    `localCheckpoint` (fast, in-memory) or, when a checkpoint dir is configured,
    by writing the state to Parquet and reading it back.
 2. **Resume** (north rule): Parquet checkpoints carry a JSON manifest per
-   superstep (superstep number, row count, wall seconds, state path), so a new
-   driver can resume any BFS/PageRank run from the last completed superstep.
+   superstep (superstep number, state path), so a new driver can resume any
+   BFS/PageRank run from the last completed superstep.
 
-`SuperstepMetrics` records per-superstep wall time and frontier size and exposes
-`supersteps_per_min` — the benchmark unit in BASELINE.json.
+Every superstep of every loop that takes a `SuperstepMetrics` runs inside
+one :func:`superstep` context, which appends one record to it:
+
+- ``superstep``, ``rows`` (the loop's own count: changed or frontier rows)
+  and ``wall_s`` (the body's wall time), plus any loop-specific extras;
+- the Spark counters of the jobs the body ran: ``jobs``, ``stages`` (run,
+  not skipped), ``tasks``, ``shuffle_read_bytes``, ``shuffle_write_bytes``,
+  ``shuffle_write_records``, ``executor_ms`` and ``evicted_stages`` (stages
+  that ran but that the status store dropped before they could be read, so
+  absent from the other sums).
+
+The counters come from Spark's status store. The context never sets a job
+group: it diffs the job ids of the CURRENT group (none, or an outer
+caller's) before and after the body, so an enclosing tracer that counts its
+jobs by group keeps counting them. The ``name:superstep`` label goes into
+the job description, and the caller's description is restored on exit.
+`supersteps_per_min` is the benchmark unit in BASELINE.json.
 
 Every fixpoint loop (CC, SCC, k-core, SSSP, MSF, PageRank, label
 propagation) runs inside one `fixpoint_scope(spark, rows, per_partition)`.
@@ -28,8 +43,8 @@ Its policy, for ``rows`` ≈ the loop's per-superstep exchange volume:
 All three are restored LIFO on exit, exceptions included. Loops whose
 superstep is "recompute the state, stop when no row changed" hand the loop
 itself to `converge`: lazy checkpoint, one materializing ``sum(changed)``
-aggregate (one Spark job per superstep), metrics, and a hard error when the
-superstep budget runs out.
+aggregate (one Spark job per superstep) inside one `superstep` record, and
+a hard error when the superstep budget runs out.
 """
 
 from __future__ import annotations
@@ -39,22 +54,30 @@ import os
 import time
 from contextlib import ExitStack, contextmanager
 from dataclasses import dataclass, field
+from functools import lru_cache
 from typing import Callable
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+#: Spark counters of every superstep record (see the module docstring)
+COUNTERS = (
+    "jobs",
+    "stages",
+    "tasks",
+    "shuffle_read_bytes",
+    "shuffle_write_bytes",
+    "shuffle_write_records",
+    "executor_ms",
+    "evicted_stages",
+)
 
 
 @dataclass
 class SuperstepMetrics:
     name: str = "superstep"
     records: list[dict] = field(default_factory=list)
-    _t0: float = field(default_factory=time.monotonic)
-
-    def record(self, superstep: int, rows: int, wall_s: float, **extra) -> None:
-        self.records.append(
-            {"superstep": superstep, "rows": rows, "wall_s": wall_s, **extra}
-        )
 
     @property
     def total_supersteps(self) -> int:
@@ -76,6 +99,80 @@ class SuperstepMetrics:
             "supersteps_per_min": round(self.supersteps_per_min(), 2),
             "per_superstep": self.records,
         }
+
+
+@lru_cache(maxsize=1)
+def _status(sc):
+    """(listener bus, status tracker, status store, java.util.Arrays) of a
+    context, looked up once: every py4j lookup is a JVM round trip."""
+    jsc = sc._jsc.sc()
+    return jsc.listenerBus(), sc._jsc.statusTracker(), jsc.statusStore(), sc._jvm.java.util.Arrays
+
+
+def _group_jobs(sc, group: str | None) -> set[int]:
+    """Ids of the jobs the status store holds for ``group`` (None: no group).
+    The store is fed asynchronously, so drain the listener bus first."""
+    bus, tracker, _, arrays = _status(sc)
+    bus.waitUntilEmpty()
+    # one py4j round trip for the whole array; iterating a JavaArray costs
+    # one per element (measured ~70 ms for 600 job ids)
+    s = arrays.toString(tracker.getJobIdsForGroup(group))[1:-1]
+    return {int(x) for x in s.split(", ")} if s else set()
+
+
+def _stage_counters(sc, stage_ids, ran: int) -> dict:
+    """The counters of these stages' last attempts (``jobs`` left at 0);
+    ``ran`` is how many of them ran, per their jobs. The store evicts
+    skipped stages first, so a stage it no longer holds only shows in
+    ``evicted_stages`` when fewer than ``ran`` stages are left to read."""
+    store = _status(sc)[2]
+    c = dict.fromkeys(COUNTERS, 0)
+    for sid in stage_ids:
+        try:
+            st = store.lastStageAttempt(sid)
+        except Py4JJavaError:  # NoSuchElementException: evicted
+            continue
+        if st.status().toString() != "COMPLETE":
+            continue  # skipped: its shuffle output was reused
+        c["stages"] += 1
+        c["tasks"] += st.numCompleteTasks()
+        c["shuffle_read_bytes"] += st.shuffleRemoteBytesRead() + st.shuffleLocalBytesRead()
+        c["shuffle_write_bytes"] += st.shuffleWriteBytes()
+        c["shuffle_write_records"] += st.shuffleWriteRecords()
+        c["executor_ms"] += st.executorRunTime()
+    c["evicted_stages"] = max(0, ran - c["stages"])
+    return c
+
+
+@contextmanager
+def superstep(metrics: SuperstepMetrics, it: int, **extra):
+    """Time the body as superstep ``it`` of ``metrics`` and append its record
+    (fields in the module docstring). Yields the record: the body sets
+    ``rec["rows"]`` (default 0) and any extra it learns on the way. A body
+    that raises appends nothing; the job description is restored either way.
+    """
+    sc = SparkSession.active().sparkContext
+    group = sc.getLocalProperty("spark.jobGroup.id")
+    desc = sc.getLocalProperty("spark.job.description")
+    before = _group_jobs(sc, group)
+    rec = {"superstep": it, "rows": 0, "wall_s": 0.0, **extra}
+    sc.setJobDescription(f"{metrics.name}:{it}")
+    t0 = time.monotonic()
+    try:
+        yield rec
+    finally:
+        rec["wall_s"] = time.monotonic() - t0
+        sc.setJobDescription(desc)
+    jobs = _group_jobs(sc, group) - before
+    store = _status(sc)[2]
+    stage_ids: set[int] = set()
+    ran = 0
+    for jid in jobs:
+        job = store.job(jid)
+        stage_ids.update(int(x) for x in job.stageIds().mkString(",").split(",") if x)
+        ran += job.numCompletedStages()
+    rec.update(_stage_counters(sc, stage_ids, ran), jobs=len(jobs))
+    metrics.records.append(rec)
 
 
 class Checkpointer:
@@ -147,10 +244,9 @@ class Checkpointer:
         return os.path.join(self.dir, self.name, "manifest.jsonl")
 
     # ------------------------------------------------------------------ cut
-    def cut(self, df: DataFrame, superstep: int, rows: int | None = None,
-            wall_s: float | None = None, force: bool = False) -> DataFrame:
+    def cut(self, df: DataFrame, superstep: int) -> DataFrame:
         """Return ``df`` with truncated lineage (and durable state if configured)."""
-        if superstep % self.every != 0 and not force:
+        if superstep % self.every != 0:
             return df
         if self.dir is None:
             return df.localCheckpoint(eager=True)
@@ -158,23 +254,12 @@ class Checkpointer:
         df.write.mode("overwrite").parquet(path)
         out = self.spark.read.parquet(path)
         os.makedirs(os.path.dirname(self._manifest_path()), exist_ok=True)
+        line = {"superstep": superstep, "path": path, "ts": time.time()}
         with open(self._manifest_path(), "a") as f:
-            f.write(
-                json.dumps(
-                    {
-                        "superstep": superstep,
-                        "path": path,
-                        "rows": rows,
-                        "wall_s": wall_s,
-                        "ts": time.time(),
-                    }
-                )
-                + "\n"
-            )
+            f.write(json.dumps(line) + "\n")
         return out
 
-    def step(self, df: DataFrame, superstep: int, rows: int | None = None,
-             wall_s: float | None = None, lazy: bool = False) -> DataFrame:
+    def step(self, df: DataFrame, superstep: int, lazy: bool = False) -> DataFrame:
         """Per-superstep state handover: durable cut on the cadence, eager
         localCheckpoint otherwise — state lineage is truncated EVERY superstep
         either way (the idiom every iterative operator needs), so plans stay
@@ -197,11 +282,12 @@ class Checkpointer:
             return self._hard_cut(df)
         if superstep % self.every != 0 or self.dir is None:
             return df.localCheckpoint(eager=not lazy)
-        return self.cut(df, superstep, rows=rows, wall_s=wall_s)
+        return self.cut(df, superstep)
 
     # ------------------------------------------------------------------ resume
     def latest(self) -> tuple[DataFrame, int] | None:
-        """(state, superstep) of the last durable checkpoint, or None."""
+        """(state, superstep) of the last durable checkpoint, or None. A line
+        that does not parse (torn by a crash mid-append) is skipped."""
         if self.dir is None:
             return None
         mp = self._manifest_path()
@@ -210,9 +296,10 @@ class Checkpointer:
         last = None
         with open(mp) as f:
             for line in f:
-                line = line.strip()
-                if line:
+                try:
                     last = json.loads(line)
+                except json.JSONDecodeError:
+                    continue
         if last is None:
             return None
         return self.spark.read.parquet(last["path"]), int(last["superstep"])
@@ -322,18 +409,15 @@ def converge(
     is the previous superstep's checkpointed frame, ``_old`` included (or
     ``state`` itself for the first superstep). Each superstep is a lazy
     checkpoint materialized by ONE aggregate, ``sum(changed)`` — one Spark
-    job per superstep. Returns the converged state without ``_old``; raises
+    job per superstep, recorded with ``rows`` = the changed count. Returns the converged state without ``_old``; raises
     once the budget is spent, since a truncated fixpoint is a wrong answer.
     Call it inside a :func:`fixpoint_scope`.
     """
     for it in range(first, max_supersteps + 1):
-        t0 = time.monotonic()
-        state = ckpt.step(
-            step(state, it), it, wall_s=time.monotonic() - t0, lazy=True
-        )
-        n = int(state.agg(F.sum(changed.cast("long"))).collect()[0][0] or 0)
-        metrics.record(it, n, time.monotonic() - t0)
-        if n == 0:
+        with superstep(metrics, it) as rec:
+            state = ckpt.step(step(state, it), it, lazy=True)
+            rec["rows"] = int(state.agg(F.sum(changed.cast("long"))).collect()[0][0] or 0)
+        if rec["rows"] == 0:
             return state.drop("_old")
     raise RuntimeError(
         f"{name}: not converged within max_supersteps={max_supersteps}"

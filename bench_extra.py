@@ -7,9 +7,13 @@ comparisons survive the shared box's noise:
     SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=32 \
         python bench_extra.py --queries graph_build,msf --repeats 3
 
-Prints ONE JSON line: {"queries": {name: [s1, s2, ...]}, "sf": ..., ...};
-the per-query functions reproduce bench.py's exact workloads (same inputs,
-same forcing aggregates) so numbers are comparable to the headline entries.
+Prints ONE JSON line: {"queries": {name: [s1, s2, ...]}, "jobs": {name:
+[j1, j2, ...]}, ..., "sf_dir": ..., ...}. Each query run is one superstep
+record (``streaming.superstep.superstep``), so next to the wall seconds
+every record counter (jobs, stages, tasks, shuffle bytes and records,
+executor-ms, evicted stages) gets one key, per query and repeat. The
+per-query functions reproduce bench.py's exact workloads (same inputs, same
+forcing aggregates) so numbers are comparable to the headline entries.
 """
 
 from __future__ import annotations
@@ -18,7 +22,6 @@ import argparse
 import json
 import os
 import sys
-import time
 
 import numpy as np
 
@@ -246,6 +249,10 @@ def main() -> None:
         .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.ui.enabled", "false")
+        # keep a whole query's jobs and stages in the status store: the
+        # per-query counters read them after the query ends
+        .config("spark.ui.retainedJobs", "100000")
+        .config("spark.ui.retainedStages", "100000")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .getOrCreate()
     )
@@ -261,27 +268,20 @@ def main() -> None:
         # build to whichever query happens to run first
         reg["graph_build"]()
 
-    def _njobs() -> int:
-        # structural metric, immune to box noise: Spark jobs submitted so far
-        # (each job = one blocking driver round-trip)
-        return int(spark.sparkContext._jsc.sc().dagScheduler().nextJobId())
+    from avgdist_rs_spark.streaming.superstep import COUNTERS, SuperstepMetrics, superstep
 
-    out: dict[str, list[float]] = {n: [] for n in names}
-    jobs: dict[str, list[int]] = {n: [] for n in names}
+    # one record per query run; the Spark counters are immune to box noise
+    mets = {n: SuperstepMetrics(name=f"bench_extra:{n}") for n in names}
     for rep in range(args.repeats):
         for n in names:
-            spark.sparkContext.setJobDescription(f"bench_extra:{n}#{rep}")
-            j0 = _njobs()
-            t0 = time.monotonic()
-            reg[n]()
-            out[n].append(round(time.monotonic() - t0, 3))
-            jobs[n].append(_njobs() - j0)
-            spark.sparkContext.setJobDescription(None)
+            with superstep(mets[n], rep + 1):
+                reg[n]()
+    recs = {n: m.records for n, m in mets.items()}
     print(
         json.dumps(
             {
-                "queries": out,
-                "jobs": jobs,
+                "queries": {n: [round(r["wall_s"], 3) for r in rs] for n, rs in recs.items()},
+                **{k: {n: [r[k] for r in rs] for n, rs in recs.items()} for k in COUNTERS},
                 "sf_dir": sf_dir,
                 "cpus": cpus,
                 "loadavg": round(os.getloadavg()[0], 2),

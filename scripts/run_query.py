@@ -44,8 +44,8 @@ def main() -> None:
 
     from pyspark.sql import SparkSession
 
-    from avgdist_rs_spark.sources.tables import write_results
-    from avgdist_rs_spark.streaming.superstep import SuperstepMetrics
+    from avgdist_rs_spark.sources.tables import write_metrics, write_results
+    from avgdist_rs_spark.streaming.superstep import SuperstepMetrics, superstep
 
     spark = (
         SparkSession.builder.master(f"local[{args.cpus}]")
@@ -57,18 +57,13 @@ def main() -> None:
     )
     spark.sparkContext.setLogLevel("ERROR")
 
-    t0 = time.monotonic()
-    df = qs[args.query](spark, args.sf_dir)
-    path = write_results(df, args.out, args.query, fmt=args.fmt)
-    wall = time.monotonic() - t0
-    rows = spark.read.format(args.fmt).load(path).count()
-
-    from avgdist_rs_spark.sources.tables import write_metrics
-
     met = SuperstepMetrics(name=args.query)
-    met.record(1, rows, wall)
+    with superstep(met, 1) as rec:
+        df = qs[args.query](spark, args.sf_dir)
+        path = write_results(df, args.out, args.query, fmt=args.fmt)
+    rec["rows"] = spark.read.format(args.fmt).load(path).count()
     write_metrics(met, args.out, run_id=f"{args.query}-{int(time.time())}")
-    print(f"{args.query}: {rows} rows -> {path} ({wall:.2f}s)")
+    print(f"{args.query}: {rec['rows']} rows -> {path} ({rec['wall_s']:.2f}s)")
     spark.stop()
 
 

@@ -10,9 +10,9 @@ from avgdist_rs_spark.operators import avgdist as A
 from avgdist_rs_spark.operators import bfs as B
 from avgdist_rs_spark.operators.bfs import bfs, bfs_csr, bfs_frontier, per_seed_stats
 from avgdist_rs_spark.sources import fixtures as FX
+from avgdist_rs_spark.streaming.superstep import SuperstepMetrics, superstep
 
 from . import oracle
-from .test_fixpoint import _jobs
 
 
 def test_star_exact_golden(spark):
@@ -190,12 +190,12 @@ def test_weighted_estimator_spark_job_counts(spark):
     g = FX.er1k_graph(spark)
     g.csr_broadcast(transposed=False)
     g.csr_broadcast(transposed=True)
-    j0 = _jobs(spark)
-    A.sample_coverage_weighted(g, 12, np.random.default_rng(3), impl="csr")
-    assert _jobs(spark) - j0 <= 1
-    j0 = _jobs(spark)
-    run = A.avgdist_main(g, slot=12, eps=0.1, seed=3, impl="csr", max_batches=1)
-    assert _jobs(spark) - j0 <= 2
+    met = SuperstepMetrics()
+    with superstep(met, 1):
+        A.sample_coverage_weighted(g, 12, np.random.default_rng(3), impl="csr")
+    with superstep(met, 2):
+        run = A.avgdist_main(g, slot=12, eps=0.1, seed=3, impl="csr", max_batches=1)
+    assert [r["jobs"] for r in met.records] == [1, 2]
     assert len(run.iterations) == 1 and run.final["norm"] > 0
     g.unpersist()
 
@@ -206,9 +206,10 @@ def test_array_seed_bfs_csr_is_one_job(spark):
     g = FX.er1k_graph(spark)
     g.csr_broadcast(transposed=False)
     seeds = np.arange(0, 1000, 37, dtype=np.int64)
-    j0 = _jobs(spark)
-    out = bfs_csr(g, seeds).toPandas()
-    assert _jobs(spark) - j0 == 1
+    met = SuperstepMetrics()
+    with superstep(met, 1):
+        out = bfs_csr(g, seeds).toPandas()
+    assert met.records[0]["jobs"] == 1 and met.records[0]["stages"] == 1
     assert sorted(out["seed"]) == seeds.tolist()
     df = B._seed_batches(g, seeds)
     assert df.rdd.getNumPartitions() == int(spark.conf.get("spark.sql.shuffle.partitions"))

@@ -1,20 +1,37 @@
-"""The fixpoint scope and the convergence loop (streaming.superstep):
-session confs restore LIFO and after errors, every superstep is one Spark
-job, and an exhausted budget raises instead of returning a partial answer."""
+"""The fixpoint scope, the convergence loop and the superstep records
+(streaming.superstep): session confs restore LIFO and after errors, every
+loop records its supersteps with Spark counters, the fixpoint loops run one
+Spark job per superstep, and an exhausted budget raises instead of
+returning a partial answer."""
 
 from __future__ import annotations
 
+import json
+import os
+
+import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from avgdist_rs_spark.operators.betweenness import betweenness
+from avgdist_rs_spark.operators.bfs import bfs_frontier
 from avgdist_rs_spark.operators.components import connected_components
+from avgdist_rs_spark.operators.hyperball import hyperball
+from avgdist_rs_spark.operators.kcore import k_core
+from avgdist_rs_spark.operators.labelprop import label_propagation
+from avgdist_rs_spark.operators.msf import minimum_spanning_forest
 from avgdist_rs_spark.operators.pagerank import pagerank
 from avgdist_rs_spark.operators.scc import strongly_connected_components
+from avgdist_rs_spark.operators.sssp import hash_weights, sssp
 from avgdist_rs_spark.plans.graph import GraphFrame
 from avgdist_rs_spark.streaming.superstep import (
+    COUNTERS,
     Checkpointer,
     SuperstepMetrics,
+    _stage_counters,
     fixpoint_scope,
+    superstep,
 )
 
 WIDTH = "spark.sql.shuffle.partitions"
@@ -34,9 +51,14 @@ def _chain(spark, n: int, cycle: bool = False) -> GraphFrame:
     return GraphFrame.from_edges(edges, num_nodes=n, dedup=False)
 
 
-def _jobs(spark) -> int:
-    # Spark jobs submitted so far on this context
-    return int(spark.sparkContext._jsc.sc().dagScheduler().nextJobId())
+def _graph(spark, pairs, n: int) -> GraphFrame:
+    e = spark.createDataFrame(pd.DataFrame(pairs, columns=["src", "dst"]))
+    return GraphFrame.from_edges(e, num_nodes=n, dedup=False)
+
+
+#: a 3-cycle with a 2-vertex tail (0→1→2→0, 2→3→4): trim, coloring and the
+#: small-diameter backward sweep all run
+CYCLE_TAIL = [(0, 1), (1, 2), (2, 0), (2, 3), (3, 4)]
 
 
 def test_fixpoint_scopes_nest_lifo_and_restore_after_error(spark):
@@ -70,24 +92,139 @@ def test_connected_components_raises_when_not_converged(spark):
 
 
 def test_one_spark_job_per_superstep(spark):
+    """CC, PageRank, k-core and SSSP: every superstep record holds exactly
+    one Spark job (the lazy checkpoint rides the convergence action)."""
     g = _chain(spark, 8)
-    j0 = _jobs(spark)
-    pagerank(g, iterations=3)
-    j1 = _jobs(spark)
-    pagerank(g, iterations=5)
-    assert _jobs(spark) - j1 - (j1 - j0) == 2
-
-    # supersteps stay below the Parquet reset cadence (one extra job)
-    a, b = _chain(spark, 4), _chain(spark, 9)
-    met_a, met_b = SuperstepMetrics(), SuperstepMetrics()
-    j0 = _jobs(spark)
-    connected_components(a, shortcut=False, metrics=met_a)
-    j1 = _jobs(spark)
-    connected_components(b, shortcut=False, metrics=met_b)
-    j2 = _jobs(spark)
-    assert met_b.total_supersteps < Checkpointer.HARD_EVERY
-    steps = met_b.total_supersteps - met_a.total_supersteps
-    assert steps == 5
-    assert (j2 - j1) - (j1 - j0) == steps
-    for h in (g, a, b):
+    tri_tail = _graph(spark, [(0, 1), (1, 2), (2, 0), (2, 3), (3, 4), (4, 5), (5, 6)], 7)
+    runs = {
+        "pagerank": lambda met: pagerank(g, iterations=5, metrics=met),
+        # supersteps stay below the Parquet reset cadence (one extra job)
+        "cc": lambda met: connected_components(g, shortcut=False, metrics=met),
+        "kcore": lambda met: k_core(tri_tail, k=2, metrics=met),
+        "sssp": lambda met: sssp(
+            hash_weights(_chain(spark, 6).edges), spark.createDataFrame([(0,)], "v long"),
+            metrics=met,
+        ),
+    }
+    for name, run in runs.items():
+        met = SuperstepMetrics(name=name)
+        run(met)
+        assert 1 < met.total_supersteps < Checkpointer.HARD_EVERY, name
+        assert [r["jobs"] for r in met.records] == [1] * met.total_supersteps, name
+    for h in (g, tri_tail):
         h.unpersist()
+
+
+LOOPS = {
+    "cc": lambda g, met: connected_components(g, metrics=met),
+    "sssp": lambda g, met: sssp(
+        hash_weights(g.edges), g.spark.createDataFrame([(0,)], "v long"), metrics=met
+    ),
+    "pagerank": lambda g, met: pagerank(g, iterations=3, metrics=met),
+    "lpa": lambda g, met: label_propagation(g, iterations=3, metrics=met),
+    "kcore": lambda g, met: k_core(g, k=2, metrics=met),
+    "hyperball": lambda g, met: hyperball(g, p=4, metrics=met),
+    "bfs_frontier": lambda g, met: bfs_frontier(
+        g, g.spark.createDataFrame([(0,), (3,)], "seed long"), metrics=met
+    ),
+    "bfs_frontier_shards": lambda g, met: bfs_frontier(
+        g, g.spark.createDataFrame([(0,), (3,)], "seed long"), shards=True, metrics=met
+    ),
+    "betweenness_shards": lambda g, met: betweenness(
+        g, seeds=np.array([0, 3]), strategy="shards", metrics=met
+    ),
+    "scc": lambda g, met: strongly_connected_components(g, metrics=met),
+    "msf": lambda g, met: minimum_spanning_forest(g.edges, metrics=met),
+}
+
+
+@pytest.mark.parametrize("loop", sorted(LOOPS))
+def test_every_loop_records_supersteps_with_counters(spark, loop):
+    g = _graph(spark, CYCLE_TAIL, 5)
+    met = SuperstepMetrics(name=loop)
+    LOOPS[loop](g, met).count()
+    assert met.total_supersteps >= 1
+    for r in met.records:
+        assert {"superstep", "rows", "wall_s", *COUNTERS} <= set(r), r
+        assert r["jobs"] >= 1 and r["stages"] >= 1 and r["tasks"] >= 1, r
+        assert r["evicted_stages"] == 0 and r["wall_s"] > 0, r
+    g.unpersist()
+
+
+def test_superstep_counts_jobs_in_the_current_group_and_restores_labels(spark):
+    """Records count the jobs of the caller's own job group without replacing
+    it, nest, and hand the caller's description back on exit."""
+    sc = spark.sparkContext
+    sc.setJobGroup("outer-group", "outer")
+    try:
+        met = SuperstepMetrics(name="probe")
+        with superstep(met, 1, phase="outer") as rec:
+            assert sc.getLocalProperty("spark.job.description") == "probe:1"
+            with superstep(met, 2):
+                sc.parallelize(range(10), 2).count()
+                sc.parallelize(range(10), 2).map(lambda x: (x % 3, 1)).reduceByKey(
+                    lambda a, b: a + b, 3
+                ).count()
+            assert sc.getLocalProperty("spark.job.description") == "probe:1"
+            sc.parallelize(range(10), 2).count()
+            rec["rows"] = 7
+        assert sc.getLocalProperty("spark.jobGroup.id") == "outer-group"
+        assert sc.getLocalProperty("spark.job.description") == "outer"
+        inner, outer = met.records
+        assert inner["superstep"] == 2
+        assert (inner["jobs"], inner["stages"], inner["tasks"]) == (2, 3, 7)
+        assert inner["shuffle_write_records"] > 0 and inner["shuffle_read_bytes"] > 0
+        assert (outer["jobs"], outer["stages"], outer["tasks"]) == (3, 4, 9)
+        assert outer["rows"] == 7 and outer["phase"] == "outer"
+        assert sc.statusTracker().getJobIdsForGroup("outer-group")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    with pytest.raises(ValueError):
+        with superstep(met, 3):
+            raise ValueError("body error")
+    assert met.total_supersteps == 2  # a failed body appends nothing
+
+
+def test_evicted_stage_is_counted_not_raised(spark):
+    """A stage the status store no longer holds does not raise; it counts as
+    evicted only when its job says it ran (Spark evicts skipped stages
+    first, and those carry no counters)."""
+    spark.range(4).count()
+    sc = spark.sparkContext
+    assert _stage_counters(sc, [10**9], ran=1)["evicted_stages"] == 1
+    assert _stage_counters(sc, [10**9], ran=0) == dict.fromkeys(COUNTERS, 0)
+
+
+def test_scc_backward_sweep_is_one_job_per_superstep(spark):
+    """The small-diameter backward sweep materializes its lazy frontier with
+    the count: one job plus the member-set cut per superstep, one on the
+    last."""
+    g = _graph(spark, CYCLE_TAIL, 5)
+    met = SuperstepMetrics(name="scc")
+    got = {r["v"]: r["component"] for r in strongly_connected_components(g, metrics=met).collect()}
+    assert got == {0: 0, 1: 0, 2: 0, 3: 3, 4: 4}
+    bwd = [r for r in met.records if r.get("phase") == "bwd"]
+    assert len(bwd) >= 2
+    assert [r["jobs"] for r in bwd] == [2] * (len(bwd) - 1) + [1]
+    assert [r["superstep"] for r in met.records] == list(range(1, met.total_supersteps + 1))
+    g.unpersist()
+
+
+def test_torn_manifest_line_is_skipped_on_resume(spark, tmp_path):
+    """A crash mid-append leaves half a manifest line: resume reads the last
+    whole line and ends at the same ranks as an uninterrupted run."""
+    g = _chain(spark, 8)
+    ckdir = str(tmp_path / "ck")
+    pagerank(g, iterations=4, checkpointer=Checkpointer(spark, "pr", ckdir, every=1))
+    manifest = os.path.join(ckdir, "pr", "manifest.jsonl")
+    whole = open(manifest).read().splitlines()[-1]
+    with open(manifest, "a") as f:
+        f.write(whole[: len(whole) // 2])
+    ck = Checkpointer(spark, "pr", ckdir, every=1)
+    assert ck.latest()[1] == json.loads(whole)["superstep"] == 4
+    resumed = pagerank(g, iterations=10, checkpointer=ck, resume=True)
+    full = pagerank(g, iterations=10)
+    a, b = (df.toPandas().set_index("v")["rank"].sort_index() for df in (resumed, full))
+    assert np.allclose(a, b, atol=1e-12)
+    g.unpersist()

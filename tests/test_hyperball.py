@@ -109,25 +109,26 @@ def test_hyperball_matches_exact_on_wiki(spark):
 def test_hyperball_combine_identical_and_cuts_shuffle(spark):
     """Map-side register combine: register max is associative, so pre-merging
     per (partition, v) before the exchange is bit-identical — and on a fan-out
-    graph (star center absorbs 50 spoke counters) it must shuffle strictly
-    fewer blob rows than one-per-edge."""
+    graph (star center absorbs 50 spoke counters) the supersteps must write
+    strictly fewer shuffle records than one blob row per edge."""
     import pandas as pd
 
     g = star_graph(spark, n=50)
     m_on, m_off = SuperstepMetrics(), SuperstepMetrics()
     a = (
-        hyperball(g, p=6, combine=True, measure_volume=True, metrics=m_on)
+        hyperball(g, p=6, combine=True, metrics=m_on)
         .toPandas().set_index("v").sort_index()
     )
     b = (
-        hyperball(g, p=6, combine=False, measure_volume=True, metrics=m_off)
+        hyperball(g, p=6, combine=False, metrics=m_off)
         .toPandas().set_index("v").sort_index()
     )
     pd.testing.assert_frame_equal(a, b)  # estimates bit-identical
-    raw = sum(r["contrib_rows"] for r in m_on.records)
-    shuffled = sum(r["shuffled_rows"] for r in m_on.records)
-    assert raw == sum(r["contrib_rows"] for r in m_off.records)
-    assert shuffled < raw, f"pre-merge did not reduce rows ({shuffled} vs {raw})"
+    on, off = (
+        sum(r["shuffle_write_records"] for r in m.records) for m in (m_on, m_off)
+    )
+    assert m_on.total_supersteps == m_off.total_supersteps
+    assert on < off, f"pre-merge did not reduce shuffled rows ({on} vs {off})"
     g.unpersist()
 
 

@@ -212,13 +212,6 @@ def test_multimodal_plumbing(docs):
     assert feats.loc[0, "n_bytes"] == len(DOCS[0][1].encode())
 
 
-def test_decode_image_stub_raises(docs):
-    from avgdist_rs_spark.operators.multimodal import decode_image
-
-    with pytest.raises(NotImplementedError):
-        decode_image(b"not-an-image")
-
-
 def test_ivf_ann_recall_and_shape(spark):
     from avgdist_rs_spark.operators.similarity import ivf_ann
 
@@ -297,20 +290,6 @@ def test_lsh_planes_not_plan_literals(spark):
         q.explain("formatted")
     assert len(buf.getvalue()) < 50_000
     assert q.count() >= 0  # and it runs
-
-
-def test_multimodal_resize_and_frames(docs):
-    from avgdist_rs_spark.operators.multimodal import attach_binary, resize_image, sample_frames
-
-    media = attach_binary(docs)
-    rs = resize_image(media, width=8, height=8).toPandas().set_index("media_id")
-    assert (rs["n_bytes"] == 8 * 8 * 3).all() and len(rs.loc[0, "payload"]) == 192
-    # deterministic: identical payloads (docs 0 and 2) resize identically
-    assert bytes(rs.loc[0, "payload"]) == bytes(rs.loc[2, "payload"])
-    fr = sample_frames(media, every_n_bytes=16, max_frames=4).toPandas()
-    per = fr.groupby("media_id").size()
-    assert (per <= 4).all() and (per >= 1).all()
-    assert (fr["n_bytes"] <= 16).all()
 
 
 def test_simhash_pairs_bucketed_full_width_chunk(spark):

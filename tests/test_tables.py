@@ -38,8 +38,10 @@ def test_write_results_roundtrip(spark, tmp_path):
 
 def test_write_metrics_jsonl(tmp_path):
     m = SuperstepMetrics(name="bfs")
-    m.record(1, 100, 0.5)
-    m.record(2, 50, 0.25)
+    m.records += [
+        {"superstep": 1, "rows": 100, "wall_s": 0.5},
+        {"superstep": 2, "rows": 50, "wall_s": 0.25},
+    ]
     p = write_metrics(m, str(tmp_path), run_id="r1")
     rec = json.loads(open(p).read().strip())
     assert rec["run_id"] == "r1" and rec["supersteps"] == 2
