@@ -145,7 +145,7 @@ def _betweenness_shards(
     (``seeds=None``) over shards carries O(n·reach) state and is only
     sensible on small graphs (tests) or very shallow reach."""
     spark = graph.spark
-    met = metrics if metrics is not None else SuperstepMetrics(name="betweenness")
+    met = metrics if metrics is not None else SuperstepMetrics(name="betweenness", counters=False)
     ckpt = Checkpointer(spark, name="betweenness", every=4)
     expand = _shard_edge_gather(graph, transposed)
 

@@ -533,7 +533,7 @@ def bfs_frontier(
         salted = salt_edges(base, hdf, num_salts).persist()
         salted.count()
     ckpt = checkpointer or Checkpointer(spark, name="bfs")
-    met = metrics if metrics is not None else SuperstepMetrics(name="bfs")
+    met = metrics if metrics is not None else SuperstepMetrics(name="bfs", counters=False)
 
     # Lineage discipline (SURVEY.md §4 "hard parts"): the naive formulation
     # visited_{k+1} = union(visited_k, f(frontier_k, visited_k)) doubles the

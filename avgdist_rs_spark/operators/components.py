@@ -94,7 +94,7 @@ def min_label_components(
     join.
     """
     spark = vertices.sparkSession
-    met = metrics if metrics is not None else SuperstepMetrics(name="cc")
+    met = metrics if metrics is not None else SuperstepMetrics(name="cc", counters=False)
     ckpt = checkpointer or Checkpointer(spark, name="cc", every=4)
 
     # 250k rows/partition: the pointer-jump self-joins make this a

@@ -210,7 +210,7 @@ def hyperball(
     nparts = min(
         _num_partitions_for(spark), max(2, -(-state_bytes // (4 << 20)))
     )
-    met = metrics if metrics is not None else SuperstepMetrics(name="hyperball")
+    met = metrics if metrics is not None else SuperstepMetrics(name="hyperball", counters=False)
     ckpt = checkpointer or Checkpointer(spark, name="hyperball", every=4)
     # ball(v) grows along v's OUT-edges on the working graph: contributions
     # flow dst → src. Reading the OPPOSITE orientation's table gives rows

@@ -52,7 +52,7 @@ def k_core(
     """(v, deg) for every vertex of the k-core; ``deg`` is the degree inside
     the core (≥ k by construction)."""
     spark = graph.spark
-    met = metrics if metrics is not None else SuperstepMetrics(name="kcore")
+    met = metrics if metrics is not None else SuperstepMetrics(name="kcore", counters=False)
     ckpt = checkpointer or Checkpointer(spark, name="kcore", every=4)
 
     # scoped to the peel's exchange volume: each superstep aggregates the

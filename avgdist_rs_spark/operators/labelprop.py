@@ -36,7 +36,7 @@ def label_propagation(
 ) -> DataFrame:
     """(v, label) after ``iterations`` synchronous LPA supersteps."""
     spark = graph.spark
-    met = metrics if metrics is not None else SuperstepMetrics(name="lpa")
+    met = metrics if metrics is not None else SuperstepMetrics(name="lpa", counters=False)
     ckpt = checkpointer or Checkpointer(spark, name="lpa", every=4)
 
     # scoped to the vote stream (2m rows of (v, label) votes + n state rows

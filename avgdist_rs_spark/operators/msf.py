@@ -87,7 +87,7 @@ def minimum_spanning_forest(
     cost blow-up (see ``Checkpointer.HARD_EVERY``); the periodic Parquet
     reset keeps per-cut cost flat through arbitrarily many rounds."""
     spark = edges.sparkSession
-    met = metrics if metrics is not None else SuperstepMetrics(name="msf")
+    met = metrics if metrics is not None else SuperstepMetrics(name="msf", counters=False)
     ckpt = checkpointer or Checkpointer(spark, name="msf", every=1, hard_every=6)
     _step = [0]
 

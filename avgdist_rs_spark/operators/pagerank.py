@@ -55,7 +55,7 @@ def pagerank(
     """
     spark = graph.spark
     n = graph.num_nodes
-    met = metrics if metrics is not None else SuperstepMetrics(name="pagerank")
+    met = metrics if metrics is not None else SuperstepMetrics(name="pagerank", counters=False)
     ckpt = checkpointer or Checkpointer(spark, name="pagerank", every=1)
 
     # the rank vector (n rows) and the contribution stream (m rows) are all

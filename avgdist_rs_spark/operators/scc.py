@@ -99,7 +99,7 @@ def strongly_connected_components(
 ) -> DataFrame:
     """(v, component) for every vertex; component = min vertex id of v's SCC."""
     spark = graph.spark
-    met = metrics if metrics is not None else SuperstepMetrics(name="scc")
+    met = metrics if metrics is not None else SuperstepMetrics(name="scc", counters=False)
     ckpt = checkpointer or Checkpointer(spark, name="scc", every=4)
 
     alive = graph.vertices().localCheckpoint(eager=True)

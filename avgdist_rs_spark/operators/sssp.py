@@ -54,7 +54,7 @@ def sssp(
     one-column DataFrame (``v``). dist is the weight type summed as double.
     """
     spark = edges_w.sparkSession
-    met = metrics if metrics is not None else SuperstepMetrics(name="sssp")
+    met = metrics if metrics is not None else SuperstepMetrics(name="sssp", counters=False)
     ckpt = checkpointer or Checkpointer(spark, name="sssp", every=1)
 
     ew = edges_w.select(

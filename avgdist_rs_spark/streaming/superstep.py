@@ -22,7 +22,9 @@ one :func:`superstep` context, which appends one record to it:
   not skipped), ``tasks``, ``shuffle_read_bytes``, ``shuffle_write_bytes``,
   ``shuffle_write_records``, ``executor_ms`` and ``evicted_stages`` (stages
   that ran but that the status store dropped before they could be read, so
-  absent from the other sums).
+  absent from the other sums). They are None when the store cannot be read:
+  bookkeeping never fails a superstep. ``counters=False`` metrics (an
+  operator's own, when its caller passes none) skip them.
 
 The counters come from Spark's status store. The context never sets a job
 group: it diffs the job ids of the CURRENT group (none, or an outer
@@ -58,6 +60,7 @@ from functools import lru_cache
 from typing import Callable
 
 from py4j.protocol import Py4JJavaError
+from pyspark import SparkContext
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -78,6 +81,9 @@ COUNTERS = (
 class SuperstepMetrics:
     name: str = "superstep"
     records: list[dict] = field(default_factory=list)
+    #: read the Spark counters into every record; the metrics an operator
+    #: makes for itself when its caller passes none keep timings only
+    counters: bool = True
 
     @property
     def total_supersteps(self) -> int:
@@ -109,38 +115,49 @@ def _status(sc):
     return jsc.listenerBus(), sc._jsc.statusTracker(), jsc.statusStore(), sc._jvm.java.util.Arrays
 
 
-def _group_jobs(sc, group: str | None) -> set[int]:
-    """Ids of the jobs the status store holds for ``group`` (None: no group).
-    The store is fed asynchronously, so drain the listener bus first."""
+def _group_jobs(sc, group: str | None) -> set[int] | None:
+    """Ids of the jobs the status store holds for ``group`` (None: no group)
+    once the listener bus that feeds it drains; None if it does not in 10 s."""
     bus, tracker, _, arrays = _status(sc)
-    bus.waitUntilEmpty()
-    # one py4j round trip for the whole array; iterating a JavaArray costs
-    # one per element (measured ~70 ms for 600 job ids)
-    s = arrays.toString(tracker.getJobIdsForGroup(group))[1:-1]
+    try:
+        bus.waitUntilEmpty()
+        # one py4j round trip for the whole array; iterating a JavaArray costs
+        # one per element (measured ~70 ms for 600 job ids)
+        s = arrays.toString(tracker.getJobIdsForGroup(group))[1:-1]
+    except Py4JJavaError:  # TimeoutException
+        return None
     return {int(x) for x in s.split(", ")} if s else set()
 
 
-def _stage_counters(sc, stage_ids, ran: int) -> dict:
-    """The counters of these stages' last attempts (``jobs`` left at 0);
-    ``ran`` is how many of them ran, per their jobs. The store evicts
-    skipped stages first, so a stage it no longer holds only shows in
-    ``evicted_stages`` when fewer than ``ran`` stages are left to read."""
+def _job_counters(sc, job_ids) -> dict:
+    """Counters of these jobs and their stages' last attempts. The store
+    evicts skipped stages first, so a missing stage counts as evicted only
+    while fewer stages are left than the jobs ran; a missing job counts its
+    result stage, which every job runs."""
     store = _status(sc)[2]
     c = dict.fromkeys(COUNTERS, 0)
+    stage_ids: set[int] = set()
+    ran = 0
+    for jid in job_ids:
+        try:
+            job = store.job(jid)
+            ids, done = job.stageIds().mkString(","), job.numCompletedStages()
+        except Py4JJavaError:  # NoSuchElementException: evicted
+            ids, done = "", 1
+        stage_ids.update(int(x) for x in ids.split(",") if x)
+        ran += done
     for sid in stage_ids:
         try:
             st = store.lastStageAttempt(sid)
+            if st.status().toString() != "COMPLETE":
+                continue  # skipped: its shuffle output was reused
+            row = (1, st.numCompleteTasks(), st.shuffleReadBytes(), st.shuffleWriteBytes(),
+                   st.shuffleWriteRecords(), st.executorRunTime())
         except Py4JJavaError:  # NoSuchElementException: evicted
             continue
-        if st.status().toString() != "COMPLETE":
-            continue  # skipped: its shuffle output was reused
-        c["stages"] += 1
-        c["tasks"] += st.numCompleteTasks()
-        c["shuffle_read_bytes"] += st.shuffleRemoteBytesRead() + st.shuffleLocalBytesRead()
-        c["shuffle_write_bytes"] += st.shuffleWriteBytes()
-        c["shuffle_write_records"] += st.shuffleWriteRecords()
-        c["executor_ms"] += st.executorRunTime()
-    c["evicted_stages"] = max(0, ran - c["stages"])
+        for k, v in zip(COUNTERS[1:7], row):  # stages .. executor_ms
+            c[k] += v
+    c["jobs"], c["evicted_stages"] = len(job_ids), max(0, ran - c["stages"])
     return c
 
 
@@ -151,10 +168,11 @@ def superstep(metrics: SuperstepMetrics, it: int, **extra):
     ``rec["rows"]`` (default 0) and any extra it learns on the way. A body
     that raises appends nothing; the job description is restored either way.
     """
-    sc = SparkSession.active().sparkContext
-    group = sc.getLocalProperty("spark.jobGroup.id")
+    sc = SparkContext.getOrCreate()
     desc = sc.getLocalProperty("spark.job.description")
-    before = _group_jobs(sc, group)
+    if metrics.counters:
+        group = sc.getLocalProperty("spark.jobGroup.id")
+        before = _group_jobs(sc, group)
     rec = {"superstep": it, "rows": 0, "wall_s": 0.0, **extra}
     sc.setJobDescription(f"{metrics.name}:{it}")
     t0 = time.monotonic()
@@ -163,15 +181,10 @@ def superstep(metrics: SuperstepMetrics, it: int, **extra):
     finally:
         rec["wall_s"] = time.monotonic() - t0
         sc.setJobDescription(desc)
-    jobs = _group_jobs(sc, group) - before
-    store = _status(sc)[2]
-    stage_ids: set[int] = set()
-    ran = 0
-    for jid in jobs:
-        job = store.job(jid)
-        stage_ids.update(int(x) for x in job.stageIds().mkString(",").split(",") if x)
-        ran += job.numCompletedStages()
-    rec.update(_stage_counters(sc, stage_ids, ran), jobs=len(jobs))
+    if metrics.counters:
+        after = _group_jobs(sc, group)
+        unread = before is None or after is None
+        rec.update(dict.fromkeys(COUNTERS) if unread else _job_counters(sc, after - before))
     metrics.records.append(rec)
 
 
@@ -212,7 +225,6 @@ class Checkpointer:
         self.dir = checkpoint_dir
         self.every = max(1, every)
         self.hard_every = self.HARD_EVERY if hard_every is None else max(1, hard_every)
-        self._last_persisted: DataFrame | None = None
         self._n_cuts = 0
         self._tmpdir: str | None = None
 
@@ -237,9 +249,6 @@ class Checkpointer:
         return self.spark.read.parquet(path)
 
     # ------------------------------------------------------------------ paths
-    def _step_path(self, step: int) -> str:
-        return os.path.join(self.dir, self.name, f"step={step}")
-
     def _manifest_path(self) -> str:
         return os.path.join(self.dir, self.name, "manifest.jsonl")
 
@@ -250,13 +259,15 @@ class Checkpointer:
             return df
         if self.dir is None:
             return df.localCheckpoint(eager=True)
-        path = self._step_path(superstep)
+        path = os.path.join(self.dir, self.name, f"step={superstep}")
         df.write.mode("overwrite").parquet(path)
         out = self.spark.read.parquet(path)
         os.makedirs(os.path.dirname(self._manifest_path()), exist_ok=True)
         line = {"superstep": superstep, "path": path, "ts": time.time()}
-        with open(self._manifest_path(), "a") as f:
-            f.write(json.dumps(line) + "\n")
+        with open(self._manifest_path(), "a+b") as f:
+            f.seek(max(0, f.seek(0, os.SEEK_END) - 1))
+            torn = f.read(1) not in (b"", b"\n")  # a crash mid-append left half a line
+            f.write(b"\n" * torn + (json.dumps(line) + "\n").encode())
         return out
 
     def step(self, df: DataFrame, superstep: int, lazy: bool = False) -> DataFrame:
@@ -288,21 +299,17 @@ class Checkpointer:
     def latest(self) -> tuple[DataFrame, int] | None:
         """(state, superstep) of the last durable checkpoint, or None. A line
         that does not parse (torn by a crash mid-append) is skipped."""
-        if self.dir is None:
-            return None
-        mp = self._manifest_path()
-        if not os.path.exists(mp):
+        if self.dir is None or not os.path.exists(self._manifest_path()):
             return None
         last = None
-        with open(mp) as f:
+        with open(self._manifest_path()) as f:
             for line in f:
                 try:
                     last = json.loads(line)
                 except json.JSONDecodeError:
-                    continue
-        if last is None:
-            return None
-        return self.spark.read.parquet(last["path"]), int(last["superstep"])
+                    pass
+        return None if last is None else (
+            self.spark.read.parquet(last["path"]), int(last["superstep"]))
 
 
 #: per-(session, conf key) stack of saved values: nested scopes restore in
@@ -409,8 +416,9 @@ def converge(
     is the previous superstep's checkpointed frame, ``_old`` included (or
     ``state`` itself for the first superstep). Each superstep is a lazy
     checkpoint materialized by ONE aggregate, ``sum(changed)`` — one Spark
-    job per superstep, recorded with ``rows`` = the changed count. Returns the converged state without ``_old``; raises
-    once the budget is spent, since a truncated fixpoint is a wrong answer.
+    job per superstep, recorded with ``rows`` = the changed count. Returns
+    the converged state without ``_old``; raises once the budget is spent,
+    since a truncated fixpoint is a wrong answer.
     Call it inside a :func:`fixpoint_scope`.
     """
     for it in range(first, max_supersteps + 1):

@@ -249,10 +249,11 @@ def main() -> None:
         .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.ui.enabled", "false")
-        # keep a whole query's jobs and stages in the status store: the
-        # per-query counters read them after the query ends
-        .config("spark.ui.retainedJobs", "100000")
-        .config("spark.ui.retainedStages", "100000")
+        # keep a whole query's jobs and stages in the status store (the
+        # per-query counters read them after the query ends; the largest
+        # query runs ~73 jobs) without keeping the whole bench's in memory
+        .config("spark.ui.retainedJobs", "2000")
+        .config("spark.ui.retainedStages", "10000")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .getOrCreate()
     )

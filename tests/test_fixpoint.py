@@ -8,10 +8,12 @@ from __future__ import annotations
 
 import json
 import os
+from types import SimpleNamespace
 
 import numpy as np
 import pandas as pd
 import pytest
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import functions as F
 
 from avgdist_rs_spark.operators.betweenness import betweenness
@@ -25,11 +27,12 @@ from avgdist_rs_spark.operators.pagerank import pagerank
 from avgdist_rs_spark.operators.scc import strongly_connected_components
 from avgdist_rs_spark.operators.sssp import hash_weights, sssp
 from avgdist_rs_spark.plans.graph import GraphFrame
+from avgdist_rs_spark.streaming import superstep as superstep_module
 from avgdist_rs_spark.streaming.superstep import (
     COUNTERS,
     Checkpointer,
     SuperstepMetrics,
-    _stage_counters,
+    _job_counters,
     fixpoint_scope,
     superstep,
 )
@@ -98,20 +101,39 @@ def test_one_spark_job_per_superstep(spark):
     tri_tail = _graph(spark, [(0, 1), (1, 2), (2, 0), (2, 3), (3, 4), (4, 5), (5, 6)], 7)
     runs = {
         "pagerank": lambda met: pagerank(g, iterations=5, metrics=met),
-        # supersteps stay below the Parquet reset cadence (one extra job)
-        "cc": lambda met: connected_components(g, shortcut=False, metrics=met),
         "kcore": lambda met: k_core(tri_tail, k=2, metrics=met),
         "sssp": lambda met: sssp(
             hash_weights(_chain(spark, 6).edges), spark.createDataFrame([(0,)], "v long"),
             metrics=met,
         ),
     }
+    # pagerank: its iterations; k-core: the degree seed drops vertex 6, then
+    # one superstep per tail vertex left and one with no change; sssp: 5
+    # hops, then one with no change
+    steps = {"pagerank": 5, "kcore": 4, "sssp": 6}
     for name, run in runs.items():
         met = SuperstepMetrics(name=name)
         run(met)
-        assert 1 < met.total_supersteps < Checkpointer.HARD_EVERY, name
+        assert met.total_supersteps == steps[name] < Checkpointer.HARD_EVERY, name
         assert [r["jobs"] for r in met.records] == [1] * met.total_supersteps, name
-    for h in (g, tri_tail):
+
+    # CC: a chain 5 vertices longer takes exactly 5 more supersteps, and the
+    # whole call exactly 5 more jobs. Supersteps stay below the Parquet reset
+    # cadence (one extra job).
+    a, b = _chain(spark, 4), _chain(spark, 9)
+    calls, mets = SuperstepMetrics(name="cc_call"), []
+    for h in (a, b):
+        mets.append(SuperstepMetrics(name="cc"))
+        with superstep(calls, len(mets)):
+            connected_components(h, shortcut=False, metrics=mets[-1])
+    met_a, met_b = mets
+    assert (met_a.total_supersteps, met_b.total_supersteps) == (4, 9)
+    assert met_b.total_supersteps < Checkpointer.HARD_EVERY
+    for met in mets:
+        assert [r["jobs"] for r in met.records] == [1] * met.total_supersteps
+    call_a, call_b = calls.records
+    assert call_b["jobs"] - call_a["jobs"] == 5
+    for h in (g, tri_tail, a, b):
         h.unpersist()
 
 
@@ -186,14 +208,82 @@ def test_superstep_counts_jobs_in_the_current_group_and_restores_labels(spark):
     assert met.total_supersteps == 2  # a failed body appends nothing
 
 
-def test_evicted_stage_is_counted_not_raised(spark):
-    """A stage the status store no longer holds does not raise; it counts as
-    evicted only when its job says it ran (Spark evicts skipped stages
-    first, and those carry no counters)."""
-    spark.range(4).count()
+def test_evicted_stage_is_counted_not_raised(spark, monkeypatch):
+    """A stage or job the status store no longer holds does not raise. A
+    missing stage counts as evicted only when its job says it ran (Spark
+    evicts skipped stages first, and those carry no counters); a missing job
+    counts one evicted stage, the result stage every job runs."""
     sc = spark.sparkContext
-    assert _stage_counters(sc, [10**9], ran=1)["evicted_stages"] == 1
-    assert _stage_counters(sc, [10**9], ran=0) == dict.fromkeys(COUNTERS, 0)
+    bus, tracker, _, arrays = superstep_module._status(sc)
+    gone = Py4JJavaError("evicted", sc._jvm.java.util.NoSuchElementException())
+
+    def job(jid):  # job 1 ran stage 11 and skipped stage 10; job 2 is gone
+        if jid == 2:
+            raise gone
+        return SimpleNamespace(stageIds=lambda: SimpleNamespace(mkString=lambda sep: "10,11"),
+                               numCompletedStages=lambda: 1)
+
+    stage = SimpleNamespace(status=lambda: SimpleNamespace(toString=lambda: "COMPLETE"),
+                            numCompleteTasks=lambda: 4,
+                            shuffleReadBytes=lambda: 5, shuffleWriteBytes=lambda: 6,
+                            shuffleWriteRecords=lambda: 7, executorRunTime=lambda: 8)
+
+    def stages(held):
+        def last_attempt(sid):
+            if sid not in held:
+                raise gone
+            return stage
+        return SimpleNamespace(job=job, lastStageAttempt=last_attempt)
+
+    for held, evicted in (({11}, 0), (set(), 1)):  # the skipped stage is gone; both are
+        store = stages(held)
+        monkeypatch.setattr(superstep_module, "_status", lambda sc: (bus, tracker, store, arrays))
+        c = _job_counters(sc, [1])
+        assert (c["jobs"], c["stages"], c["evicted_stages"]) == (1, len(held), evicted)
+        assert c["tasks"] == 4 * len(held) and c["executor_ms"] == 8 * len(held)
+    c = _job_counters(sc, [1, 2])
+    assert (c["jobs"], c["stages"], c["evicted_stages"]) == (2, 0, 2)
+    monkeypatch.undo()
+    c = _job_counters(sc, [10**9])  # the real store
+    assert (c["jobs"], c["stages"], c["evicted_stages"]) == (1, 0, 1)
+
+
+def test_unreadable_status_store_keeps_the_result(spark, monkeypatch):
+    """A listener bus that does not drain (Spark raises TimeoutException
+    after 10 s) leaves the record's counters None; the superstep's body and
+    result stand."""
+    sc = spark.sparkContext
+    _, tracker, store, arrays = superstep_module._status(sc)
+    timeout = sc._jvm.java.util.concurrent.TimeoutException("The event queue is not empty")
+
+    class StuckBus:
+        def waitUntilEmpty(self):
+            raise Py4JJavaError("waitUntilEmpty", timeout)
+
+    monkeypatch.setattr(superstep_module, "_status", lambda sc: (StuckBus(), tracker, store, arrays))
+    met = SuperstepMetrics(name="stuck")
+    with superstep(met, 1) as rec:
+        rec["rows"] = spark.range(5).count()
+    assert met.records == [{"superstep": 1, "rows": 5, "wall_s": rec["wall_s"],
+                            **dict.fromkeys(COUNTERS)}]
+
+
+def test_metrics_without_counters_keep_timings_only(spark, monkeypatch):
+    """counters=False metrics (what an operator makes when its caller passes
+    none) never touch the status store, and their records keep three fields."""
+
+    def no_read(sc, group):
+        raise AssertionError("read the status store")
+
+    monkeypatch.setattr(superstep_module, "_group_jobs", no_read)
+    met = SuperstepMetrics(name="plain", counters=False)
+    with superstep(met, 1) as rec:
+        rec["rows"] = spark.range(3).count()
+    (r,) = met.records
+    assert set(r) == {"superstep", "rows", "wall_s"} and r["rows"] == 3
+    g = _chain(spark, 4)
+    pagerank(g, iterations=2).count()  # its own metrics read nothing either
+    g.unpersist()
 
 
 def test_scc_backward_sweep_is_one_job_per_superstep(spark):
@@ -213,7 +303,9 @@ def test_scc_backward_sweep_is_one_job_per_superstep(spark):
 
 def test_torn_manifest_line_is_skipped_on_resume(spark, tmp_path):
     """A crash mid-append leaves half a manifest line: resume reads the last
-    whole line and ends at the same ranks as an uninterrupted run."""
+    whole line, starts its own lines on a fresh one (every later superstep
+    stays a resume point) and ends at the same ranks as an uninterrupted
+    run."""
     g = _chain(spark, 8)
     ckdir = str(tmp_path / "ck")
     pagerank(g, iterations=4, checkpointer=Checkpointer(spark, "pr", ckdir, every=1))
@@ -227,4 +319,7 @@ def test_torn_manifest_line_is_skipped_on_resume(spark, tmp_path):
     full = pagerank(g, iterations=10)
     a, b = (df.toPandas().set_index("v")["rank"].sort_index() for df in (resumed, full))
     assert np.allclose(a, b, atol=1e-12)
+    lines = open(manifest).read().splitlines()
+    assert lines[4] == whole[: len(whole) // 2]
+    assert [json.loads(x)["superstep"] for x in lines[:4] + lines[5:]] == list(range(1, 11))
     g.unpersist()
