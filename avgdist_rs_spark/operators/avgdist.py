@@ -37,7 +37,7 @@ from pyspark.sql import functions as F
 
 from ..functions.hashing import hash_stream
 from ..plans.graph import GraphFrame
-from ..streaming.superstep import SuperstepMetrics
+from ..streaming.superstep import SuperstepMetrics, local_cut
 from .bfs import _use_csr, bfs, capture_stats
 
 
@@ -200,7 +200,7 @@ def _accept(
     cap = bfs(graph, sources, capture=True, impl=impl)
     if _use_csr(graph, impl):
         # the capture feeds two joins: run the kernel once
-        cap = cap.localCheckpoint(eager=True)
+        cap = local_cut(cap)
     return pairs.join(cap.select("seed", F.col("v").alias("w")), ["seed", "w"]).join(
         capture_stats(cap), "seed"
     )
@@ -385,10 +385,9 @@ def sample_pair_rejection_hash(
 
     def slice_hits(lo: int, hi: int) -> DataFrame:
         pairs = window(lo, hi)
-        return (
+        return local_cut(
             _accept(graph, pairs, pairs.select("seed").distinct(), impl)
             .select("j", "seed", "dia", "dist_sum", "reached")
-            .localCheckpoint(eager=True)
         )
 
     lo, width = 0, min(J, first_slice or max(4096, 64 * k))

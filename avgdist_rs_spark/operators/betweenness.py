@@ -50,6 +50,7 @@ from ..streaming.superstep import (
     SuperstepMetrics,
     adaptive_shuffle_width,
     aqe_disabled,
+    local_cut,
     superstep,
 )
 from .bfs import DEFAULT_CSR_MAX_EDGES, _gather
@@ -152,17 +153,13 @@ def _betweenness_shards(
     # the sampled estimator draws WITH replacement (as the broadcast path,
     # which runs the kernel once per occurrence): BFS duplicate seeds once,
     # weight their dependencies by multiplicity at accumulation
-    mult = (
-        seeds_df.groupBy("seed")
-        .agg(F.count("*").cast("double").alias("_w"))
-        .localCheckpoint(eager=True)
+    mult = local_cut(
+        seeds_df.groupBy("seed").agg(F.count("*").cast("double").alias("_w"))
     )
     frontier = mult.select(
         "seed", F.col("seed").alias("v"), F.lit(1.0).alias("sigma")
     )
-    visited = frontier.withColumn("dist", F.lit(0).cast("int")).localCheckpoint(
-        eager=True
-    )
+    visited = local_cut(frontier.withColumn("dist", F.lit(0).cast("int")))
     depth = 0
     # per-superstep exchange volume = the gathered edge stream (level rows ·
     # avg_degree) + the visited anti-join side; all level sizes are counted
@@ -178,7 +175,7 @@ def _betweenness_shards(
         while True:
             with superstep(met, depth + 1, phase="fwd") as rec:
                 edges = expand(frontier)
-                newf = (
+                newf = local_cut(
                     edges.join(
                         visited.select("seed", F.col("v").alias("w")), ["seed", "w"], "anti"
                     )
@@ -189,10 +186,10 @@ def _betweenness_shards(
                         F.col("w").alias("v"),
                         "sigma",
                         F.lit(depth + 1).cast("int").alias("dist"),
-                    )
+                    ),
                     # non-eager: the count() is the materializing action — one
                     # Spark job per forward superstep instead of two
-                    .localCheckpoint(eager=False)
+                    eager=False,
                 )
                 rec["rows"] = n_new = newf.count()
                 if n_new == 0:
@@ -229,7 +226,7 @@ def _betweenness_shards(
                     )
                 else:
                     tree = tree.withColumn("delta_w", F.lit(None).cast("double"))
-                dcur = (
+                dcur = local_cut(
                     tree.groupBy("seed", "u")
                     .agg(
                         F.sum(
@@ -238,9 +235,9 @@ def _betweenness_shards(
                             * (F.lit(1.0) + F.coalesce(F.col("delta_w"), F.lit(0.0)))
                         ).alias("delta")
                     )
-                    .select("seed", F.col("u").alias("v"), "delta")
+                    .select("seed", F.col("u").alias("v"), "delta"),
                     # non-eager: the count() below materializes — one job/superstep
-                    .localCheckpoint(eager=False)
+                    eager=False,
                 )
                 rec["rows"] = dcur.count()
                 # accumulate with lineage folding — a 10⁴-level reverse sweep must
@@ -249,7 +246,7 @@ def _betweenness_shards(
                 part = dcur.where(F.col("v") != F.col("seed"))
                 acc = part if acc is None else acc.unionAll(part)
                 if (depth - lvl) % 16 == 0:
-                    acc = acc.localCheckpoint(eager=True)
+                    acc = local_cut(acc)
                 delta_above = dcur
     if acc is None:
         partials = spark.createDataFrame([], "v long, part double")
@@ -319,13 +316,13 @@ def betweenness(
                 # union stays a shallow tree of checkpointed leaves and is
                 # itself folded every 16 waves (never re-materialized per
                 # wave — that would be O(waves²))
-                p = _betweenness_shards(
+                p = local_cut(_betweenness_shards(
                     graph, wave, scale, transposed, max_supersteps, metrics,
                     as_partials=True,
-                ).localCheckpoint(eager=True)
+                ))
                 acc = p if acc is None else acc.unionAll(p)
                 if wi % 16 == 0:
-                    acc = acc.localCheckpoint(eager=True)
+                    acc = local_cut(acc)
             return _finalize_bc(graph, acc, scale)
         return _betweenness_shards(
             graph, seeds_df, scale, transposed, max_supersteps, metrics

@@ -35,7 +35,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..streaming.superstep import Checkpointer
+from ..streaming.superstep import Checkpointer, local_cut
 
 
 def _apply_merge_py(symbols: list[str], a: str, b: str) -> list[str]:
@@ -103,7 +103,7 @@ def bpe_train(
     # the start here — reset the chain every 4 merges (measured: flat at
     # ~1 s/merge vs 53 s by merge 12 unreset)
     ckpt = checkpointer or Checkpointer(spark, name="bpe", every=1, hard_every=4)
-    state = word_frequency(docs, id_col, text_col).localCheckpoint(eager=True)
+    state = local_cut(word_frequency(docs, id_col, text_col))
     merges: list[tuple[int, str, str, int]] = []
     for rank in range(1, num_merges + 1):
         top = (

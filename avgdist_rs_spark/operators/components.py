@@ -27,6 +27,7 @@ from ..streaming.superstep import (
     SuperstepMetrics,
     converge,
     fixpoint_scope,
+    local_cut,
 )
 
 
@@ -106,9 +107,7 @@ def min_label_components(
             .persist(StorageLevel.MEMORY_AND_DISK)
         )
         sym.count()
-        labels = vertices.select(
-            "v", F.col("v").alias("component")
-        ).localCheckpoint(eager=True)
+        labels = local_cut(vertices.select("v", F.col("v").alias("component")))
 
         def superstep(labels: DataFrame, it: int) -> DataFrame:
             # one fused exchange per superstep: the state row (carrying the old

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.hashing import portable_hash64
+from ..streaming.superstep import local_cut
 
 
 # --------------------------------------------------------------------- exact
@@ -157,7 +158,7 @@ def jaccard_pairs(
     # a non-eager checkpoint materializes the scan+explode+dedup once and
     # every consumer reads the cached rows (guide §2.4: shared subplans
     # should share one computation, not re-run the exchange per consumer)
-    sh = sh.localCheckpoint(eager=False)
+    sh = local_cut(sh, eager=False)
     if strategy == "all":
         return _jaccard_scores(sh).where(F.col("jaccard") >= threshold)
     if strategy != "prefix":

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from ..plans.graph import GraphFrame
+from ..streaming.superstep import local_cut
 
 
 def sink_count(graph: GraphFrame) -> int:
@@ -134,7 +135,7 @@ def graph_summary(graph: GraphFrame, orientation: str = "auto") -> DataFrame:
             F.round(F.col("r"), 6).alias("assortativity"),
         )
     )
-    out = out.localCheckpoint(eager=True)
+    out = local_cut(out)
     und.unpersist()
     deg.unpersist()
     return out
@@ -199,6 +200,6 @@ def link_prediction_scores(
         .join(und, ["a", "b"], "anti")  # only NON-adjacent candidate pairs
     )
     if eager:
-        scores = scores.localCheckpoint(eager=True)
+        scores = local_cut(scores)
         und.unpersist()
     return scores

@@ -54,7 +54,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..plans.graph import GraphFrame, _num_partitions_for
-from ..streaming.superstep import Checkpointer, SuperstepMetrics, superstep
+from ..streaming.superstep import Checkpointer, SuperstepMetrics, local_cut, superstep
 
 
 def _alpha(m: int) -> float:
@@ -249,11 +249,10 @@ def hyperball(
             state, start_t = latest
             state = state.drop("changed")
     if state is None:
-        state = (
+        state = local_cut(
             graph.vertices()
             .repartition(nparts, "v")
             .mapInPandas(init, schema=state_schema)
-            .localCheckpoint(eager=True)
         )
 
     def merge_update(batches: Iterator[pd.DataFrame], t: int) -> Iterator[pd.DataFrame]:

@@ -38,6 +38,7 @@ from ..streaming.superstep import (
     Checkpointer,
     SuperstepMetrics,
     fixpoint_scope,
+    local_cut,
     superstep,
 )
 
@@ -68,11 +69,10 @@ def k_core(
         sym.count()
 
         # degrees over the full graph seed the first peel
-        alive = (
+        alive = local_cut(
             sym.groupBy(F.col("_esrc").alias("v"))
             .agg(F.count("*").alias("deg"))
             .where(F.col("deg") >= k)
-            .localCheckpoint(eager=True)
         )
         n_alive = alive.count()
 

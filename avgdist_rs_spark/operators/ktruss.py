@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..streaming.superstep import local_cut
+
 
 def canonical_edges(edges: DataFrame) -> DataFrame:
     """Distinct undirected canonical edges (a < b), self-loops dropped."""
@@ -61,21 +63,21 @@ def k_truss(edges: DataFrame, k: int, max_rounds: int = 50) -> DataFrame:
     """
     if k < 2:
         raise ValueError("k must be >= 2")
-    cur = canonical_edges(edges).localCheckpoint(eager=False)
+    cur = local_cut(canonical_edges(edges), eager=False)
     n = cur.count()  # materializes the checkpoint
     for _ in range(max_rounds):
         if n == 0:
             return cur.select("a", "b", F.lit(0).cast("long").alias("support"))
         sup = edge_support(cur)
-        nxt = (
+        nxt = local_cut(
             cur.join(sup, ["a", "b"], "left")
             .select(
                 "a", "b", F.coalesce("support", F.lit(0)).cast("long").alias("support")
             )
-            .where(F.col("support") >= k - 2)
+            .where(F.col("support") >= k - 2),
             # non-eager: the count() below materializes — one job per peel
             # round instead of two (the superstep-fusion discipline)
-            .localCheckpoint(eager=False)
+            eager=False,
         )
         m = nxt.count()
         if m == n:

@@ -24,6 +24,7 @@ from ..streaming.superstep import (
     Checkpointer,
     SuperstepMetrics,
     fixpoint_scope,
+    local_cut,
     superstep,
 )
 
@@ -51,9 +52,7 @@ def label_propagation(
         )
         sym.count()
 
-        labels = graph.vertices().select(
-            "v", F.col("v").alias("label")
-        ).localCheckpoint(eager=True)
+        labels = local_cut(graph.vertices().select("v", F.col("v").alias("label")))
 
         for it in range(1, iterations + 1):
             with superstep(met, it, rows=graph.num_nodes):

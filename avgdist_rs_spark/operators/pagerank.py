@@ -76,12 +76,11 @@ def pagerank(
             )
             .persist()
         )
-        norm_edges.count()
-        # one upfront sink probe: a sink-free graph has zero dangling mass
-        # every superstep, so the per-superstep scalar collect can be skipped
-        has_dangling = (
-            graph.edges.select(F.countDistinct("src").alias("d")).collect()[0]["d"] < n
-        )
+        # one setup job both materializes norm_edges (the aggregate scans
+        # every cached partition) and probes for sinks: a sink-free graph
+        # has zero dangling mass every superstep, so the per-superstep
+        # scalar collect can be skipped
+        has_dangling = norm_edges.agg(F.countDistinct("_esrc")).collect()[0][0] < n
 
         if seeds is None:
             tele = F.lit(1.0) / F.lit(float(n))
@@ -146,11 +145,9 @@ def pagerank(
                 if has_dangling and not first:
                     dm = collect_dm(state)  # same aggregate ⇒ same scalar bits
         if state is None:
-            state = (
-                graph.vertices()
-                .select("v", F.lit(0.0).alias("c"), tele.alias("_t"))
-                .localCheckpoint(eager=True)
-            )
+            # a range projection: no lineage to cut, the first superstep's
+            # job computes it
+            state = graph.vertices().select("v", F.lit(0.0).alias("c"), tele.alias("_t"))
 
         base_rows = (
             graph.vertices()

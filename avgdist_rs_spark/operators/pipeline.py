@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..streaming.superstep import local_cut
 from .dedup import dedup_groups
 from .textstats import lang_id, quality_score
 
@@ -115,7 +116,7 @@ def training_set_select(
     # the survivor table feeds every later stage (LSH shingles + signatures,
     # the canonical join, both gates) — a non-eager checkpoint computes the
     # scan + content-key groupBy + join once instead of once per consumer
-    survivors = docs.join(keys.select(id_col), id_col).localCheckpoint(eager=False)
+    survivors = local_cut(docs.join(keys.select(id_col), id_col), eager=False)
 
     # 2. near-dup collapse among survivors: canonical = its group's min id.
     # The pair graph only ever links survivor ids, so a survivor's component
@@ -123,9 +124,10 @@ def training_set_select(
     groups = dedup_groups(
         survivors, num_hashes, bands, k, threshold, id_col, text_col
     )
-    canonical = survivors.join(
-        groups.where(F.col(id_col) == F.col("keep_id")).select(id_col), id_col
-    ).localCheckpoint(eager=False)  # consumed by both gates below
+    canonical = local_cut(  # consumed by both gates below
+        survivors.join(groups.where(F.col(id_col) == F.col("keep_id")).select(id_col), id_col),
+        eager=False,
+    )
 
     # 3. language + quality gates on the canonical set
     li = lang_id(canonical, id_col, text_col).select(

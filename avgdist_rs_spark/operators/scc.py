@@ -66,6 +66,7 @@ from ..streaming.superstep import (
     SuperstepMetrics,
     converge,
     fixpoint_scope,
+    local_cut,
     superstep,
 )
 
@@ -102,7 +103,7 @@ def strongly_connected_components(
     met = metrics if metrics is not None else SuperstepMetrics(name="scc", counters=False)
     ckpt = checkpointer or Checkpointer(spark, name="scc", every=4)
 
-    alive = graph.vertices().localCheckpoint(eager=True)
+    alive = local_cut(graph.vertices())
     n_alive = alive.count()
     assigned: DataFrame | None = None
     n_acc = 0
@@ -116,16 +117,16 @@ def strongly_connected_components(
     def _shrink_ea(gone: DataFrame, gone_count: int) -> None:
         nonlocal ea
         g = F.broadcast(gone) if gone_count <= 5_000_000 else gone
-        ea = ea.join(g.select(F.col("v").alias("_s")), "_s", "anti").join(
+        ea = local_cut(ea.join(g.select(F.col("v").alias("_s")), "_s", "anti").join(
             g.select(F.col("v").alias("_d")), "_d", "anti"
-        ).localCheckpoint(eager=True)
+        ))
 
     def _accumulate(found: DataFrame) -> None:
         nonlocal assigned, n_acc
         assigned = found if assigned is None else assigned.unionAll(found)
         n_acc += 1
         if n_acc % ASSIGNED_FOLD_EVERY == 0:
-            assigned = assigned.localCheckpoint(eager=True)
+            assigned = local_cut(assigned)
             met.assigned_folds = getattr(met, "assigned_folds", 0) + 1
 
     def _pri(col):
@@ -233,10 +234,9 @@ def strongly_connected_components(
         # inputs (measured: cadence-8 cost ~0.5 s/superstep in rebuilt
         # broadcasts on a 240-chain), while the materialization is bounded by
         # the m_t scan the superstep does anyway.
-        ea = (
+        ea = local_cut(
             graph.edges.select(F.col("src").alias("_s"), F.col("dst").alias("_d"))
             .repartition(loop_w, "_s")
-            .localCheckpoint(eager=True)
         )
         for _round in range(1, max_rounds + 1):
             if n_alive == 0:
@@ -251,15 +251,15 @@ def strongly_connected_components(
                         alive.join(ea.select(F.col("_s").alias("v")).distinct(), "v", "semi")
                         .join(ea.select(F.col("_d").alias("v")).distinct(), "v", "semi")
                     )
-                    keep = keep.localCheckpoint(eager=False)  # count() materializes
+                    keep = local_cut(keep, eager=False)  # count() materializes
                     n_keep = keep.count()
                     if n_keep == n_alive:
                         break
                     # materialize once — both the accumulator union and the ea
                     # shrink consume it
-                    dead = alive.join(keep, "v", "anti").select(
-                        "v", F.col("v").alias("component")
-                    ).localCheckpoint(eager=True)
+                    dead = local_cut(
+                        alive.join(keep, "v", "anti").select("v", F.col("v").alias("component"))
+                    )
                     _accumulate(dead)
                     _shrink_ea(dead.select("v"), n_alive - n_keep)
                     alive, n_alive = keep, n_keep
@@ -267,7 +267,7 @@ def strongly_connected_components(
             if n_alive == 0:
                 break
             # ---- phase 2: one coloring round on the cyclic remainder -----------
-            color0 = alive.select("v", F.col("v").alias("color")).localCheckpoint(eager=True)
+            color0 = local_cut(alive.select("v", F.col("v").alias("color")))
             steps_before = steps()
             color = _max_prop_fixpoint(color0, ea, "_s", "_d", "color")
             color = color.persist(StorageLevel.MEMORY_AND_DISK)
@@ -279,11 +279,11 @@ def strongly_connected_components(
             if large_diameter:
                 # ---- backward membership as a second max-propagation ----------
                 # class-restricted edges (SCC paths never leave the color
-                # class). localCheckpoint, not persist: the jump's self-join
+                # class). local_cut, not persist: the jump's self-join
                 # re-plans eac under fresh attribute ids, and with AQE off
                 # that copy missed the cache and recomputed both joins every
                 # superstep (10k cycle on local[4]: 24 s → 48 s)
-                eac = (
+                eac = local_cut(
                     ea.join(
                         color.select(F.col("v").alias("_s"), F.col("color").alias("_sc")),
                         "_s",
@@ -294,27 +294,23 @@ def strongly_connected_components(
                     )
                     .where(F.col("_sc") == F.col("_dc"))
                     .select("_s", "_d")
-                    .localCheckpoint(eager=True)
                 )
-                r0 = color.select("v", F.col("v").alias("rcolor")).localCheckpoint(
-                    eager=True
-                )
+                r0 = local_cut(color.select("v", F.col("v").alias("rcolor")))
                 # propagate along REVERSED edges: rcolor(v) = max vertex reachable
                 # from v within its class (contribution flows successor → source)
                 rcolor = _max_prop_fixpoint(
                     r0, eac, "_d", "_s", "rcolor", force_jump=shortcut is not False
                 )
-                mem = (
+                mem = local_cut(
                     rcolor.join(color, "v")
                     .where(F.col("rcolor") == F.col("color"))
                     .select("v", "color")
-                    .localCheckpoint(eager=True)
                 )
             else:
                 # ---- backward frontier from each pivot within its class -------
                 # work proportional to the found SCCs, right for small diameters
                 mem = color.where(F.col("v") == F.col("color")).select("v", "color")
-                mem = mem.localCheckpoint(eager=True)
+                mem = local_cut(mem)
                 frontier = mem
                 while True:
                     it = steps() + 1
@@ -333,9 +329,7 @@ def strongly_connected_components(
                             .select("v", "color")
                         )
                         # non-eager: the count() materializes — one job fewer
-                        new = preds.join(mem, ["v", "color"], "anti").localCheckpoint(
-                            eager=False
-                        )
+                        new = local_cut(preds.join(mem, ["v", "color"], "anti"), eager=False)
                         rec["rows"] = n_new = new.count()
                         if n_new == 0:
                             break
@@ -348,13 +342,11 @@ def strongly_connected_components(
                     frontier = new
             # label each found SCC with its min member; remove from alive
             labels = mem.groupBy("color").agg(F.min("v").alias("component"))
-            found = (
-                mem.join(labels, "color").select("v", "component").localCheckpoint(eager=True)
-            )
+            found = local_cut(mem.join(labels, "color").select("v", "component"))
             _accumulate(found)
             prev_alive = n_alive
             # non-eager: the count() materializes — one job per round-end
-            alive = alive.join(mem.select("v"), "v", "anti").localCheckpoint(eager=False)
+            alive = local_cut(alive.join(mem.select("v"), "v", "anti"), eager=False)
             n_alive = alive.count()
             _shrink_ea(mem.select("v"), prev_alive - n_alive)
             color.unpersist()
@@ -363,4 +355,4 @@ def strongly_connected_components(
             f"scc: {n_alive} vertices unresolved after {max_rounds} rounds"
         )
     out = (assigned or graph.vertices().select("v", F.col("v").alias("component")))
-    return out.localCheckpoint(eager=True)
+    return local_cut(out)

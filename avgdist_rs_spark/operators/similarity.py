@@ -32,6 +32,7 @@ from pyspark.sql.window import Window
 
 
 from ..plans.graph import spread as _spread  # shared conditional scan-spread
+from ..streaming.superstep import local_cut
 
 
 def _dot(a, b) -> F.Column:
@@ -254,10 +255,9 @@ def kmeans_lloyd(
             int(spark.conf.get("spark.sql.shuffle.partitions", "32")),
             max(2, -(-int(n_vec) // 500)),
         )
-        e = (
+        e = local_cut(
             emb.repartition(w, F.col(id_col))
             .select(F.col(id_col).alias("nid"), F.col(vec_col).alias("nv"))
-            .localCheckpoint(eager=True)
         )
     finally:
         if owned:

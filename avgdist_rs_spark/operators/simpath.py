@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.graph import GraphFrame
+from ..streaming.superstep import local_cut
 
 
 def simple_paths_edges(
@@ -47,7 +48,7 @@ def simple_paths_edges(
     limit = max_len if max_len is not None else 10**9
     while hops < limit:
         hops += 1
-        ext = (
+        ext = local_cut(  # lineage doubles per superstep otherwise
             # F.col, not frontier.tail — DataFrame.tail is a method in PySpark
             frontier.join(e, F.col("tail") == F.col("_s"))
             .where(~F.array_contains(F.col("path"), F.col("_d")))
@@ -55,7 +56,6 @@ def simple_paths_edges(
                 F.col("_d").alias("tail"),
                 F.concat(F.col("path"), F.array(F.col("_d"))).alias("path"),
             )
-            .localCheckpoint(eager=True)  # lineage doubles per superstep otherwise
         )
         done = ext.where(F.col("tail") == target).select(
             "path", F.lit(hops).cast("int").alias("hops")
@@ -71,7 +71,7 @@ def simple_paths_edges(
                 f"({cnt} partial paths at depth {hops})"
             )
     assert results is not None
-    return results.localCheckpoint(eager=True)
+    return local_cut(results)
 
 
 def simple_paths(
@@ -133,10 +133,8 @@ def count_simple_paths_edges(
         )
         # one shuffle per superstep: merge same-(tail, set) states, split off
         # the finished count — map-side partial sums do the heavy lifting
-        merged = (
-            ext.groupBy("tail", "vset")
-            .agg(F.sum("cnt").alias("cnt"))
-            .localCheckpoint(eager=True)  # lineage doubles per superstep otherwise
+        merged = local_cut(  # lineage doubles per superstep otherwise
+            ext.groupBy("tail", "vset").agg(F.sum("cnt").alias("cnt"))
         )
         row = merged.agg(
             F.sum(F.when(F.col("tail") == target, F.col("cnt"))).alias("done"),

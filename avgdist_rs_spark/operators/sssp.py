@@ -38,6 +38,7 @@ from ..streaming.superstep import (
     SuperstepMetrics,
     converge,
     fixpoint_scope,
+    local_cut,
 )
 
 
@@ -80,9 +81,9 @@ def sssp(
         ew = ew.repartition(width, "src").persist()
         ew.count()
         # every source starts improved (_old NULL)
-        dist0 = sources.select(
+        dist0 = local_cut(sources.select(
             F.col("v"), F.lit(0.0).alias("dist"), F.lit(None).cast("double").alias("_old")
-        ).distinct().localCheckpoint(eager=True)
+        ).distinct())
 
         def superstep(dist: DataFrame, it: int) -> DataFrame:
             frontier = dist.where(improved)

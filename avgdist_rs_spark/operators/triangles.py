@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..plans.graph import GraphFrame
+from ..streaming.superstep import local_cut
 
 
 def canonical_edges(graph: GraphFrame) -> DataFrame:
@@ -130,7 +131,7 @@ def per_vertex_triangles(graph: GraphFrame, orientation: str = "auto") -> DataFr
         .groupBy("v")
         .agg(F.count("*").alias("triangles"))
     )
-    out = out.localCheckpoint(eager=True)
+    out = local_cut(out)
     o.unpersist()
     return out
 

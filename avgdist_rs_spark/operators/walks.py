@@ -44,6 +44,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.hashing import portable_hash64
+from ..streaming.superstep import local_cut
 
 
 def ranked_adjacency(edges: DataFrame, undirected: bool = True) -> DataFrame:
@@ -132,7 +133,7 @@ def random_walks(
             .alias("path"),
         )
         if checkpoint_every and t % checkpoint_every == 0 and t < walk_length:
-            w = w.localCheckpoint(eager=False)
+            w = local_cut(w, eager=False)
 
     return w.select(
         "walk_id",
@@ -311,7 +312,7 @@ def node2vec_walks(
         # each barrier materializes the full walk state). The walk is
         # deterministic, so barriers never change results.
         if checkpoint_every and t % checkpoint_every == 0 and t < walk_length:
-            w = w.localCheckpoint(eager=False)
+            w = local_cut(w, eager=False)
 
     return w.select(
         "walk_id",

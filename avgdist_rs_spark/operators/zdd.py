@@ -63,7 +63,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..streaming.superstep import adaptive_shuffle_width
+from ..streaming.superstep import adaptive_shuffle_width, local_cut
 
 _ID_SPACE = (1 << 62) - 2  # content ids land in [2, 2^62): 0/1 stay terminals
 
@@ -489,15 +489,13 @@ def simpath_zdd_edges(
                             }
                         )
 
-            out = states.mapInPandas(run_chunk, node_schema).localCheckpoint(
-                eager=True
-            )
+            out = local_cut(states.mapInPandas(run_chunk, node_schema))
             supersteps += 1
             new_nodes = out.where(F.col("kind") == 0).select("level", "id", "lo", "hi")
             nodes_acc = (
                 new_nodes
                 if nodes_acc is None
-                else nodes_acc.union(new_nodes).localCheckpoint(eager=True)
+                else local_cut(nodes_acc.union(new_nodes))
             )
             states = out.where(F.col("kind") == 1).select("id", "cfg").dropDuplicates(
                 ["id"]

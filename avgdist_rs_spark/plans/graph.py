@@ -43,6 +43,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from ..streaming.superstep import local_cut
+
 
 def _num_partitions_for(spark: SparkSession) -> int:
     return int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
@@ -199,10 +201,10 @@ class GraphFrame:
         # scans + the id-mapping join) and without the checkpoint each
         # consumer re-runs the full upstream plan (e.g. the transcript
         # sessionize → window → distinct chain behind the session graph)
-        se = edges.select(
+        se = local_cut(edges.select(
             F.col("src").cast("string").alias("s_orig"),
             F.col("dst").cast("string").alias("d_orig"),
-        ).localCheckpoint(eager=False)
+        ), eager=False)
         verts = se.select(F.col("s_orig").alias("orig")).union(
             se.select(F.col("d_orig").alias("orig"))
         )

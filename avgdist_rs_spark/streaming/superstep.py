@@ -7,8 +7,10 @@ handled explicitly (SURVEY.md §4):
 
 1. **Lineage blow-up**: hundreds of supersteps of `union`/`join` build an
    unboundedly deep plan. `Checkpointer.cut` truncates it — either via
-   `localCheckpoint` (fast, in-memory) or, when a checkpoint dir is configured,
-   by writing the state to Parquet and reading it back.
+   :func:`local_cut`, the package's only ``localCheckpoint`` call (a local
+   checkpoint kept as serialized executor blocks that spill to disk), or,
+   when a checkpoint dir is configured, by writing the state to Parquet and
+   reading it back.
 2. **Resume** (north rule): Parquet checkpoints carry a JSON manifest per
    superstep (superstep number, state path), so a new driver can resume any
    BFS/PageRank run from the last completed superstep.
@@ -20,11 +22,13 @@ one :func:`superstep` context, which appends one record to it:
   and ``wall_s`` (the body's wall time), plus any loop-specific extras;
 - the Spark counters of the jobs the body ran: ``jobs``, ``stages`` (run,
   not skipped), ``tasks``, ``shuffle_read_bytes``, ``shuffle_write_bytes``,
-  ``shuffle_write_records``, ``executor_ms`` and ``evicted_stages`` (stages
-  that ran but that the status store dropped before they could be read, so
-  absent from the other sums). They are None when the store cannot be read:
-  bookkeeping never fails a superstep. ``counters=False`` metrics (an
-  operator's own, when its caller passes none) skip them.
+  ``shuffle_write_records``, ``executor_ms``, ``memory_spilled_bytes`` and
+  ``disk_spilled_bytes`` (what the tasks spilled, sized in memory and on
+  disk) and ``evicted_stages`` (stages that ran but that the status store
+  dropped before they could be read, so absent from the other sums). They
+  are None when the store cannot be read: bookkeeping never fails a
+  superstep. ``counters=False`` metrics (an operator's own, when its caller
+  passes none) skip them.
 
 The counters come from Spark's status store. The context never sets a job
 group: it diffs the job ids of the CURRENT group (none, or an outer
@@ -60,7 +64,7 @@ from functools import lru_cache
 from typing import Callable
 
 from py4j.protocol import Py4JJavaError
-from pyspark import SparkContext
+from pyspark import SparkContext, StorageLevel
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -73,6 +77,8 @@ COUNTERS = (
     "shuffle_write_bytes",
     "shuffle_write_records",
     "executor_ms",
+    "memory_spilled_bytes",
+    "disk_spilled_bytes",
     "evicted_stages",
 )
 
@@ -152,10 +158,11 @@ def _job_counters(sc, job_ids) -> dict:
             if st.status().toString() != "COMPLETE":
                 continue  # skipped: its shuffle output was reused
             row = (1, st.numCompleteTasks(), st.shuffleReadBytes(), st.shuffleWriteBytes(),
-                   st.shuffleWriteRecords(), st.executorRunTime())
+                   st.shuffleWriteRecords(), st.executorRunTime(),
+                   st.memoryBytesSpilled(), st.diskBytesSpilled())
         except Py4JJavaError:  # NoSuchElementException: evicted
             continue
-        for k, v in zip(COUNTERS[1:7], row):  # stages .. executor_ms
+        for k, v in zip(COUNTERS[1:-1], row):  # stages .. disk_spilled_bytes
             c[k] += v
     c["jobs"], c["evicted_stages"] = len(job_ids), max(0, ran - c["stages"])
     return c
@@ -188,6 +195,19 @@ def superstep(metrics: SuperstepMetrics, it: int, **extra):
     metrics.records.append(rec)
 
 
+def local_cut(df: DataFrame, eager: bool = True) -> DataFrame:
+    """``df`` with its lineage cut by a local checkpoint, kept as serialized
+    blocks that spill to disk (PySpark's ``StorageLevel.MEMORY_AND_DISK``),
+    so a cut block is never dropped. Spark's default level for
+    ``localCheckpoint`` keeps one JVM object per row, and ``SizeTracker``
+    re-walks the growing row vector with ``SizeEstimator``: one eager cut of
+    a 9,270-row shuffled state measured 150 executor-ms that way against 38
+    serialized (local[2], C1-only JVM with SerialGC; 69 vs 33 ms on a
+    default JVM). ``eager=False`` leaves the materialization to the caller's
+    next action."""
+    return df.localCheckpoint(eager=eager, storageLevel=StorageLevel.MEMORY_AND_DISK)
+
+
 class Checkpointer:
     """Cuts DataFrame lineage every ``every`` supersteps; optionally durable.
 
@@ -198,18 +218,21 @@ class Checkpointer:
     """
 
     #: every Nth lineage cut goes through a Parquet roundtrip instead of
-    #: localCheckpoint. Measured on Spark 4.1.2 (tests/test_checkpoint_
+    #: local_cut. Measured on Spark 4.1.2 (tests/test_checkpoint_
     #: salting.py::test_chained_local_checkpoints_stay_flat): a CHAIN of
     #: localCheckpoints — each checkpointed from the previous one — starts
     #: multiplying its per-cut job cost ~2.5× per link past ~12 links (0.2 s
     #: → 22 s by link 20 on a 7-row table), even though both the logical
     #: plan (LogicalRDD) and rdd.toDebugString stay flat, so the cost is
-    #: Spark-internal to the checkpoint chain itself. A Parquet write/read
-    #: RESETS the chain (measured flat through 40+ iterations with a reset
-    #: every 10). 12 sits just under the onset: short loops (pagerank 10,
-    #: cc ~12 supersteps) pay at most one roundtrip, long fixpoints reset
-    #: before the multiplier bites (measured: resets at 9/19/29 keep a
-    #: 40-link chain at 0.14-0.37 s/cut).
+    #: Spark-internal to the checkpoint chain itself. It does not depend on
+    #: the storage level: a chain of serialized cuts (local_cut) with no
+    #: reset measured 0.2 s per cut up to link 14, then 0.43, 0.73, 1.86
+    #: and 5.14 s at links 15-18, so the blow-up is plan-side. A Parquet
+    #: write/read RESETS the chain (measured flat through 40+ iterations
+    #: with a reset every 10). 12 sits just under the onset: short loops
+    #: (pagerank 10, cc ~12 supersteps) pay at most one roundtrip, long
+    #: fixpoints reset before the multiplier bites (measured: resets at
+    #: 9/19/29 keep a 40-link chain at 0.14-0.37 s/cut).
     HARD_EVERY = 12
 
     def __init__(
@@ -258,7 +281,7 @@ class Checkpointer:
         if superstep % self.every != 0:
             return df
         if self.dir is None:
-            return df.localCheckpoint(eager=True)
+            return local_cut(df)
         path = os.path.join(self.dir, self.name, f"step={superstep}")
         df.write.mode("overwrite").parquet(path)
         out = self.spark.read.parquet(path)
@@ -272,11 +295,11 @@ class Checkpointer:
 
     def step(self, df: DataFrame, superstep: int, lazy: bool = False) -> DataFrame:
         """Per-superstep state handover: durable cut on the cadence, eager
-        localCheckpoint otherwise — state lineage is truncated EVERY superstep
-        either way (the idiom every iterative operator needs), so plans stay
-        O(1)-deep between durable cuts too.
+        :func:`local_cut` (serialized blocks) otherwise — state lineage is
+        truncated EVERY superstep either way (the idiom every iterative
+        operator needs), so plans stay O(1)-deep between durable cuts too.
 
-        ``lazy=True`` returns a NON-eager localCheckpoint: the caller's next
+        ``lazy=True`` returns a NON-eager local cut: the caller's next
         action (typically the convergence aggregate every fixpoint loop runs
         anyway) both computes the superstep AND materializes the checkpoint —
         one Spark job per superstep instead of two. Only valid when the
@@ -285,14 +308,14 @@ class Checkpointer:
         the materialization).
 
         Every ``hard_every``-th cut is a Parquet roundtrip regardless of
-        cadence or laziness — chained localCheckpoints accumulate
+        cadence or laziness — chained local cuts accumulate
         Spark-internal per-cut cost past ~12 links (see HARD_EVERY) and the
         roundtrip resets the chain."""
         self._n_cuts += 1
         if self._n_cuts % self.hard_every == 0 and self.dir is None:
             return self._hard_cut(df)
         if superstep % self.every != 0 or self.dir is None:
-            return df.localCheckpoint(eager=not lazy)
+            return local_cut(df, eager=not lazy)
         return self.cut(df, superstep)
 
     # ------------------------------------------------------------------ resume

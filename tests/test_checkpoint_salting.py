@@ -6,17 +6,19 @@
 
 import json
 import os
+from pathlib import Path
 
 import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+import avgdist_rs_spark
 from avgdist_rs_spark.functions.salting import salt_edges
 from avgdist_rs_spark.operators.bfs import bfs_csr, bfs_frontier, per_seed_stats
 from avgdist_rs_spark.operators.pagerank import pagerank
 from avgdist_rs_spark.sources.fixtures import barabasi_graph, star_graph
-from avgdist_rs_spark.streaming.superstep import Checkpointer, SuperstepMetrics
+from avgdist_rs_spark.streaming.superstep import Checkpointer, SuperstepMetrics, local_cut
 
 
 @pytest.fixture(scope="module")
@@ -158,3 +160,29 @@ def test_chained_local_checkpoints_stay_flat(spark):
     assert par.count() == 7
     # the unfixed blow-up is ~100x by link 25; flat-with-noise is <5x
     assert max(late) < 5 * max(max(early), 0.2), (early, late)
+
+
+def test_local_cut_stores_serialized_blocks_that_spill(spark):
+    """local_cut keeps its blocks serialized (no per-row SizeEstimator walk)
+    and lets them spill to disk, so a cut block is never dropped."""
+    jsc = spark.sparkContext._jsc.sc()
+    before = {info.id() for info in jsc.getRDDStorageInfo()}
+    for eager in (True, False):
+        df = local_cut(spark.range(1000).select((F.col("id") * 3).alias("x")), eager=eager)
+        assert df.agg(F.sum("x")).collect()[0][0] == 3 * 999 * 1000 // 2
+    cut = [info for info in jsc.getRDDStorageInfo() if info.id() not in before]
+    assert len(cut) == 2
+    for info in cut:
+        level = info.storageLevel()
+        assert not level.deserialized() and level.useDisk() and level.useMemory()
+
+
+def test_local_cut_is_the_only_local_checkpoint():
+    """Every lineage cut in the package goes through local_cut."""
+    root = Path(avgdist_rs_spark.__file__).parent
+    calls = {
+        str(p.relative_to(root)): n
+        for p in sorted(root.rglob("*.py"))
+        if (n := p.read_text().count(".localCheckpoint("))
+    }
+    assert calls == {"streaming/superstep.py": 1}

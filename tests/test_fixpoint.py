@@ -137,6 +137,32 @@ def test_one_spark_job_per_superstep(spark):
         h.unpersist()
 
 
+def test_pagerank_setup_is_one_job(spark):
+    """Beyond its one job per iteration, a PageRank call runs one setup job:
+    the sink probe that also materializes the normalized edge table."""
+    calls = SuperstepMetrics(name="pagerank_call")
+    for g in (_chain(spark, 8), _chain(spark, 8, cycle=True)):  # with and without a sink
+        met = SuperstepMetrics(name="pagerank")
+        with superstep(calls, calls.total_supersteps + 1):
+            pagerank(g, iterations=3, metrics=met)
+        assert [r["jobs"] for r in met.records] == [1, 1, 1]
+        assert calls.records[-1]["jobs"] == 3 + 1
+        g.unpersist()
+
+
+@pytest.mark.parametrize("shards", [False, True])
+def test_bfs_frontier_supersteps_share_their_jobs(spark, shards):
+    """bfs_frontier runs with AQE off, so the exchanges of a superstep run in
+    its few jobs instead of one job each (6 per superstep with AQE on, 9
+    sharded): at most 3, the visited cut's cadence included."""
+    g = _graph(spark, CYCLE_TAIL, 5)
+    met = SuperstepMetrics(name="bfs")
+    bfs_frontier(g, spark.createDataFrame([(0,), (3,)], "seed long"), shards=shards, metrics=met)
+    assert met.total_supersteps == 5
+    assert max(r["jobs"] for r in met.records) <= 3, [r["jobs"] for r in met.records]
+    g.unpersist()
+
+
 LOOPS = {
     "cc": lambda g, met: connected_components(g, metrics=met),
     "sssp": lambda g, met: sssp(
@@ -226,7 +252,8 @@ def test_evicted_stage_is_counted_not_raised(spark, monkeypatch):
     stage = SimpleNamespace(status=lambda: SimpleNamespace(toString=lambda: "COMPLETE"),
                             numCompleteTasks=lambda: 4,
                             shuffleReadBytes=lambda: 5, shuffleWriteBytes=lambda: 6,
-                            shuffleWriteRecords=lambda: 7, executorRunTime=lambda: 8)
+                            shuffleWriteRecords=lambda: 7, executorRunTime=lambda: 8,
+                            memoryBytesSpilled=lambda: 9, diskBytesSpilled=lambda: 10)
 
     def stages(held):
         def last_attempt(sid):
@@ -241,6 +268,8 @@ def test_evicted_stage_is_counted_not_raised(spark, monkeypatch):
         c = _job_counters(sc, [1])
         assert (c["jobs"], c["stages"], c["evicted_stages"]) == (1, len(held), evicted)
         assert c["tasks"] == 4 * len(held) and c["executor_ms"] == 8 * len(held)
+        assert c["memory_spilled_bytes"] == 9 * len(held)
+        assert c["disk_spilled_bytes"] == 10 * len(held)
     c = _job_counters(sc, [1, 2])
     assert (c["jobs"], c["stages"], c["evicted_stages"]) == (2, 0, 2)
     monkeypatch.undo()
