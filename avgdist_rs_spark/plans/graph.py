@@ -12,30 +12,44 @@ Spark-first re-expression:
   setup shuffle the per-superstep plan only shuffles the (much smaller) frontier.
 - ``edges_t``: the transpose, independently repartitioned on its own ``src`` — the
   analog of the ``g-t`` BVGraph (reference walks backward edges for coverage-weighted
-  sampling, ``src/main.rs:169``).
+  sampling, ``src/main.rs:169``). It is persisted but not materialized by the
+  build: its first consumer (CC, SCC, the frontier BFS, hyperball) fills the
+  cache, so PageRank, the CSR kernel and K4 never pay its shuffle.
 - ``nodes(id long, orig string)``: dense-id mapping, the analog of ``*.nodes``
   side files (reference ``data/github/github.nodes``). Dense ids are required for the
-  numpy/bitset BFS kernels.
+  numpy/bitset BFS kernels. It is a projection of the build's persisted table
+  of sorted distinct keys (:meth:`GraphFrame.dense_ids`).
 - A broadcast CSR fast path for graphs whose adjacency fits comfortably through
   the driver and in every executor: two int64/int32 numpy arrays (offsets,
   targets) — the moral equivalent of BVGraph+Elias-Fano random access
   (reference ``README.md:58-81``), shipped once per executor via
-  ``SparkContext.broadcast``. Gated at ``operators.bfs.DEFAULT_CSR_MAX_EDGES``
-  (2e8 edges ≈ 2.4 GB of arrays — a deliberate driver-heap ceiling, NOT the
-  2.16e9-edge payment-graph scale).
+  ``SparkContext.broadcast``. Both orientations come from ``edges``: the
+  first one built collects it, the other is transposed from the first one's
+  arrays on the driver, with no Spark job. Gated at
+  ``operators.bfs.DEFAULT_CSR_MAX_EDGES`` (2e8 edges ≈ 2.4 GB of arrays — a
+  deliberate driver-heap ceiling, NOT the 2.16e9-edge payment-graph scale).
 - **CSR shards** (``csr_shards``): the distributed form — per-vertex-range CSR
   blocks built executor-side with ``applyInPandas`` and kept as a persisted
   DataFrame of binary columns. Nothing ever materializes on the driver, so
   this is the path that covers the payment-graph scale and beyond; BFS gathers
   against the shards with a co-grouped pandas kernel (``operators.bfs``).
+
+The build runs with AQE off: with AQE on, every exchange is a job of its own
+and even a lazy lineage cut runs the shuffles upstream of it (see
+``streaming.superstep.local_cut``). A transcript graph builds in 4 jobs: the
+range-partition sample, the key-size collect, the node-table broadcast (both
+mapping joins reuse it) and the edge count. The one exception is a node table
+too big to broadcast: the two node-mapping joins then run under the session's
+AQE, whose skew-join split keeps a hub vertex out of a single task.
 """
 
 from __future__ import annotations
 
 import math
 import os
+from contextlib import nullcontext
 from dataclasses import dataclass, field
-from typing import Optional
+from typing import NamedTuple, Optional
 
 import numpy as np
 import pandas as pd
@@ -43,7 +57,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from ..streaming.superstep import local_cut
+from ..streaming.superstep import aqe_disabled, free_cut, local_cut
 
 
 def _num_partitions_for(spark: SparkSession) -> int:
@@ -97,6 +111,27 @@ def build_csr(pairs: np.ndarray, num_nodes: int) -> CSR:
     return CSR(offsets, dst.astype(tdtype, copy=False), num_nodes)
 
 
+def transpose_csr(offsets: np.ndarray, targets: np.ndarray, num_nodes: int) -> CSR:
+    """The CSR of the reversed edges, from a :func:`build_csr` adjacency.
+
+    A stable sort on target keeps the sources of each new row in ascending
+    order, so the arrays equal ``build_csr`` over the swapped pairs."""
+    src = np.repeat(np.arange(num_nodes, dtype=targets.dtype), np.diff(offsets))
+    counts = np.bincount(targets, minlength=num_nodes)
+    new_offsets = np.zeros(num_nodes + 1, dtype=np.int64)
+    np.cumsum(counts, out=new_offsets[1:])
+    return CSR(new_offsets, src[np.argsort(targets, kind="stable")], num_nodes)
+
+
+class DenseIds(NamedTuple):
+    """:meth:`GraphFrame.dense_ids`' result."""
+
+    nodes: DataFrame  # (id long, orig), a projection of ``cache``
+    n: int  # distinct keys
+    key_bytes: int  # UTF-8 bytes of the distinct keys
+    cache: DataFrame  # the persisted sorted keys; unpersist it with the graph
+
+
 @dataclass
 class GraphFrame:
     """Directed graph as co-partitioned forward/transposed edge DataFrames."""
@@ -108,6 +143,10 @@ class GraphFrame:
     nodes: Optional[DataFrame] = None  # (id long, orig string) when densified
     _csr_fwd: Optional[object] = field(default=None, repr=False)
     _csr_bwd: Optional[object] = field(default=None, repr=False)
+    #: the build's own blocks behind ``edges`` and ``nodes``, released by
+    #: :meth:`unpersist`: the cut of the string-keyed edges, the sorted keys
+    _build_cut: Optional[DataFrame] = field(default=None, repr=False)
+    _build_keys: Optional[DataFrame] = field(default=None, repr=False)
 
     @property
     def spark(self) -> SparkSession:
@@ -128,6 +167,16 @@ class GraphFrame:
         ``0..n`` and ``--num-nodes`` may exceed the max id, leaving isolated
         vertices — those still count as BFS seeds in exact mode).
         """
+        with aqe_disabled(edges.sparkSession):
+            return GraphFrame._from_edges(edges, num_nodes, dedup, persist)
+
+    @staticmethod
+    def _from_edges(
+        edges: DataFrame, num_nodes: int | None, dedup: bool, persist: bool
+    ) -> "GraphFrame":
+        """:meth:`from_edges` under the caller's AQE setting, which plans
+        ``edges`` and its upstream joins; the transpose is always planned with
+        AQE off, so its first consumer fills its cache in one job."""
         spark = edges.sparkSession
         p = _num_partitions_for(spark)
         e = edges.select(
@@ -136,34 +185,36 @@ class GraphFrame:
         if dedup:
             e = e.distinct()
         e = e.repartition(p, "src")
-        et = e.select(F.col("dst").alias("src"), F.col("src").alias("dst")).repartition(p, "src")
         if persist:
             e = e.persist(StorageLevel.MEMORY_AND_DISK)
-            et = et.persist(StorageLevel.MEMORY_AND_DISK)
-        m = e.count()
+        with aqe_disabled(spark):
+            et = e.select(F.col("dst").alias("src"), F.col("src").alias("dst")).repartition(p, "src")
+            if persist:
+                et = et.persist(StorageLevel.MEMORY_AND_DISK)
+        row = e.agg(F.count("*").alias("m"), F.max(F.greatest("src", "dst")).alias("mx")).collect()[0]
         if num_nodes is None:
-            mx = e.select(F.max(F.greatest("src", "dst")).alias("mx")).collect()[0]["mx"]
-            num_nodes = int(mx) + 1 if mx is not None else 0
-        et.count()  # materialize the transpose once; reused every superstep
-        return GraphFrame(edges=e, edges_t=et, num_nodes=int(num_nodes), num_edges=int(m))
+            num_nodes = int(row["mx"]) + 1 if row["mx"] is not None else 0
+        return GraphFrame(edges=e, edges_t=et, num_nodes=int(num_nodes), num_edges=int(row["m"]))
 
     @staticmethod
-    def dense_ids(verts: DataFrame, key: str = "orig") -> DataFrame:
+    def dense_ids(verts: DataFrame, key: str = "orig") -> DenseIds:
         """(id, orig): deterministic dense rank 0..n-1 of distinct keys in sorted
         order — WITHOUT a global single-partition window.
 
-        Scalable zipWithIndex: range-partition + sort by key, count rows per
-        partition (tiny collect), broadcast the prefix offsets, then global
-        rank = partition offset + partition-local row_number. Two shuffles of
-        the deduplicated vertex set; every stage is distributed (the classic
-        fix for the ``Window.orderBy`` driver bottleneck at 10^9 vertices).
-        Ranks depend only on the total key order, not on where range
-        boundaries land, so ids are bit-stable across parallelism levels.
+        Scalable zipWithIndex: range-partition + sort by key and persist, count
+        rows and key bytes per partition (one tiny collect, which also gives n),
+        then global rank = partition offset + row index within the partition.
+        The row index is the low 33 bits of ``monotonically_increasing_id()``
+        over the persisted sorted partitions, so no exchange or sort runs after
+        the persist. The ids are only right over the persisted table, since a
+        recomputed range partitioning samples other bounds. Two shuffles of
+        the deduplicated vertex set (the distinct and the range partitioning);
+        every stage is distributed (the classic fix for the ``Window.orderBy``
+        driver bottleneck at 10^9 vertices). Ranks depend only on the total
+        key order, not on where range boundaries land, so ids are bit-stable
+        across parallelism levels.
         """
-        from pyspark.sql.window import Window
-
-        spark = verts.sparkSession
-        p = _num_partitions_for(spark)
+        p = _num_partitions_for(verts.sparkSession)
         vs = (
             verts.select(F.col(key).alias("orig"))
             .distinct()
@@ -172,19 +223,23 @@ class GraphFrame:
             .withColumn("_pid", F.spark_partition_id())
             .persist(StorageLevel.MEMORY_AND_DISK)
         )
-        sizes = {r["_pid"]: r["c"] for r in vs.groupBy("_pid").agg(F.count("*").alias("c")).collect()}
-        offsets, acc = {}, 0
-        for pid in sorted(sizes):
-            offsets[pid] = acc
-            acc += sizes[pid]
+        sizes = vs.groupBy("_pid").agg(
+            F.count("*").alias("c"), F.sum(F.octet_length("orig")).alias("b")
+        ).collect()
+        offsets, n, key_bytes = {}, 0, 0
+        for r in sorted(sizes, key=lambda r: r["_pid"]):
+            offsets[r["_pid"]] = n
+            n += r["c"]
+            key_bytes += r["b"] or 0
         off_col = F.create_map(
             *[F.lit(x) for kv in offsets.items() for x in kv]
         )[F.col("_pid")] if offsets else F.lit(0)
-        w = Window.partitionBy("_pid").orderBy("orig")
-        nodes = vs.select(
-            (off_col + F.row_number().over(w) - 1).cast("long").alias("id"), "orig"
-        )
-        return nodes
+        # monotonically_increasing_id() = partition index << 33 | row index in
+        # the partition; it is nondeterministic to Catalyst, so no filter is
+        # ever pushed below it into the scan of the sorted partitions
+        row = F.monotonically_increasing_id().bitwiseAND(F.lit((1 << 33) - 1))
+        nodes = vs.select((off_col + row).cast("long").alias("id"), "orig")
+        return DenseIds(nodes, n, key_bytes, vs)
 
     @staticmethod
     def from_any_edges(edges: DataFrame, dedup: bool = True) -> "GraphFrame":
@@ -196,34 +251,49 @@ class GraphFrame:
         :meth:`dense_ids`); the mapping is kept as ``nodes(id, orig)`` — the
         analog of the reference's ``*.nodes`` side files.
         """
-        # materialize the (possibly expensive) edge derivation ONCE: the
-        # string-keyed projection is consumed three times below (both vertex
-        # scans + the id-mapping join) and without the checkpoint each
-        # consumer re-runs the full upstream plan (e.g. the transcript
-        # sessionize → window → distinct chain behind the session graph)
-        se = local_cut(edges.select(
-            F.col("src").cast("string").alias("s_orig"),
-            F.col("dst").cast("string").alias("d_orig"),
-        ), eager=False)
-        verts = se.select(F.col("s_orig").alias("orig")).union(
-            se.select(F.col("d_orig").alias("orig"))
-        )
-        nodes = GraphFrame.dense_ids(verts).persist(StorageLevel.MEMORY_AND_DISK)
-        n = nodes.count()
-        # plain equi-joins: Catalyst/AQE broadcasts when nodes is small and
-        # falls back to shuffle joins at 10^9-vertex scale
-        e = (
-            se
-            .join(nodes.withColumnRenamed("orig", "s_orig"), "s_orig")
-            .withColumnRenamed("id", "src")
-            .join(nodes.withColumnRenamed("orig", "d_orig"), "d_orig")
-            .withColumnRenamed("id", "dst")
-            .select("src", "dst")
-        )
-        # pass dedup through: derivations that already emit distinct edges
-        # (e.g. transcript/event edge builders) skip a full edge shuffle here
-        g = GraphFrame.from_edges(e, num_nodes=n, dedup=dedup)
-        g.nodes = nodes
+        spark = edges.sparkSession
+        with aqe_disabled(spark):
+            # materialize the (possibly expensive) edge derivation ONCE: the
+            # string-keyed projection is consumed three times below (both
+            # vertex scans + the id-mapping join) and without the cut each
+            # consumer re-runs the full upstream plan (e.g. the transcript
+            # sessionize → window → distinct chain behind the session graph).
+            # A cut, not a cache: every later query on the graph then plans
+            # a leaf instead of that chain (~17 vs ~90 ms per query on the
+            # transcript graph). The coalesce to the partitions it already
+            # has makes the cut report no partitioning: Spark's
+            # LogicalRDD.newInstance leaves a cut's partitioning on the old
+            # attribute ids, so the copy on the other side of a self-join of
+            # ``edges`` would stop matching its cache and re-run the build.
+            sel = edges.select(
+                F.col("src").cast("string").alias("s_orig"),
+                F.col("dst").cast("string").alias("d_orig"),
+            )
+            se = local_cut(sel.coalesce(max(1, sel.rdd.getNumPartitions())), eager=False)
+            verts = se.select(F.col("s_orig").alias("orig")).union(
+                se.select(F.col("d_orig").alias("orig"))
+            )
+            ids = GraphFrame.dense_ids(verts)
+        # a broadcast node table holds ~32 bytes of row and hash entry per key
+        # besides the key itself; past the threshold both mapping joins are
+        # shuffle joins that AQE splits when a hub key skews them
+        threshold = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+        small = 0 <= 32 * ids.n + ids.key_bytes <= threshold
+        nodes = F.broadcast(ids.nodes) if small else ids.nodes
+        with aqe_disabled(spark) if small else nullcontext():
+            e = (
+                se
+                .join(nodes.withColumnRenamed("orig", "s_orig"), "s_orig")
+                .withColumnRenamed("id", "src")
+                .join(nodes.withColumnRenamed("orig", "d_orig"), "d_orig")
+                .withColumnRenamed("id", "dst")
+                .select("src", "dst")
+            )
+            # pass dedup through: derivations that already emit distinct edges
+            # (e.g. transcript/event edge builders) skip a full edge shuffle here
+            g = GraphFrame._from_edges(e, ids.n, dedup, persist=True)
+        g.nodes = ids.nodes
+        g._build_cut, g._build_keys = se, ids.cache
         return g
 
     # ------------------------------------------------------------- derived views
@@ -250,23 +320,29 @@ class GraphFrame:
     def _collect_pairs(self, transposed: bool) -> np.ndarray:
         # Arrow collect, not toPandas: no pandas object materialization, the
         # int64 buffers convert zero-copy — roughly halves the driver-side
-        # footprint of the (gated) broadcast-CSR build.
-        df = self.edges_t if transposed else self.edges
-        tbl = df.select("src", "dst").toArrow()
+        # footprint of the (gated) broadcast-CSR build. Both orientations
+        # collect ``edges``, so the lazy ``edges_t`` is never filled for it.
+        tbl = self.edges.select("src", "dst").toArrow()
+        cols = ("dst", "src") if transposed else ("src", "dst")
         return np.column_stack(
-            [
-                tbl.column("src").to_numpy(zero_copy_only=False).astype(np.int64, copy=False),
-                tbl.column("dst").to_numpy(zero_copy_only=False).astype(np.int64, copy=False),
-            ]
+            [tbl.column(c).to_numpy(zero_copy_only=False).astype(np.int64, copy=False) for c in cols]
         )
 
     def csr_broadcast(self, transposed: bool = False):
         """Broadcast-CSR adjacency (built once, cached). Fast path only — callers
-        must gate on graph size (see operators.bfs.DEFAULT_CSR_MAX_EDGES)."""
+        must gate on graph size (see operators.bfs.DEFAULT_CSR_MAX_EDGES).
+        When the other orientation is already broadcast, this one is its
+        transpose, computed on the driver with no Spark job; the driver then
+        keeps the other orientation's arrays for as long as its broadcast."""
         attr = "_csr_bwd" if transposed else "_csr_fwd"
         bc = getattr(self, attr)
         if bc is None:
-            csr = build_csr(self._collect_pairs(transposed), self.num_nodes)
+            other = self._csr_fwd if transposed else self._csr_bwd
+            if other is not None:
+                adj = other.value
+                csr = transpose_csr(adj["offsets"], adj["targets"], adj["n"])
+            else:
+                csr = build_csr(self._collect_pairs(transposed), self.num_nodes)
             bc = self.spark.sparkContext.broadcast(
                 {"offsets": csr.offsets, "targets": csr.targets, "n": csr.num_nodes}
             )
@@ -410,8 +486,10 @@ class GraphFrame:
     def unpersist(self) -> None:
         self.edges.unpersist()
         self.edges_t.unpersist()
-        if self.nodes is not None:
-            self.nodes.unpersist()
+        if self._build_cut is not None:
+            free_cut(self._build_cut)
+            self._build_keys.unpersist()
+            self._build_cut = self._build_keys = None
         for attr in ("_csr_fwd", "_csr_bwd"):
             bc = getattr(self, attr)
             if bc is not None:

@@ -203,9 +203,19 @@ def local_cut(df: DataFrame, eager: bool = True) -> DataFrame:
     re-walks the growing row vector with ``SizeEstimator``: one eager cut of
     a 9,270-row shuffled state measured 150 executor-ms that way against 38
     serialized (local[2], C1-only JVM with SerialGC; 69 vs 33 ms on a
-    default JVM). ``eager=False`` leaves the materialization to the caller's
-    next action."""
+    default JVM). ``eager=False`` leaves the materialization of the cut to
+    the caller's next action, but creating the cut still plans ``df`` into
+    an RDD: with AQE on, that runs every shuffle stage upstream of the cut
+    (the transcript edges' two window exchanges: 2 jobs). A lazy cut runs no
+    job only with AQE off, which is why the loops make theirs inside
+    ``fixpoint_scope`` or ``aqe_disabled``."""
     return df.localCheckpoint(eager=eager, storageLevel=StorageLevel.MEMORY_AND_DISK)
+
+
+def free_cut(df: DataFrame) -> None:
+    """Drop the blocks of a :func:`local_cut` result, which must not be read
+    again: its lineage is gone. ``DataFrame.unpersist`` does not reach them."""
+    df._jdf.logicalPlan().rdd().unpersist(False)
 
 
 class Checkpointer:

@@ -18,7 +18,14 @@ from avgdist_rs_spark.functions.salting import salt_edges
 from avgdist_rs_spark.operators.bfs import bfs_csr, bfs_frontier, per_seed_stats
 from avgdist_rs_spark.operators.pagerank import pagerank
 from avgdist_rs_spark.sources.fixtures import barabasi_graph, star_graph
-from avgdist_rs_spark.streaming.superstep import Checkpointer, SuperstepMetrics, local_cut
+from avgdist_rs_spark.streaming.superstep import (
+    Checkpointer,
+    SuperstepMetrics,
+    _conf_scope,
+    aqe_disabled,
+    local_cut,
+    superstep,
+)
 
 
 @pytest.fixture(scope="module")
@@ -175,6 +182,22 @@ def test_local_cut_stores_serialized_blocks_that_spill(spark):
     for info in cut:
         level = info.storageLevel()
         assert not level.deserialized() and level.useDisk() and level.useMemory()
+
+
+def test_lazy_local_cut_runs_no_job_only_with_aqe_off(spark):
+    """Creating a lazy cut plans its input into an RDD: with AQE on, that
+    runs the shuffle stages upstream of the cut; with AQE off, nothing."""
+    jobs = []
+    for aqe in ("true", "false"):
+        met = SuperstepMetrics(name="cut")
+        with _conf_scope(spark, "spark.sql.adaptive.enabled", aqe), superstep(met, 1):
+            local_cut(spark.range(100).groupBy((F.col("id") % 7).alias("k")).count(), eager=False)
+        jobs.append(met.records[-1]["jobs"])
+    assert jobs[0] >= 1 and jobs[1] == 0, jobs
+    met = SuperstepMetrics(name="cut")
+    with aqe_disabled(spark), superstep(met, 1):
+        local_cut(spark.range(100).groupBy((F.col("id") % 7).alias("k")).count(), eager=False)
+    assert met.records[-1]["jobs"] == 0
 
 
 def test_local_cut_is_the_only_local_checkpoint():
