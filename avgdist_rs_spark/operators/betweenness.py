@@ -21,11 +21,11 @@ Spark shape — two physical strategies behind one API (``strategy="auto"``):
   distributed CSR shard table (``GraphFrame.csr_shards`` — the adjacency
   never visits the driver, frontier rows hash to the shard buckets they
   touch). The forward phase accumulates σ level-by-level with one co-grouped
-  gather + anti-join + aggregate per depth; the reverse dependency sweep
-  RE-GATHERS each level's tree edges from the same shards (no per-seed DAG
-  is ever stored — state is exactly the (seed, v, dist, σ) visited table),
-  folding δ down one level per superstep. 2·diameter supersteps total for
-  the whole seed batch, independent of seed count.
+  gather + aggregate + anti-join per depth (``sweep``); the reverse
+  dependency sweep RE-GATHERS each level's tree edges from the same shards
+  (no per-seed DAG is ever stored — state is exactly the (seed, v, dist, σ)
+  visited table), folding δ down one level per superstep. 2·diameter
+  supersteps total for the whole seed batch, independent of seed count.
 
 ``seeds`` samples sources for the standard O(k·m) approximation
 (Brandes–Pich, drawn WITH replacement — duplicate seeds count once per
@@ -52,6 +52,7 @@ from ..streaming.superstep import (
     aqe_disabled,
     local_cut,
     superstep,
+    sweep,
 )
 from .bfs import DEFAULT_CSR_MAX_EDGES, _gather
 
@@ -156,57 +157,44 @@ def _betweenness_shards(
     mult = local_cut(
         seeds_df.groupBy("seed").agg(F.count("*").cast("double").alias("_w"))
     )
-    frontier = mult.select(
-        "seed", F.col("seed").alias("v"), F.lit(1.0).alias("sigma")
-    )
-    visited = local_cut(frontier.withColumn("dist", F.lit(0).cast("int")))
-    depth = 0
+    visited = local_cut(mult.select(
+        "seed", F.col("seed").alias("v"), F.lit(1.0).alias("sigma"),
+        F.lit(0).cast("int").alias("dist"),
+    ))
+
+    def forward(frontier: DataFrame, it: int) -> DataFrame:
+        # σ(w) = Σ σ(u) over the frontier's edges into w; grouping on the
+        # anti-join's key before ``sweep`` drops the visited w is exact
+        return (
+            expand(frontier.select("seed", "v", "sigma"))
+            .groupBy("seed", "w")
+            .agg(F.sum("sigma_u").alias("sigma"))
+            .select("seed", F.col("w").alias("v"), "sigma", F.lit(it).cast("int").alias("dist"))
+        )
+
     # per-superstep exchange volume = the gathered edge stream (level rows ·
     # avg_degree) + the visited anti-join side; all level sizes are counted
-    # anyway, so the shuffle width tracks them in both sweeps (see
-    # adaptive_shuffle_width — the reverse sweep reuses the forward counts)
+    # anyway, so the shuffle width tracks them in both sweeps (the reverse
+    # sweep reuses the forward counts)
     avg_deg = max(1, -(-graph.num_edges // max(graph.num_nodes, 1)))
     n_seeds = mult.count()
-    lvl_rows = [n_seeds]
-    visited_rows = n_seeds
+    # ---- forward: σ accumulates level by level; levels 1..max_supersteps,
+    # then one that must be empty
+    visited, levels = sweep(visited, visited, forward, ["seed", "v"], ckpt, met, n_seeds,
+                            fanout=avg_deg, max_supersteps=max_supersteps + 1, phase="fwd")
+    if levels[-1]:
+        raise RuntimeError(f"betweenness: forward BFS past max_supersteps={max_supersteps}")
+    depth = len(levels) - 1
+    lvl_rows = [n_seeds] + levels
+    # the reverse sweep reads two levels of ``visited`` per superstep: one
+    # cut makes those reads of cached blocks, not of the fold's last cut
+    # (which may be a Parquet reset) and its pieces (100-level chain,
+    # local[2]: 67 s of reverse supersteps without this cut, 43 s with it)
+    visited = local_cut(visited)
+    # ---- reverse: δ folds down one level per superstep -------------------
+    acc: DataFrame | None = None  # folded union of per-level δ tables
+    delta_above: DataFrame | None = None  # (seed, v, delta) at level d+1
     with aqe_disabled(spark), adaptive_shuffle_width(spark) as upd:
-        upd(max(visited_rows, n_seeds * avg_deg))
-        # ---- forward: σ accumulates level by level ------------------------
-        while True:
-            with superstep(met, depth + 1, phase="fwd") as rec:
-                edges = expand(frontier)
-                newf = local_cut(
-                    edges.join(
-                        visited.select("seed", F.col("v").alias("w")), ["seed", "w"], "anti"
-                    )
-                    .groupBy("seed", "w")
-                    .agg(F.sum("sigma_u").alias("sigma"))
-                    .select(
-                        "seed",
-                        F.col("w").alias("v"),
-                        "sigma",
-                        F.lit(depth + 1).cast("int").alias("dist"),
-                    ),
-                    # non-eager: the count() is the materializing action — one
-                    # Spark job per forward superstep instead of two
-                    eager=False,
-                )
-                rec["rows"] = n_new = newf.count()
-                if n_new == 0:
-                    break
-                depth += 1
-                if depth > max_supersteps:
-                    raise RuntimeError(
-                        f"betweenness: forward BFS past max_supersteps={max_supersteps}"
-                    )
-                visited = ckpt.step(visited.unionAll(newf), depth)
-            frontier = newf.select("seed", "v", "sigma")
-            lvl_rows.append(n_new)
-            visited_rows += n_new
-            upd(max(visited_rows, n_new * avg_deg))
-        # ---- reverse: δ folds down one level per superstep ---------------
-        acc: DataFrame | None = None  # folded union of per-level δ tables
-        delta_above: DataFrame | None = None  # (seed, v, delta) at level d+1
         for lvl in range(depth - 1, -1, -1):
             with superstep(met, 2 * depth - lvl, phase="rev") as rec:
                 upd(lvl_rows[lvl] * avg_deg + lvl_rows[lvl + 1])
@@ -352,12 +340,4 @@ def betweenness(
             nz = np.flatnonzero(acc)
             yield pd.DataFrame({"v": nz, "part": acc[nz]})
 
-    partials = seeds_df.mapInPandas(part, schema="v long, part double")
-    return (
-        graph.vertices()
-        .join(partials.groupBy("v").agg(F.sum("part").alias("s")), "v", "left")
-        .select(
-            "v",
-            F.round(F.coalesce(F.col("s"), F.lit(0.0)) * F.lit(scale), 6).alias("bc"),
-        )
-    )
+    return _finalize_bc(graph, seeds_df.mapInPandas(part, schema="v long, part double"), scale)

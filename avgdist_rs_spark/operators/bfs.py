@@ -38,9 +38,10 @@ Underneath it sit two Spark physical strategies, chosen by graph size
 2. ``bfs_frontier`` — **distributed-frontier superstep loop**. State
    ``visited(seed, v, dist)`` and ``frontier(seed, v)`` are DataFrames; one
    superstep = frontier ⋈ edges (shuffle hash join on the pre-partitioned edge
-   side) → dropDuplicates → left-anti join vs visited → union. Scales to graphs
-   far beyond single-executor memory (the 10^12-turn regime); lineage is cut by a
-   ``Checkpointer`` and each superstep is resumable. ``impl="shards"`` swaps
+   side) → dropDuplicates → left-anti join vs visited → union, run by
+   ``streaming.superstep.sweep``. Scales to graphs far beyond single-executor
+   memory (the 10^12-turn regime); lineage is cut by a ``Checkpointer`` and
+   each superstep is resumable. ``impl="shards"`` swaps
    its edge join for per-bucket numpy gathers over a distributed CSR.
 
 ``bfs_csr`` and ``bfs_frontier`` stay public for benchmarks and callers that
@@ -58,14 +59,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
 from ..plans.graph import GraphFrame
-from ..streaming.superstep import (
-    Checkpointer,
-    SuperstepMetrics,
-    adaptive_shuffle_width,
-    aqe_disabled,
-    local_cut,
-    superstep,
-)
+from ..streaming.superstep import Checkpointer, SuperstepMetrics, local_cut, sweep
 
 #: Above this edge count the broadcast CSR is not attempted (driver/executor memory).
 DEFAULT_CSR_MAX_EDGES = 200_000_000
@@ -438,21 +432,16 @@ def _shard_gather(
             return empty
         offsets = np.frombuffer(sdf["offsets"].iloc[0], dtype=np.int64)
         targets = np.frombuffer(sdf["targets"].iloc[0], dtype=tdt)
-        vlo = int(sdf["vlo"].iloc[0])
-        v = fdf["v"].to_numpy(dtype=np.int64) - vlo
-        starts = offsets[v]
-        counts = offsets[v + 1] - starts
-        total = int(counts.sum())
-        if total == 0:
+        v = fdf["v"].to_numpy(dtype=np.int64)
+        ws, counts = _gather(offsets, targets, v - int(sdf["vlo"].iloc[0]))
+        if ws.size == 0:
             return empty
-        idx = np.repeat(starts - np.concatenate(([0], np.cumsum(counts)[:-1])), counts)
-        idx += np.arange(total, dtype=np.int64)
         out = {"seed": np.repeat(fdf["seed"].to_numpy(dtype=np.int64), counts)}
         if emit_source:
-            out["u"] = np.repeat(fdf["v"].to_numpy(dtype=np.int64), counts)
+            out["u"] = np.repeat(v, counts)
         for c in carry:
             out[c] = np.repeat(fdf[c].to_numpy(dtype=np.float64), counts)
-        out["v"] = targets[idx].astype(np.int64)
+        out["v"] = ws.astype(np.int64)
         return pd.DataFrame(out)
 
     def expand(frontier: DataFrame) -> DataFrame:
@@ -522,7 +511,7 @@ def bfs_frontier(
     if num_salts and num_salts > 1:
         # explicit hub-skew salting (north rule): split hot adjacency across
         # num_salts shuffle partitions; see functions.salting
-        from ..functions.salting import salt_edges
+        from ..functions.salting import salt_edges, salted_expand
         from .degrees import hubs as detect_hubs
 
         # skew key is the join-side src: original out-degree forward, original
@@ -539,67 +528,41 @@ def bfs_frontier(
 
     # Lineage discipline (SURVEY.md §4 "hard parts"): the naive formulation
     # visited_{k+1} = union(visited_k, f(frontier_k, visited_k)) doubles the
-    # logical plan every superstep (exponential analysis cost). We therefore
-    # truncate the FRONTIER's lineage every superstep (it is the small state)
-    # via local_cut, and the VISITED union on the Checkpointer's
-    # cadence (durable Parquet when a checkpoint dir is configured → resume).
-    visited = None
-    dist = 0
-    if resume:
-        latest = ckpt.latest()
-        if latest is not None:
-            visited, dist = latest
-            frontier = visited.filter(F.col("dist") == dist).select("seed", "v")
-    if visited is None:
-        frontier = local_cut(seeds.select(
+    # logical plan every superstep (exponential analysis cost). ``sweep``
+    # therefore truncates the FRONTIER's lineage every superstep (it is the
+    # small state) and the VISITED union on the Checkpointer's cadence
+    # (durable Parquet when a checkpoint dir is configured → resume).
+    first = 1
+    latest = ckpt.latest() if resume else None
+    if latest is not None:
+        visited, first = latest
+        frontier = visited.filter(F.col("dist") == first)
+        first += 1
+    else:
+        visited = frontier = local_cut(seeds.select(
             F.col("seed").cast("long").alias("seed"),
             F.col("seed").cast("long").alias("v"),
+            F.lit(0).cast("long").alias("dist"),
         ))
-        visited = local_cut(frontier.withColumn("dist", F.lit(0).cast("long")))
-    # exchange volume per superstep = the expanded frontier (|frontier| ·
-    # avg_degree rows through dedup/groupBy) plus the visited side of the
-    # anti-join — both counted anyway, so the shuffle width tracks them
-    # (adaptive_shuffle_width: ramp-up/drain-out supersteps and small-reach
-    # seed sets stop paying session-width task scheduling per exchange).
-    # AQE off: with it on, every exchange of a superstep is its own Spark job
-    # (a 30-superstep BFS measured 189 jobs with it, 72 without)
-    avg_deg = max(1, -(-graph.num_edges // max(graph.num_nodes, 1)))
-    visited_rows = visited.count()
-    with aqe_disabled(spark), adaptive_shuffle_width(spark) as upd:
-        upd(max(visited_rows, visited_rows * avg_deg))
-        while True:
-            dist += 1
-            with superstep(met, dist) as rec:
-                if salted is not None:
-                    from ..functions.salting import salted_expand
 
-                    expanded = salted_expand(frontier, salted, hdf, num_salts)
-                elif shard_expand is not None:
-                    expanded = shard_expand(frontier)
-                else:
-                    expanded = frontier.join(edges, F.col("v") == F.col("_esrc")).select(
-                        F.col("seed"), F.col("_edst").alias("v")
-                    )
-                # non-eager checkpoint: the count() below is the materializing
-                # action — one Spark job per superstep instead of two
-                nxt = local_cut(
-                    expanded.dropDuplicates(["seed", "v"])
-                    .join(visited.select("seed", "v"), ["seed", "v"], "left_anti"),
-                    eager=False,
-                )
-                rec["rows"] = cnt = nxt.count()
-                if cnt:
-                    visited = ckpt.cut(
-                        visited.union(nxt.withColumn("dist", F.lit(dist).cast("long"))),
-                        dist,
-                    )
-            if cnt == 0:
-                break
-            frontier = nxt
-            visited_rows += cnt
-            upd(max(visited_rows, cnt * avg_deg))
-            if max_supersteps is not None and dist >= max_supersteps:
-                break
+    def expand(frontier: DataFrame, it: int) -> DataFrame:
+        frontier = frontier.select("seed", "v")
+        if salted is not None:
+            expanded = salted_expand(frontier, salted, hdf, num_salts)
+        elif shard_expand is not None:
+            expanded = shard_expand(frontier)
+        else:
+            expanded = frontier.join(edges, F.col("v") == F.col("_esrc")).select(
+                F.col("seed"), F.col("_edst").alias("v")
+            )
+        return expanded.dropDuplicates(["seed", "v"]).withColumn("dist", F.lit(it).cast("long"))
+
+    # a superstep's exchange volume is the expanded frontier (|frontier| ·
+    # avg_degree rows through dedup) plus the visited side of the anti-join
+    avg_deg = max(1, -(-graph.num_edges // max(graph.num_nodes, 1)))
+    visited, _ = sweep(frontier, visited, expand, ["seed", "v"], ckpt, met,
+                       visited.count(), fanout=avg_deg, first=first,
+                       max_supersteps=max_supersteps)
     if salted is not None:
         salted.unpersist()
         hdf.unpersist()

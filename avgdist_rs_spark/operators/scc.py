@@ -68,6 +68,7 @@ from ..streaming.superstep import (
     fixpoint_scope,
     local_cut,
     superstep,
+    sweep,
 )
 
 #: color supersteps per round before "auto" enables pointer jumping (mirrors
@@ -309,37 +310,27 @@ def strongly_connected_components(
             else:
                 # ---- backward frontier from each pivot within its class -------
                 # work proportional to the found SCCs, right for small diameters
-                mem = color.where(F.col("v") == F.col("color")).select("v", "color")
-                mem = local_cut(mem)
-                frontier = mem
-                while True:
-                    it = steps() + 1
-                    with superstep(met, it, phase="bwd") as rec:
-                        preds = (
-                            frontier.join(ea, frontier.v == F.col("_d"))
-                            .select(F.col("_s").alias("v"), "color")
-                            .distinct()
-                            .join(
-                                color.select(
-                                    F.col("v").alias("v"), F.col("color").alias("_vc")
-                                ),
-                                "v",
-                            )
-                            .where(F.col("color") == F.col("_vc"))
-                            .select("v", "color")
-                        )
-                        # non-eager: the count() materializes — one job fewer
-                        new = local_cut(preds.join(mem, ["v", "color"], "anti"), eager=False)
-                        rec["rows"] = n_new = new.count()
-                        if n_new == 0:
-                            break
-                        if it >= max_supersteps:
-                            raise RuntimeError(
-                                f"scc: backward sweep not converged within "
-                                f"max_supersteps={max_supersteps}; raise the budget"
-                            )
-                        mem = ckpt.step(mem.unionAll(new), it)
-                    frontier = new
+                mem = local_cut(color.where(F.col("v") == F.col("color")).select("v", "color"))
+                color_v = color.select("v", F.col("color").alias("_vc"))
+
+                def preds(frontier: DataFrame, it: int) -> DataFrame:
+                    return (
+                        frontier.join(ea, frontier.v == F.col("_d"))
+                        .select(F.col("_s").alias("v"), "color")
+                        .distinct()
+                        .join(color_v, "v")
+                        .where(F.col("color") == F.col("_vc"))
+                        .select("v", "color")
+                    )
+
+                mem, levels = sweep(mem, mem, preds, ["v", "color"], ckpt, met, n_alive,
+                                    first=steps() + 1, max_supersteps=max_supersteps,
+                                    phase="bwd")
+                if levels[-1]:
+                    raise RuntimeError(
+                        f"scc: backward sweep not converged within "
+                        f"max_supersteps={max_supersteps}; raise the budget"
+                    )
             # label each found SCC with its min member; remove from alive
             labels = mem.groupBy("color").agg(F.min("v").alias("component"))
             found = local_cut(mem.join(labels, "color").select("v", "component"))

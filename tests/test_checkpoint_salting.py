@@ -169,6 +169,20 @@ def test_chained_local_checkpoints_stay_flat(spark):
     assert max(late) < 5 * max(max(early), 0.2), (early, late)
 
 
+def test_cut_resets_its_local_cut_chain(spark):
+    """Checkpointer.cut folds a sweep's visited set into a cut of its
+    previous cut, so like step it makes every hard_every-th local cut a
+    Parquet roundtrip, which resets the chain."""
+    ckpt = Checkpointer(spark, name="cutreset", every=2, hard_every=3)
+    df, parquet = spark.range(5), []
+    for it in range(1, 13):
+        df = ckpt.cut(df.select("id"), it)
+        if it % 2 == 0:
+            parquet.append(bool(df.inputFiles()))
+    assert parquet == [False, False, True, False, False, True]
+    assert df.count() == 5
+
+
 def test_local_cut_stores_serialized_blocks_that_spill(spark):
     """local_cut keeps its blocks serialized (no per-row SizeEstimator walk)
     and lets them spill to disk, so a cut block is never dropped."""

@@ -150,19 +150,6 @@ def test_pagerank_setup_is_one_job(spark):
         g.unpersist()
 
 
-@pytest.mark.parametrize("shards", [False, True])
-def test_bfs_frontier_supersteps_share_their_jobs(spark, shards):
-    """bfs_frontier runs with AQE off, so the exchanges of a superstep run in
-    its few jobs instead of one job each (6 per superstep with AQE on, 9
-    sharded): at most 3, the visited cut's cadence included."""
-    g = _graph(spark, CYCLE_TAIL, 5)
-    met = SuperstepMetrics(name="bfs")
-    bfs_frontier(g, spark.createDataFrame([(0,), (3,)], "seed long"), shards=shards, metrics=met)
-    assert met.total_supersteps == 5
-    assert max(r["jobs"] for r in met.records) <= 3, [r["jobs"] for r in met.records]
-    g.unpersist()
-
-
 LOOPS = {
     "cc": lambda g, met: connected_components(g, metrics=met),
     "sssp": lambda g, met: sssp(
@@ -184,6 +171,51 @@ LOOPS = {
     "scc": lambda g, met: strongly_connected_components(g, metrics=met),
     "msf": lambda g, met: minimum_spanning_forest(g.edges, metrics=met),
 }
+
+
+#: the loops on ``sweep``: the phase of their sweep records, and how many
+#: there are on CYCLE_TAIL (the last level is empty)
+SWEEPS = {
+    "bfs_frontier": (None, 5),
+    "bfs_frontier_shards": (None, 5),
+    "betweenness_shards": ("fwd", 5),
+    "scc": ("bwd", 3),
+}
+
+
+@pytest.mark.parametrize("loop", sorted(SWEEPS))
+def test_bfs_frontier_supersteps_share_their_jobs(spark, loop):
+    """Frontier sweeps run with AQE off, so the exchanges of a superstep run
+    in its few jobs instead of one job each (6 per bfs_frontier superstep
+    with AQE on, 9 sharded): at most 3, the visited cut's cadence included."""
+    g = _graph(spark, CYCLE_TAIL, 5)
+    met = SuperstepMetrics(name=loop)
+    LOOPS[loop](g, met).count()
+    phase, steps = SWEEPS[loop]
+    jobs = [r["jobs"] for r in met.records if r.get("phase") == phase]
+    assert len(jobs) == steps and max(jobs) <= 3, jobs
+    g.unpersist()
+
+
+def test_frontier_sweep_budgets(spark):
+    """bfs_frontier(max_supersteps=k) returns exactly levels 0..k; Brandes'
+    forward sweep raises once a level past its budget is not empty."""
+    g = _chain(spark, 8)
+    seeds = spark.createDataFrame([(0,)], "seed long")
+    for k in (1, 3):
+        met = SuperstepMetrics(name="bfs")
+        visited = bfs_frontier(g, seeds, max_supersteps=k, metrics=met)
+        assert sorted(r["dist"] for r in visited.collect()) == list(range(k + 1))
+        assert met.total_supersteps == k
+    # the chain is 7 levels deep: 7 supersteps of budget, then an empty one
+    with pytest.raises(RuntimeError, match="forward BFS past max_supersteps=6"):
+        betweenness(g, seeds=np.array([0]), strategy="shards", max_supersteps=6)
+    bc = betweenness(g, seeds=np.array([0]), strategy="shards", max_supersteps=7)
+    # one seed of 8 vertices: scale 8, dependency 7 - v on the path
+    assert {r["v"]: r["bc"] for r in bc.collect()} == {
+        v: 8.0 * (7 - v) if 0 < v < 7 else 0.0 for v in range(8)
+    }
+    g.unpersist()
 
 
 @pytest.mark.parametrize("loop", sorted(LOOPS))
@@ -317,15 +349,14 @@ def test_metrics_without_counters_keep_timings_only(spark, monkeypatch):
 
 def test_scc_backward_sweep_is_one_job_per_superstep(spark):
     """The small-diameter backward sweep materializes its lazy frontier with
-    the count: one job plus the member-set cut per superstep, one on the
-    last."""
+    the count: one job per superstep, plus the member-set cut on the
+    Checkpointer's cadence (every 4th superstep of the call: 8 here)."""
     g = _graph(spark, CYCLE_TAIL, 5)
     met = SuperstepMetrics(name="scc")
     got = {r["v"]: r["component"] for r in strongly_connected_components(g, metrics=met).collect()}
     assert got == {0: 0, 1: 0, 2: 0, 3: 3, 4: 4}
     bwd = [r for r in met.records if r.get("phase") == "bwd"]
-    assert len(bwd) >= 2
-    assert [r["jobs"] for r in bwd] == [2] * (len(bwd) - 1) + [1]
+    assert [(r["superstep"], r["jobs"]) for r in bwd] == [(7, 1), (8, 2), (9, 1)]
     assert [r["superstep"] for r in met.records] == list(range(1, met.total_supersteps + 1))
     g.unpersist()
 
