@@ -37,7 +37,7 @@ from pyspark.sql import functions as F
 
 from ..functions.hashing import hash_stream
 from ..plans.graph import GraphFrame
-from ..streaming.superstep import SuperstepMetrics, local_cut
+from ..streaming.superstep import local_cut
 from .bfs import _use_csr, bfs, capture_stats
 
 
@@ -514,7 +514,6 @@ def avgdist_unipairs(
 @dataclass
 class EstimatorRun:
     iterations: list[dict] = field(default_factory=list)
-    metrics: SuperstepMetrics | None = None
     stopped_early: bool = False
     seeds_bfsed: int = 0  # distinct seeds actually BFS'd (early-stop savings)
 

@@ -12,12 +12,14 @@ deletion does not matter, so the synchronous superstep version is exact and
 deterministic). Supersteps = peeling depth, typically ≪ diameter.
 
 Physical plan per superstep: the symmetric edge table is filtered to
-edges with BOTH endpoints alive (two hash semi-joins against the n-row
-alive set — the big edge table itself is never aggregated into new state,
-and the alive set shrinks monotonically), then one count aggregate per
-vertex. Convergence = alive count unchanged (one scalar per superstep, the
-same cadence every other fixpoint here uses). Lineage is cut every
-superstep via the shared Checkpointer.
+edges with BOTH endpoints among the last superstep's survivors (two hash
+semi-joins against the n-row survivor set — the big edge table itself is
+never aggregated into new state, and the survivors shrink monotonically),
+then one count aggregate per vertex. The loop runs on ``converge``: the
+state is each survivor's degree among the previous survivors, so a vertex
+with ``deg < k`` is a change (the next superstep peels it) and the state
+with none is the core. The first superstep's job computes the full degree
+table it starts from.
 
 NOT loop-carried like ``scc``'s alive-edge table — measured (round 4,
 sf0.1): k-core peels are SHALLOW (few supersteps), so the upfront shrink
@@ -37,9 +39,8 @@ from ..plans.graph import GraphFrame
 from ..streaming.superstep import (
     Checkpointer,
     SuperstepMetrics,
+    converge,
     fixpoint_scope,
-    local_cut,
-    superstep,
 )
 
 
@@ -68,38 +69,20 @@ def k_core(
         )
         sym.count()
 
-        # degrees over the full graph seed the first peel
-        alive = local_cut(
-            sym.groupBy(F.col("_esrc").alias("v"))
-            .agg(F.count("*").alias("deg"))
-            .where(F.col("deg") >= k)
-        )
-        n_alive = alive.count()
+        def degrees(edges: DataFrame) -> DataFrame:
+            return edges.groupBy(F.col("_esrc").alias("v")).agg(F.count("*").alias("deg"))
 
-        converged = n_alive == 0
-        for it in range(1, max_supersteps + 1):
-            if converged:
-                break
-            with superstep(met, it) as rec:
-                ev = sym.join(alive.select(F.col("v").alias("_esrc")), "_esrc").join(
-                    alive.select(F.col("v").alias("_edst")), "_edst"
-                )
-                nxt = (
-                    ev.groupBy(F.col("_esrc").alias("v"))
-                    .agg(F.count("*").alias("deg"))
-                    .where(F.col("deg") >= k)
-                )
-                # non-eager: the count() below materializes — one job/superstep
-                nxt = ckpt.step(nxt, it, lazy=True)
-                rec["rows"] = n_next = nxt.count()
-            converged = n_next == n_alive or n_next == 0
-            alive, n_alive = nxt, n_next
-    sym.unpersist()
-    if not converged:
-        # mirror the SQL oracle's error() guard: a truncated peel is a
-        # SUPERSET of the k-core — never return it silently
-        raise RuntimeError(
-            f"k_core: peeling not converged after {max_supersteps} supersteps "
-            f"({n_alive} vertices still alive); raise max_supersteps"
-        )
-    return alive
+        def peel(state: DataFrame, it: int) -> DataFrame:
+            alive = state.where(F.col("deg") >= k)
+            return degrees(
+                sym.join(alive.select(F.col("v").alias("_esrc")), "_esrc")
+                .join(alive.select(F.col("v").alias("_edst")), "_edst")
+            )
+
+        # a truncated peel is a SUPERSET of the k-core (the SQL oracle's
+        # error() guard): converge raises instead of returning it
+        try:
+            return converge("k_core", degrees(sym), peel, F.col("deg") < k, ckpt, met,
+                            max_supersteps)
+        finally:
+            sym.unpersist()

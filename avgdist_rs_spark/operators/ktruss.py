@@ -11,15 +11,18 @@ Shape per peel round, all DataFrame-native:
    triangle enumerated once),
 2. per-edge support = explode each triangle into its 3 edges + one keyed
    groupBy (map-side combinable),
-3. keep edges with support ≥ k−2; repeat until the edge count is stable.
+3. keep edges with support ≥ k−2; repeat until every kept edge's support
+   among the kept edges is ≥ k−2.
 
-Scale notes: the triangle join is the one heavy exchange and it is the SAME
-join the bench's `triangle_count` audits (canonical orientation keeps it
-skew-bounded: a hub's edge list splits across the a<b direction); the peel
-loop re-uses the exchange partitioning round over round, each round ends in
-a `localCheckpoint` so the lineage stays flat. Rounds are data-dependent but
-small in practice (peeling removes whole shells at once); `max_rounds`
-guards runaways loudly.
+The rounds run on ``converge``: the state is each surviving edge's support
+among the previous round's survivors, so an edge with support < k−2 is a
+change (the next round peels it). The seed state is every canonical edge at
+support k−2, cut once. Scale notes: the triangle join is the one heavy
+exchange and it is the SAME join the bench's `triangle_count` audits
+(canonical orientation keeps it skew-bounded: a hub's edge list splits
+across the a<b direction); unlike the other fixpoints it keeps the session's
+AQE for that join. Rounds are data-dependent but small in practice (peeling
+removes whole shells at once); `max_rounds` guards runaways loudly.
 """
 
 from __future__ import annotations
@@ -27,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..streaming.superstep import local_cut
+from ..streaming.superstep import Checkpointer, SuperstepMetrics, converge, local_cut
 
 
 def canonical_edges(edges: DataFrame) -> DataFrame:
@@ -63,24 +66,18 @@ def k_truss(edges: DataFrame, k: int, max_rounds: int = 50) -> DataFrame:
     """
     if k < 2:
         raise ValueError("k must be >= 2")
-    cur = local_cut(canonical_edges(edges), eager=False)
-    n = cur.count()  # materializes the checkpoint
-    for _ in range(max_rounds):
-        if n == 0:
-            return cur.select("a", "b", F.lit(0).cast("long").alias("support"))
-        sup = edge_support(cur)
-        nxt = local_cut(
-            cur.join(sup, ["a", "b"], "left")
-            .select(
-                "a", "b", F.coalesce("support", F.lit(0)).cast("long").alias("support")
-            )
-            .where(F.col("support") >= k - 2),
-            # non-eager: the count() below materializes — one job per peel
-            # round instead of two (the superstep-fusion discipline)
-            eager=False,
+
+    def peel(state: DataFrame, it: int) -> DataFrame:
+        cur = state.where(F.col("support") >= k - 2).select("a", "b")
+        return cur.join(edge_support(cur), ["a", "b"], "left").select(
+            "a", "b", F.coalesce("support", F.lit(0)).cast("long").alias("support")
         )
-        m = nxt.count()
-        if m == n:
-            return nxt
-        cur, n = nxt.select("a", "b"), m
-    raise RuntimeError(f"k_truss did not converge within {max_rounds} rounds")
+
+    seed = local_cut(
+        canonical_edges(edges).select("a", "b", F.lit(k - 2).cast("long").alias("support"))
+    )
+    return converge(
+        "k_truss", seed, peel, F.col("support") < k - 2,
+        Checkpointer(edges.sparkSession, name="ktruss", every=4),
+        SuperstepMetrics(name="ktruss", counters=False), max_rounds,
+    )

@@ -34,13 +34,12 @@ def pagerank(
     graph: GraphFrame,
     iterations: int = 10,
     damping: float = 0.85,
-    tol: float | None = None,
     checkpointer: Checkpointer | None = None,
     metrics: SuperstepMetrics | None = None,
     resume: bool = False,
     seeds: list[int] | None = None,
 ) -> DataFrame:
-    """(v, rank) after ``iterations`` supersteps (or earlier if L1 delta < tol).
+    """(v, rank) after ``iterations`` supersteps.
 
     ``seeds`` switches to PERSONALIZED PageRank (random walk with restart):
     the teleport vector concentrates on the seed set — tele(v) = 1/|S| for
@@ -155,8 +154,7 @@ def pagerank(
             .persist()
         )
         for it in range(start_iter + 1, iterations + 1):
-            with superstep(met, it, rows=n) as rec:
-                prev_state, prev_dm, prev_first = state, dm, first
+            with superstep(met, it, rows=n):
                 # every-vertex presence WITHOUT a second join: zero-contribution base
                 # rows ride the SAME union into the single groupBy exchange, so each
                 # superstep is exactly one shuffle of the n-row rank vector (by src)
@@ -178,23 +176,6 @@ def pagerank(
                 else:
                     new_state.count()  # the materializing action
                 state, first = new_state, False
-                if tol is not None:
-                    delta = (
-                        state.select("v", rank_expr(dm, False).alias("rank")).alias("a")
-                        .join(
-                            prev_state.select(
-                                "v", rank_expr(prev_dm, prev_first).alias("rank")
-                            ).alias("b"),
-                            "v",
-                        )
-                        .agg(F.sum(F.abs(F.col("a.rank") - F.col("b.rank"))))
-                        .collect()[0][0]
-                    )
-                else:
-                    delta = None
-                rec["l1_delta"] = delta
-            if tol is not None and delta is not None and delta < tol:
-                break
         ranks = state.select("v", rank_expr(dm, first).alias("rank"))
     norm_edges.unpersist()
     base_rows.unpersist()

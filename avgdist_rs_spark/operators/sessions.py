@@ -2,9 +2,7 @@
 
 The north rule's input is a transcript table; real pipelines *derive* that
 shape from raw event logs. ``sessionize`` cuts a user's event stream into
-sessions at inactivity gaps (the standard 30-minute web rule), and
-``events_to_transcripts`` re-expresses sessions in the canonical
-``transcripts`` schema so every graph operator applies unchanged.
+sessions at inactivity gaps (the standard 30-minute web rule).
 
 Pure window functions (lag + conditional cumulative sum) — one shuffle on
 ``user_id``, partition-local everything else; exactly mirrored in the oracle.
@@ -50,18 +48,3 @@ def session_stats(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
         (F.unix_timestamp(F.max("ts")) - F.unix_timestamp(F.min("ts"))).alias("duration_s"),
     )
 
-
-def events_to_transcripts(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
-    """Sessionized events in the canonical transcripts schema:
-    conv_id = 'u{user}:s{session}', role = event_type bucket, tool = event_type
-    for tool-ish events — so the transcript graph derivation applies as-is."""
-    s = sessionize(events, gap_minutes)
-    return s.select(
-        F.concat_ws(":", F.concat(F.lit("u"), F.col("user_id").cast("string")),
-                    F.concat(F.lit("s"), F.col("session_idx").cast("string"))).alias("conv_id"),
-        F.col("turn_idx"),
-        F.col("event_type").alias("role"),
-        F.coalesce(F.col("props"), F.lit("")).alias("text"),
-        F.when(F.col("event_type").isin("click", "purchase"), F.col("event_type")).alias("tool"),
-        F.col("ts"),
-    )

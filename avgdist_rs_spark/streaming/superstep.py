@@ -52,9 +52,12 @@ Two drivers own the loop itself, each superstep inside one `superstep`
 record:
 
 - `converge`, for "recompute the state until no row changes" (CC, SCC
-  coloring, SSSP, dedup): lazy checkpoint, one materializing
-  ``sum(changed)`` aggregate (one Spark job per superstep), and a hard
-  error when the superstep budget runs out;
+  coloring, SSSP, dedup, k-core, k-truss, MSF's pointer jump): lazy
+  checkpoint, one materializing ``sum(changed)`` aggregate (one Spark job
+  per superstep), the caller's ``**extra`` fields in every record (MSF's
+  ``phase`` and ``round``), and a hard error when the superstep budget runs
+  out. k-truss runs it outside any `fixpoint_scope`, on the session's AQE:
+  its triangle join is the one skew-prone exchange among these loops;
 - `sweep`, for "expand a frontier until a level is empty" (frontier BFS,
   Brandes' forward σ sweep, SCC's backward membership sweep): the
   anti-join against the visited set, a lazy cut of the new level that its
@@ -239,18 +242,20 @@ class Checkpointer:
     """
 
     #: every Nth lineage cut goes through a Parquet roundtrip instead of
-    #: local_cut. Measured on Spark 4.1.2 (tests/test_checkpoint_
-    #: salting.py::test_chained_local_checkpoints_stay_flat): a CHAIN of
-    #: localCheckpoints — each checkpointed from the previous one — starts
-    #: multiplying its per-cut job cost ~2.5× per link past ~12 links (0.2 s
-    #: → 22 s by link 20 on a 7-row table), even though both the logical
-    #: plan (LogicalRDD) and rdd.toDebugString stay flat, so the cost is
-    #: Spark-internal to the checkpoint chain itself. It does not depend on
-    #: the storage level: a chain of serialized cuts (local_cut) with no
-    #: reset measured 0.2 s per cut up to link 14, then 0.43, 0.73, 1.86
-    #: and 5.14 s at links 15-18, so the blow-up is plan-side. A Parquet
-    #: write/read RESETS the chain (measured flat through 40+ iterations
-    #: with a reset every 10). 12 sits just under the onset: short loops
+    #: local_cut. A CHAIN of local cuts (each cut from a plan over the
+    #: previous one) multiplies its per-cut cost past ~12 links: measured
+    #: on Spark 4.1.2 with the pointer-jump chain of tests/test_checkpoint_
+    #: salting.py::test_chained_local_checkpoints_stay_flat, the next
+    #: superstep's ``queryExecution().optimizedPlan().stats()`` took 3 ms at
+    #: link 2, 0.20 s at link 16 and 8.7 s at link 20, while analysis,
+    #: optimization and physical planning stayed at or under 34 ms. That
+    #: call computes the size estimate: Spark sizes a join as the product of
+    #: its inputs' estimates and a local cut keeps its input's estimate, so
+    #: a self-joining loop squares the estimate at every cut (its bit length
+    #: was 250, 499, 997, 1,994, 3,986 and 7,971 over links 2-7), whatever
+    #: the storage level. A Parquet read sizes the state from its files,
+    #: which resets the estimate (measured flat through 40+ iterations with
+    #: a reset every 10). 12 sits just under the onset: short loops
     #: (pagerank 10, cc ~12 supersteps) pay at most one roundtrip, long
     #: fixpoints reset before the multiplier bites (measured: resets at
     #: 9/19/29 keep a 40-link chain at 0.14-0.37 s/cut).
@@ -360,29 +365,23 @@ class Checkpointer:
             self.spark.read.parquet(last["path"]), int(last["superstep"]))
 
 
-#: per-(session, conf key) stack of saved values: nested scopes restore in
-#: LIFO order. Concurrent loops on ONE session remain session-global —
-#: documented limit.
-_CONF_STACKS: dict[tuple[int, str], list[str | None]] = {}
-
-
 @contextmanager
 def _conf_scope(spark: SparkSession, key: str, value: str):
-    stack = _CONF_STACKS.setdefault((id(spark), key), [])
+    """Set ``key`` to ``value`` for the body, then restore the value read on
+    entry (unset if there was none), exceptions included. Nested scopes
+    restore LIFO; concurrent loops on ONE session still share its confs."""
     try:
         old = spark.conf.get(key)
     except Exception:
         old = None
-    stack.append(old)
     spark.conf.set(key, value)
     try:
         yield
     finally:
-        prev = stack.pop()
-        if prev is None:
+        if old is None:
             spark.conf.unset(key)
         else:
-            spark.conf.set(key, prev)
+            spark.conf.set(key, old)
 
 
 def aqe_disabled(spark: SparkSession):
@@ -456,21 +455,28 @@ def converge(
     metrics: SuperstepMetrics,
     max_supersteps: int,
     first: int = 1,
+    **extra,
 ) -> DataFrame:
     """Run supersteps ``first..max_supersteps`` until none changes a row.
 
-    ``step(state, it)`` returns the next state carrying ``_old`` (the
-    previous value of whatever ``changed`` compares); the state it receives
-    is the previous superstep's checkpointed frame, ``_old`` included (or
-    ``state`` itself for the first superstep). Each superstep is a lazy
-    checkpoint materialized by ONE aggregate, ``sum(changed)`` — one Spark
-    job per superstep, recorded with ``rows`` = the changed count. Returns
-    the converged state without ``_old``; raises once the budget is spent,
-    since a truncated fixpoint is a wrong answer.
-    Call it inside a :func:`fixpoint_scope`.
+    ``step(state, it)`` returns the next state, on whose columns
+    ``changed`` is evaluated: usually a carried ``_old`` (the previous value
+    of whatever ``changed`` compares), or a value the next superstep would
+    act on (k-core's ``deg < k``: a survivor whose degree among the last
+    survivors fell below k). The state it receives is the previous
+    superstep's checkpointed frame, ``_old`` included (or ``state`` itself
+    for the first superstep). Each superstep is a lazy checkpoint
+    materialized by ONE aggregate, ``sum(changed)`` — one Spark job per
+    superstep, recorded with ``rows`` = the changed count and ``extra``.
+    Returns the converged state without ``_old``; raises once the budget is
+    spent, since a truncated fixpoint is a wrong answer.
+
+    Call it inside a :func:`fixpoint_scope`. k-truss is the exception: it
+    stays on the session's AQE, because its triangle join is the one
+    skew-prone exchange among the loops.
     """
     for it in range(first, max_supersteps + 1):
-        with superstep(metrics, it) as rec:
+        with superstep(metrics, it, **extra) as rec:
             state = ckpt.step(step(state, it), it, lazy=True)
             rec["rows"] = int(state.agg(F.sum(changed.cast("long"))).collect()[0][0] or 0)
         if rec["rows"] == 0:

@@ -21,6 +21,7 @@ from avgdist_rs_spark.operators.bfs import bfs_frontier
 from avgdist_rs_spark.operators.components import connected_components
 from avgdist_rs_spark.operators.hyperball import hyperball
 from avgdist_rs_spark.operators.kcore import k_core
+from avgdist_rs_spark.operators.ktruss import k_truss
 from avgdist_rs_spark.operators.labelprop import label_propagation
 from avgdist_rs_spark.operators.msf import minimum_spanning_forest
 from avgdist_rs_spark.operators.pagerank import pagerank
@@ -107,15 +108,21 @@ def test_one_spark_job_per_superstep(spark):
             metrics=met,
         ),
     }
-    # pagerank: its iterations; k-core: the degree seed drops vertex 6, then
-    # one superstep per tail vertex left and one with no change; sssp: 5
-    # hops, then one with no change
+    # pagerank: its iterations; k-core: the first superstep peels vertex 6
+    # off the full degree table, then one superstep per tail vertex left and
+    # one with no change; sssp: 5 hops, then one with no change
     steps = {"pagerank": 5, "kcore": 4, "sssp": 6}
+    calls = SuperstepMetrics(name="call")
     for name, run in runs.items():
         met = SuperstepMetrics(name=name)
-        run(met)
+        with superstep(calls, calls.total_supersteps + 1, loop=name):
+            run(met)
         assert met.total_supersteps == steps[name] < Checkpointer.HARD_EVERY, name
         assert [r["jobs"] for r in met.records] == [1] * met.total_supersteps, name
+    # the whole k-core call adds one job to its supersteps: the persisted
+    # symmetric edge table's count
+    call_jobs = {r["loop"]: r["jobs"] for r in calls.records}
+    assert call_jobs["kcore"] == steps["kcore"] + 1
 
     # CC: a chain 5 vertices longer takes exactly 5 more supersteps, and the
     # whole call exactly 5 more jobs. Supersteps stay below the Parquet reset
@@ -135,6 +142,16 @@ def test_one_spark_job_per_superstep(spark):
     assert call_b["jobs"] - call_a["jobs"] == 5
     for h in (g, tri_tail, a, b):
         h.unpersist()
+
+
+def test_k_truss_raises_when_not_converged(spark):
+    """A triangle with a pendant edge takes two 3-truss rounds: one peels the
+    pendant edge, one changes nothing. A budget of one round raises."""
+    edges = spark.createDataFrame([(0, 1), (1, 2), (2, 0), (2, 3)], "src long, dst long")
+    with pytest.raises(RuntimeError, match="k_truss: not converged within max_supersteps=1"):
+        k_truss(edges, k=3, max_rounds=1)
+    got = {(r["a"], r["b"], r["support"]) for r in k_truss(edges, k=3, max_rounds=2).collect()}
+    assert got == {(0, 1, 1), (1, 2, 1), (0, 2, 1)}
 
 
 def test_pagerank_setup_is_one_job(spark):

@@ -5,12 +5,14 @@ equality, not just weight-sum equality.
 """
 
 import hashlib
+import itertools
 
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from avgdist_rs_spark.operators.msf import minimum_spanning_forest, msf_total_weight
+from avgdist_rs_spark.streaming.superstep import SuperstepMetrics
 
 nx = pytest.importorskip("networkx")
 
@@ -76,10 +78,26 @@ def test_msf_long_chain_contracts_in_log_rounds(spark):
     crawling the diameter (max_rounds=12 ≫ log2(200) but ≪ 200)."""
     edges = [(i, i + 1) for i in range(200)]
     e = spark.createDataFrame(edges, "src long, dst long")
-    f = minimum_spanning_forest(e, max_rounds=12)
+    met = SuperstepMetrics(name="msf", counters=False)
+    f = minimum_spanning_forest(e, max_rounds=12, metrics=met)
     assert f.count() == 200  # a tree on 201 vertices
     got = {(r["u"], r["v"]) for r in f.collect()}
     assert got == {(i, i + 1) for i in range(200)}  # the path IS its MSF
+
+    # one sequence of records: each round, then its pointer jumps; the last
+    # round finds no crossing edge and jumps no more
+    recs = met.records
+    assert [r["superstep"] for r in recs] == list(range(1, len(recs) + 1))
+    rounds = [r for r in recs if r["phase"] == "round"]
+    assert [r["round"] for r in rounds] == list(range(1, len(rounds) + 1))
+    assert rounds[-1]["rows"] == 0 < min(r["rows"] for r in rounds[:-1])
+    phases = [p for p, _ in itertools.groupby(r["phase"] for r in recs)]
+    assert phases == ["round", "jump"] * (len(rounds) - 1) + ["round"]
+    for r in rounds[:-1]:
+        jumps = [j["rows"] for j in recs if j["phase"] == "jump" and j["round"] == r["round"]]
+        # the jump budget: depth at least quadruples per jump, and no chain
+        # is longer than the round's 2 * n_cross endpoints
+        assert jumps[-1] == 0 and len(jumps) <= (2 * r["rows"]).bit_length() + 1, (r, jumps)
 
 
 def test_msf_explicit_weights_and_summary(spark):
