@@ -37,7 +37,7 @@ from pyspark.sql import functions as F
 
 from ..functions.hashing import hash_stream
 from ..plans.graph import GraphFrame
-from ..streaming.superstep import local_cut
+from ..streaming.superstep import local_cut, shuffle_partitions
 from .bfs import _use_csr, bfs, capture_stats
 
 
@@ -133,7 +133,7 @@ def sample_coverage_weighted(
         cum = np.cumsum(cov)
         return np.searchsorted(cum, draw(int(cum[-1])), side="left").astype(np.int64)
 
-    p = int(graph.spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    p = shuffle_partitions(graph.spark)
     parted = (
         counts.repartitionByRange(p, "v")
         .sortWithinPartitions("v")
@@ -206,13 +206,17 @@ def _accept(
     )
 
 
+#: K3's first batch draws this many candidate pairs per missing acceptance
+PAIR_OVERSAMPLE = 4.0
+#: K3 raises after this many batches without k acceptances
+PAIR_MAX_ROUNDS = 64
+
+
 def sample_pair_rejection(
     graph: GraphFrame,
     k: int,
     rng: np.random.Generator,
     impl: str = "auto",
-    oversample: float = 4.0,
-    max_rounds: int = 64,
 ) -> pd.DataFrame:
     """K3 batched-speculative pair-rejection sampler (``src/bin/unipairs.rs:72-88``).
 
@@ -227,7 +231,7 @@ def sample_pair_rejection(
     n = graph.num_nodes
     accepted: list[pd.DataFrame] = []
     have = 0
-    for rnd in range(max_rounds):
+    for rnd in range(PAIR_MAX_ROUNDS):
         need = k - have
         if need <= 0:
             break
@@ -235,7 +239,7 @@ def sample_pair_rejection(
         # + sink hubs can accept <0.1% of pairs) converge in a few rounds while
         # total BFS work stays within ~2× optimal; the schedule is
         # deterministic so the local-Python oracle replays it exactly.
-        batch = min(max(int(math.ceil(need * oversample)) << (2 * rnd), 16), 2_000_000)
+        batch = min(max(int(math.ceil(need * PAIR_OVERSAMPLE)) << (2 * rnd), 16), 2_000_000)
         v = rng.integers(0, n, size=batch, dtype=np.int64)
         w = rng.integers(0, n, size=batch, dtype=np.int64)
         ok = v != w

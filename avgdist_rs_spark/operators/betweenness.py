@@ -44,13 +44,14 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..plans.graph import GraphFrame, _num_partitions_for
+from ..plans.graph import GraphFrame
 from ..streaming.superstep import (
     Checkpointer,
     SuperstepMetrics,
     adaptive_shuffle_width,
     aqe_disabled,
     local_cut,
+    shuffle_partitions,
     superstep,
     sweep,
 )
@@ -148,7 +149,7 @@ def _betweenness_shards(
     sensible on small graphs (tests) or very shallow reach."""
     spark = graph.spark
     met = metrics if metrics is not None else SuperstepMetrics(name="betweenness", counters=False)
-    ckpt = Checkpointer(spark, name="betweenness", every=4)
+    ckpt = Checkpointer(spark, name="betweenness")
     expand = _shard_edge_gather(graph, transposed)
 
     # the sampled estimator draws WITH replacement (as the broadcast path,
@@ -322,7 +323,7 @@ def betweenness(
         )
     bc = graph.csr_broadcast(transposed=transposed)
     if seeds is None:
-        seeds_df = seeds_df.repartition(_num_partitions_for(graph.spark))
+        seeds_df = seeds_df.repartition(shuffle_partitions(graph.spark))
 
     def part(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         csr = bc.value

@@ -44,8 +44,10 @@ Underneath it sit two Spark physical strategies, chosen by graph size
    each superstep is resumable. ``impl="shards"`` swaps
    its edge join for per-bucket numpy gathers over a distributed CSR.
 
-``bfs_csr`` and ``bfs_frontier`` stay public for benchmarks and callers that
-need their extra knobs (``dirop``, checkpointing, salting, resume).
+``bfs_csr`` and ``bfs_frontier`` stay public for the benchmark and for
+callers that need what :func:`bfs` does not pass through: ``bfs_csr``'s
+direction-optimizing switch (``dirop``) and ``bfs_frontier``'s hub salting
+and durable, resumable checkpoints.
 """
 
 from __future__ import annotations
@@ -59,7 +61,13 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
 from ..plans.graph import GraphFrame
-from ..streaming.superstep import Checkpointer, SuperstepMetrics, local_cut, sweep
+from ..streaming.superstep import (
+    Checkpointer,
+    SuperstepMetrics,
+    local_cut,
+    shuffle_partitions,
+    sweep,
+)
 
 #: Above this edge count the broadcast CSR is not attempted (driver/executor memory).
 DEFAULT_CSR_MAX_EDGES = 200_000_000
@@ -256,7 +264,7 @@ def _seed_batches(
     the shuffle partitions), so ``coalesce`` reaches the task count without
     the round-robin exchange (and its extra job) a ``repartition`` costs."""
     spark = graph.spark
-    p = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    p = shuffle_partitions(spark)
     if isinstance(seeds, DataFrame):
         return seeds.select(F.col("seed").cast("long").alias("seed")).repartition(p)
     p = min(len(seeds), p)

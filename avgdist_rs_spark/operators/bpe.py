@@ -91,7 +91,6 @@ def bpe_train(
     num_merges: int = 20,
     id_col: str = "doc_id",
     text_col: str = "text",
-    checkpointer: Checkpointer | None = None,
 ) -> DataFrame:
     """(rank, left, right, pair_count) — the learned merge table, rank 1 =
     first merge. Ties broken by (left, right) ascending; stops early when no
@@ -102,7 +101,7 @@ def bpe_train(
     # cost multiplier (see Checkpointer.HARD_EVERY) bites ~2x per link from
     # the start here — reset the chain every 4 merges (measured: flat at
     # ~1 s/merge vs 53 s by merge 12 unreset)
-    ckpt = checkpointer or Checkpointer(spark, name="bpe", every=1, hard_every=4)
+    ckpt = Checkpointer(spark, name="bpe", hard_every=4)
     state = local_cut(word_frequency(docs, id_col, text_col))
     merges: list[tuple[int, str, str, int]] = []
     for rank in range(1, num_merges + 1):

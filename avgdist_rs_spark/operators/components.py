@@ -38,7 +38,6 @@ AUTO_SHORTCUT_AFTER = 4
 def connected_components(
     graph: GraphFrame,
     max_supersteps: int = 200,
-    checkpointer: Checkpointer | None = None,
     metrics: SuperstepMetrics | None = None,
     shortcut: bool | str = "auto",
 ) -> DataFrame:
@@ -70,7 +69,6 @@ def connected_components(
         graph.symmetric_edges(),
         max(graph.num_nodes, graph.num_edges),
         max_supersteps,
-        checkpointer,
         metrics,
         shortcut,
     )
@@ -81,7 +79,6 @@ def min_label_components(
     sym_edges: DataFrame,
     rows: int,
     max_supersteps: int = 200,
-    checkpointer: Checkpointer | None = None,
     metrics: SuperstepMetrics | None = None,
     shortcut: bool | str = "auto",
 ) -> DataFrame:
@@ -96,7 +93,7 @@ def min_label_components(
     """
     spark = vertices.sparkSession
     met = metrics if metrics is not None else SuperstepMetrics(name="cc", counters=False)
-    ckpt = checkpointer or Checkpointer(spark, name="cc", every=4)
+    ckpt = Checkpointer(spark, name="cc")
 
     # 250k rows/partition: the pointer-jump self-joins make this a
     # scheduling-bound loop (see fixpoint_scope)

@@ -145,7 +145,6 @@ def link_prediction_scores(
     graph: GraphFrame,
     max_middle_degree: int | None = None,
     min_common: int = 1,
-    eager: bool = True,
 ) -> DataFrame:
     """(a, b, common, adamic_adar) for non-adjacent undirected pairs sharing
     ≥ ``min_common`` neighbors — the classic link-prediction / related-items
@@ -160,12 +159,9 @@ def link_prediction_scores(
     driver query `eg_link_prediction` passes ``_LP_MAX_MID`` and its DuckDB
     oracle filters middles with the same constant.
 
-    ``eager=True`` (default) materializes the scores (localCheckpoint) and
-    releases the cached undirected edge table before returning — repeated
-    calls in a long-lived session must not leak caches. ``eager=False``
-    returns the lazy plan for composition; the persisted edge table then
-    stays cached for the session lifetime (the lazy plan gives the caller no
-    handle to it — accept that, or use the default).
+    The scores come back materialized (a local cut) and the cached
+    undirected edge table is released before returning: repeated calls in a
+    long-lived session must not leak caches.
     """
     from .triangles import canonical_edges
 
@@ -199,7 +195,6 @@ def link_prediction_scores(
         .where(F.col("common") >= min_common)
         .join(und, ["a", "b"], "anti")  # only NON-adjacent candidate pairs
     )
-    if eager:
-        scores = local_cut(scores)
-        und.unpersist()
+    scores = local_cut(scores)
+    und.unpersist()
     return scores

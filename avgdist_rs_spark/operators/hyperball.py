@@ -53,8 +53,14 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..plans.graph import GraphFrame, _num_partitions_for
-from ..streaming.superstep import Checkpointer, SuperstepMetrics, local_cut, superstep
+from ..plans.graph import GraphFrame
+from ..streaming.superstep import (
+    Checkpointer,
+    SuperstepMetrics,
+    local_cut,
+    shuffle_partitions,
+    superstep,
+)
 
 
 def _alpha(m: int) -> float:
@@ -208,10 +214,10 @@ def hyperball(
     # fewer, larger partitions; measured at sf0.1/p=8: 6.5 s → 4.4 s warm).
     state_bytes = graph.num_nodes * (m + 48)
     nparts = min(
-        _num_partitions_for(spark), max(2, -(-state_bytes // (4 << 20)))
+        shuffle_partitions(spark), max(2, -(-state_bytes // (4 << 20)))
     )
     met = metrics if metrics is not None else SuperstepMetrics(name="hyperball", counters=False)
-    ckpt = checkpointer or Checkpointer(spark, name="hyperball", every=4)
+    ckpt = checkpointer or Checkpointer(spark, name="hyperball")
     # ball(v) grows along v's OUT-edges on the working graph: contributions
     # flow dst → src. Reading the OPPOSITE orientation's table gives rows
     # (u=dst, w=src) hash-partitioned on u — exactly the join key — so each

@@ -48,14 +48,13 @@ def k_core(
     graph: GraphFrame,
     k: int = 2,
     max_supersteps: int = 100,
-    checkpointer: Checkpointer | None = None,
     metrics: SuperstepMetrics | None = None,
 ) -> DataFrame:
     """(v, deg) for every vertex of the k-core; ``deg`` is the degree inside
     the core (≥ k by construction)."""
     spark = graph.spark
     met = metrics if metrics is not None else SuperstepMetrics(name="kcore", counters=False)
-    ckpt = checkpointer or Checkpointer(spark, name="kcore", every=4)
+    ckpt = Checkpointer(spark, name="kcore")
 
     # scoped to the peel's exchange volume: each superstep aggregates the
     # alive-filtered symmetric edge stream (≤ 2m rows) into an ≤ n-row

@@ -78,6 +78,6 @@ def k_truss(edges: DataFrame, k: int, max_rounds: int = 50) -> DataFrame:
     )
     return converge(
         "k_truss", seed, peel, F.col("support") < k - 2,
-        Checkpointer(edges.sparkSession, name="ktruss", every=4),
+        Checkpointer(edges.sparkSession, name="ktruss"),
         SuperstepMetrics(name="ktruss", counters=False), max_rounds,
     )

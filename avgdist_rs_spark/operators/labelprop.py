@@ -32,13 +32,12 @@ from ..streaming.superstep import (
 def label_propagation(
     graph: GraphFrame,
     iterations: int = 5,
-    checkpointer: Checkpointer | None = None,
     metrics: SuperstepMetrics | None = None,
 ) -> DataFrame:
     """(v, label) after ``iterations`` synchronous LPA supersteps."""
     spark = graph.spark
     met = metrics if metrics is not None else SuperstepMetrics(name="lpa", counters=False)
-    ckpt = checkpointer or Checkpointer(spark, name="lpa", every=4)
+    ckpt = Checkpointer(spark, name="lpa")
 
     # scoped to the vote stream (2m rows of (v, label) votes + n state rows
     # per superstep) — measured 4.6 s → 1.8–2.4 s for 4 supersteps at sf0.1.

@@ -93,7 +93,7 @@ def minimum_spanning_forest(
     reset keeps per-cut cost flat through arbitrarily many rounds."""
     spark = edges.sparkSession
     met = metrics if metrics is not None else SuperstepMetrics(name="msf", counters=False)
-    ckpt = Checkpointer(spark, name="msf", every=1, hard_every=6)
+    ckpt = Checkpointer(spark, name="msf", hard_every=6)
     base = met.total_supersteps
 
     def steps() -> int:

@@ -54,8 +54,10 @@ def pagerank(
     """
     spark = graph.spark
     n = graph.num_nodes
+    if n == 0:  # no vertex to hold rank, and 1/n is undefined
+        return spark.createDataFrame([], "v long, rank double")
     met = metrics if metrics is not None else SuperstepMetrics(name="pagerank", counters=False)
-    ckpt = checkpointer or Checkpointer(spark, name="pagerank", every=1)
+    ckpt = checkpointer or Checkpointer(spark, name="pagerank")
 
     # the rank vector (n rows) and the contribution stream (m rows) are all
     # that moves each iteration. The scope opens BEFORE the normalized edge
@@ -138,7 +140,9 @@ def pagerank(
         first = True
         if resume:
             latest = ckpt.latest()
-            if latest is not None:
+            # a state in another format (the older (v, rank) one) is not
+            # resumable: start fresh
+            if latest is not None and latest[0].columns == ["v", "c", "_t"]:
                 state, start_iter = latest
                 first = start_iter == 0
                 if has_dangling and not first:

@@ -95,14 +95,13 @@ def strongly_connected_components(
     graph: GraphFrame,
     max_rounds: int = 64,
     max_supersteps: int = 10_000,
-    checkpointer: Checkpointer | None = None,
     metrics: SuperstepMetrics | None = None,
     shortcut: bool | str = "auto",
 ) -> DataFrame:
     """(v, component) for every vertex; component = min vertex id of v's SCC."""
     spark = graph.spark
     met = metrics if metrics is not None else SuperstepMetrics(name="scc", counters=False)
-    ckpt = checkpointer or Checkpointer(spark, name="scc", every=4)
+    ckpt = Checkpointer(spark, name="scc")
 
     alive = local_cut(graph.vertices())
     n_alive = alive.count()

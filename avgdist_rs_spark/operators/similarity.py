@@ -32,7 +32,7 @@ from pyspark.sql.window import Window
 
 
 from ..plans.graph import spread as _spread  # shared conditional scan-spread
-from ..streaming.superstep import local_cut
+from ..streaming.superstep import local_cut, shuffle_partitions
 
 
 def _dot(a, b) -> F.Column:
@@ -251,10 +251,7 @@ def kmeans_lloyd(
         emb.persist()
     try:
         n_vec = emb.count()
-        w = min(
-            int(spark.conf.get("spark.sql.shuffle.partitions", "32")),
-            max(2, -(-int(n_vec) // 500)),
-        )
+        w = min(shuffle_partitions(spark), max(2, -(-int(n_vec) // 500)))
         e = local_cut(
             emb.repartition(w, F.col(id_col))
             .select(F.col(id_col).alias("nid"), F.col(vec_col).alias("nv"))

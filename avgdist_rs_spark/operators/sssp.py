@@ -46,7 +46,6 @@ def sssp(
     edges_w: DataFrame,
     sources: DataFrame,
     max_supersteps: int = 10_000,
-    checkpointer: Checkpointer | None = None,
     metrics: SuperstepMetrics | None = None,
 ) -> DataFrame:
     """(v, dist) for every vertex reachable from ``sources``.
@@ -56,7 +55,7 @@ def sssp(
     """
     spark = edges_w.sparkSession
     met = metrics if metrics is not None else SuperstepMetrics(name="sssp", counters=False)
-    ckpt = checkpointer or Checkpointer(spark, name="sssp", every=1)
+    ckpt = Checkpointer(spark, name="sssp")
 
     ew = edges_w.select(
         "src", "dst", F.col("w").cast("double").alias("w")

@@ -72,7 +72,6 @@ def random_walks(
     walks_per_start: int = 1,
     starts: DataFrame | None = None,
     undirected: bool = True,
-    checkpoint_every: int | None = None,
 ) -> DataFrame:
     """(walk_id, start, path: array, steps) — one deterministic walk per
     (start, replica), ``walk_length`` hash-driven steps.
@@ -84,8 +83,6 @@ def random_walks(
     ``starts`` (optional single-column DataFrame named ``v``) restricts the
     start set; default = every vertex with at least one edge. ``steps`` <
     ``walk_length`` only in directed mode when the walk stalls at a sink.
-    ``checkpoint_every`` breaks the composed plan every k steps for very long
-    walks (plan-size relief; off by default — a 10-20 step walk is one plan).
     """
     if walk_length < 0:
         raise ValueError("walk_length must be >= 0")
@@ -132,8 +129,6 @@ def random_walks(
             .otherwise(F.col("path"))
             .alias("path"),
         )
-        if checkpoint_every and t % checkpoint_every == 0 and t < walk_length:
-            w = local_cut(w, eager=False)
 
     return w.select(
         "walk_id",
@@ -189,6 +184,11 @@ def _merge_pick(nbrs, common, prev, u, w_return: int, w_common: int, w_out: int)
     return F.element_at(nbrs, (idx + 1).cast("int"))
 
 
+#: node2vec_walks cuts the walk table's lineage every this many steps
+#: (why 2: the comment at the cut)
+CUT_EVERY = 2
+
+
 def node2vec_walks(
     edges: DataFrame,
     walk_length: int,
@@ -197,7 +197,6 @@ def node2vec_walks(
     w_common: int = 4,
     w_out: int = 2,
     starts: DataFrame | None = None,
-    checkpoint_every: int | None = 2,
     max_deg: int | None = None,
 ) -> DataFrame:
     """(walk_id, start, path, steps) — second-order biased walks (node2vec,
@@ -311,7 +310,7 @@ def node2vec_walks(
         # doubles wall vs every-2 at sf0.1 — 12.9 s vs 5.9 s warm — because
         # each barrier materializes the full walk state). The walk is
         # deterministic, so barriers never change results.
-        if checkpoint_every and t % checkpoint_every == 0 and t < walk_length:
+        if t % CUT_EVERY == 0 and t < walk_length:
             w = local_cut(w, eager=False)
 
     return w.select(

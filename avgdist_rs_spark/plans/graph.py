@@ -57,11 +57,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from ..streaming.superstep import aqe_disabled, free_cut, local_cut
-
-
-def _num_partitions_for(spark: SparkSession) -> int:
-    return int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+from ..streaming.superstep import aqe_disabled, free_cut, local_cut, shuffle_partitions
 
 
 def spread(df: DataFrame, key_col: str) -> DataFrame:
@@ -74,7 +70,7 @@ def spread(df: DataFrame, key_col: str) -> DataFrame:
     inputs that already contain exchanges, AQE may materialize the upstream
     stages to answer it — corpus operators apply this at the SCAN, where it
     is free."""
-    n = _num_partitions_for(df.sparkSession)
+    n = shuffle_partitions(df.sparkSession)
     if df.rdd.getNumPartitions() < n:
         return df.repartition(n, F.col(key_col))
     return df
@@ -159,7 +155,6 @@ class GraphFrame:
         num_nodes: int | None = None,
         *,
         dedup: bool = True,
-        persist: bool = True,
     ) -> "GraphFrame":
         """Build from an integer-id edge DataFrame with columns (src, dst).
 
@@ -168,29 +163,27 @@ class GraphFrame:
         vertices — those still count as BFS seeds in exact mode).
         """
         with aqe_disabled(edges.sparkSession):
-            return GraphFrame._from_edges(edges, num_nodes, dedup, persist)
+            return GraphFrame._from_edges(edges, num_nodes, dedup)
 
     @staticmethod
-    def _from_edges(
-        edges: DataFrame, num_nodes: int | None, dedup: bool, persist: bool
-    ) -> "GraphFrame":
+    def _from_edges(edges: DataFrame, num_nodes: int | None, dedup: bool) -> "GraphFrame":
         """:meth:`from_edges` under the caller's AQE setting, which plans
         ``edges`` and its upstream joins; the transpose is always planned with
         AQE off, so its first consumer fills its cache in one job."""
         spark = edges.sparkSession
-        p = _num_partitions_for(spark)
+        p = shuffle_partitions(spark)
         e = edges.select(
             F.col("src").cast("long").alias("src"), F.col("dst").cast("long").alias("dst")
         )
         if dedup:
             e = e.distinct()
-        e = e.repartition(p, "src")
-        if persist:
-            e = e.persist(StorageLevel.MEMORY_AND_DISK)
+        e = e.repartition(p, "src").persist(StorageLevel.MEMORY_AND_DISK)
         with aqe_disabled(spark):
-            et = e.select(F.col("dst").alias("src"), F.col("src").alias("dst")).repartition(p, "src")
-            if persist:
-                et = et.persist(StorageLevel.MEMORY_AND_DISK)
+            et = (
+                e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+                .repartition(p, "src")
+                .persist(StorageLevel.MEMORY_AND_DISK)
+            )
         row = e.agg(F.count("*").alias("m"), F.max(F.greatest("src", "dst")).alias("mx")).collect()[0]
         if num_nodes is None:
             num_nodes = int(row["mx"]) + 1 if row["mx"] is not None else 0
@@ -214,7 +207,7 @@ class GraphFrame:
         key order, not on where range boundaries land, so ids are bit-stable
         across parallelism levels.
         """
-        p = _num_partitions_for(verts.sparkSession)
+        p = shuffle_partitions(verts.sparkSession)
         vs = (
             verts.select(F.col(key).alias("orig"))
             .distinct()
@@ -291,7 +284,7 @@ class GraphFrame:
             )
             # pass dedup through: derivations that already emit distinct edges
             # (e.g. transcript/event edge builders) skip a full edge shuffle here
-            g = GraphFrame._from_edges(e, ids.n, dedup, persist=True)
+            g = GraphFrame._from_edges(e, ids.n, dedup)
         g.nodes = ids.nodes
         g._build_cut, g._build_keys = se, ids.cache
         return g
@@ -303,7 +296,7 @@ class GraphFrame:
         Re-partitioned on ``src`` so superstep joins (labels ⋈ sym on src)
         reuse the edge side's partitioning — only the small label vector
         shuffles per superstep, never the edge table."""
-        p = _num_partitions_for(self.spark)
+        p = shuffle_partitions(self.spark)
         return self.edges.union(self.edges_t).distinct().repartition(p, "src")
 
     def out_degrees(self) -> DataFrame:
@@ -363,7 +356,7 @@ class GraphFrame:
         num_nodes/num_edges; ``{name}_nodes`` the dense-id mapping.
         """
         spark = self.spark
-        p = buckets or _num_partitions_for(spark)
+        p = buckets or shuffle_partitions(spark)
         for suffix, df in (("edges", self.edges), ("edges_t", self.edges_t)):
             (
                 df.write.mode("overwrite")
@@ -409,14 +402,13 @@ class GraphFrame:
         return g
 
     # ------------------------------------------------------------- CSR shards
-    def shard_bucket_size(self, buckets_per_partition: int = 4) -> int:
-        """Vertex-range width of one CSR shard: ~``buckets_per_partition``
-        shards per shuffle partition — small enough that one hot range does
-        not serialize a stage, large enough that shard rows stay chunky."""
-        p = _num_partitions_for(self.spark)
-        return max(1, math.ceil(self.num_nodes / (buckets_per_partition * p)))
+    def shard_bucket_size(self) -> int:
+        """Vertex-range width of one CSR shard: ~4 shards per shuffle
+        partition — small enough that one hot range does not serialize a
+        stage, large enough that shard rows stay chunky."""
+        return max(1, math.ceil(self.num_nodes / (4 * shuffle_partitions(self.spark))))
 
-    def csr_shards(self, transposed: bool = False, bucket_size: int | None = None) -> DataFrame:
+    def csr_shards(self, transposed: bool = False) -> DataFrame:
         """Distributed CSR: one row per vertex-range bucket, built executor-side.
 
         ``(bucket, vlo, offsets binary, targets binary)`` where
@@ -431,17 +423,9 @@ class GraphFrame:
         attr = "_shards_bwd" if transposed else "_shards_fwd"
         cached = getattr(self, attr, None)
         if cached is not None:
-            built_bsz = getattr(self, attr + "_bsz")
-            if bucket_size is not None and bucket_size != built_bsz:
-                # a silent mismatch would make gather-side bucket keys disagree
-                # with the shard table's (truncated/empty reachability, no error)
-                raise ValueError(
-                    f"csr_shards already built with bucket_size={built_bsz}; "
-                    f"requested {bucket_size} — unpersist() first to rebuild"
-                )
             return cached
         df = self.edges_t if transposed else self.edges
-        bsz = bucket_size or self.shard_bucket_size()
+        bsz = self.shard_bucket_size()
         n = self.num_nodes
         tdt = "int32" if n < 2**31 else "int64"
 

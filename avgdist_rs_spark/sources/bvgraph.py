@@ -522,13 +522,15 @@ def read_bvgraph(
     """
     from pyspark.sql import functions as F
 
+    from ..streaming.superstep import shuffle_partitions
+
     props = read_properties(basename)
     n = int(props["nodes"])
     zetak = int(props.get("zetak", 3))
     min_interval = int(props.get("minintervallength", 4))
     windowsize = int(props.get("windowsize", 7))
     maxref = int(props.get("maxrefcount", 3))
-    p = num_splits or int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    p = num_splits or shuffle_partitions(spark)
     p = max(1, min(p, n))
     offs = read_offsets(basename, n)
     bounds = [int(round(i * n / p)) for i in range(p + 1)]

@@ -61,10 +61,10 @@ record:
 - `sweep`, for "expand a frontier until a level is empty" (frontier BFS,
   Brandes' forward σ sweep, SCC's backward membership sweep): the
   anti-join against the visited set, a lazy cut of the new level that its
-  one count materializes, the visited fold on the Checkpointer's cadence,
-  AQE off and a width that tracks the frontier. It returns the level
-  sizes; the caller decides whether a cut-off sweep is a result or an
-  error.
+  one count materializes, the visited fold (coalesced to the loop width) on
+  the Checkpointer's cadence, AQE off and a width that tracks the frontier.
+  It returns the level sizes; the caller decides whether a cut-off sweep is
+  a result or an error.
 """
 
 from __future__ import annotations
@@ -395,6 +395,12 @@ SMALL_STATE_ROWS = 32_000
 _WIDTH_FLOOR = 2
 
 
+def shuffle_partitions(spark: SparkSession) -> int:
+    """The session's ``spark.sql.shuffle.partitions``: the width every
+    exchange plans at, and the ceiling of every loop width."""
+    return int(spark.conf.get("spark.sql.shuffle.partitions"))
+
+
 def _width(session_width: int, rows: int, per_partition: int = 64_000) -> int:
     return min(session_width, max(_WIDTH_FLOOR, -(-int(rows) // per_partition)))
 
@@ -432,8 +438,7 @@ def fixpoint_scope(spark: SparkSession, rows: int, per_partition: int = 64_000):
       while the sort-merge join is exchange-free. At sf0.1's 100k-row state
       the broadcast join measures ~3% faster warm, hence the rows gate.
     """
-    width = _width(int(spark.conf.get("spark.sql.shuffle.partitions", "200")),
-                   rows, per_partition)
+    width = _width(shuffle_partitions(spark), rows, per_partition)
     with ExitStack() as scopes:
         scopes.enter_context(
             _conf_scope(spark, "spark.sql.shuffle.partitions", str(width))
@@ -507,7 +512,8 @@ def sweep(
     ones not yet visited on ``keys`` form a lazy cut that the superstep's one
     ``count()`` materializes; that count is the record's ``rows`` (written
     with ``extra``, the final empty level included). The new rows fold into
-    ``visited`` on ``ckpt``'s cadence and are the next frontier.
+    ``visited``, coalesced to the superstep's width, on ``ckpt``'s cadence
+    and are the next frontier.
 
     Runs with AQE off (with it on, every exchange of a superstep is its own
     Spark job: a 30-superstep BFS measured 189 jobs with it, 72 without), at
@@ -522,7 +528,7 @@ def sweep(
     n_front, it = rows, first
     with aqe_disabled(spark), adaptive_shuffle_width(spark) as upd:
         while True:
-            upd(max(rows, n_front * fanout))
+            width = upd(max(rows, n_front * fanout))
             with superstep(metrics, it, **extra) as rec:
                 new = local_cut(
                     expand(frontier, it).join(visited.select(*keys), keys, "left_anti"),
@@ -530,7 +536,10 @@ def sweep(
                 )
                 rec["rows"] = n_front = new.count()
                 if n_front:
-                    visited = ckpt.cut(visited.union(new), it)
+                    # a union keeps both sides' partitions and, with AQE off,
+                    # nothing merges them: the coalesce keeps a deep sweep's
+                    # tasks per superstep from growing with its depth
+                    visited = ckpt.cut(visited.union(new).coalesce(width), it)
             levels.append(n_front)
             if n_front == 0 or (max_supersteps is not None and it >= max_supersteps):
                 return visited, levels
@@ -545,8 +554,9 @@ def adaptive_shuffle_width(spark: SparkSession):
     invokes with its estimate of the NEXT superstep's exchange rows (typically
     ``max(|visited|, |frontier| · avg_degree)`` — both already counted every
     superstep for convergence), re-sizing ``spark.sql.shuffle.partitions``
-    between supersteps. Spark re-plans each superstep's DataFrames lazily, so
-    a conf change between actions takes effect on the next superstep's jobs.
+    between supersteps and returning the width it set. Spark re-plans each
+    superstep's DataFrames lazily, so a conf change between actions takes
+    effect on the next superstep's jobs.
 
     The width never exceeds the session value captured at entry (large
     frontiers keep full cluster parallelism; the session value is restored on
@@ -554,10 +564,12 @@ def adaptive_shuffle_width(spark: SparkSession):
     drain-out supersteps and small-reach seed sets that otherwise pay
     session-width task scheduling per exchange for near-empty partitions.
     """
-    cur = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
+    cur = shuffle_partitions(spark)
 
-    def update(rows: int) -> None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(_width(cur, rows)))
+    def update(rows: int) -> int:
+        width = _width(cur, rows)
+        spark.conf.set("spark.sql.shuffle.partitions", str(width))
+        return width
 
     with _conf_scope(spark, "spark.sql.shuffle.partitions", str(cur)):
         yield update

@@ -4,8 +4,11 @@
 "partitioning / shuffle / skew handled explicitly" (BASELINE.json north_rule).
 """
 
+import importlib
+import inspect
 import json
 import os
+import pkgutil
 from pathlib import Path
 
 import numpy as np
@@ -61,6 +64,22 @@ def test_pagerank_durable_checkpoint_and_resume(spark, g, tmp_path):
     # resume really started from superstep 4, not 0
     lines = [json.loads(x) for x in open(manifest)]
     assert [l["superstep"] for l in lines] == [1, 2, 3, 4, 5, 6, 7, 8, 9, 10]
+
+
+def test_pagerank_resume_skips_an_older_state_format(spark, g, tmp_path):
+    """A durable state in the older (v, rank) format is not resumed from:
+    pagerank starts fresh and ends at the uninterrupted run's ranks."""
+    ckdir = str(tmp_path / "ck")
+    old = pagerank(g, iterations=4)
+    Checkpointer(spark, "pr", ckdir, every=1).cut(old, 4)
+    resumed = pagerank(
+        g,
+        iterations=10,
+        checkpointer=Checkpointer(spark, "pr", ckdir, every=1),
+        resume=True,
+    ).toPandas().set_index("v")["rank"]
+    full = pagerank(g, iterations=10).toPandas().set_index("v")["rank"]
+    assert np.allclose(resumed.sort_index(), full.sort_index(), atol=1e-12)
 
 
 def test_bfs_frontier_durable_checkpoint(spark, g, tmp_path):
@@ -223,3 +242,43 @@ def test_local_cut_is_the_only_local_checkpoint():
         if (n := p.read_text().count(".localCheckpoint("))
     }
     assert calls == {"streaming/superstep.py": 1}
+
+
+#: the options deleted because no caller set them, by the callable that had
+#: them (``max_rounds`` stays a real budget of scc, msf and k_truss)
+DELETED_OPTIONS = {
+    "operators.components:connected_components": {"checkpointer"},
+    "operators.components:min_label_components": {"checkpointer"},
+    "operators.sssp:sssp": {"checkpointer"},
+    "operators.kcore:k_core": {"checkpointer"},
+    "operators.labelprop:label_propagation": {"checkpointer"},
+    "operators.scc:strongly_connected_components": {"checkpointer"},
+    "operators.bpe:bpe_train": {"checkpointer"},
+    "operators.walks:random_walks": {"checkpoint_every"},
+    "operators.walks:node2vec_walks": {"checkpoint_every"},
+    "plans.graph:GraphFrame.from_edges": {"persist"},
+    "plans.graph:GraphFrame.csr_shards": {"bucket_size"},
+    "plans.graph:GraphFrame.shard_bucket_size": {"buckets_per_partition"},
+    "operators.degrees:link_prediction_scores": {"eager"},
+    "operators.avgdist:sample_pair_rejection": {"oversample", "max_rounds"},
+}
+
+
+def test_only_resumable_loops_take_a_checkpointer():
+    """A caller's Checkpointer matters only where a durable state can be
+    resumed from: pagerank, bfs_frontier and hyperball. No deleted option is
+    accepted again."""
+    takes = set()
+    for path in (Path(avgdist_rs_spark.__file__).parent / "operators").glob("*.py"):
+        mod = importlib.import_module(f"avgdist_rs_spark.operators.{path.stem}")
+        takes |= {
+            f"{path.stem}:{name}"
+            for name, fn in vars(mod).items()
+            if inspect.isfunction(fn) and fn.__module__ == mod.__name__
+            and not name.startswith("_")
+            and "checkpointer" in inspect.signature(fn).parameters
+        }
+    assert takes == {"pagerank:pagerank", "bfs:bfs_frontier", "hyperball:hyperball"}
+    for name, deleted in DELETED_OPTIONS.items():
+        fn = pkgutil.resolve_name(f"avgdist_rs_spark.{name}")
+        assert not deleted & set(inspect.signature(fn).parameters), name

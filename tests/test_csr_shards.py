@@ -108,7 +108,7 @@ def test_csr_shards_50m_edges_never_touch_driver(spark):
     edges = spark.range(n).select(
         F.col("id").alias("src"), ((F.col("id") + 1) % n).alias("dst")
     )
-    big = GraphFrame.from_edges(edges, num_nodes=n, dedup=False, persist=True)
+    big = GraphFrame.from_edges(edges, num_nodes=n, dedup=False)
     rss0 = resource.getrusage(resource.RUSAGE_SELF).ru_maxrss
     try:
         shards = big.csr_shards()
@@ -129,31 +129,16 @@ def test_csr_shards_50m_edges_never_touch_driver(spark):
         big.unpersist()
 
 
-def test_csr_shards_bucket_size_conflict_raises(spark):
-    """The cached shard table carries its build-time bucket width; a caller
-    asking for a DIFFERENT width must get an error, not silently mis-keyed
-    gathers (truncated/empty reachability)."""
-    sg = barabasi_graph(spark, n=120, m=2, seed=3)
-    try:
-        sg.csr_shards(bucket_size=16)
-        assert sg.shard_width() == 16
-        with pytest.raises(ValueError, match="bucket_size"):
-            sg.csr_shards(bucket_size=8)
-        # same width (or unspecified) reuses the cache
-        assert sg.csr_shards(bucket_size=16) is sg.csr_shards()
-    finally:
-        sg.unpersist()
-
-
 def test_shard_width_survives_conf_drift(spark, g):
     """shard_bucket_size() reads live session conf; the gather must use the
     BUILD-time width even after spark.sql.shuffle.partitions changes."""
     old = spark.conf.get("spark.sql.shuffle.partitions")
-    g.csr_shards()
+    shards = g.csr_shards()
     w0 = g.shard_width()
     try:
         spark.conf.set("spark.sql.shuffle.partitions", str(int(old) * 4))
         assert g.shard_width() == w0  # cached width, not recomputed
+        assert g.csr_shards() is shards  # the cache is reused, not rebuilt
         got = per_seed_stats(
             bfs_frontier(g, _seeds_df(spark, [0, 42]), shards=True)
         ).toPandas().set_index("seed").sort_index()

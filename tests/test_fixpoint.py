@@ -235,6 +235,22 @@ def test_frontier_sweep_budgets(spark):
     g.unpersist()
 
 
+def test_sweep_tasks_stay_flat_along_a_chain(spark):
+    """A sweep's visited fold keeps the loop width: along a 40-vertex chain
+    the per-superstep tasks do not grow with the depth (without the
+    coalesce, each level's partitions stay in the union: 29 tasks at
+    superstep 2, 101 at superstep 38)."""
+    g = _chain(spark, 40)
+    met = SuperstepMetrics(name="bfs")
+    bfs_frontier(g, spark.createDataFrame([(0,)], "seed long"), shards=True, metrics=met)
+    tasks = [r["tasks"] for r in met.records]
+    assert len(tasks) == 40
+    # every window of 4 supersteps holds one visited cut (the Checkpointer's
+    # cadence): supersteps 36-39 against 2-5
+    assert max(tasks[-5:-1]) <= max(tasks[1:5]), tasks
+    g.unpersist()
+
+
 @pytest.mark.parametrize("loop", sorted(LOOPS))
 def test_every_loop_records_supersteps_with_counters(spark, loop):
     g = _graph(spark, CYCLE_TAIL, 5)
