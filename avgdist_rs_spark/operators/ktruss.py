@@ -17,12 +17,17 @@ Shape per peel round, all DataFrame-native:
 The rounds run on ``converge``: the state is each surviving edge's support
 among the previous round's survivors, so an edge with support < k−2 is a
 change (the next round peels it). The seed state is every canonical edge at
-support k−2, cut once. Scale notes: the triangle join is the one heavy
-exchange and it is the SAME join the bench's `triangle_count` audits
-(canonical orientation keeps it skew-bounded: a hub's edge list splits
-across the a<b direction); unlike the other fixpoints it keeps the session's
-AQE for that join. Rounds are data-dependent but small in practice (peeling
-removes whole shells at once); `max_rounds` guards runaways loudly.
+support k−2, cut once; its count sizes the ``fixpoint_scope`` the rounds
+run in (AQE off: one Spark job per round; on the session's AQE every
+exchange was its own job, 19 jobs against 3 for the 2 rounds of a
+1,000-conversation transcript graph). Scale notes: the triangle join is the
+one heavy exchange and it is the SAME join the bench's `triangle_count`
+audits (canonical orientation keeps it skew-bounded: a hub's edge list
+splits across the a<b direction, and a tool hub, whose key sorts last, is
+never the middle vertex the first join keys on; on that graph at 4 partitions the join stages' slowest task took
+at most 1.4× the median task, 1.6× on the session's AQE). Rounds are
+data-dependent but small in practice (peeling removes whole shells at
+once); `max_rounds` guards runaways loudly.
 """
 
 from __future__ import annotations
@@ -30,7 +35,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..streaming.superstep import Checkpointer, SuperstepMetrics, converge, local_cut
+from ..streaming.superstep import (
+    Checkpointer,
+    SuperstepMetrics,
+    aqe_disabled,
+    converge,
+    fixpoint_scope,
+    local_cut,
+)
 
 
 def canonical_edges(edges: DataFrame) -> DataFrame:
@@ -73,11 +85,16 @@ def k_truss(edges: DataFrame, k: int, max_rounds: int = 50) -> DataFrame:
             "a", "b", F.coalesce("support", F.lit(0)).cast("long").alias("support")
         )
 
-    seed = local_cut(
-        canonical_edges(edges).select("a", "b", F.lit(k - 2).cast("long").alias("support"))
-    )
-    return converge(
-        "k_truss", seed, peel, F.col("support") < k - 2,
-        Checkpointer(edges.sparkSession, name="ktruss"),
-        SuperstepMetrics(name="ktruss", counters=False), max_rounds,
-    )
+    spark = edges.sparkSession
+    with aqe_disabled(spark):
+        seed = local_cut(
+            canonical_edges(edges).select("a", "b", F.lit(k - 2).cast("long").alias("support")),
+            eager=False,
+        )
+        rows = seed.count()
+    with fixpoint_scope(spark, max(rows, 1)):
+        return converge(
+            "k_truss", seed, peel, F.col("support") < k - 2,
+            Checkpointer(spark, name="ktruss"),
+            SuperstepMetrics(name="ktruss", counters=False), max_rounds,
+        )

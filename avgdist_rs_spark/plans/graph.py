@@ -253,16 +253,23 @@ class GraphFrame:
             # sessionize → window → distinct chain behind the session graph).
             # A cut, not a cache: every later query on the graph then plans
             # a leaf instead of that chain (~17 vs ~90 ms per query on the
-            # transcript graph). The coalesce to the partitions it already
-            # has makes the cut report no partitioning: Spark's
-            # LogicalRDD.newInstance leaves a cut's partitioning on the old
-            # attribute ids, so the copy on the other side of a self-join of
-            # ``edges`` would stop matching its cache and re-run the build.
-            sel = edges.select(
-                F.col("src").cast("string").alias("s_orig"),
-                F.col("dst").cast("string").alias("d_orig"),
+            # transcript graph). The coalesce makes the cut report no
+            # partitioning: Spark's LogicalRDD.newInstance leaves a cut's
+            # partitioning on the old attribute ids, so the copy on the other
+            # side of a self-join of ``edges`` would stop matching its cache
+            # and re-run the build. Coalescing to the shuffle width is a no-op
+            # on a derivation that ends in an exchange and narrows a wider
+            # input without a shuffle. The input's own count would cost a
+            # ``.rdd`` conversion that plans and wraps the whole derivation
+            # (~120 ms per transcript build), and the executed plan's
+            # partitioning reports 0 for a union or a file scan.
+            se = local_cut(
+                edges.select(
+                    F.col("src").cast("string").alias("s_orig"),
+                    F.col("dst").cast("string").alias("d_orig"),
+                ).coalesce(shuffle_partitions(spark)),
+                eager=False,
             )
-            se = local_cut(sel.coalesce(max(1, sel.rdd.getNumPartitions())), eager=False)
             verts = se.select(F.col("s_orig").alias("orig")).union(
                 se.select(F.col("d_orig").alias("orig"))
             )

@@ -37,7 +37,7 @@ jobs by group keeps counting them. The ``name:superstep`` label goes into
 the job description, and the caller's description is restored on exit.
 `supersteps_per_min` is the benchmark unit in BASELINE.json.
 
-Every fixpoint loop (CC, SCC, k-core, SSSP, MSF, PageRank, label
+Every fixpoint loop (CC, SCC, k-core, k-truss, SSSP, MSF, PageRank, label
 propagation) runs inside one `fixpoint_scope(spark, rows, per_partition)`.
 Its policy, for ``rows`` ≈ the loop's per-superstep exchange volume:
 
@@ -56,8 +56,7 @@ record:
   checkpoint, one materializing ``sum(changed)`` aggregate (one Spark job
   per superstep), the caller's ``**extra`` fields in every record (MSF's
   ``phase`` and ``round``), and a hard error when the superstep budget runs
-  out. k-truss runs it outside any `fixpoint_scope`, on the session's AQE:
-  its triangle join is the one skew-prone exchange among these loops;
+  out;
 - `sweep`, for "expand a frontier until a level is empty" (frontier BFS,
   Brandes' forward σ sweep, SCC's backward membership sweep): the
   anti-join against the visited set, a lazy cut of the new level that its
@@ -476,9 +475,7 @@ def converge(
     Returns the converged state without ``_old``; raises once the budget is
     spent, since a truncated fixpoint is a wrong answer.
 
-    Call it inside a :func:`fixpoint_scope`. k-truss is the exception: it
-    stays on the session's AQE, because its triangle join is the one
-    skew-prone exchange among the loops.
+    Call it inside a :func:`fixpoint_scope`.
     """
     for it in range(first, max_supersteps + 1):
         with superstep(metrics, it, **extra) as rec:

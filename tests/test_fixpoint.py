@@ -16,6 +16,7 @@ import pytest
 from py4j.protocol import Py4JJavaError
 from pyspark.sql import functions as F
 
+from avgdist_rs_spark.operators import ktruss as ktruss_module
 from avgdist_rs_spark.operators.betweenness import betweenness
 from avgdist_rs_spark.operators.bfs import bfs_frontier
 from avgdist_rs_spark.operators.components import connected_components
@@ -28,6 +29,7 @@ from avgdist_rs_spark.operators.pagerank import pagerank
 from avgdist_rs_spark.operators.scc import strongly_connected_components
 from avgdist_rs_spark.operators.sssp import hash_weights, sssp
 from avgdist_rs_spark.plans.graph import GraphFrame
+from avgdist_rs_spark.sources.transcripts import synth_transcripts, transcript_graph
 from avgdist_rs_spark.streaming import superstep as superstep_module
 from avgdist_rs_spark.streaming.superstep import (
     COUNTERS,
@@ -152,6 +154,28 @@ def test_k_truss_raises_when_not_converged(spark):
         k_truss(edges, k=3, max_rounds=1)
     got = {(r["a"], r["b"], r["support"]) for r in k_truss(edges, k=3, max_rounds=2).collect()}
     assert got == {(0, 1, 1), (1, 2, 1), (0, 2, 1)}
+
+
+def test_k_truss_runs_one_job_per_round(spark, monkeypatch):
+    """Inside its fixpoint scope (AQE off) a k-truss call runs the seed
+    count and one job per round; on the session's AQE every exchange of the
+    triangle join was its own job. Rounds are read from the metrics the
+    operator makes for itself."""
+    made: list[SuperstepMetrics] = []
+
+    def metrics(**kw):
+        made.append(SuperstepMetrics(**kw))
+        return made[-1]
+
+    monkeypatch.setattr(ktruss_module, "SuperstepMetrics", metrics)
+    tr = synth_transcripts(spark, n_convs=100, mean_turns=8, n_tools=32, seed=4)
+    g = transcript_graph(tr, tool_responses=True)
+    call = SuperstepMetrics(name="k_truss_call")
+    with superstep(call, 1):
+        k_truss(g.edges, k=3)
+    rounds = made[0].total_supersteps
+    assert rounds >= 2 and call.records[-1]["jobs"] <= rounds + 2, (rounds, call.records)
+    g.unpersist()
 
 
 def test_pagerank_setup_is_one_job(spark):

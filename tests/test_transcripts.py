@@ -5,16 +5,18 @@ under stable turn ordering — tested here as bit-identical regeneration under t
 same seed at different parallelism.
 """
 
+from collections import Counter
+
 import pyspark.sql.functions as F
 import pytest
 
 from avgdist_rs_spark.operators.avgdist import exact_avgdist
 from avgdist_rs_spark.sources.transcripts import (
-    reply_edges,
     synth_transcripts,
-    tool_edges,
+    transcript_edges,
     transcript_graph,
 )
+from avgdist_rs_spark.streaming.superstep import aqe_disabled
 
 
 @pytest.fixture(scope="module")
@@ -65,11 +67,68 @@ def test_deterministic_across_parallelism(spark, tr):
     assert again.exceptAll(tr).count() == 0 and tr.exceptAll(again).count() == 0
 
 
-def test_edge_counts(tr):
-    n_turns = tr.count()
-    n_convs = tr.select("conv_id").distinct().count()
-    assert reply_edges(tr).count() == n_turns - n_convs  # len-1 per conversation
-    assert tool_edges(tr).count() == tr.where(F.col("tool").isNotNull()).count()
+@pytest.mark.parametrize(
+    "seed, rows, checksum",
+    [(4, 8944, 6183486271465783330), (7, 9122, -4175325618329396209)],
+)
+def test_generator_is_pinned(spark, seed, rows, checksum):
+    """The table of a seed never changes: its row count and order-free
+    checksum are the ones every earlier version of the generator produced."""
+    tr = synth_transcripts(spark, n_convs=1000, mean_turns=8, n_tools=32, seed=seed)
+    got = tr.agg(F.count("*"), F.expr("bit_xor(xxhash64(*))")).first()
+    assert (got[0], got[1]) == (rows, checksum)
+
+
+def _oracle_edges(tr, tool_responses: bool) -> Counter:
+    """Every edge kind built turn by turn from the collected table."""
+    df = tr.select("conv_id", "turn_idx", "tool").toPandas()
+    want: Counter = Counter()
+    for c, turns in df.sort_values("turn_idx").groupby("conv_id"):
+        idx, tools = list(turns["turn_idx"]), list(turns["tool"])
+        for j, (i, tool) in enumerate(zip(idx, tools)):
+            key = f"T:{c}:{i}"
+            nxt = f"T:{c}:{idx[j + 1]}" if j + 1 < len(idx) else None
+            if nxt is not None:
+                want[(key, nxt)] += 1  # reply
+            if tool is not None:
+                want[(key, f"tool:{tool}")] += 1  # tool invocation
+                if tool_responses and nxt is not None:
+                    want[(f"tool:{tool}", nxt)] += 1  # tool response
+    return want
+
+
+@pytest.mark.parametrize("tool_responses", [False, True])
+def test_edges_match_a_pandas_oracle(tr, tool_responses):
+    """Reply, tool-invocation and tool-response edges, as a multiset."""
+    got = Counter((r["src"], r["dst"]) for r in transcript_edges(tr, tool_responses).collect())
+    want = _oracle_edges(tr, tool_responses)
+    assert got == want
+    n_turns, n_convs = tr.count(), tr.select("conv_id").distinct().count()
+    n_reply = sum(v for (s, d), v in want.items() if s.startswith("T:") and d.startswith("T:"))
+    assert n_reply == n_turns - n_convs  # len-1 per conversation
+
+
+def _plan_nodes(plan) -> list:
+    nodes, todo = [], [plan]
+    while todo:
+        node = todo.pop()
+        nodes.append(node)
+        kids = node.children()
+        todo.extend(kids.apply(i) for i in range(kids.size()))
+    return nodes
+
+
+def test_edges_take_one_window_and_one_exchange(spark, tr):
+    """Every edge kind comes from one window over one shuffle on conv_id."""
+    with aqe_disabled(spark):
+        plan = transcript_edges(tr, tool_responses=True)._jdf.queryExecution().executedPlan()
+    nodes = _plan_nodes(plan)
+    windows = [n for n in nodes if n.nodeName() == "Window"]
+    exchanges = [
+        n for n in nodes
+        if n.nodeName() == "Exchange" and "conv_id" in n.outputPartitioning().toString()
+    ]
+    assert (len(windows), len(exchanges)) == (1, 1)
 
 
 def test_graph_derivation_and_hubs(tr):
