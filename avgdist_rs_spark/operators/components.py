@@ -1,4 +1,5 @@
-"""Connected components via hash-min label propagation (north rule).
+"""Connected components via hash-min label propagation (north rule), and the
+label-propagation superstep that CC and SCC's coloring share.
 
 Seeded by the reference's implicit component detection inside SIMPATH
 renumbering (``src/lib.rs:379-400`` — "graph isn't connected; working with
@@ -8,16 +9,21 @@ vertex takes the min of its own and its (undirected) neighbors' labels;
 converged when no label changes. The result is exactly the min vertex id of
 each weakly-connected component — deterministic, exact-match testable.
 
-Scale notes: supersteps = O(component diameter) — fine for the short-diameter
-web/social regime; for pathological chains the star-contraction
-(large-star/small-star) variant halves distances per round, at the cost of two
-shuffles per round. Hash-min with the pre-partitioned symmetric edge table is
-one shuffle (label exchange) + one aggregate per superstep.
+:func:`label_step` is that superstep for any label priority: CC keeps the
+smallest id, SCC's color and rcolor passes keep the greatest
+``(xxhash64(v), v)``. One fused union-aggregate exchange per superstep (the
+edge table is pre-partitioned on its source column, so only the label table
+shuffles), then, from superstep ``first + jump_after`` on, ``JUMP_SQUARINGS``
+monotone pointer-jump self-joins of the label table: supersteps drop from
+O(diameter) to O(log diameter) on long chains, and short-diameter graphs
+converge before the jump's joins would pay.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from typing import Callable
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
@@ -31,35 +37,88 @@ from ..streaming.superstep import (
 )
 
 
-#: supersteps of plain hash-min before "auto" shortcut enables pointer jumping
+#: supersteps of plain propagation before pointer jumping starts: the
+#: short-diameter web/social regime converges before jumping would help and
+#: never pays the extra self-joins
 AUTO_SHORTCUT_AFTER = 4
+
+#: self-joins per jump superstep. On a PURE pointer map, iterated squaring
+#: grows depth 2^k per superstep (measured: a 4096-chain resolves in 12/6/4/3
+#: supersteps at k=1/2/3/4), but SCC's color fixpoint builds its chains by
+#: priority-max over 1-hop-per-superstep reachability — the max vertex of a
+#: ball sits at a random depth inside it, so the second and later
+#: dereferences extend coverage sub-multiplicatively. Measured on the 10k
+#: directed cycle: k=2 and k=4 BOTH converge in 41 supersteps, with k=4
+#: doubling per-superstep wall — 2 is the knee.
+JUMP_SQUARINGS = 2
+
+
+def label_step(
+    edges: DataFrame,
+    src: str,
+    dst: str,
+    label: str,
+    priority: Callable[[Column], Column],
+    first: int = 1,
+    jump_after: int = AUTO_SHORTCUT_AFTER,
+) -> Callable[[DataFrame, int], DataFrame]:
+    """A :func:`converge` step over (v, ``label``) state: every vertex takes
+    the label of greatest ``priority`` among its own and those of its
+    in-neighbors along ``edges``' ``src → dst``, carrying its old label as
+    ``_old``. From superstep ``first + jump_after`` on it then adopts its
+    label's own label when that has greater priority, ``JUMP_SQUARINGS``
+    times through the already-jumped map (M → M² → M⁴). That is sound
+    whenever the label relation composes: a vertex reaching your label
+    reaches you. ``priority`` must order distinct labels strictly."""
+
+    def step(state: DataFrame, it: int) -> DataFrame:
+        # one fused exchange: the state row (carrying the old label for
+        # change detection) rides the SAME union as the neighbor
+        # contributions into one groupBy; max(_prev) picks the state row's
+        # old label (contributions carry NULL)
+        contrib = state.join(edges, state.v == F.col(src)).select(
+            F.col(dst).alias("v"),
+            F.col(label).alias("cand"),
+            F.lit(None).cast("long").alias("_prev"),
+        )
+        own = state.select("v", F.col(label).alias("cand"), F.col(label).alias("_prev"))
+        stepped = (
+            contrib.unionAll(own)
+            .groupBy("v")
+            .agg(
+                F.max_by("cand", priority(F.col("cand"))).alias(label),
+                F.max("_prev").alias("_old"),
+            )
+        )
+        if it - first >= jump_after:
+            for _sq in range(JUMP_SQUARINGS):
+                parent = stepped.select(F.col("v").alias("_pv"), F.col(label).alias("_pc"))
+                # a label with no row of its own keeps itself
+                pc = F.coalesce(F.col("_pc"), F.col(label))
+                stepped = stepped.join(parent, stepped[label] == F.col("_pv"), "left").select(
+                    "v",
+                    F.when(priority(pc) > priority(F.col(label)), pc)
+                    .otherwise(F.col(label))
+                    .alias(label),
+                    "_old",
+                )
+        return stepped
+
+    return step
 
 
 def connected_components(
     graph: GraphFrame,
     max_supersteps: int = 200,
     metrics: SuperstepMetrics | None = None,
-    shortcut: bool | str = "auto",
 ) -> DataFrame:
     """(v, component) where component = min vertex id reachable undirected.
 
-    Pointer jumping (``shortcut``) — after taking the neighbor minimum, every
-    vertex also adopts its current label's label
-    (``component ← label(component)``). Labels then travel 2^k hops in k
-    supersteps instead of k hops, turning O(diameter) convergence into
-    O(log diameter) — the north star is explicitly *large-diameter* graphs
-    (the reference's payment graph shows ~24k-hop chains,
-    ``results/bit-count.txt``), where plain hash-min would need tens of
-    thousands of supersteps. Cost: one extra self-join of the (small) label
-    table per superstep.
-
-    The DEFAULT ``"auto"`` pays that cost only when it matters: plain
-    hash-min for the first ``AUTO_SHORTCUT_AFTER`` supersteps (the
-    short-diameter web/social regime converges before jumping would help),
-    then pointer jumping from superstep 5 on — a 10^4-hop chain finishes in
-    ~12 supersteps total (benchmarked), a diameter-≤4 session graph never
-    pays the extra join. ``True``/``False`` force either mode; all three
-    converge to the identical exact labeling (tested).
+    Plain hash-min for the first ``AUTO_SHORTCUT_AFTER`` supersteps, then
+    pointer jumping (:func:`label_step`): a 10^4-hop chain finishes in ~12
+    supersteps (the north star is *large-diameter* graphs; the reference's
+    payment graph shows ~24k-hop chains, ``results/bit-count.txt``), a
+    diameter-≤4 session graph never pays the extra joins.
 
     Raises ``RuntimeError`` when ``max_supersteps`` runs out: a truncated
     labeling splits components.
@@ -70,7 +129,6 @@ def connected_components(
         max(graph.num_nodes, graph.num_edges),
         max_supersteps,
         metrics,
-        shortcut,
     )
 
 
@@ -80,7 +138,6 @@ def min_label_components(
     rows: int,
     max_supersteps: int = 200,
     metrics: SuperstepMetrics | None = None,
-    shortcut: bool | str = "auto",
 ) -> DataFrame:
     """The hash-min kernel: (v, component) over ``vertices`` (v) and the
     undirected edge table ``sym_edges`` (src, dst; both directions present).
@@ -104,51 +161,11 @@ def min_label_components(
             .persist(StorageLevel.MEMORY_AND_DISK)
         )
         sym.count()
-        labels = local_cut(vertices.select("v", F.col("v").alias("component")))
-
-        def superstep(labels: DataFrame, it: int) -> DataFrame:
-            # one fused exchange per superstep: the state row (carrying the old
-            # label for change detection) rides the SAME union as the neighbor
-            # contributions into a single groupBy — min(cand) over {own label} ∪
-            # {neighbor labels} IS least(own, neighbor-min), and max(_prev) picks
-            # the state row's old label (contributions carry NULL).
-            contrib = labels.join(sym, labels.v == F.col("_esrc")).select(
-                F.col("_edst").alias("v"),
-                F.col("component").alias("cand"),
-                F.lit(None).cast("long").alias("_prev"),
-            )
-            state = labels.select(
-                "v", F.col("component").alias("cand"), F.col("component").alias("_prev")
-            )
-            stepped = (
-                contrib.unionAll(state)
-                .groupBy("v")
-                .agg(F.min("cand").alias("component"), F.max("_prev").alias("_old"))
-                .select("v", "_old", "component")
-            )
-            if shortcut is True or (shortcut == "auto" and it > AUTO_SHORTCUT_AFTER):
-                # pointer jump by SQUARING: the first dereference builds
-                # M∘M (labels through the post-hop map M), the second
-                # dereferences through ITSELF — M⁴ per superstep for two
-                # self-joins. INNER joins: every component value is the min
-                # of some vertex-id set, hence itself a key in `stepped`.
-                for _sq in range(2):
-                    parent = stepped.select(
-                        F.col("v").alias("_pv"), F.col("component").alias("_pc")
-                    )
-                    stepped = stepped.join(
-                        parent, stepped.component == F.col("_pv")
-                    ).select(
-                        "v",
-                        "_old",
-                        F.least(F.col("component"), F.col("_pc")).alias("component"),
-                    )
-            return stepped
-
         labels = converge(
             "connected_components",
-            labels,
-            superstep,
+            local_cut(vertices.select("v", F.col("v").alias("component"))),
+            # the smallest id has the greatest priority
+            label_step(sym, "_esrc", "_edst", "component", F.bitwise_not),
             F.col("component") != F.col("_old"),
             ckpt,
             met,

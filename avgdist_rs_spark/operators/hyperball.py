@@ -135,7 +135,7 @@ def _init_regs(v: np.ndarray, p: int) -> np.ndarray:
     return regs
 
 
-def _merge_sorted(p_parts: int, m: int):
+def _merge_sorted(m: int):
     """mapInPandas fn: register-wise max per vertex over batches sorted by v.
 
     One partition arrives as SEVERAL Arrow batches and a vertex's rows can
@@ -354,7 +354,7 @@ def hyperball(
                 # the same kernel, BEFORE the exchange — cuts shuffled blob rows
                 # from one-per-edge to one-per-touched-vertex-per-partition
                 contrib = contrib.sortWithinPartitions("v").mapInPandas(
-                    _merge_sorted(nparts, m), schema="v long, regs binary"
+                    _merge_sorted(m), schema="v long, regs binary"
                 )
             allr = state.select(
                 "v", "regs", "nf", "harmonic", "dist_sum", "ecc",

@@ -16,13 +16,14 @@ Shape per peel round, all DataFrame-native:
 
 The rounds run on ``converge``: the state is each surviving edge's support
 among the previous round's survivors, so an edge with support < k−2 is a
-change (the next round peels it). The seed state is every canonical edge at
-support k−2, cut once; its count sizes the ``fixpoint_scope`` the rounds
-run in (AQE off: one Spark job per round; on the session's AQE every
-exchange was its own job, 19 jobs against 3 for the 2 rounds of a
-1,000-conversation transcript graph). Scale notes: the triangle join is the
-one heavy exchange and it is the SAME join the bench's `triangle_count`
-audits (canonical orientation keeps it skew-bounded: a hub's edge list
+change (the next round peels it). The input edge count, an upper bound on
+the canonical edges, sizes the ``fixpoint_scope`` the rounds run in (AQE
+off: one Spark job per round; on the session's AQE every exchange was its
+own job, 19 jobs against 3 for the 2 rounds of a 1,000-conversation
+transcript graph). The seed state, every canonical edge at support k−2, is
+built inside the scope, so every round stage runs at the loop width. Scale
+notes: the triangle join is the one heavy exchange and it is the SAME join
+the bench's `triangle_count` audits (canonical orientation keeps it skew-bounded: a hub's edge list
 splits across the a<b direction, and a tool hub, whose key sorts last, is
 never the middle vertex the first join keys on; on that graph at 4 partitions the join stages' slowest task took
 at most 1.4× the median task, 1.6× on the session's AQE). Rounds are
@@ -87,12 +88,17 @@ def k_truss(edges: DataFrame, k: int, max_rounds: int = 50) -> DataFrame:
 
     spark = edges.sparkSession
     with aqe_disabled(spark):
+        # the count materializes the cut, so the input's plan runs once
+        edges = local_cut(edges.select("src", "dst"), eager=False)
+        rows = edges.count()
+    with fixpoint_scope(spark, max(rows, 1)) as width:
+        # the first round materializes the seed; coalesced, its scan runs at
+        # the loop width like the rest of the round
         seed = local_cut(
-            canonical_edges(edges).select("a", "b", F.lit(k - 2).cast("long").alias("support")),
+            canonical_edges(edges.coalesce(width))
+            .select("a", "b", F.lit(k - 2).cast("long").alias("support")),
             eager=False,
         )
-        rows = seed.count()
-    with fixpoint_scope(spark, max(rows, 1)):
         return converge(
             "k_truss", seed, peel, F.col("support") < k - 2,
             Checkpointer(spark, name="ktruss"),

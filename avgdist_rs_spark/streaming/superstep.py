@@ -52,11 +52,11 @@ Two drivers own the loop itself, each superstep inside one `superstep`
 record:
 
 - `converge`, for "recompute the state until no row changes" (CC, SCC
-  coloring, SSSP, dedup, k-core, k-truss, MSF's pointer jump): lazy
-  checkpoint, one materializing ``sum(changed)`` aggregate (one Spark job
-  per superstep), the caller's ``**extra`` fields in every record (MSF's
-  ``phase`` and ``round``), and a hard error when the superstep budget runs
-  out;
+  trim and coloring, SSSP, dedup, k-core, k-truss, MSF's pointer jump):
+  lazy checkpoint, one materializing ``sum(changed)`` aggregate (one Spark
+  job per superstep), the caller's ``**extra`` fields in every record (SCC's
+  ``phase``, MSF's ``phase`` and ``round``), and a hard error when the
+  superstep budget runs out;
 - `sweep`, for "expand a frontier until a level is empty" (frontier BFS,
   Brandes' forward σ sweep, SCC's backward membership sweep): the
   anti-join against the visited set, a lazy cut of the new level that its

@@ -247,12 +247,12 @@ def test_local_cut_is_the_only_local_checkpoint():
 #: the options deleted because no caller set them, by the callable that had
 #: them (``max_rounds`` stays a real budget of scc, msf and k_truss)
 DELETED_OPTIONS = {
-    "operators.components:connected_components": {"checkpointer"},
-    "operators.components:min_label_components": {"checkpointer"},
+    "operators.components:connected_components": {"checkpointer", "shortcut"},
+    "operators.components:min_label_components": {"checkpointer", "shortcut"},
     "operators.sssp:sssp": {"checkpointer"},
     "operators.kcore:k_core": {"checkpointer"},
     "operators.labelprop:label_propagation": {"checkpointer"},
-    "operators.scc:strongly_connected_components": {"checkpointer"},
+    "operators.scc:strongly_connected_components": {"checkpointer", "shortcut"},
     "operators.bpe:bpe_train": {"checkpointer"},
     "operators.walks:random_walks": {"checkpoint_every"},
     "operators.walks:node2vec_walks": {"checkpoint_every"},

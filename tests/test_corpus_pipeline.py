@@ -156,36 +156,45 @@ def test_scc_10k_cycle_olog_supersteps(spark):
     g.unpersist()
 
 
-def test_scc_shortcut_modes_agree(spark):
-    """shortcut=True / False / "auto" produce the identical exact labeling on a
-    graph with nontrivial SCCs, chains, and a self-loop (the frontier-sweep and
-    rcolor-propagation backward phases must agree vertex-for-vertex)."""
+def test_scc_backward_phases_match_networkx(spark):
+    """Both backward phases give networkx's exact labeling on a graph with
+    nontrivial SCCs, chains and a self-loop: without the edge 8→6 the
+    coloring is short and the frontier sweep (``bwd``) runs; with it the
+    coloring runs past AUTO_SHORTCUT_AFTER supersteps and the rcolor
+    propagation runs instead."""
     import pandas as pd
+    import pytest
+    nx = pytest.importorskip("networkx")
     from avgdist_rs_spark.operators.scc import strongly_connected_components
     from avgdist_rs_spark.plans.graph import GraphFrame
+    from avgdist_rs_spark.streaming.superstep import SuperstepMetrics
 
     pairs = [
         (0, 1), (1, 2), (2, 0), (2, 3), (3, 4), (4, 5), (5, 3),
-        (6, 0), (5, 7), (7, 8), (9, 9), (8, 6),
+        (6, 0), (5, 7), (7, 8), (9, 9),
     ]
-    pdf = pd.DataFrame(pairs, columns=["src", "dst"])
-    g = GraphFrame.from_edges(spark.createDataFrame(pdf), num_nodes=11, dedup=False)
-    runs = {
-        mode: {
+    for extra, n, backward in (([], 12, "bwd"), ([(8, 6)], 11, "rcolor")):
+        edges = pairs + extra
+        pdf = pd.DataFrame(edges, columns=["src", "dst"])
+        g = GraphFrame.from_edges(spark.createDataFrame(pdf), num_nodes=n, dedup=False)
+        met = SuperstepMetrics()
+        got = {
             r["v"]: r["component"]
-            for r in strongly_connected_components(g, shortcut=mode).collect()
+            for r in strongly_connected_components(g, metrics=met).collect()
         }
-        for mode in (True, False, "auto")
-    }
-    assert runs[True] == runs[False] == runs["auto"]
-    g.unpersist()
+        G = nx.DiGraph(edges)
+        G.add_nodes_from(range(n))
+        assert got == {v: min(c) for c in nx.strongly_connected_components(G) for v in c}
+        phases = {r["phase"] for r in met.records}
+        assert phases == {"trim", "color", backward}, phases
+        g.unpersist()
 
 
 def test_scc_deep_chain_dag_bounded_plan(spark):
-    """A deep chain DAG drives hundreds of trim supersteps; the assigned
-    accumulator must fold through localCheckpoint on its cadence so the final
-    plan carries at most ASSIGNED_FOLD_EVERY stacked Unions (round-3 advice:
-    thousands of Union children risk analyzer blowup on deep-trim DAGs)."""
+    """A deep chain DAG drives over a hundred trim supersteps in one round. A
+    graph that resolves one SCC per round makes more assigned parts than
+    ASSIGNED_FOLD_EVERY (two per round), yet the result's plan unions at
+    most that many: the parts fold through local_cut on that cadence."""
     from avgdist_rs_spark.operators import scc as scc_mod
     from avgdist_rs_spark.plans.graph import GraphFrame
     from avgdist_rs_spark.streaming.superstep import SuperstepMetrics
@@ -199,11 +208,32 @@ def test_scc_deep_chain_dag_bounded_plan(spark):
     got = scc_mod.strongly_connected_components(g, metrics=met).toPandas()
     # every vertex is its own singleton SCC on a DAG
     assert (got["v"] == got["component"]).all() and len(got) == n
-    # the accumulator folded on cadence (~120 accumulations / 8 per fold), so
-    # the plan never stacks more than ASSIGNED_FOLD_EVERY Unions (vs ~120
-    # before the fix)
-    expected = (n // 2) // scc_mod.ASSIGNED_FOLD_EVERY - 2
-    assert getattr(met, "assigned_folds", 0) >= expected
+    assert met.total_supersteps > 100
+    g.unpersist()
+
+    # five 2-cycles S0..S4 with S_i → S_j for every i < j, S_i's vertices of
+    # higher coloring priority than S_j's: each round's one color class is
+    # pivoted in the first SCC left, so a round resolves one SCC
+    n, k = 40, 5
+    ids = [
+        r["id"] for r in spark.range(n)
+        .orderBy(F.xxhash64("id").desc(), F.col("id").desc()).limit(2 * k).collect()
+    ]
+    sccs = [ids[2 * i: 2 * i + 2] for i in range(k)]
+    pairs = [(a, b) for a, b in sccs] + [(b, a) for a, b in sccs]
+    pairs += [(sccs[i][0], sccs[j][0]) for i in range(k) for j in range(i + 1, k)]
+    edges = spark.createDataFrame(pairs, "src long, dst long")
+    g = GraphFrame.from_edges(edges, num_nodes=n, dedup=False)
+    met = SuperstepMetrics()
+    res = scc_mod.strongly_connected_components(g, metrics=met)
+    want = {v: v for v in range(n)} | {v: min(c) for c in sccs for v in c}
+    assert {r["v"]: r["component"] for r in res.collect()} == want
+    phases = [r["phase"] for r in met.records]
+    rounds = sum(p == "trim" and q != "trim" for p, q in zip(phases, [None] + phases))
+    assert rounds == k and 2 * k > scc_mod.ASSIGNED_FOLD_EVERY
+    plan = res._jdf.queryExecution().analyzed()
+    assert plan.nodeName() == "Union"
+    assert plan.children().size() <= scc_mod.ASSIGNED_FOLD_EVERY
     g.unpersist()
 
 

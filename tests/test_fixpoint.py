@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import json
 import os
+from contextlib import contextmanager
 from types import SimpleNamespace
 
 import numpy as np
@@ -29,6 +30,7 @@ from avgdist_rs_spark.operators.pagerank import pagerank
 from avgdist_rs_spark.operators.scc import strongly_connected_components
 from avgdist_rs_spark.operators.sssp import hash_weights, sssp
 from avgdist_rs_spark.plans.graph import GraphFrame
+from avgdist_rs_spark.sources.fixtures import barabasi_graph
 from avgdist_rs_spark.sources.transcripts import synth_transcripts, transcript_graph
 from avgdist_rs_spark.streaming import superstep as superstep_module
 from avgdist_rs_spark.streaming.superstep import (
@@ -93,7 +95,7 @@ def test_fixpoint_scopes_nest_lifo_and_restore_after_error(spark):
 def test_connected_components_raises_when_not_converged(spark):
     g = _chain(spark, 50)
     with pytest.raises(RuntimeError, match="not converged within max_supersteps=3"):
-        connected_components(g, shortcut=False, max_supersteps=3)
+        connected_components(g, max_supersteps=3)
     g.unpersist()
 
 
@@ -126,24 +128,40 @@ def test_one_spark_job_per_superstep(spark):
     call_jobs = {r["loop"]: r["jobs"] for r in calls.records}
     assert call_jobs["kcore"] == steps["kcore"] + 1
 
-    # CC: a chain 5 vertices longer takes exactly 5 more supersteps, and the
-    # whole call exactly 5 more jobs. Supersteps stay below the Parquet reset
-    # cadence (one extra job).
+    # CC's schedule: plain hash-min resolves the 4-chain in 3 supersteps and
+    # a 4th changes nothing; the 9-chain still has labels 4 hops from 0 after
+    # 4 plain supersteps, and the 5th, the first to pointer-jump, resolves
+    # them all. Beyond its supersteps a call runs 2 jobs: the persisted
+    # symmetric edge table's count and the initial labels' cut.
     a, b = _chain(spark, 4), _chain(spark, 9)
     calls, mets = SuperstepMetrics(name="cc_call"), []
     for h in (a, b):
         mets.append(SuperstepMetrics(name="cc"))
         with superstep(calls, len(mets)):
-            connected_components(h, shortcut=False, metrics=mets[-1])
-    met_a, met_b = mets
-    assert (met_a.total_supersteps, met_b.total_supersteps) == (4, 9)
-    assert met_b.total_supersteps < Checkpointer.HARD_EVERY
+            connected_components(h, metrics=mets[-1])
+    assert [met.total_supersteps for met in mets] == [4, 6]
     for met in mets:
         assert [r["jobs"] for r in met.records] == [1] * met.total_supersteps
-    call_a, call_b = calls.records
-    assert call_b["jobs"] - call_a["jobs"] == 5
+        assert all("phase" not in r for r in met.records)
+    assert [r["jobs"] for r in calls.records] == [4 + 2, 6 + 2]
     for h in (g, tri_tail, a, b):
         h.unpersist()
+
+
+def test_scc_trim_runs_one_job_per_superstep(spark):
+    """SCC's trim runs on converge: one record per trim superstep, each one
+    Spark job. The Barabási graph is a DAG, so the trim resolves every
+    vertex; beyond its supersteps the call runs 2 jobs: the alive-edge
+    table's cut and the count of the vertices the trim kept."""
+    g = barabasi_graph(spark, n=300, m=3, seed=7)
+    met, call = SuperstepMetrics(name="scc"), SuperstepMetrics(name="scc_call")
+    with superstep(call, 1):
+        got = strongly_connected_components(g, metrics=met)
+    assert [(r["phase"], r["jobs"]) for r in met.records] == [("trim", 1)] * 9
+    assert call.records[0]["jobs"] == met.total_supersteps + 2
+    assert got.where(F.col("v") != F.col("component")).count() == 0
+    assert got.count() == 300
+    g.unpersist()
 
 
 def test_k_truss_raises_when_not_converged(spark):
@@ -157,24 +175,39 @@ def test_k_truss_raises_when_not_converged(spark):
 
 
 def test_k_truss_runs_one_job_per_round(spark, monkeypatch):
-    """Inside its fixpoint scope (AQE off) a k-truss call runs the seed
-    count and one job per round; on the session's AQE every exchange of the
-    triangle join was its own job. Rounds are read from the metrics the
-    operator makes for itself."""
+    """Inside its fixpoint scope (AQE off) a k-truss call runs the input
+    edge count and one job per round; on the session's AQE every exchange
+    of the triangle join was its own job. The seed is built inside the
+    scope, so every round stage runs at the loop width, narrower than the
+    session's (a seed cut at the session width made the stages that read it
+    run that many tasks). Rounds are read from the metrics the operator
+    makes for itself, with counters."""
     made: list[SuperstepMetrics] = []
+    widths: list[int] = []
 
     def metrics(**kw):
-        made.append(SuperstepMetrics(**kw))
+        made.append(SuperstepMetrics(**{**kw, "counters": True}))
         return made[-1]
 
+    @contextmanager
+    def scope(*args, **kw):
+        with fixpoint_scope(*args, **kw) as width:
+            widths.append(width)
+            yield width
+
     monkeypatch.setattr(ktruss_module, "SuperstepMetrics", metrics)
+    monkeypatch.setattr(ktruss_module, "fixpoint_scope", scope)
     tr = synth_transcripts(spark, n_convs=100, mean_turns=8, n_tools=32, seed=4)
     g = transcript_graph(tr, tool_responses=True)
     call = SuperstepMetrics(name="k_truss_call")
     with superstep(call, 1):
         k_truss(g.edges, k=3)
     rounds = made[0].total_supersteps
-    assert rounds >= 2 and call.records[-1]["jobs"] <= rounds + 2, (rounds, call.records)
+    assert rounds >= 2 and call.records[-1]["jobs"] == rounds + 1, (rounds, call.records)
+    (width,) = widths
+    assert width < int(spark.conf.get(WIDTH))
+    for r in made[0].records:
+        assert r["jobs"] == 1 and r["tasks"] <= r["stages"] * width, r
     g.unpersist()
 
 

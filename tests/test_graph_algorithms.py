@@ -255,32 +255,42 @@ def test_salted_bfs_equivalence(spark):
     g.unpersist()
 
 
-def test_cc_shortcut_equals_plain_and_converges_log_diameter(spark):
-    """Pointer-jumping CC: identical labels, O(log d) supersteps on a chain."""
-    import numpy as np
+def test_cc_auto_schedule_on_path_and_random_graph(spark):
+    """CC's schedule, 4 plain hash-min supersteps then pointer jumping, on
+    a 128-vertex path: labels are 4 hops from 0 after the plain supersteps,
+    superstep 5 moves them 20 hops (one hop, then two squarings), superstep
+    6 another 84 and superstep 7 the rest; superstep 8 changes nothing, not
+    ~127 of plain hash-min. A Barabási graph gets networkx's labeling."""
+    nx = pytest.importorskip("networkx")
 
     from avgdist_rs_spark.operators.components import connected_components
     from avgdist_rs_spark.plans.graph import GraphFrame
-    from avgdist_rs_spark.sources.fixtures import barabasi_graph
-    from avgdist_rs_spark.streaming.superstep import SuperstepMetrics
+    from avgdist_rs_spark.sources.fixtures import barabasi_graph, barabasi_pairs
+    from avgdist_rs_spark.streaming.superstep import SuperstepMetrics, superstep
 
-    # 128-vertex path: plain hash-min needs ~127 supersteps, shortcut ~O(log)
     n = 128
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(n - 1)], "src long, dst long"
     )
     g = GraphFrame.from_edges(pairs, num_nodes=n)
-    met = SuperstepMetrics()
-    got = connected_components(g, shortcut=True, metrics=met).collect()
-    assert all(r["component"] == 0 for r in got)
-    assert met.total_supersteps <= 12  # log2(128)=7 plus slack, not ~127
+    met, call = SuperstepMetrics(), SuperstepMetrics()
+    with superstep(call, 1):
+        cc = connected_components(g, metrics=met)
+    got = cc.collect()
+    assert all(r["component"] == 0 for r in got) and len(got) == n
+    assert [r["jobs"] for r in met.records] == [1] * 8
+    # beyond its supersteps: the symmetric edge table's count, the labels' cut
+    assert call.records[0]["jobs"] == 8 + 2
     g.unpersist()
 
-    # random graph: shortcut and plain produce identical exact labelings
     g2 = barabasi_graph(spark, n=150, m=2, seed=9)
-    a = {r["v"]: r["component"] for r in connected_components(g2).collect()}
-    b = {r["v"]: r["component"] for r in connected_components(g2, shortcut=True).collect()}
-    assert a == b
+    met2 = SuperstepMetrics()
+    got2 = {r["v"]: r["component"] for r in connected_components(g2, metrics=met2).collect()}
+    G = nx.Graph()
+    G.add_nodes_from(range(150))
+    G.add_edges_from(map(tuple, barabasi_pairs(150, 2, 9)))
+    assert got2 == {v: min(c) for c in nx.connected_components(G) for v in c}
+    assert met2.total_supersteps == 5
     g2.unpersist()
 
 
